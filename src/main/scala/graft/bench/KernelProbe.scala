@@ -38,13 +38,16 @@ object KernelProbe {
     val colTimes = (0 until 30).map(_ => (once(colA), once(colB)))
     println("colA: " + colTimes.map(t => f"${t._1}%.0f").mkString(" "))
     println("colB: " + colTimes.map(t => f"${t._2}%.0f").mkString(" "))
-    // phase breakdown for strategy A: index sort vs gather
-    var idx: Array[Int] = null
-    val phaseIdx = () => { idx = ColumnSort.lexsortIndices(cb); () }
-    val phaseTake = () => { ColumnSort.take(cb, idx); () }
-    (0 until 10).foreach(_ => { phaseIdx(); phaseTake() })
-    val phases = (0 until 30).map(_ => (once(phaseIdx), once(phaseTake)))
-    println("lexsort: " + phases.map(t => f"${t._1}%.0f").mkString(" "))
-    println("take:    " + phases.map(t => f"${t._2}%.0f").mkString(" "))
+    // phase breakdown per strategy: index sort vs gather
+    for ((label, indices) <- Seq[(String, graft.sort.ColumnBatch => Array[Int])](
+        "lexsort" -> ColumnSort.lexsortIndices, "rowformat" -> ColumnSort.rowFormatIndices)) {
+      var idx: Array[Int] = null
+      val phaseIdx = () => { idx = indices(cb); () }
+      val phaseTake = () => { ColumnSort.take(cb, idx); () }
+      (0 until 10).foreach(_ => { phaseIdx(); phaseTake() })
+      val phases = (0 until 30).map(_ => (once(phaseIdx), once(phaseTake)))
+      println(s"$label: " + phases.map(t => f"${t._1}%.0f").mkString(" "))
+      println(s"$label take: " + phases.map(t => f"${t._2}%.0f").mkString(" "))
+    }
   }
 }

@@ -262,19 +262,24 @@ object ColumnSort {
     case _ => null
   }
 
-  /** The full lexicographic index comparator for a batch — the same
-    * chain [[lexsortIndices]] sorts with (leading exact 64-bit keys
+  /** The full lexicographic index comparator for a batch — the chain
+    * [[lexsortIndices]] orders key ties with (leading exact 64-bit keys
     * hoisted to primitive long compares, megamorphic per-column chain
-    * for the rest), exposed for consumers that ORDER BY it without
+    * for the rest), also used by consumers that ORDER BY it without
     * sorting: the k-way merge of sorted runs ([[MergeStreams]]). Built
-    * eagerly (both hoisted key arrays) — merge callers always compare
-    * across unsorted positions, so the presorted-scan laziness that
-    * motivates [[lexsortIndices]]'s inline variant buys nothing here.
+    * eagerly (both hoisted key arrays): its callers compare across
+    * unsorted positions.
     */
-  private[sort] def fullChain(batch: ColumnBatch): IndexCmp = {
-    val k0 = if (batch.cols.nonEmpty) exactLeadingKey(batch.cols(0)) else null
+  private[sort] def fullChain(batch: ColumnBatch): IndexCmp = hoistedChain(batch.cols, 2)
+
+  /** Lexicographic comparator over `cols` with up to `hoist` leading
+    * columns (while each has an exact key) compared as unsigned longs
+    * ahead of the per-column chain.
+    */
+  private def hoistedChain(cols: Array[AnyRef], hoist: Int): IndexCmp = {
+    val k0 = if (hoist > 0 && cols.nonEmpty) exactLeadingKey(cols(0)) else null
     if (k0 == null) {
-      val cmps = batch.cols.map(colCmp)
+      val cmps = cols.map(colCmp)
       return new IndexCmp {
         def lt(i: Int, j: Int): Boolean = {
           var k = 0
@@ -287,9 +292,9 @@ object ColumnSort {
         }
       }
     }
-    val k1 = if (batch.cols.length > 1) exactLeadingKey(batch.cols(1)) else null
+    val k1 = if (hoist > 1 && cols.length > 1) exactLeadingKey(cols(1)) else null
     if (k1 == null) {
-      val rest = batch.cols.drop(1).map(colCmp)
+      val rest = cols.drop(1).map(colCmp)
       return new IndexCmp {
         def lt(i: Int, j: Int): Boolean = {
           val c0 = java.lang.Long.compareUnsigned(k0(i), k0(j))
@@ -304,7 +309,7 @@ object ColumnSort {
         }
       }
     }
-    val rest2 = batch.cols.drop(2).map(colCmp)
+    val rest2 = cols.drop(2).map(colCmp)
     new IndexCmp {
       def lt(i: Int, j: Int): Boolean = {
         val c0 = java.lang.Long.compareUnsigned(k0(i), k0(j))
@@ -323,76 +328,18 @@ object ColumnSort {
   }
 
   /** Strategy A: chained per-column comparators over an index vector.
-    * Up to the first TWO columns with exact 64-bit keys are hoisted into
-    * primitive long compares ahead of the megamorphic chain: the first
-    * column decides most comparisons, but duplicate-heavy leading
-    * columns (the generators' i64/f64 run ~1/3 repeats) tie-break into
-    * column 1 constantly, so inlining it too keeps the common case in
-    * registers (measured −13% on shuffled mixed-tuple). The second key
-    * array is built lazily, after the presorted scan fails — presorted
-    * batches never pay for it.
+    * The presorted scan runs with only the first column's exact key
+    * hoisted (building more key arrays would be pure O(n) overhead on
+    * sorted input). Unsorted input goes through the key-carrying radix
+    * sort ([[keyedIndices]]), and [[fullChain]] orders only the runs of
+    * rows whose packed leading keys tie.
     */
-  def lexsortIndices(batch: ColumnBatch): Array[Int] = {
-    val n = batch.numRows
-    val k0 = if (batch.cols.nonEmpty) exactLeadingKey(batch.cols(0)) else null
-    if (k0 != null) {
-      val rest = batch.cols.drop(1).map(colCmp)
-      val chain1 = new IndexCmp {
-        def lt(i: Int, j: Int): Boolean = {
-          val c0 = java.lang.Long.compareUnsigned(k0(i), k0(j))
-          if (c0 != 0) return c0 < 0
-          var k = 0
-          while (k < rest.length) {
-            val c = rest(k).cmp(i, j)
-            if (c != 0) return c < 0
-            k += 1
-          }
-          false
-        }
-      }
-      // Presorted fast path first, with the cheap 1-key chain: only when
-      // the input is genuinely unsorted (the merge will run, O(n log n))
-      // is the SECOND column's key array worth building — on the
-      // presorted path it would be pure O(n) overhead.
-      if (scanSorted(n, chain1) == n) return Array.tabulate(n)(identity)
-      val k1 = if (batch.cols.length > 1) exactLeadingKey(batch.cols(1)) else null
-      if (k1 == null) return mergeIndices(n, chain1)
-      val rest2 = batch.cols.drop(2).map(colCmp)
-      val chain2 = new IndexCmp {
-        def lt(i: Int, j: Int): Boolean = {
-          val c0 = java.lang.Long.compareUnsigned(k0(i), k0(j))
-          if (c0 != 0) return c0 < 0
-          val c1 = java.lang.Long.compareUnsigned(k1(i), k1(j))
-          if (c1 != 0) return c1 < 0
-          var k = 0
-          while (k < rest2.length) {
-            val c = rest2(k).cmp(i, j)
-            if (c != 0) return c < 0
-            k += 1
-          }
-          false
-        }
-      }
-      return mergeIndices(n, chain2)
-    }
-    val cmps = batch.cols.map(colCmp) // comparator chain built per call, like the reference
-    val chain = new IndexCmp {
-      def lt(i: Int, j: Int): Boolean = {
-        var k = 0
-        while (k < cmps.length) {
-          val c = cmps(k).cmp(i, j)
-          if (c != 0) return c < 0
-          k += 1
-        }
-        false
-      }
-    }
-    sortedIndices(batch.numRows, chain)
-  }
-
+  def lexsortIndices(batch: ColumnBatch): Array[Int] =
+    keyedIndices(batch, hoistedChain(batch.cols, 1), fullChain(batch))
 
   /** Strategy B: row-format (normalized-key) encode into one slab, then
-    * byte-compare sort (`src/lib.rs:35-53` rebuilt columnar).
+    * sort, with the byte compare ordering leading-key ties
+    * (`src/lib.rs:35-53` rebuilt columnar).
     */
   private abstract class ColEnc {
     def enc(i: Int, w: KeyWriter): Unit
@@ -472,10 +419,10 @@ object ColumnSort {
     * width and they sum to ≤128 bits, the whole row key packs into one
     * or two machine words (dict ranks in log2(|dict|) bits, primitives/
     * short-utf8 in 64) — the same normalized-key bytes as the slab
-    * encoding, but compared as longs in registers instead of a memcmp
-    * over a heap slab. Keys are COMPLETE (every column participates), so
-    * a key tie means identical rows and ordering among ties is
-    * irrelevant to the output.
+    * encoding, held as a (hi, lo) long pair per row instead of a heap
+    * slab. The pair compare runs the presorted scan and orders the
+    * leading-key ties of [[keyedIndices]]; keys are COMPLETE (every
+    * column participates), so a pair tie means identical rows.
     */
   private def packedRowIndices(batch: ColumnBatch, bits: Array[Int]): Array[Int] = {
     val n = batch.numRows
@@ -512,16 +459,21 @@ object ColumnSort {
         def lt(i: Int, j: Int): Boolean =
           java.lang.Long.compareUnsigned(los(i), los(j)) < 0
       }
-    sortedIndices(n, chain)
+    keyedIndices(batch, chain, chain)
   }
 
+  /** Strategy B: every row's normalized key in one slab (or, when the
+    * keys are narrow, in [[packedRowIndices]]' long pairs). The slab
+    * memcmp runs the presorted scan and orders the leading-key ties of
+    * [[keyedIndices]].
+    */
   def rowFormatIndices(batch: ColumnBatch): Array[Int] = {
     val n = batch.numRows
     val bits = batch.cols.map(packedBits)
     if (batch.cols.nonEmpty && !bits.contains(-1) && bits.sum <= 128)
       return packedRowIndices(batch, bits)
     val encs = batch.cols.map(colEnc) // hoisted: no per-row type dispatch
-    val w = new KeyWriter(math.max(64, n * batch.cols.length * 12))
+    val w = new KeyWriter(slabCapacity(n, batch.cols.length))
     val offsets = new Array[Int](n + 1)
     var i = 0
     while (i < n) {
@@ -539,8 +491,16 @@ object ColumnSort {
         java.util.Arrays.compareUnsigned(
           slab, offsets(i), offsets(i + 1), slab, offsets(j), offsets(j + 1)) < 0
     }
-    sortedIndices(n, chain)
+    keyedIndices(batch, chain, chain)
   }
+
+  /** Initial slab capacity for `rows` rows of `cols` fields, at 12 bytes
+    * a field: computed in Long (an Int product goes negative past ~44.7M
+    * rows at 4 columns) and clamped to the largest array the JVM
+    * allocates. [[KeyWriter]] grows the slab when keys run longer.
+    */
+  private[sort] def slabCapacity(rows: Int, cols: Int): Int =
+    math.min(math.max(64L, rows.toLong * cols * 12), Int.MaxValue - 8L).toInt
 
   /** `take`: gather every column by the index vector (`src/lib.rs:56-73`;
     * bounds checks are JVM-inherent — the reference disables Arrow's,
@@ -603,9 +563,178 @@ object ColumnSort {
     def lt(i: Int, j: Int): Boolean
   }
 
+  /** How much of the row order the packed leading key of [[packKeys]]
+    * decides.
+    */
+  private[sort] sealed trait KeyOutcome
+  private[sort] object KeyOutcome {
+    /** Every column packed exactly and in full: the key IS the row
+      * order, and equal keys mean equal rows.
+      */
+    case object Complete extends KeyOutcome
+    /** Only exact keys packed, but a column lost its low bits or did
+      * not fit: equal keys still need the tie comparator.
+      */
+    case object Truncated extends KeyOutcome
+    /** A utf8 prefix was packed: equal keys say nothing about the
+      * bytes past it (or, for short strings with 0x00 bytes, about a
+      * zero pad against a real zero byte).
+      */
+    case object Inexact extends KeyOutcome
+  }
+
+  /** One long per row, `(key << idxBits) | row`, with `keyBits` key bits. */
+  private[sort] final class PackedKeys(
+      val words: Array[Long], val keyBits: Int, val idxBits: Int, val outcome: KeyOutcome)
+
+  /** Bits a row index of a batch of `n` rows needs: ceil(log2 n). */
+  private[sort] def idxBitsFor(n: Int): Int =
+    if (n < 2) 0 else 32 - Integer.numberOfLeadingZeros(n - 1)
+
+  /** Pack the leading columns' normalized keys ([[exactLeadingKey]]; a
+    * general utf8 column contributes its prefixes as an inexact key)
+    * into `63 - idxBits` key bits above the row index. Each column is
+    * range-compressed: its unsigned min is subtracted, and it takes the
+    * `64 - nlz(max - min)` bits its span needs (0 for a constant
+    * column). Packing stops after an inexact column or after one that
+    * fits only partly (it keeps its top bits). Every step is monotone
+    * in the row order, so a key never orders two rows against the
+    * comparator: it is ≤ where they are in order, and equal only where
+    * the packed columns could not tell them apart.
+    */
+  private[sort] def packKeys(cols: Array[AnyRef], n: Int, idxBits: Int): PackedKeys = {
+    val words = new Array[Long](n)
+    val budget = 63 - idxBits
+    var used = 0
+    var outcome: KeyOutcome = KeyOutcome.Complete
+    var j = 0
+    while (j < cols.length && outcome == KeyOutcome.Complete) {
+      val exact = exactLeadingKey(cols(j))
+      val k = if (exact != null) exact else cols(j) match {
+        case u: Utf8Col => u.prefixes
+        case other => throw new IllegalArgumentException(s"bad column $other")
+      }
+      if (exact == null) outcome = KeyOutcome.Inexact
+      var min = -1L; var max = 0L
+      var i = 0
+      while (i < n) {
+        val v = k(i)
+        if (java.lang.Long.compareUnsigned(v, min) < 0) min = v
+        if (java.lang.Long.compareUnsigned(v, max) > 0) max = v
+        i += 1
+      }
+      val span = if (n == 0) 0 else 64 - java.lang.Long.numberOfLeadingZeros(max - min)
+      val b = math.min(span, budget - used)
+      val drop = span - b
+      if (drop > 0 && outcome == KeyOutcome.Complete) outcome = KeyOutcome.Truncated
+      if (b > 0) {
+        i = 0
+        while (i < n) { words(i) = (words(i) << b) | ((k(i) - min) >>> drop); i += 1 }
+        used += b
+      }
+      j += 1
+    }
+    var i = 0
+    while (i < n) { words(i) = (words(i) << idxBits) | i; i += 1 }
+    new PackedKeys(words, used, idxBits, outcome)
+  }
+
+  /** Stable LSD radix sort of `words` by bits `[lo, lo + bits)`, in
+    * equal digits of at most 11 bits; one counting pass builds every
+    * digit's histogram, and a digit all words share is skipped. Returns
+    * the sorted array: `words` itself or its scratch twin.
+    */
+  private def radixSort(words: Array[Long], lo: Int, bits: Int): Array[Long] = {
+    val n = words.length
+    if (bits == 0 || n < 2) return words
+    val passes = (bits + 10) / 11
+    val width = (bits + passes - 1) / passes
+    val radix = 1 << width
+    val mask = radix - 1
+    val counts = new Array[Int](passes * radix)
+    var i = 0
+    while (i < n) {
+      val w = words(i)
+      var p = 0
+      while (p < passes) {
+        counts(p * radix + ((w >>> (lo + p * width)).toInt & mask)) += 1
+        p += 1
+      }
+      i += 1
+    }
+    var src = words
+    var dst: Array[Long] = null
+    var p = 0
+    while (p < passes) {
+      val base = p * radix
+      val shift = lo + p * width
+      if (counts(base + ((src(0) >>> shift).toInt & mask)) != n) {
+        if (dst == null) dst = new Array[Long](n)
+        var sum = 0
+        var d = 0
+        while (d < radix) { val c = counts(base + d); counts(base + d) = sum; sum += c; d += 1 }
+        i = 0
+        while (i < n) {
+          val w = src(i)
+          val slot = base + ((w >>> shift).toInt & mask)
+          dst(counts(slot)) = w
+          counts(slot) += 1
+          i += 1
+        }
+        val t = src; src = dst; dst = t
+      }
+      p += 1
+    }
+    src
+  }
+
+  /** Radix-sort the packed keys, then stable-sort each run of equal keys
+    * by `ties` (skipped for a complete key). LSD radix is stable and the
+    * words start in row order, so every run starts in ascending index
+    * order, and the result is exactly the stable sort by `ties` — the
+    * packed key only ever agrees with it or ties.
+    */
+  private[sort] def sortPacked(keys: PackedKeys, ties: => IndexCmp): Array[Int] = {
+    val sorted = radixSort(keys.words, keys.idxBits, keys.keyBits)
+    val n = sorted.length
+    val idxMask = (1L << keys.idxBits) - 1
+    val idx = new Array[Int](n)
+    var i = 0
+    while (i < n) { idx(i) = (sorted(i) & idxMask).toInt; i += 1 }
+    if (keys.outcome != KeyOutcome.Complete) {
+      lazy val cmp = ties
+      val shift = keys.idxBits
+      var lo = 0
+      while (lo < n) {
+        val key = sorted(lo) >>> shift
+        var hi = lo + 1
+        while (hi < n && (sorted(hi) >>> shift) == key) hi += 1
+        if (hi - lo > InsertionRun) mergeRun(idx, lo, hi, cmp)
+        else if (hi - lo > 1) insertionRun(idx, lo, hi, cmp)
+        lo = hi
+      }
+    }
+    idx
+  }
+
+  /** Tie runs up to this length are insertion-sorted. */
+  private val InsertionRun = 16
+
+  /** Sort `0 until n`: the presorted scan by `scan` first (sorted input
+    * returns the identity in O(n)), else the key-carrying sort of the
+    * batch's leading columns with `ties` ordering equal keys.
+    */
+  private def keyedIndices(batch: ColumnBatch, scan: IndexCmp, ties: => IndexCmp): Array[Int] = {
+    val n = batch.numRows
+    if (scanSorted(n, scan) == n) Array.tabulate(n)(identity)
+    else sortPacked(packKeys(batch.cols, n, idxBitsFor(n)), ties)
+  }
+
   /** Stable bottom-up merge sort of `0 until n` by `lt`, with the
     * already-ordered-segments shortcut (presorted input → O(n) compares).
     * Primitive int arrays: a `Comparator[Integer]` would box every index.
+    * The reference order the key-carrying sort reproduces, and the
+    * sort of [[RowFormatSort]]'s row kernel.
     */
   private[sort] def sortedIndices(n: Int, c: IndexCmp): Array[Int] =
     if (scanSorted(n, c) == n) Array.tabulate(n)(identity)
@@ -613,11 +742,10 @@ object ColumnSort {
 
   /** Adaptive fast-path detector: one O(n) scan, returning the length of
     * the leading sorted run (== n for fully-ordered input, which then
-    * skips the merge passes entirely). The reference gets this for free —
-    * Rust's `sort_unstable_by` is pdqsort, which detects ascending runs,
-    * and the benchmark's generated batches ARE pre-sorted (src/data.rs
-    * sorts every case at build time) — while our bottom-up merge would
-    * still pay 17 passes of per-tiny-segment arraycopies.
+    * skips key packing and sorting entirely). The reference gets this
+    * for free — Rust's `sort_unstable_by` is pdqsort, which detects
+    * ascending runs, and the benchmark's generated batches ARE pre-sorted
+    * (src/data.rs sorts every case at build time).
     */
   private def scanSorted(n: Int, c: IndexCmp): Int = {
     if (n < 2) return n
@@ -627,8 +755,28 @@ object ColumnSort {
   }
 
   private def mergeIndices(n: Int, c: IndexCmp): Array[Int] = {
-    var src = Array.tabulate(n)(identity)
-    if (n < 2) return src
+    val idx = Array.tabulate(n)(identity)
+    mergeRun(idx, 0, n, c)
+    idx
+  }
+
+  /** Stable insertion sort of `idx[lo, hi)` by `c`. */
+  private def insertionRun(idx: Array[Int], lo: Int, hi: Int, c: IndexCmp): Unit = {
+    var i = lo + 1
+    while (i < hi) {
+      val x = idx(i)
+      var j = i
+      while (j > lo && c.lt(x, idx(j - 1))) { idx(j) = idx(j - 1); j -= 1 }
+      idx(j) = x
+      i += 1
+    }
+  }
+
+  /** Stable bottom-up merge sort of `idx[from, until)` by `c`. */
+  private def mergeRun(idx: Array[Int], from: Int, until: Int, c: IndexCmp): Unit = {
+    val n = until - from
+    if (n < 2) return
+    var src = java.util.Arrays.copyOfRange(idx, from, until)
     var dst = new Array[Int](n)
     var width = 1
     while (width < n) {
@@ -653,6 +801,6 @@ object ColumnSort {
       val tmp = src; src = dst; dst = tmp
       width *= 2
     }
-    src
+    System.arraycopy(src, 0, idx, from, n)
   }
 }

@@ -63,8 +63,18 @@ object MergeStreams {
     // silently emit out-of-run indices instead of failing
     require(offsets.nonEmpty && offsets(0) == 0,
       s"mergeRuns: offsets must start at 0, got ${offsets.headOption}")
+    // a last offset short of numRows would drop rows, and a decreasing
+    // pair would let the loser tree emit indices from outside their run
     val k = offsets.length - 1
     val n = offsets(k)
+    require(n == batch.numRows,
+      s"mergeRuns: offsets must end at numRows ${batch.numRows}, got $n")
+    var r = 0
+    while (r < k) {
+      require(offsets(r) <= offsets(r + 1),
+        s"mergeRuns: offsets must be non-decreasing, got ${offsets(r)} then ${offsets(r + 1)}")
+      r += 1
+    }
     val out = new Array[Int](n)
     if (k == 1) { // single run: already sorted — no comparator needed
       var i = 0

@@ -2,6 +2,7 @@ package graft.sort
 
 import graft.SparkSpec
 import graft.datagen.Case
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Differential suite for the sort-merge experiment
   * ([[MergeStreams]]): a k-way merge of scattered sorted runs must
@@ -65,5 +66,29 @@ class MergeStreamsSpec extends SparkSpec {
     assert(pts.map(_.strategy).sorted == Seq("full-resort", "kway-merge"))
     assert(pts.forall(p => p.caseName == "mixed-tuple-merge"))
     assert(pts.forall(p => p.avgUs > 0 && p.minUs > 0 && p.minUs <= p.avgUs))
+  }
+
+  // mergeRuns trusts its caller's offsets only as far as they describe
+  // contiguous runs that cover the batch
+  private val fiveRows = ColumnBatch(
+    StructType(Seq(StructField("l", LongType, nullable = false))),
+    Array(Array(1L, 4L, 2L, 3L, 5L)))
+
+  test("mergeRuns accepts runs that cover the batch, empty runs included") {
+    assert(MergeStreams.mergeRuns(fiveRows, Array(0, 2, 2, 5)).toSeq == Seq(0, 2, 3, 1, 4))
+  }
+
+  test("mergeRuns rejects a last offset short of numRows instead of dropping rows") {
+    val e = intercept[IllegalArgumentException](MergeStreams.mergeRuns(fiveRows, Array(0, 2, 4)))
+    assert(e.getMessage.contains("end at numRows 5"))
+  }
+
+  test("mergeRuns rejects a last offset past numRows") {
+    intercept[IllegalArgumentException](MergeStreams.mergeRuns(fiveRows, Array(0, 2, 6)))
+  }
+
+  test("mergeRuns rejects decreasing offsets") {
+    val e = intercept[IllegalArgumentException](MergeStreams.mergeRuns(fiveRows, Array(0, 3, 1, 5)))
+    assert(e.getMessage.contains("non-decreasing"))
   }
 }

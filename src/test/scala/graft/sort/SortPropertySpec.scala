@@ -79,14 +79,12 @@ class SortPropertySpec extends SparkSpec {
   }
 
   test("mixed-tuple dyn-comparator: the two-key hoist preconditions hold on generator data") {
-    // VERDICT r6 item 7 asked whether the 1.13x baseline cell was a
-    // missing hoist on the f64-leading case. It is not: col0 is a raw
-    // Array[Double] (always exact-keyable via doubleBits) and col1's
-    // generator strings are <= 8 bytes with no NUL, so the prefix key
-    // qualifies and chain2 (both keys in registers) fires. The residual
-    // gap is host-noise-bound — KernelProbe floors at ~2.4 ms vs the
-    // ~2.7 ms baseline, with a 2x bimodal swing across adjacent
-    // iterations of IDENTICAL code (results/BENCH_NOTES.md r7 entry).
+    // col0 is a raw Array[Double] (always exact-keyable via doubleBits)
+    // and col1's generator strings are <= 8 bytes with no NUL, so the
+    // prefix key qualifies: fullChain hoists both keys into long
+    // compares. That chain orders lexsort's runs of rows whose packed
+    // leading key ties (the f64 key is truncated to the key budget, so
+    // equal f64 values tie) and the k-way merge of MergeStreams.
     val c = graft.datagen.Case.byName("mixed-tuple")
     val cb = graft.sort.ColumnBatch.fromRows(c.rows(5000), c.schema)
     assert(cb.cols(0).isInstanceOf[Array[Double]], "leading f64 must stay a primitive column")
