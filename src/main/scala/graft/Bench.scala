@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-contract benchmark main: times every inventory query at
   * `SPARK_GRAFT_SF_DIR` and the reference's sort sweep at two headline
   * sizes, printing ONE JSON line.
@@ -14,44 +12,12 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", Scratch.dir) // RAM scratch; see Scratch
-      // Split-packing geometry for the multi-split fixture (round 14,
-      // see RgFixture): the fixture's per-table files are ~256 KiB, and
-      // under the DEFAULT 128 MB maxPartitionBytes the open-cost packer
-      // would glue ~30 of them back into one split — re-serializing the
-      // scans the fixture exists to parallelize. 4 MB (= the default
-      // openCostInBytes, so each file is its own split) is bench-fixture
-      // geometry, parameterized for unlike deployments; a production
-      // table's 128 MB-1 GB files want the default or LARGER (guide
-      // §6), which SPARK_GRAFT_MAX_SPLIT_BYTES restores.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_SPLIT_BYTES", "4m"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
-    // Multi-split relayout of the bench corpus (round 14 — VERDICT r13
-    // "Next round" item 1): identical rows, tens of scan tasks instead
-    // of one. Built once per corpus dir on the RAM scratch volume; a
-    // build failure (unwritable scratch) falls back to the original
-    // layout rather than failing the bench. SPARK_GRAFT_RG_FIX=0 times
-    // the original single-row-group layout for like-for-like A/Bs.
+    // Multi-split relayout of the bench corpus, with the split size it
+    // needs; SPARK_GRAFT_RG_FIX=0 times the original layout (RgFixture).
     // Verify (the oracle path) never reads this fixture.
-    val benchDir =
-      if (sys.env.get("SPARK_GRAFT_RG_FIX").contains("0")) sfDir
-      else
-        try graft.bench.RgFixture.prepare(spark, sfDir)
-        catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] rg fixture failed (${e.getMessage}); " +
-              "timing the original layout")
-            sfDir
-        }
+    val benchDir = graft.bench.RgFixture.benchDir(spark, sfDir)
 
     // Warm-up: run the ENTIRE inventory once at the smallest SF. This
     // JIT-compiles every operator's generated code and loads the parquet
@@ -127,12 +93,18 @@ object Bench {
     }
 
     val warmDir = "/root/testdata/sf0.001"
+    // a cell that fails here is logged and counted (warmup_failed), not
+    // swallowed: it usually fails the measured pass too
+    var warmupFailed = 0
     SparkEntry.inventory.foreach { q =>
       // warm the spelling the bench will time (benched); where a bench
       // twin exists the oracle spelling shares its operators, so one
       // warm pass per cell still heats everything the measured pass runs
       try q.benched(spark, warmDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => }
+      catch { case e: Throwable =>
+        warmupFailed += 1
+        System.err.println(s"[bench] warmup ${q.name} @ $warmDir failed: ${e.getMessage}")
+      }
     }
     releasePhase(warmDir)
     mark("warmup")
@@ -489,7 +461,7 @@ object Bench {
     val countsJson = cardCounts.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","failed":$nFailed,"card_failed":$cardJson,"ts":"$ts","queries":$qs,"skew_queries":$sk,"sort_sweep_us":$sw,"sort_sweep_avg_us":$swAvg,"noise_cal_ms":$calJson,"row_counts":$countsJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","failed":$nFailed,"card_failed":$cardJson,"warmup_failed":$warmupFailed,"ts":"$ts","queries":$qs,"skew_queries":$sk,"sort_sweep_us":$sw,"sort_sweep_avg_us":$swAvg,"noise_cal_ms":$calJson,"row_counts":$countsJson,"sf":"$sfDir"}"""
     // stdout protocol: the driver keeps only a fixed-size TAIL of stdout
     // (~2000 chars) and its harness appends its own lines after ours —
     // rounds 4-6 all captured the metrics line with its head cut off

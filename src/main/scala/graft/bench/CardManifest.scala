@@ -1,6 +1,5 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{count, lit}
 
 /** Writes the bench cardinality manifest (VERDICT r10 item 7): every
@@ -19,14 +18,7 @@ import org.apache.spark.sql.functions.{count, lit}
 object CardManifest {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.Scratch.dir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     graft.pipeline.Dedup.prewarmIndexes(spark, sfDir)
     graft.pipeline.Similarity.prewarmIndexes(spark, sfDir)
     // benched + headline-only: the manifest exists for Bench's gate, so

@@ -43,7 +43,8 @@ import org.apache.spark.sql.functions._
   * DISCLOSURE: the bench's main query pass times the SAME queries over
   * the SAME rows in this multi-split layout (OPTIMIZATION_r14.md
   * records both layouts' totals). `SPARK_GRAFT_RG_FIX=0` restores the
-  * original single-row-group input for like-for-like comparisons.
+  * original single-row-group input for like-for-like comparisons
+  * ([[benchDir]]).
   */
 object RgFixture {
   /** Target bytes per output file. 256 KiB of this corpus' parquet is
@@ -58,35 +59,41 @@ object RgFixture {
   /** Max files per table: the bench's own core ceiling. */
   val MaxFiles = 32
 
-  /** Dev-only: build the fixture for a dir and print its path. */
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.Scratch.dir)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    println(prepare(spark, sfDir))
-    spark.stop()
-  }
+  /** The directory the bench times: this relayout of `sfDir`, or
+    * `sfDir` itself when `SPARK_GRAFT_RG_FIX=0` (like-for-like A/Bs
+    * against the original layout, under the session's own split size)
+    * or when the build fails (unwritable scratch) — a fixture failure
+    * must not fail the bench.
+    */
+  def benchDir(spark: SparkSession, sfDir: String): String =
+    if (sys.env.get("SPARK_GRAFT_RG_FIX").contains("0")) sfDir
+    else
+      try prepare(spark, sfDir)
+      catch {
+        case e: Throwable =>
+          System.err.println(s"[rgfix] fixture failed (${e.getMessage}); " +
+            "timing the original layout")
+          sfDir
+      }
 
+  /** Builds (once per corpus dir) the relayout and sets the split size
+    * it needs on `spark`: the fixture's per-table files are ~256 KiB,
+    * and under the DEFAULT 128 MB maxPartitionBytes the open-cost
+    * packer would glue ~30 of them back into one split, re-serializing
+    * the scans the fixture exists to parallelize. 4 MB (= the default
+    * openCostInBytes, so each file is its own split) is bench-fixture
+    * geometry; a production table's 128 MB-1 GB files want the default
+    * or LARGER (guide §6), which SPARK_GRAFT_MAX_SPLIT_BYTES restores.
+    */
   def prepare(spark: SparkSession, sfDir: String): String = {
-    // geometry knobs (dev A/B only — the defaults above are the bench
-    // contract); variant fixtures key their own path so layouts coexist
-    val target = sys.env.get("SPARK_GRAFT_RG_TARGET").map(_.toLong)
-      .getOrElse(TargetFileBytes)
-    val maxFiles = sys.env.get("SPARK_GRAFT_RG_MAXFILES").map(_.toInt)
-      .getOrElse(MaxFiles)
-    val geomTag =
-      if (target == TargetFileBytes && maxFiles == MaxFiles) ""
-      else s"-$target-$maxFiles"
-    val root = s"${graft.Scratch.dir}/rgfix/${graft.Scratch.pathKey(sfDir)}$geomTag"
+    spark.conf.set("spark.sql.files.maxPartitionBytes",
+      sys.env.getOrElse("SPARK_GRAFT_MAX_SPLIT_BYTES", "4m"))
+    val root = s"${graft.Scratch.dir}/rgfix/${graft.Scratch.pathKey(sfDir)}"
     graft.Scratch.buildOnce(root) {
       graft.Tables.names.foreach { name =>
         val bytes = new java.io.File(s"$sfDir/$name.parquet").length()
-        val k = math.min(maxFiles.toLong,
-          math.max(1L, (bytes + target - 1) / target)).toInt
+        val k = math.min(MaxFiles.toLong,
+          math.max(1L, (bytes + TargetFileBytes - 1) / TargetFileBytes)).toInt
         val df = graft.Tables.t(spark, sfDir, name)
         // deterministic content-hash spread, 64x more key values than
         // files so the murmur3 bucketing stays even (guide §2.5)

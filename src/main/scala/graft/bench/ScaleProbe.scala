@@ -231,13 +231,7 @@ object ScaleProbe {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outRoot = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
       new java.io.File("target/scaleprobe").getAbsolutePath)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", graft.Scratch.dir)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     // JIT warm pass at the smallest SF, exactly like Bench's warmup
     val warmDir = "/root/testdata/sf0.001"

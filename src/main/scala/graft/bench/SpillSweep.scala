@@ -45,19 +45,8 @@ object SpillSweep {
     val iters = args.lift(1).map(_.toInt).getOrElse(7)
     val out = sys.env.getOrElse("SPARK_GRAFT_RESULTS_DIR", "results")
 
-    def session(cap: Long): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-        .appName(s"graft-spill-sweep-$cap")
-        .config("spark.shuffle.spill.numElementsForceSpillThreshold", cap.toString)
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.local.dir", graft.Scratch.dir)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
+    def session(cap: Long): SparkSession = graft.Session.local(contextConf =
+      Map("spark.shuffle.spill.numElementsForceSpillThreshold" -> cap.toString))
 
     def measure(spark: SparkSession, strategy: String): Seq[DataPoint] = {
       val c = graft.datagen.Case.byName(caseName)

@@ -882,7 +882,7 @@ object LakeReader {
   * the executor and shared across every file this factory's readers
   * open — the String-path convenience initialize rebuilds all of it
   * per file, which measured 14.5 ms/file against 3.5 for the shared
-  * split path (LakeOpenProbe).
+  * split path (round 12, per-file open microbenchmark).
   */
 class LakeReaderFactory(schema: StructType) extends PartitionReaderFactory {
   private def cols = schema.fieldNames

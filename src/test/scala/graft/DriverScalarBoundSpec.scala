@@ -41,10 +41,8 @@ class DriverScalarBoundSpec extends SparkSpec {
       "core.scala",       // BoundedCollect itself
       "SortSweep.scala",  // bench harness collecting timing rows, not data
       "SkewBench.scala",  // bench fixture prep (1-row agg for the hot key)
-      "Probe.scala", "KernelProbe.scala", "CCProbe.scala", "QProbe.scala", // debug mains
-      "ProbeQuery.scala", // dev-loop single-query timer (collects to time the action)
+      "KernelProbe.scala", // debug main
       "ScaleProbe.scala", // dev scale harness (1-row max-key scalar per table build)
-      "SkewPlanCheck.scala", // dev plan probe: collect() finalizes the AQE plan
     )
     // Dataset driver-pull spellings. `.take(`/`.head(n)` are EXCLUDED
     // deliberately: they collide textually with Scala-collection calls

@@ -8,14 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", Scratch.dir) // RAM scratch; see Scratch
-      .getOrCreate()
+    val s = Session.local(4, Map("spark.app.name" -> "graft-test"))
     s.sparkContext.setLogLevel("ERROR")
     s
   }

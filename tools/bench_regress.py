@@ -10,7 +10,7 @@ Usage:
   bench_regress.py record <round> [bench_json]   # default results/bench_local.json
   bench_regress.py check  [round]                # default: latest recorded round
   bench_regress.py probe  [round] [sfDir]        # auto-adjudicate check's flags:
-                                                 # QProbe warm floors per flagged
+                                                 # Probe warm floors per flagged
                                                  # query cell -> BENCH_NOTES.md
 
 `record` parses the bench metrics line (queries + skew_queries seconds,
@@ -29,7 +29,7 @@ and flags ratio > 1.5 with an absolute-floor guard (0.15 s / 500 us) so
 scheduler jitter on near-zero cells can't trip the gate. Exit code 1 on
 any flagged regression, 0 otherwise.
 
-A flag is a PROMPT TO PROBE (graft.bench.QProbe <cell>), not proof of a
+A flag is a PROMPT TO PROBE (graft.bench.Probe <cell>), not proof of a
 regression: this host's minute-scale throughput windows swing ~1.5x, so
 cells near 1 s occasionally trip the ratio on no code change. A real
 regression reproduces in the probe's warm iterations; window noise
@@ -183,8 +183,9 @@ NOTES = os.path.join(ROOT, "results", "BENCH_NOTES.md")
 
 
 def _probe_cell(cell, sf):
-    """Run graft.bench.QProbe for one cell; return (floor_sec, iters) or
-    (None, err_line). Floor = min of warm iters 2..3 (iter 1 pays JIT)."""
+    """Run graft.bench.Probe for one cell (a skew_* cell runs over the
+    skew fixture); return (floor_sec, iters) or (None, err_line).
+    Floor = min of iters 2..3 (iter 1 pays session index builds)."""
     import re, subprocess
     pkgs = ("java.lang java.lang.invoke java.lang.reflect java.io java.net "
             "java.nio java.util java.util.concurrent java.util.concurrent.atomic "
@@ -193,7 +194,7 @@ def _probe_cell(cell, sf):
     cmd = (["java"] + addopens +
            ["-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC", "-Xmx8g",
             "-cp", f"{ROOT}/target/scala-2.13/classes:/opt/spark/jars/*",
-            "graft.bench.QProbe", cell, sf])
+            "graft.bench.Probe", cell, sf])
     try:
         out = subprocess.run(cmd, capture_output=True, text=True, timeout=1200)
     except subprocess.TimeoutExpired:
@@ -208,7 +209,7 @@ def _probe_cell(cell, sf):
 
 def probe(rnd, sf=PROBE_SF):
     """Auto-adjudicate this round's check flags (VERDICT r12 item 5):
-    for each flagged query cell, run QProbe warm iterations and compare
+    for each flagged query cell, run Probe warm iterations and compare
     the floor against the cell's historical best. Appends a verdict
     table to results/BENCH_NOTES.md; exits 1 only if a flag REPRODUCES
     above the gate ratio in the probe (a real regression candidate)."""
