@@ -1263,7 +1263,7 @@ object Similarity {
       import s.implicits._
       probePairs.toDF("qid", "cid")
     }
-    val layout = s.read.parquet(ivfPqLayoutPath(s, dir))
+    val layout = Tables.read(s, ivfPqLayoutPath(s, dir))
       .filter(col("cid").isin(probeCells.map(_.toInt): _*))
       .withColumn("cid", col("cid").cast("long"))
     val cand = layout.join(broadcast(probes), Seq("cid"))
@@ -1856,7 +1856,7 @@ object Similarity {
       graft.sources.Layout.copyTree(new java.io.File(src), root)
       val touched = s13TouchedCells(s, dir)
       val tmp = new java.io.File(root, "_tmp-merge")
-      s.read.parquet(src)
+      Tables.read(s, src)
         .filter(col("cid").isin(touched.map(_.toInt): _*))
         .withColumn("cid", col("cid").cast("long"))
         .select(col("vec_id"), col("cid"), col("code"))
@@ -2295,7 +2295,7 @@ object Similarity {
       (s, dir) => {
         graft.functions.GraftFunctions.register(s)
         val touched = s13TouchedCells(s, dir)
-        s.read.parquet(s13CompactedPath(s, dir))
+        Tables.read(s, s13CompactedPath(s, dir))
           .withColumn("cid", col("cid").cast("long"))
           .groupBy(col("cid"))
           .agg(count(lit(1)).as("n"),

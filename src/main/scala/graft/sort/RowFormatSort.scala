@@ -79,7 +79,7 @@ object RowFormatSort {
   def sortKernel(rows: Array[Row], schema: StructType): Array[Row] = {
     val encs = schema.fields.map(f => fieldEncoder(f.dataType)) // RowConverter::new analog
     val n = rows.length
-    val w = new KeyWriter(math.max(64, n * schema.length * 12))
+    val w = new KeyWriter(ColumnSort.slabCapacity(n, schema.length))
     val offsets = new Array[Int](n + 1)
     var i = 0
     while (i < n) {

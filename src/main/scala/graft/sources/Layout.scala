@@ -105,7 +105,7 @@ object Layout {
     * to microseconds by the loader, so the copy round-trips exactly).
     */
   private def partitionedEvents(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(memoLayout(s, "graft_part_events", dir) { path =>
+    Tables.read(s, memoLayout(s, "graft_part_events", dir) { path =>
       t(s, dir, "events").write
         .partitionBy("event_type")
         .mode("overwrite")
@@ -154,8 +154,8 @@ object Layout {
     */
   private[graft] def compactedEvents(s: SparkSession, dir: String): DataFrame = {
     val src = fragmentedEventsPath(s, dir)
-    s.read.parquet(memoLayout(s, "graft_compact_events", dir) { path =>
-      s.read.parquet(src)
+    Tables.read(s, memoLayout(s, "graft_compact_events", dir) { path =>
+      Tables.read(s, src)
         .repartition(col("event_type"))
         .write
         .option("maxRecordsPerFile", TargetRowsPerFile)
@@ -246,7 +246,7 @@ object Layout {
         .filter(f => f.isDirectory && f.getName.startsWith("event_type="))
       parts.filter(p => dataFiles(p).length > CompactFileThreshold).foreach { pdir =>
         val tmp = new java.io.File(root, "_tmp-" + pdir.getName)
-        s.read.parquet(pdir.getAbsolutePath)
+        Tables.read(s, pdir.getAbsolutePath)
           .repartition(1)
           .write.option("maxRecordsPerFile", TargetRowsPerFile)
           .mode("overwrite").parquet(tmp.getAbsolutePath)
@@ -371,7 +371,7 @@ object Layout {
       "q46_selective_compact",
       (s, dir) => {
         graft.functions.GraftFunctions.register(s)
-        eventsIntegrityAgg(s.read.parquet(selectivelyCompactedPath(s, dir)))
+        eventsIntegrityAgg(Tables.read(s, selectivelyCompactedPath(s, dir)))
       },
       Some(eventsIntegritySql),
     ),
@@ -550,9 +550,9 @@ object Layout {
       "q54_spec_evolution",
       (s, dir) => {
         val root = specEvolvedEventsPath(s, dir)
-        val v0 = s.read.parquet(s"$root/spec=v0")
+        val v0 = Tables.read(s, s"$root/spec=v0")
           .filter(to_date(col("ts")).between(lit(SpecWindowLo), lit(SpecWindowHi)))
-        val v1 = s.read.parquet(s"$root/spec=v1")
+        val v1 = Tables.read(s, s"$root/spec=v1")
           .filter(col("pd").between(lit(SpecWindowLo), lit(SpecWindowHi)))
           .drop("pd")
         v0.unionByName(v1)
@@ -715,7 +715,7 @@ object Layout {
     * parquet pushdown. Exposed for ClusterSpec's on-disk contracts.
     */
   private[graft] def clusteredOrders(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(memoLayout(s, "graft_clust_orders", dir) { path =>
+    Tables.read(s, memoLayout(s, "graft_clust_orders", dir) { path =>
       t(s, dir, "orders")
         .withColumn("o_date", to_date(col("o_orderdate")))
         .repartitionByRange(ClusterFileCount, col("o_date"))
@@ -816,7 +816,7 @@ object Layout {
         .repartition(col("zbucket"))
         .write.partitionBy("zbucket").mode("overwrite").parquet(p)
     }
-    ZLayout(s.read.parquet(path), ckMin, ckSpan, dayMin, daySpan)
+    ZLayout(Tables.read(s, path), ckMin, ckSpan, dayMin, daySpan)
   }
 
   // ------------------------------------------------------------------
@@ -929,7 +929,7 @@ object Layout {
         .sortWithinPartitions(col("hd"))
         .write.mode("overwrite").parquet(p)
     }
-    ZLayout(s.read.parquet(path), ckMin, ckSpan, dayMin, daySpan)
+    ZLayout(Tables.read(s, path), ckMin, ckSpan, dayMin, daySpan)
   }
 
   private[graft] def q63Run(s: SparkSession, dir: String): DataFrame = {

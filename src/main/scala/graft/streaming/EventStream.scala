@@ -990,7 +990,7 @@ object EventStream {
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema =
-      try spark.read.parquet(dir).schema // footer-only, driver-side
+      try graft.Tables.read(spark, dir).schema // footer-only, driver-side
       catch {
         // ONLY the no-files-yet condition falls back (empty-dir starts
         // worked before the sniff existed). Any other analysis failure —

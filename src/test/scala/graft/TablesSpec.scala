@@ -1,7 +1,8 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Loader normalization contract for `events.ts`. The driver has shipped
   * the column as parquet TIMESTAMP(NANOS) (Spark 4 reads it only as a
@@ -13,6 +14,11 @@ import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
   * fixture carries, `Tables.t` yields a session-zoned TIMESTAMP holding
   * the same epoch-microsecond values (the session tz is pinned UTC, so
   * every branch is a pure reinterpretation).
+  *
+  * It also pins `Tables.read`'s schema cache: a warm read launches no
+  * inference job, a table rewritten in place or a child session with
+  * other parquet confs infers again, and no operator source reads
+  * parquet around the cache.
   */
 class TablesSpec extends SparkSpec {
 
@@ -48,5 +54,114 @@ class TablesSpec extends SparkSpec {
     // session-zoned TIMESTAMP micros (passes through untouched)
     writeFixture(s"$base/tz", timestamp_micros(lit(us)))
     assert(loadedMicros(s"$base/tz") == us)
+  }
+
+  private def tmp(tag: String): String =
+    java.nio.file.Files.createTempDirectory(tag).toString
+
+  /** Spark jobs `body` launches on `sess`'s context from this thread,
+    * counted by job group with the listener bus drained on both sides.
+    */
+  private def jobsLaunched(sess: org.apache.spark.sql.SparkSession)(body: => Unit): Int = {
+    val sc = sess.sparkContext
+    val group = s"tables-spec-${System.nanoTime}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "TablesSpec job count")
+    try { body; org.apache.spark.TestListenerBus.drain(sc) }
+    finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
+    n.get
+  }
+
+  test("a second Tables.t on an unchanged table launches no Spark job") {
+    import spark.implicits._
+    val dir = tmp("graft-schema-cache")
+    Seq((1L, 2L, "O", 10.0)).toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
+      .write.parquet(s"$dir/orders.parquet")
+    val first = jobsLaunched(spark)(Tables.t(spark, dir, "orders").schema)
+    assert(first >= 1, "the first read infers the schema with a Spark job")
+    val second = jobsLaunched(spark)(Tables.t(spark, dir, "orders").schema)
+    assert(second == 0, s"a warm read must reuse the inferred schema, launched $second jobs")
+    assert(Tables.t(spark, dir, "orders").as[(Long, Long, String, Double)].collect()
+      .toSeq == Seq((1L, 2L, "O", 10.0)))
+  }
+
+  test("a table rewritten in place in the same session yields its new schema") {
+    val dir = tmp("graft-schema-rewrite")
+    val path = s"$dir/events.parquet"
+    writeFixture(dir, lit(us * 1000L))
+    assert(Tables.read(spark, path).schema("ts").dataType == LongType)
+    assert(loadedMicros(dir) == us)
+
+    writeFixture(dir, timestamp_micros(lit(us)).cast(TimestampNTZType))
+    assert(Tables.read(spark, path).schema("ts").dataType == TimestampNTZType)
+    assert(loadedMicros(dir) == us)
+
+    import spark.implicits._
+    Seq((1L, 7L, "view", 1.0, "{}", "x"))
+      .toDF("event_id", "user_id", "event_type", "value", "props", "extra")
+      .withColumn("ts", timestamp_micros(lit(us)))
+      .write.mode("overwrite").parquet(path)
+    val df = Tables.t(spark, dir, "events")
+    assert(df.columns.contains("extra"), s"extra column missing: ${df.columns.toSeq}")
+    assert(df.select("extra").first().getString(0) == "x")
+    assert(loadedMicros(dir) == us)
+  }
+
+  test("a child session with other parquet confs infers the schema for itself") {
+    import spark.implicits._
+    // A narrow summary file over a wider data file: without mergeSchema
+    // Spark infers from `_common_metadata` alone, with it from every file.
+    val path = s"${tmp("graft-schema-child")}/orders.parquet"
+    Seq(1L).toDF("id").write.parquet(path)
+    val narrow = new java.io.File(path).listFiles().find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.copy(narrow.toPath, java.nio.file.Paths.get(path, "_common_metadata"))
+    Seq((2L, "x")).toDF("id", "extra").write.mode("append").parquet(path)
+    assert(Tables.read(spark, path).columns.toSeq == Seq("id"))
+
+    val child = spark.newSession()
+    child.conf.set("spark.sql.parquet.mergeSchema", "true")
+    val childJobs = jobsLaunched(child) {
+      assert(Tables.read(child, path).columns.toSeq == Seq("id", "extra"))
+    }
+    assert(childJobs >= 1, "the child session must run its own inference")
+    val parentJobs = jobsLaunched(spark) {
+      assert(Tables.read(spark, path).columns.toSeq == Seq("id"),
+        "the parent's entry is untouched by the child's")
+    }
+    assert(parentJobs == 0)
+  }
+
+  test("no parquet read in src/main/scala bypasses Tables.read outside the allow-list") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    // whitespace-free spellings that keep Spark's own inference, by file
+    val allowed = Map(
+      // the union schema of the schema-evolved fixture needs its footers merged
+      "Ingest.scala" -> Seq(""".read.option("mergeSchema","true").parquet(evolvedDocsPath("""),
+      // q49 reads the bloom-selected files of one table: many paths, one read
+      "Layout.scala" -> Seq(".read.parquet(sel:_*)"),
+    )
+    val read = """\.read(?:\.option\([^()]*\))*\.(?:parquet\(|format\("parquet"\))""".r
+    val offenders = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.getFileName.toString == "core.scala") // Tables itself
+      .filterNot(_.getParent.getFileName.toString == "bench") // bench mains
+      .flatMap { p =>
+        val name = p.getFileName.toString
+        val src = java.nio.file.Files.readString(p).replaceAll("\\s+", "")
+        read.findAllMatchIn(src)
+          .map(m => src.substring(m.start, math.min(src.length, m.end + 40)))
+          .filterNot(site => allowed.getOrElse(name, Nil).exists(site.startsWith))
+          .map(site => s"$name: $site")
+      }.toList
+    assert(offenders.isEmpty,
+      s"parquet read outside Tables.read — route it through the schema cache: $offenders")
   }
 }

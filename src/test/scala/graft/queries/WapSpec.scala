@@ -47,4 +47,22 @@ class WapSpec extends SparkSpec {
     assert(bad.count() == 0,
       "published membership per status must equal base ∪ accepted batch exactly")
   }
+
+  test("q58: a NULL o_orderstatus group publishes as a NULL census row") {
+    import spark.implicits._
+    val tiny = java.nio.file.Files.createTempDirectory("graft-q58-null").toString
+    Seq[(Long, Long, String, Double)]((1L, 1L, "O", 100.0), (2L, 2L, null, 50.0))
+      .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
+      .write.parquet(s"$tiny/orders.parquet")
+    (1L to 3L).toDF("c_custkey").write.parquet(s"$tiny/customer.parquet")
+    val published = graft.SparkEntry.queries("q58_wap")(spark, tiny)
+      .filter(col("part") === "published").collect()
+    val nullRow = published.filter(_.isNullAt(1))
+    assert(nullRow.length == 1, s"one NULL-status group expected: ${published.toSeq}")
+    assert(nullRow.head.getLong(2) == 1L)
+    assert(published.head.isNullAt(1), "the NULL group sorts first")
+    assert(published.map(r => Option(r.getString(1)) -> r.getLong(2)).toMap ==
+      Map(None -> 1L, Some("O") -> 2L, Some("F") -> 1L, Some("P") -> 1L),
+      "the clean batch publishes beside the NULL group")
+  }
 }
