@@ -30,19 +30,14 @@ object Bench {
       System.err.println(f"[bench] $phase done at t=${(System.nanoTime() - tStart) / 1e9}%.0f s")
 
     // Phase-scoped caches: each phase (warmup / uniform pass / skew pass)
-    // releases its materialized tables and index caches before the next
-    // one starts. Within a phase, reuse is the production shape the bench
+    // releases its corpus' CorpusCache entries before the next one
+    // starts. Within a phase, reuse is the production shape the bench
     // wants to measure; ACROSS phases the dead sets only stack up in the
     // unified memory pool — measured in round 4: with the round's larger
     // inventory (bigram LM, quantized corpora, component checkpoints) the
     // skew pass ran against a full storage pool and its first cell
     // degraded 50× from eviction churn, while the same query on the same
     // fixture in a fresh JVM ran in 1 s.
-    def releasePhase(dir: String): Unit = {
-      graft.pipeline.Materialized.releaseMatching(_.endsWith(s"|$dir"))
-      graft.pipeline.Dedup.releaseIndex(spark, dir)
-      graft.pipeline.Similarity.releaseBlockStats(spark)
-    }
 
     // Noise-calibration cell: a fixed single-threaded pure-CPU kernel
     // (xorshift stream sum, no allocation, no Spark) timed at each
@@ -106,7 +101,7 @@ object Bench {
         System.err.println(s"[bench] warmup ${q.name} @ $warmDir failed: ${e.getMessage}")
       }
     }
-    releasePhase(warmDir)
+    CorpusCache.release(warmDir)
     mark("warmup")
 
     // Reference-protocol sort sweep (µs per sorted batch, min of
@@ -284,7 +279,7 @@ object Bench {
     cal("queries") = noiseCal()
     val results = timePass(headline, benchDir, recordCard = true)
     cal("queries_end") = noiseCal()
-    releasePhase(benchDir)
+    CorpusCache.release(benchDir)
     mark("query pass")
 
     // Skewed-data cells: hot shingles / hot labels / hot join keys only
@@ -331,7 +326,7 @@ object Bench {
           // ON EVERY EXIT PATH: the skew cache set left on-heap would
           // pressure the µs-scale kernel timings the second sweep window
           // exists to keep quiet
-          releasePhase(skewDir)
+          CorpusCache.release(skewDir)
         }
       } catch {
         case e: Throwable =>
@@ -356,7 +351,7 @@ object Bench {
         graft.pipeline.Dedup.prewarmIndexes(spark, benchDir)
         graft.pipeline.Similarity.prewarmIndexesLite(spark, benchDir)
         val ts = skewQs.map(q => q.name -> once(q, benchDir)).toMap
-        releasePhase(benchDir)
+        CorpusCache.release(benchDir)
         ts
       } catch {
         case e: Throwable =>

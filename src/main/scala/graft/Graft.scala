@@ -16,12 +16,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Graft {
 
-  // last corpus dir wired per session — lets sql() skip the 10
-  // footer-read re-registrations on repeated calls for the same dir,
-  // while a dir CHANGE still rewires every view
-  private val wired =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, String]
-
   /** Register the corpus tables as temp views and the engine's custom
     * functions in `spark`'s session catalog (idempotent; re-invoking
     * with a different `dir` repoints every view).
@@ -31,8 +25,6 @@ object Graft {
     Tables.names.foreach { n =>
       Tables.t(spark, dir, n).createOrReplaceTempView(n)
     }
-    wired.keys.filter(_.sparkContext.isStopped).foreach(wired.remove)
-    wired.put(spark, dir)
   }
 
   /** All operator names the engine ships, in module order. */
@@ -45,12 +37,12 @@ object Graft {
         s"unknown graft query '$name'; known: ${queryNames.sorted.mkString(", ")}")
     )(spark, dir)
 
-  /** Register (see [[register]]) and run an ad-hoc SQL query. Wiring is
-    * skipped when this session is already registered for `dir`, so a
-    * notebook loop of sql() calls pays the footer reads once.
+  /** Register (see [[register]]) and run an ad-hoc SQL query. Every call
+    * re-registers, so the views list the corpus as it is now; the schema
+    * cache of [[Tables.read]] keeps a repeat call free of footer reads.
     */
   def sql(spark: SparkSession, dir: String, query: String): DataFrame = {
-    if (!wired.get(spark).contains(dir)) register(spark, dir)
+    register(spark, dir)
     spark.sql(query)
   }
 }

@@ -76,7 +76,8 @@ object RgFixture {
           sfDir
       }
 
-  /** Builds (once per corpus dir) the relayout and sets the split size
+  /** Builds (once per corpus listing, named by its
+    * [[graft.CorpusCache.fingerprint]]) the relayout and sets the split size
     * it needs on `spark`: the fixture's per-table files are ~256 KiB,
     * and under the DEFAULT 128 MB maxPartitionBytes the open-cost
     * packer would glue ~30 of them back into one split, re-serializing
@@ -88,7 +89,7 @@ object RgFixture {
   def prepare(spark: SparkSession, sfDir: String): String = {
     spark.conf.set("spark.sql.files.maxPartitionBytes",
       sys.env.getOrElse("SPARK_GRAFT_MAX_SPLIT_BYTES", "4m"))
-    val root = s"${graft.Scratch.dir}/rgfix/${graft.Scratch.pathKey(sfDir)}"
+    val root = s"${graft.Scratch.dir}/rgfix/${graft.CorpusCache.fingerprint(spark, sfDir)}"
     graft.Scratch.buildOnce(root) {
       graft.Tables.names.foreach { name =>
         val bytes = new java.io.File(s"$sfDir/$name.parquet").length()

@@ -241,12 +241,6 @@ object ScaleProbe {
       catch { case e: Throwable => System.err.println(s"[scale] warm $n: ${e.getMessage}") }
     }
 
-    def releasePhase(dir: String): Unit = {
-      graft.pipeline.Materialized.releaseMatching(_.endsWith(s"|$dir"))
-      graft.pipeline.Dedup.releaseIndex(spark, dir)
-      graft.pipeline.Similarity.releaseBlockStats(spark)
-    }
-
     val results = scala.collection.mutable.LinkedHashMap
       .empty[(Int, String), Double]
     val cals = scala.collection.mutable.LinkedHashMap.empty[Int, Double]
@@ -284,7 +278,7 @@ object ScaleProbe {
         results((r, n)) = if (samples.isEmpty) -1.0 else samples.min
         System.err.println(f"[scale] x$r $n: ${results((r, n))}%.2f s")
       }
-      releasePhase(dir)
+      graft.CorpusCache.release(dir)
     }
     def num(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))

@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import graft.{Q, Tables}
+import graft.{CorpusCache, Q, Tables}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -211,7 +211,7 @@ object Multimodal {
     * fused-map spelling; this is its persisted-signature shape.
     */
   private[graft] def sigIndex(s: SparkSession, dir: String): DataFrame =
-    graft.pipeline.Materialized.getOrBuild(s, s"m6.sig|$dir") {
+    CorpusCache.table(s, dir, "m6.sig") {
       graft.functions.GraftFunctions.register(s)
       blobs(s, dir).select(col("id"),
         call_function("byte_simhash", col("payload"), lit(32)).as("phash"))
@@ -235,15 +235,10 @@ object Multimodal {
     * consumer was otherwise paying a full documents scan for one long
     * (round-8 review).
     */
-  private val maxDocIdCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
-
-  private def maxDocId(s: SparkSession, dir: String): Long = {
-    maxDocIdCache.keys.filter(_._1.sparkContext.isStopped).foreach(maxDocIdCache.remove)
-    maxDocIdCache.getOrElseUpdate((s, dir),
+  private def maxDocId(s: SparkSession, dir: String): Long =
+    CorpusCache(s, dir, "m7.maxdoc")(
       graft.BoundedCollect.rows(
         t(s, dir, "documents").agg(max(col("doc_id"))), 1, "m7 max doc id")(0).getLong(0))
-  }
 
   private[graft] def rasterVariants(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
@@ -273,7 +268,7 @@ object Multimodal {
     * localCheckpoint truncates lineage like ivfCentroids').
     */
   private[graft] def thumbIndex(s: SparkSession, dir: String): DataFrame =
-    graft.pipeline.Materialized.getOrBuild(s, s"m78.thumb|$dir") {
+    CorpusCache.table(s, dir, "m78.thumb") {
       graft.functions.GraftFunctions.register(s)
       val orig = rasterBlobs(s, dir).select(
         col("id").as("mid"), col("id").as("src"), lit(0).as("kind"),

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.{Q, Tables}
+import graft.{CorpusCache, Q, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -99,7 +99,7 @@ object Curation {
         val gated = feats
           .filter(col("n_words").between(MinWords, MaxWords))
           .withColumn("pred_lang", predLangCol)
-        val uniq = Materialized.getOrBuild(s, s"p1.uniq|$dir")(gated
+        val uniq = CorpusCache.table(s, dir, "p1.uniq")(gated
           .withColumn("rn",
             row_number().over(Window.partitionBy("fingerprint").orderBy("doc_id")))
           .filter(col("rn") === 1)
@@ -110,8 +110,8 @@ object Curation {
           .join(uniqIds.withColumnRenamed("doc_id", "doc1"), "doc1")
           .join(uniqIds.withColumnRenamed("doc_id", "doc2"), "doc2")
           .select("doc1", "doc2")
-        val losers = Materialized
-          .getOrBuild(s, s"p1.cc|$dir")(Cluster.minLabelComponents(dupPairs))
+        val losers = CorpusCache
+          .table(s, dir, "p1.cc")(Cluster.minLabelComponents(dupPairs))
           .filter(col("doc_id") =!= col("root"))
           .select("doc_id")
         uniq
@@ -184,7 +184,7 @@ object Curation {
         val isDelta = col("source").isin(DeltaSources: _*)
         // lake = p1 over the base sources only (the state before the
         // delta arrived), fingerprints kept for the exact check
-        val baseUniq = Materialized.getOrBuild(s, s"p2.lake.uniq|$dir")(gated
+        val baseUniq = CorpusCache.table(s, dir, "p2.lake.uniq")(gated
           .filter(!isDelta)
           .withColumn("rn",
             row_number().over(Window.partitionBy("fingerprint").orderBy("doc_id")))
@@ -196,8 +196,8 @@ object Curation {
           .join(baseIds.withColumnRenamed("doc_id", "doc1"), "doc1")
           .join(baseIds.withColumnRenamed("doc_id", "doc2"), "doc2")
           .select("doc1", "doc2")
-        val baseLosers = Materialized
-          .getOrBuild(s, s"p2.lake.cc|$dir")(Cluster.minLabelComponents(basePairs))
+        val baseLosers = CorpusCache
+          .table(s, dir, "p2.lake.cc")(Cluster.minLabelComponents(basePairs))
           .filter(col("doc_id") =!= col("root"))
           .select("doc_id")
         val lake = baseUniq.join(baseLosers, Seq("doc_id"), "left_anti")
@@ -217,8 +217,8 @@ object Curation {
           .join(members.select(col("doc_id").as("doc1"), col("mid").as("m1")), "doc1")
           .join(members.select(col("doc_id").as("doc2"), col("mid").as("m2")), "doc2")
           .select(col("m1").as("doc1"), col("m2").as("doc2"))
-        val deltaLosers = Materialized
-          .getOrBuild(s, s"p2.cc|$dir")(Cluster.minLabelComponents(mixedPairs))
+        val deltaLosers = CorpusCache
+          .table(s, dir, "p2.cc")(Cluster.minLabelComponents(mixedPairs))
           .filter(col("doc_id") =!= col("root"))
           .filter(col("doc_id") >= DeltaOffset)
           .select((col("doc_id") - DeltaOffset).as("doc_id"))
@@ -611,7 +611,7 @@ object Curation {
         // both read base, and its BPE regex pass over the corpus is the
         // card's most expensive scan — cache the 5-row result, not the
         // regex (same reuse discipline as q65's hash table)
-        val base = Materialized.getOrBuild(s, s"p11.base|$dir") {
+        val base = CorpusCache.table(s, dir, "p11.base") {
           docs.groupBy(col("lang"))
             .agg(count(lit(1)).as("n_docs"),
               sum(bpeTokens(col("text")).cast("long")).as("n_tokens"))
@@ -630,7 +630,7 @@ object Curation {
         // (identical 3-gram hash definition), re-keyed to lang — the
         // card pays one doc_id join + distinct, never its own corpus
         // explode
-        val hs = Materialized.getOrBuild(s, s"p11.hashes|$dir") {
+        val hs = CorpusCache.table(s, dir, "p11.hashes") {
           Dedup.shingleIndex(s, dir)
             .join(t(s, dir, "documents").select(col("doc_id"), col("lang")), "doc_id")
             .select(col("lang"), col("h"))

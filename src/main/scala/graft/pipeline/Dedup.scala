@@ -1,10 +1,9 @@
 package graft.pipeline
 
-import graft.{Q, Tables}
+import graft.{CorpusCache, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators over `documents` (driver-mandated LLM-pipeline
   * extension).
@@ -94,7 +93,7 @@ object Dedup {
     */
   private[pipeline] def spanIndex(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    Materialized.getOrBuild(s, s"d8.pos|$dir")(
+    CorpusCache.table(s, dir, "d8.pos")(
       docsSharded(s, dir)
         .select(col("doc_id"), call_function("span_gen", col("text"), lit(SpanK))))
   }
@@ -159,51 +158,23 @@ object Dedup {
   /** One materialized shingle index per (session, corpus dir), reused by
     * every dedup operator in the session — the single biggest cost in
     * the dedup family is the explode+md5+distinct pipeline, and round 2
-    * paid it once per operator. Cached eagerly (count() before
-    * publication) so concurrent consumers read the cache rather than
-    * racing to fill it; keyed lookups mean re-invocations reuse rather
-    * than leak a new cache entry per call.
+    * paid it once per operator. A [[CorpusCache]] table: built eagerly
+    * before publication, so concurrent consumers read the cache rather
+    * than racing to fill it.
     */
-  private val indexCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private[graft] def shingleIndex(s: SparkSession, dir: String): DataFrame =
+    CorpusCache.table(s, dir, "d2.shingles") {
+      graft.functions.GraftFunctions.register(s)
+      rawShingles(docsSharded(s, dir))
+    }
 
-  /** Unpersist and forget the shingle index for a corpus dir (fixture
-    * teardown — e.g. Bench's skew pass releasing its throwaway corpus).
-    * Like [[Materialized]], the index cache is NOT change-detecting:
-    * rewriting `dir` in place within one session serves the stale index
-    * unless this is called after the write.
-    */
-  private[graft] def releaseIndex(s: SparkSession, dir: String): Unit = {
-    indexCache.remove((s, dir)).foreach(_.unpersist(false))
-    docCountCache.remove((s, dir))
-    bloomCache.remove((s, dir))
-  }
-
-  /** Memoized documents row count per (session, dir) — the scalar d4b's
+  /** Documents row count per (session, dir) — the scalar d4b's
     * adaptive piece width derives from (index-build metadata; the DuckDB
     * oracle recomputes the same count). Without the memo every d4b
-    * invocation pays a count job before its plan exists. Same staleness
-    * contract as the shingle index; released with it.
+    * invocation pays a count job before its plan exists.
     */
-  private val docCountCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
-
-  private def docCount(s: SparkSession, dir: String): Long = {
-    docCountCache.keys.filter(_._1.sparkContext.isStopped).foreach(docCountCache.remove)
-    docCountCache.getOrElseUpdate((s, dir), t(s, dir, "documents").count())
-  }
-
-  private[graft] def shingleIndex(s: SparkSession, dir: String): DataFrame = {
-    // sweep dead sessions' entries (same rationale as Materialized)
-    indexCache.keys.filter(_._1.sparkContext.isStopped).foreach(indexCache.remove)
-    indexCache.getOrElseUpdate((s, dir), {
-      graft.functions.GraftFunctions.register(s)
-      val df = rawShingles(docsSharded(s, dir))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      df.count() // eager build: one fill, then pure cache reads
-      df
-    })
-  }
+  private def docCount(s: SparkSession, dir: String): Long =
+    CorpusCache(s, dir, "d4b.docs")(t(s, dir, "documents").count())
 
   /** Hot-shingle-capped index (d2's self-join input): the shared
     * [[shingleIndex]] with df > [[ShingleDfCap]] shingles anti-joined
@@ -211,7 +182,7 @@ object Dedup {
     * call neither rebuilds nor re-analyzes the plan.
     */
   private[graft] def cappedIndex(s: SparkSession, dir: String): DataFrame =
-    Materialized.getOrBuild(s, s"d2.capped|$dir")(applyDfCap(shingleIndex(s, dir)))
+    CorpusCache.table(s, dir, "d2.capped")(applyDfCap(shingleIndex(s, dir)))
 
   /** Eagerly build the shared dedup index tables for `dir` (the raw
     * shingle index and d2's capped variant — both builds are eager, the
@@ -272,16 +243,16 @@ object Dedup {
     * Materialized too — d3b emits it and d5 verifies it, and the bands
     * self-join is the expensive step both share.
     *
-    * Key-memoized (`getOrBuild`, not `apply`): a re-invocation must not
-    * even CONSTRUCT the candidate plan. `apply`'s sameResult check
-    * analyzes the freshly-built join tree on every call, and for this
-    * family that driver-side analysis (~0.25 s across the sig/pairs/
-    * verified lookups) dominated d5's warm re-run — the r5 bench
-    * regression was plan-rebuild overhead, not lost cache sharing.
+    * Key-memoized: a re-invocation must not even CONSTRUCT the
+    * candidate plan. A plan-comparing reuse check analyzes the
+    * freshly-built join tree on every call, and for this family that
+    * driver-side analysis (~0.25 s across the sig/pairs/verified
+    * lookups) dominated d5's warm re-run — the r5 bench regression was
+    * plan-rebuild overhead, not lost cache sharing.
     */
   private def lshCandidates(s: SparkSession, dir: String): DataFrame =
-    Materialized.getOrBuild(s, s"d3b.pairs|$dir") {
-      val sig = Materialized.getOrBuild(s, s"d3b.sig|$dir")(minhashSignatures(s, dir))
+    CorpusCache.table(s, dir, "d3b.pairs") {
+      val sig = CorpusCache.table(s, dir, "d3b.sig")(minhashSignatures(s, dir))
       val bands = sig.select(col("doc_id"), explode(array(
         concat_ws("|", lit(0), col("band0")),
         concat_ws("|", lit(1), col("band1")))).as("bucket"))
@@ -307,11 +278,11 @@ object Dedup {
     * they are small (at every gate SF they are).
     */
   private[pipeline] def lshVerifiedPairs(s: SparkSession, dir: String): DataFrame =
-    // getOrBuild: the shared artifact here is the materialized
-    // `d5.verified|dir` pair table (built once, read by d5's re-runs,
-    // d6, and p1). Key-memoization means a warm call returns that live
-    // table without rebuilding or re-analyzing the three-join plan.
-    Materialized.getOrBuild(s, s"d5.verified|$dir")(lshVerifiedPairsPlan(s, dir))
+    // the shared artifact here is the materialized `d5.verified` pair
+    // table (built once, read by d5's re-runs, d6, and p1): a warm call
+    // returns that live table without rebuilding or re-analyzing the
+    // three-join plan.
+    CorpusCache.table(s, dir, "d5.verified")(lshVerifiedPairsPlan(s, dir))
 
   private def lshVerifiedPairsPlan(s: SparkSession, dir: String): DataFrame = {
     val cand = lshCandidates(s, dir)
@@ -508,7 +479,7 @@ object Dedup {
     // metadata read)
     val pb = d4bPieceBits(docCount(s, dir))
     val nbits = D4bPieces * pb
-    val sig = Materialized.getOrBuild(s, s"d4b.sig$nbits|$dir")(
+    val sig = CorpusCache.table(s, dir, s"d4b.sig$nbits")(
       simhashN(s, dir, nbits, "simhash"))
     sig.select(col("doc_id"), col("simhash"),
       explode(array((0 until D4bPieces).map(i =>
@@ -587,7 +558,7 @@ object Dedup {
     * d13 and p6 all read this one artifact.
     */
   private[pipeline] def dupComponents(s: SparkSession, dir: String): DataFrame =
-    Materialized.getOrBuild(s, s"d6.cc|$dir")(
+    CorpusCache.table(s, dir, "d6.cc")(
       Cluster.minLabelComponents(
         lshVerifiedPairs(s, dir).filter(col("is_dup")).select("doc1", "doc2")))
 
@@ -1184,21 +1155,14 @@ object Dedup {
     * Exposed for BloomDecontamSpec's selectivity and plan pins; the Q
     * exact-verifies this set.
     */
-  /** Session-memoized d11 bitmask: the build is a distributed
-    * aggregate plus a 128 KB BoundedCollect, and one gate run invokes
-    * it several times (the Q, the spec's equality and selectivity
-    * probes) against the same corpus. Keyed and swept like
-    * [[Materialized]]; NOT change-detecting — released with the
-    * shingle index on fixture teardown ([[releaseIndex]]).
+  /** Session-memoized d11 bitmask, a [[CorpusCache]] entry: the build
+    * is a distributed aggregate plus a 128 KB BoundedCollect, and one
+    * gate run invokes it several times (the Q, the spec's equality and
+    * selectivity probes) against the same corpus.
     */
-  private val bloomCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Array[Long]]
-
   private[pipeline] def bloomCandidates(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    bloomCache.keys.filter(_._1.sparkContext.isStopped).foreach(bloomCache.remove)
-    val bloom = bloomCache.getOrElseUpdate((s, dir),
-      bloomOf(evalSpanSet(s, dir).select("h")))
+    val bloom = CorpusCache(s, dir, "d11.bloom")(bloomOf(evalSpanSet(s, dir).select("h")))
     spanIndex(s, dir).filter(col("doc_id") % EvalModulus =!= 0)
       .filter(call_function("bloom_contains", col("h"), typedLit(bloom),
         lit(BloomK), lit(BloomBits)))

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.{Q, Tables}
+import graft.{CorpusCache, Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -664,7 +664,7 @@ object Events {
     * sum. Columns: event_type, hour_us, n, sv.
     */
   private def denseHourlyGrid(s: SparkSession, dir: String): DataFrame = {
-    val hourly = Materialized(s"e16.hourly|$dir",
+    val hourly = CorpusCache.table(s, dir, "e16.hourly")(
       t(s, dir, "events")
         .groupBy(
           unix_micros(date_trunc("HOUR", col("ts"))).as("hour_us"),
@@ -710,7 +710,7 @@ object Events {
     // branches sharing a subtree get no exchange reuse — without the
     // persist every run scans events and pays the md5 jitter twice
     // (the t6/m6/s3 precedent).
-    Materialized(s"e14.arr|$dir",
+    CorpusCache.table(s, dir, "e14.arr")(
       t(s, dir, "events").select(
         col("event_id"),
         unix_micros(col("ts")).as("t"),

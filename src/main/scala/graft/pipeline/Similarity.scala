@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.{Q, Tables}
+import graft.{CorpusCache, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -173,7 +173,7 @@ object Similarity {
     */
   private def s2BandedCached(s: SparkSession, dir: String): DataFrame = {
     val e = vecs(s, dir)
-    Materialized.getOrBuild(s, s"s2.banded|$dir")(
+    CorpusCache.table(s, dir, "s2.banded")(
       s2Banded(e, s2Bits(corpusCount(s, dir))))
   }
       .select(col("vec_id"), col("v"), col("bucket"))
@@ -209,39 +209,14 @@ object Similarity {
       s"CASE WHEN list_dot_product(v, [${p.mkString(",")}]) >= 0 THEN 1 ELSE 0 END AS b$i"
     }.mkString(",\n               ")
 
-  /** Memo for the one driver-side scalar the banded plan needs (max
-    * block size fixes the sign-bit column count): keyed by the INPUT
-    * plan's canonical form, so bench re-runs and d5-style reuse don't
-    * re-scan the corpus for a number that cannot have changed. NOT
-    * change-detecting: rewriting a fixture dir in-place within one
-    * session must call [[releaseBlockStats]] (Bench's skew teardown
-    * does), or the stale scalar under-sizes the sign-bit columns.
-    */
-  private val maxBlockCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan), Long]
-
-  /** Drop every memoized block scalar for a session (fixture teardown). */
-  private[graft] def releaseBlockStats(s: SparkSession): Unit = {
-    maxBlockCache.keys.filter(_._1 eq s).foreach(maxBlockCache.remove)
-    corpusCountCache.keys.filter(_._1 eq s).foreach(corpusCountCache.remove)
-    s10BoundaryCache.keys.filter(_._1 eq s).foreach(s10BoundaryCache.remove)
-    s13TouchedCache.keys.filter(_._1 eq s).foreach(s13TouchedCache.remove)
-  }
-
-  /** Memoized corpus row count per (session, dir) — the one scalar the
+  /** Corpus row count per (session, dir) — the one scalar the
     * adaptive geometries derive their widths/K from (index-build
     * metadata). Without the memo every s2/s4 INVOCATION pays a count
     * job before its plan even exists (~1 s of pure overhead per probe at
-    * bench scale). Same staleness contract and teardown hook as
-    * [[maxBlockCache]].
+    * bench scale).
     */
-  private val corpusCountCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
-
-  private def corpusCount(s: SparkSession, dir: String): Long = {
-    corpusCountCache.keys.filter(_._1.sparkContext.isStopped).foreach(corpusCountCache.remove)
-    corpusCountCache.getOrElseUpdate((s, dir), vecs(s, dir).count())
-  }
+  private def corpusCount(s: SparkSession, dir: String): Long =
+    CorpusCache(s, dir, "s.count")(vecs(s, dir).count())
 
   /** s3 banded corpus for an arbitrary (vec_id, label, v) DataFrame:
     * per-label adaptive band width, one output row per (vector, band).
@@ -251,12 +226,8 @@ object Similarity {
     */
   private[graft] def s3BandedDf(e: DataFrame): DataFrame = {
     val blocks = e.groupBy("label").agg(count(lit(1)).as("block_n"))
-    // sweep dead sessions' scalars (same rationale as Materialized)
-    maxBlockCache.keys.filter(_._1.sparkContext.isStopped).foreach(maxBlockCache.remove)
-    val maxBlock = maxBlockCache.getOrElseUpdate(
-      (e.sparkSession, e.queryExecution.analyzed.canonicalized),
-      graft.BoundedCollect.rows(
-        blocks.agg(max("block_n")), 1, "s3 max block size")(0).getLong(0))
+    val maxBlock = graft.BoundedCollect.rows(
+      blocks.agg(max("block_n")), 1, "s3 max block size")(0).getLong(0)
     val maxNbits = s3Bits(maxBlock)
     val sig = withSignBits(e, S3Bands * maxNbits)
       .join(broadcast(blocks), "label")
@@ -269,6 +240,12 @@ object Similarity {
       .select(col("vec_id"), col("label"), col("v"), col("band"))
   }
 
+  /** The corpus' s3 banded table, materialized per corpus: the self-join
+    * input of [[s3RawPairs]] and the source of [[s3BucketSizes]].
+    */
+  private def s3Banded(s: SparkSession, dir: String): DataFrame =
+    CorpusCache.table(s, dir, "s3.banded")(s3BandedDf(vecs(s, dir)))
+
   /** s3's candidate pairs with their RAW cosine — the shared upstream of
     * s3 (threshold 0.25 near-dup report) and d10 (the stricter
     * [[SemanticDupCos]] pairs fed to the cluster closure). The banded
@@ -276,7 +253,7 @@ object Similarity {
     * dots are the dominant per-row cost).
     */
   private[graft] def s3RawPairs(s: SparkSession, dir: String): DataFrame = {
-    val banded = Materialized.getOrBuild(s, s"s3.banded|$dir")(s3BandedDf(vecs(s, dir)))
+    val banded = s3Banded(s, dir)
     val x = banded.select(col("vec_id").as("id1"), col("label"), col("v").as("v1"), col("band"))
     val y = banded.select(col("vec_id").as("id2"), col("label"), col("v").as("v2"), col("band"))
     x.join(y, Seq("label", "band")).filter(col("id1") < col("id2"))
@@ -328,7 +305,7 @@ object Similarity {
     * block size (spec-asserted, including on a skewed fixture).
     */
   def s3BucketSizes(s: SparkSession, dir: String): DataFrame =
-    s3BandedDf(vecs(s, dir))
+    s3Banded(s, dir)
       .groupBy(col("label"), col("band"))
       .agg(count(lit(1)).as("n"))
 
@@ -338,7 +315,7 @@ object Similarity {
     // consumed by s1 (as its output) AND s2 (as the recall reference) —
     // AuditQueries·10 rows computed from one corpus pass, the classic
     // evaluate-once ground-truth table.
-    Materialized.getOrBuild(s, s"s1.top10|$dir") {
+    CorpusCache.table(s, dir, "s1.top10") {
       val e = vecs(s, dir)
       val q = e.filter(col("vec_id") < AuditQueries)
         .select(col("vec_id").as("qid"), col("v").as("qv"))
@@ -620,11 +597,10 @@ object Similarity {
     * a LogicalRDD: without it every CONSUMER query re-analyzes the whole
     * unrolled Lloyd chain at plan time — measured as ~2 s of pure driver
     * work per s4 invocation at sf0.1, triple the actual probe cost.
-    * getOrBuild (not apply) so a cache hit never re-builds the chain
-    * plan just to compare it.
+    * A [[CorpusCache]] hit never re-builds the chain plan.
     */
   private def ivfCentroids(s: SparkSession, dir: String, e: DataFrame, k: Int): DataFrame =
-    Materialized.getOrBuild(s, s"s4.cent|$dir")(
+    CorpusCache.table(s, dir, "s4.cent")(
       (1 to LloydIters).foldLeft(ivfSeeds(e, k))((c, _) => lloydStep(e, c, k))
         .localCheckpoint())
 
@@ -637,7 +613,7 @@ object Similarity {
     * rebuilding per query).
     */
   private def ivfAssigned(s: SparkSession, dir: String, e: DataFrame, k: Int): DataFrame =
-    Materialized.getOrBuild(s, s"s4.assigned|$dir")(
+    CorpusCache.table(s, dir, "s4.assigned")(
       ivfAssign(e, ivfCentroids(s, dir, e, k), k).localCheckpoint())
 
   /** IVF cell sizes — the quantity s4's probe-cost bound rests on: a
@@ -809,7 +785,7 @@ object Similarity {
       expr("transform(v, x -> x / sqrt(vec_dot(v, v)))").as("nv"))
     val ma = nv.agg(
       max(expr("aggregate(nv, 0D, (a, x) -> greatest(a, abs(x)))")).as("maxabs"))
-    Materialized.getOrBuild(s, s"s5.qz|$dir")(
+    CorpusCache.table(s, dir, "s5.qz")(
       nv.crossJoin(broadcast(ma))
         .select(col("vec_id"),
           expr("""transform(nv, x -> CAST(
@@ -872,7 +848,7 @@ object Similarity {
     def word(off: Int): Column =
       expr(s"aggregate(zip_with(slice(v, $off, 32), sequence(0, 31), " +
         "(x, i) -> IF(x > 0D, shiftleft(1L, i), 0L)), 0L, (acc, y) -> acc + y)")
-    Materialized.getOrBuild(s, s"s17.codes|$dir")(
+    CorpusCache.table(s, dir, "s17.codes")(
       vecs(s, dir).select(col("vec_id"), word(1).as("c0"), word(33).as("c1")))
   }
 
@@ -962,7 +938,7 @@ object Similarity {
     .select(col("vec_id"), col("pos").as("sub"), col("col").as("sv"))
 
   private def pqSlices(s: SparkSession, dir: String): DataFrame =
-    Materialized.getOrBuild(s, s"s6.slices|$dir")(sliceVecs(vecs(s, dir)))
+    CorpusCache.table(s, dir, "s6.slices")(sliceVecs(vecs(s, dir)))
 
   /** Seed codebooks: slices of the [[PqK]] vectors at [[CentroidLo]] —
     * the same deterministic-sample rule as s4's seeds, per subspace.
@@ -1013,7 +989,7 @@ object Similarity {
     * it, same rationale as [[ivfCentroids]]).
     */
   private def pqCodebook(s: SparkSession, dir: String): DataFrame =
-    Materialized.getOrBuild(s, s"s6.cb|$dir")(
+    CorpusCache.table(s, dir, "s6.cb")(
       (1 to PqLloydIters).foldLeft(pqSeeds(pqSlices(s, dir)))(
         (c, _) => pqLloydStep(pqSlices(s, dir), c)).localCheckpoint())
 
@@ -1048,7 +1024,7 @@ object Similarity {
     * spelling and its per-vector row-count assert live in [[packCodes]].
     */
   private[graft] def pqCodes(s: SparkSession, dir: String): DataFrame =
-    Materialized.getOrBuild(s, s"s6.codes|$dir")(
+    CorpusCache.table(s, dir, "s6.codes")(
       packCodes(pqAssign(pqSlices(s, dir), pqCodebook(s, dir)))
         .localCheckpoint())
 
@@ -1196,7 +1172,7 @@ object Similarity {
   private[graft] def prewarmIndexesLite(s: SparkSession, dir: String): Unit = {
     val e = vecs(s, dir)
     val k = numCentroids(corpusCount(s, dir))
-    Materialized.getOrBuild(s, s"s3.banded|$dir")(s3BandedDf(e))
+    s3Banded(s, dir)
     ivfAssigned(s, dir, e, k)
     ()
   }
@@ -1221,17 +1197,15 @@ object Similarity {
   }
 
   /** s8's on-disk serving index: `(vec_id, code)` parquet PARTITIONED BY
-    * cell id, written once per (JVM, corpus) on the scratch volume
-    * (Layout's memoization pattern) — the single-node twin of the
+    * cell id, written once per (JVM, corpus listing) on the scratch
+    * volume (Layout's memoization pattern) — the single-node twin of the
     * materialized billion-scale layout, 8 B/vector of code payload per
-    * cell directory.
+    * cell directory. Named by the corpus' [[CorpusCache.fingerprint]],
+    * so a corpus rewritten in place gets a fresh index.
     */
   private def ivfPqLayoutPath(s: SparkSession, dir: String): String = {
-    // Collision-proof key: an md5 of the FULL source path (ADVICE r5 —
-    // a String hashCode is 31 bits, and two dirs that collide would silently
-    // serve each other's index; _SUCCESS can't tell them apart). The
-    // shared spelling lives in Scratch.pathKey (Layout uses it too).
-    val path = s"${graft.Scratch.dir}/graft-layout-${s.sparkContext.applicationId}/ivfpq_${graft.Scratch.pathKey(dir)}"
+    val path = s"${graft.Scratch.dir}/graft-layout-${s.sparkContext.applicationId}/" +
+      s"ivfpq_${CorpusCache.fingerprint(s, dir)}"
     this.synchronized {
       if (!new java.io.File(path + "/_SUCCESS").isFile) {
         val e = vecs(s, dir)
@@ -1287,17 +1261,12 @@ object Similarity {
     * so both engines compute the identical split — index metadata (one
     * bounded 1-row pull), memoized like [[corpusCount]].
     */
-  private val s10BoundaryCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
-
-  private[graft] def s10Boundary(s: SparkSession, dir: String): Long = {
-    s10BoundaryCache.keys.filter(_._1.sparkContext.isStopped).foreach(s10BoundaryCache.remove)
-    s10BoundaryCache.getOrElseUpdate((s, dir), {
+  private[graft] def s10Boundary(s: SparkSession, dir: String): Long =
+    CorpusCache(s, dir, "s10.boundary") {
       val r = graft.BoundedCollect.rows(
         vecs(s, dir).agg(max("vec_id")), 1, "s10 delta boundary")(0)
       (r.getLong(0) + 1L) * 9L / 10L
-    })
-  }
+    }
 
   /** K for the frozen IVF quantizer — derived from the BASE corpus count
     * (the corpus size when the index was built), not the grown total:
@@ -1305,13 +1274,11 @@ object Similarity {
     * "maintained" index is a rebuild in disguise.
     */
   /** |base| — one memoized scalar count (index metadata, like
-    * [[corpusCount]]); `#s10base` keeps the cache key disjoint from
-    * real corpus dirs.
+    * [[corpusCount]]).
     */
   private def s10BaseCount(s: SparkSession, dir: String): Long = {
     val b = s10Boundary(s, dir)
-    corpusCountCache.getOrElseUpdate((s, s"$dir#s10base"),
-      vecs(s, dir).filter(col("vec_id") < b).count())
+    CorpusCache(s, dir, "s10.basecount")(vecs(s, dir).filter(col("vec_id") < b).count())
   }
 
   private def s10K(s: SparkSession, dir: String): Int = {
@@ -1329,7 +1296,7 @@ object Similarity {
     val b = s10Boundary(s, dir)
     val base = vecs(s, dir).filter(col("vec_id") < b)
     val k = s10K(s, dir)
-    Materialized.getOrBuild(s, s"s10.cent|$dir")(
+    CorpusCache.table(s, dir, "s10.cent")(
       (1 to LloydIters).foldLeft(ivfSeeds(base, k))((c, _) => lloydStep(base, c, k))
         .localCheckpoint())
   }
@@ -1341,7 +1308,7 @@ object Similarity {
   private def s10Codebook(s: SparkSession, dir: String): DataFrame = {
     val b = s10Boundary(s, dir)
     val baseSlices = pqSlices(s, dir).filter(col("vec_id") < b)
-    Materialized.getOrBuild(s, s"s10.cb|$dir")(
+    CorpusCache.table(s, dir, "s10.cb")(
       (1 to PqLloydIters).foldLeft(pqSeeds(baseSlices))((c, _) => pqLloydStep(baseSlices, c))
         .localCheckpoint())
   }
@@ -1428,7 +1395,7 @@ object Similarity {
   private[graft] def s10BaseAssigned(s: SparkSession, dir: String): DataFrame = {
     val b = s10Boundary(s, dir)
     val k = s10K(s, dir)
-    Materialized.getOrBuild(s, s"s10.baseasg|$dir")(
+    CorpusCache.table(s, dir, "s10.baseasg")(
       ivfAssign(vecs(s, dir).filter(col("vec_id") < b), s10Centroids(s, dir), k)
         .select(col("vec_id"), col("cid"))
         .localCheckpoint())
@@ -1446,7 +1413,7 @@ object Similarity {
   private[graft] def s10DeltaAssigned(s: SparkSession, dir: String): DataFrame = {
     val b = s10Boundary(s, dir)
     val k = s10K(s, dir)
-    Materialized.getOrBuild(s, s"s10.deltaasg|$dir")(
+    CorpusCache.table(s, dir, "s10.deltaasg")(
       ivfAssign(vecs(s, dir).filter(col("vec_id") >= b), s10Centroids(s, dir), k)
         .select(col("vec_id"), col("cid"))
         .localCheckpoint())
@@ -1660,7 +1627,7 @@ object Similarity {
     * reuse; round-7 review).
     */
   private[graft] def retrainCells(s: SparkSession, dir: String): DataFrame =
-    Materialized.getOrBuild(s, s"s12.rset|$dir") {
+    CorpusCache.table(s, dir, "s12.rset") {
       // bounded global rank: K ≈ √n drift-report rows (index metadata)
       val w = Portable.boundedW(col("cid")).orderBy(col("excess").desc, col("cid").asc)
       annDriftReport(s, dir)
@@ -1682,7 +1649,7 @@ object Similarity {
     * exchange reuse (round-7 review).
     */
   private[graft] def s12Members(s: SparkSession, dir: String): DataFrame =
-    Materialized.getOrBuild(s, s"s12.members|$dir") {
+    CorpusCache.table(s, dir, "s12.members") {
       s10BaseAssigned(s, dir).unionByName(s10DeltaAssigned(s, dir))
         .join(broadcast(retrainCells(s, dir)), "cid")
         .join(vecs(s, dir).select(col("vec_id"), col("v")), "vec_id")
@@ -1702,7 +1669,7 @@ object Similarity {
     * what lets the swap reuse every member's existing code.
     */
   private[graft] def retrainedCentroids(s: SparkSession, dir: String): DataFrame =
-    Materialized.getOrBuild(s, s"s12.ucent|$dir") {
+    CorpusCache.table(s, dir, "s12.ucent") {
       // K-row artifact, memoized like the frozen table it refreshes.
       // lloydStep's exact coalesce spelling: cellMeans over the members
       // emits rows ONLY for flagged non-empty cells, so coalesce(lv, cv)
@@ -1740,7 +1707,7 @@ object Similarity {
     // code lookup) — materialize it once, or the corpus-scale quantize+
     // encode subtree plans under each branch (round-8 review; the
     // no-exchange-reuse trap again)
-    val full = Materialized.getOrBuild(s, s"s12.fullidx|$dir")(
+    val full = CorpusCache.table(s, dir, "s12.fullidx")(
       annAssignFrozen(s, dir, lit(true)).localCheckpoint())
     val untouched = full.join(broadcast(retrainCells(s, dir)), Seq("cid"), "left_anti")
       .select(col("vec_id"), col("cid"), col("code"))
@@ -1820,17 +1787,12 @@ object Similarity {
     * driver-side scale), memoized like [[s10Boundary]]: the path
     * builder and the `rewritten` flag both need it.
     */
-  private val s13TouchedCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Seq[Long]]
-
-  private[graft] def s13TouchedCells(s: SparkSession, dir: String): Seq[Long] = {
-    s13TouchedCache.keys.filter(_._1.sparkContext.isStopped).foreach(s13TouchedCache.remove)
-    s13TouchedCache.getOrElseUpdate((s, dir),
+  private[graft] def s13TouchedCells(s: SparkSession, dir: String): Seq[Long] =
+    CorpusCache(s, dir, "s13.touched")(
       graft.BoundedCollect.rows(
         s10DeltaAssigned(s, dir).select(col("cid")).distinct(),
         s10K(s, dir), "s13 touched cells")
         .map(_.getLong(0)).sorted)
-  }
 
   /** s13 kernel: DELTA-TO-BASE INDEX COMPACTION — the lifecycle step
     * after s10's append: fold the delta's `(vec_id, cid, code)` rows
@@ -1940,7 +1902,7 @@ object Similarity {
       // the audit table itself is an evaluate-once artifact (5 rows,
       // one LSH probe + one baseline intersect per corpus) — the same
       // key-memoized shape as d5's verified pairs
-      (s, dir) => Materialized.getOrBuild(s, s"s2.audit|$dir") {
+      (s, dir) => CorpusCache.table(s, dir, "s2.audit") {
         val ex = knnBrute(s, dir).select(col("qid"), col("vec_id"))
         val lsh = knnLsh(s, dir).select(col("qid"), col("vec_id"))
         // qids come straight from the query predicate — deriving them
@@ -2018,7 +1980,7 @@ object Similarity {
     //      width, bucket join, exact cosine, recursive-CTE closure. ----
     Q(
       "d10_semantic_clusters",
-      (s, dir) => Materialized.getOrBuild(s, s"d10.cc|$dir")(
+      (s, dir) => CorpusCache.table(s, dir, "d10.cc")(
         Cluster.minLabelComponents(
           s3RawPairs(s, dir).filter(col("cos_raw") >= SemanticDupCos)
             .select(col("id1").as("doc1"), col("id2").as("doc2")))

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.{Q, Tables}
+import graft.{CorpusCache, Q, Tables}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -770,7 +770,7 @@ object Text {
     * on the pushed term filter instead.
     */
   private[graft] def postingsIndex(s: org.apache.spark.sql.SparkSession, dir: String) =
-    Materialized.getOrBuild(s, s"t15.postings|$dir") {
+    CorpusCache.table(s, dir, "t15.postings") {
       Dedup.docsSharded(s, dir)
         .select(col("doc_id"),
           posexplode(words(col("text"))).as(Seq("pos", "term")))
@@ -785,7 +785,7 @@ object Text {
     * no reusable exchange).
     */
   private[graft] def bigramIndex(s: org.apache.spark.sql.SparkSession, dir: String) =
-    Materialized.getOrBuild(s, s"t6.bigrams|$dir") {
+    CorpusCache.table(s, dir, "t6.bigrams") {
       graft.functions.GraftFunctions.register(s)
       Dedup.docsSharded(s, dir)
         .select(col("doc_id"), explode(bigrams(words(col("text")))).as("bg"))

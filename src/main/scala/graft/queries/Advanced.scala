@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{CorpusCache, Q, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -56,7 +56,7 @@ object Advanced {
     */
   private[graft] def sourceHashes(
       s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    graft.pipeline.Materialized.getOrBuild(s, s"q65.hashes|$dir") {
+    CorpusCache.table(s, dir, "q65.hashes") {
       graft.pipeline.Dedup.shingleIndex(s, dir)
         .join(t(s, dir, "documents").select(col("doc_id"), col("source")), "doc_id")
         .select(col("source"), col("h"))
@@ -77,7 +77,7 @@ object Advanced {
     */
   private[graft] def kmvSketch(
       s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    graft.pipeline.Materialized.getOrBuild(s, s"q65.sk|$dir") {
+    CorpusCache.table(s, dir, "q65.sk") {
       sourceHashes(s, dir)
         .withColumn("rk", row_number().over(
           Window.partitionBy(col("source")).orderBy(col("h").asc)))
@@ -478,7 +478,7 @@ object Advanced {
         // explode — without memoization the suite's most expensive scan
         // here ran TWICE per execution (the same per-branch recompute
         // that made q65 the slowest cell before its cache, review r9).
-        val bigr = graft.pipeline.Materialized.getOrBuild(s, s"q64.bigrams|$dir") {
+        val bigr = CorpusCache.table(s, dir, "q64.bigrams") {
           t(s, dir, "documents")
             .select(explode(bigrams(words(col("text")))).as("term"))
         }
@@ -987,7 +987,7 @@ object Advanced {
           src.groupBy("o_custkey").agg(
             count(lit(1)).as("pn"),
             sum(col("o_totalprice").cast(DecimalType(30, 2))).as("psum"))
-        val lake = graft.pipeline.Materialized.getOrBuild(s, s"q38.lake|$dir") {
+        val lake = CorpusCache.table(s, dir, "q38.lake") {
           partials(t(s, dir, "orders").filter(col("o_orderdate") < cutoff))
         }
         val delta = partials(t(s, dir, "orders").filter(col("o_orderdate") >= cutoff))
@@ -1034,7 +1034,7 @@ object Advanced {
             .groupBy(col("c_mktsegment"), col("o_orderstatus"))
             .agg(count(lit(1)).as("pn"),
               sum(col("o_totalprice").cast(DecimalType(30, 2))).as("psum"))
-        val lake = graft.pipeline.Materialized.getOrBuild(s, s"q59.lake|$dir") {
+        val lake = CorpusCache.table(s, dir, "q59.lake") {
           partials(o0, c0)
         }
         val inc = partials(dO, c0)
@@ -2515,7 +2515,7 @@ object Advanced {
     */
   private[graft] def cdcLogs(
       s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    graft.pipeline.Materialized.getOrBuild(s, s"q43.logs|$dir") {
+    CorpusCache.table(s, dir, "q43.logs") {
       val base = cdcLake(s, dir)
       val mx = graft.BoundedCollect.rows(
         base.agg(max(col("k"))), 1, "q43 max key")(0).getLong(0)
@@ -2602,18 +2602,9 @@ object Advanced {
     * for the merge family's broadcast hints (one tiny count over the
     * materialized log table, then pure map reads).
     */
-  private val logCountCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.SparkSession, String), Long]
   private[graft] def cdcLogCount(
-      s: org.apache.spark.sql.SparkSession, dir: String): Long = {
-    // sweep dead sessions' entries on every touch (the Materialized
-    // convention) — a JVM cycling sessions must not pin stopped
-    // SparkSessions through this cache
-    logCountCache.keys.filter(_._1.sparkContext.isStopped)
-      .foreach(logCountCache.remove)
-    logCountCache.getOrElseUpdate((s, dir), cdcLogs(s, dir).count())
-  }
+      s: org.apache.spark.sql.SparkSession, dir: String): Long =
+    CorpusCache(s, dir, "q41.logcount")(cdcLogs(s, dir).count())
 
   /** Broadcast cap for the merge family's touched-key sides: the log
     * between snapshots is ≪ the lake but CORPUS-PROPORTIONAL (the %-rule
@@ -2763,7 +2754,7 @@ object Advanced {
     // broadcast key fetch and the classification join) and shared
     // subtrees get no exchange reuse — without this the log max_by
     // runs twice per read
-    val rng = graft.pipeline.Materialized(s"q50.rng$v1-$v2|$dir",
+    val rng = CorpusCache.table(s, dir, s"q50.rng$v1-$v2")(
       resolveLog(cdcLogs(s, dir).filter(col("b") > v1 && col("b") <= v2)))
     val rngKeys = rng.select(col("k"))
     // Pre-images from the PHYSICAL as-of-v1 snapshot (round 14 — the
@@ -2815,7 +2806,7 @@ object Advanced {
     * q47's compacted base (the log's batches ≤ `cp` folded into a NEW
     * physical base) and q50's pre-image source.
     * Round 14 (VERDICT r13 "Next round" item 2): the
-    * fold is no longer re-derived per session through Materialized +
+    * fold is no longer re-derived per session through a persisted
     * localCheckpoint — it reads the `graft-lake` layout's as-of-`cp`
     * snapshot, whose per-version manifest names fully-resolved
     * copy-on-write parquet files ([[graft.sources.LakeLayout.ensure]]
@@ -2935,7 +2926,7 @@ object Advanced {
     */
   private[graft] def snapAllFiles(
       s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    graft.pipeline.Materialized.getOrBuild(s, s"q52.files|$dir") {
+    CorpusCache.table(s, dir, "q52.files") {
       val baseFids = cdcLake(s, dir)
         .select(pmod(col("k"), lit(SnapFidMod)).as("fid")).distinct()
         .select(lit(0).as("b"), col("fid"))
@@ -2974,7 +2965,7 @@ object Advanced {
     */
   private[graft] def snapStates(
       s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    graft.pipeline.Materialized.getOrBuild(s, s"q52.states|$dir") {
+    CorpusCache.table(s, dir, "q52.states") {
       graft.functions.GraftFunctions.register(s) // kx below uses md5_long
       (0 to 2).map { b =>
         asOfState(s, dir, b).drop("v")

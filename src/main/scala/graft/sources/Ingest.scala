@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.{Q, Scratch, Tables}
+import graft.{CorpusCache, Q, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -59,21 +59,23 @@ object Ingest {
 
   /** JSONL twin of `documents` with [[CorruptLines]] appended as an
     * extra text file in the same directory (the vendor-shipped bad
-    * shard). Memoized per (application, corpus) like Layout's rewrites.
+    * shard). Memoized per (application, corpus listing) like Layout's
+    * rewrites.
     */
-  private[graft] def jsonlDocsPath(s: SparkSession, dir: String): String =
+  private[graft] def jsonlDocsPath(s: SparkSession, dir: String): String = {
+    val path = s"${layoutRoot(s)}/graft_jsonl_docs_${CorpusCache.fingerprint(s, dir)}"
     // buildOnce, not _SUCCESS: the json writer commits _SUCCESS before
     // the corrupt shard lands, and a failure between the two steps
     // would memoize a fixture with an EMPTY quarantine — q40 would
     // hash-match while silently no longer exercising the corruption
     // path the operator exists to demonstrate (round-7 review).
-    Scratch.buildOnce(s"${layoutRoot(s)}/graft_jsonl_docs_${Scratch.pathKey(dir)}") {
-      val path = s"${layoutRoot(s)}/graft_jsonl_docs_${Scratch.pathKey(dir)}"
+    Scratch.buildOnce(path) {
       t(s, dir, "documents").write.mode("overwrite").json(path)
       java.nio.file.Files.writeString(
         new java.io.File(path, "part-corrupt.json").toPath,
         CorruptLines.mkString("", "\n", "\n"))
     }
+  }
 
   /** Schema-first PERMISSIVE JSONL read: good rows parse into columns,
     * corrupt lines land whole in `_corrupt_record` with every data
@@ -92,9 +94,9 @@ object Ingest {
     * current schema. The lake reality q42 exercises: shards written
     * across a schema change must stay readable as one table.
     */
-  private[graft] def evolvedDocsPath(s: SparkSession, dir: String): String =
-    Scratch.buildOnce(s"${layoutRoot(s)}/graft_evolved_docs_${Scratch.pathKey(dir)}") {
-      val path = s"${layoutRoot(s)}/graft_evolved_docs_${Scratch.pathKey(dir)}"
+  private[graft] def evolvedDocsPath(s: SparkSession, dir: String): String = {
+    val path = s"${layoutRoot(s)}/graft_evolved_docs_${CorpusCache.fingerprint(s, dir)}"
+    Scratch.buildOnce(path) {
       val docs = t(s, dir, "documents")
       docs.filter(pmod(col("doc_id"), lit(2)) === 0)
         .drop("source") // the pre-evolution writer
@@ -102,6 +104,7 @@ object Ingest {
       docs.filter(pmod(col("doc_id"), lit(2)) === 1)
         .write.mode("overwrite").parquet(s"$path/shard=v2")
     }
+  }
 
   def all: Seq[Q] = Seq(
     // ---- q40: JSONL ingest — write→corrupt→read→quarantine, gated

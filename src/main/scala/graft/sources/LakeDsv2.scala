@@ -137,8 +137,9 @@ object LakeLayout {
   /** One log-view file with its stats. */
   final case class LogFile(b: Int, path: String, rows: Long, bytes: Long)
 
-  /** Build (once per corpus dir, memoized on disk) the physical
-    * snapshot layout under the scratch volume; returns its root.
+  /** Build (once per corpus listing, memoized on disk under the
+    * corpus' [[graft.CorpusCache.fingerprint]]) the physical snapshot
+    * layout under the scratch volume; returns its root.
     * Data AND log files are written DISTRIBUTED through the provider's
     * own DSv2 write path; the driver's only writes are the per-batch
     * stats commits (file-count metadata, ≤ SnapFidMod entries each)
@@ -149,7 +150,7 @@ object LakeLayout {
     val fidMod = graft.queries.Advanced.SnapFidMod
     // layout-v2 path segment: the round-13 parquet layout must not be
     // served a round-12 CSV tree memoized under the old key
-    val root = s"${graft.Scratch.dir}/graft-lake2/${graft.Scratch.pathKey(dir)}"
+    val root = s"${graft.Scratch.dir}/graft-lake2/${graft.CorpusCache.fingerprint(s, dir)}"
     graft.Scratch.buildOnce(root) {
       val log = graft.queries.Advanced.cdcLogs(s, dir)
       for (b <- 0 to 2) {

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.{Q, Scratch, Tables}
+import graft.{CorpusCache, Q, Scratch, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,10 +23,12 @@ import org.apache.spark.sql.functions._
   *    any I/O) — the parquet-footer twin of a cluster's partition-pruned
   *    metastore scan.
   *
-  * Like [[graft.pipeline.Materialized]], the rewrites are NOT
-  * change-detecting: rewriting a corpus dir in place within one session
-  * serves the stale layout. The layout lives under the JVM's
-  * applicationId, so concurrent JVMs never clobber each other.
+  * Each rewrite is named by its corpus' [[graft.CorpusCache.fingerprint]]:
+  * a corpus rewritten in place within one session gets a fresh layout,
+  * and the planning metadata read from a layout (grid dims, per-file
+  * blooms, probe keys) are [[graft.CorpusCache]] entries, valid exactly
+  * as long. The layout lives under the JVM's applicationId, so
+  * concurrent JVMs never clobber each other.
   */
 object Layout {
   import Tables.t
@@ -37,7 +39,7 @@ object Layout {
     s"${Scratch.dir}/layout-${s.sparkContext.applicationId}"
 
   /** Memoized parquet layout rewrite: build once per (applicationId,
-    * corpus dir) behind the `_SUCCESS` marker, serialized on this
+    * corpus listing) behind the `_SUCCESS` marker, serialized on this
     * object so concurrent callers never double-write. Every path-based
     * layout twin routes through HERE — the locking/marker convention
     * has one home instead of a copy per layout (the copies were
@@ -57,7 +59,7 @@ object Layout {
     */
   private[graft] def memoLayout(s: SparkSession, name: String, dir: String)(
       write: String => Unit): String = {
-    val path = s"${layoutRoot(s)}/${name}_${Scratch.pathKey(dir)}"
+    val path = s"${layoutRoot(s)}/${name}_${CorpusCache.fingerprint(s, dir)}"
     this.synchronized {
       if (!new java.io.File(path, "_SUCCESS").isFile) {
         val staging = new java.io.File(path + ".build")
@@ -84,7 +86,7 @@ object Layout {
     */
   private def bucketed(
       s: SparkSession, dir: String, table: String, key: String): DataFrame = {
-    val name = s"graft_bkt_${table}_${Scratch.pathKey(dir)}"
+    val name = s"graft_bkt_${table}_${CorpusCache.fingerprint(s, dir)}"
     this.synchronized {
       if (!s.catalog.tableExists(name)) {
         t(s, dir, table)
@@ -616,11 +618,7 @@ object Layout {
 
   // Per-file blooms are planning metadata consulted by every q49 run in
   // a gate session (Q + spec probes) — memoized like the z-layout dims,
-  // keyed by (applicationId, dir): the same lifetime as the layout they
-  // describe.
-  private val fileBloomCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Map[String, Array[Long]]]
-
+  // for as long as the corpus listing the layout was built from.
   /** Per-file key blooms over the date-clustered orders layout: one
     * distributed pass — distinct (file, key-hash), each hash exploded
     * to its [[Q49K]] Kirsch-Mitzenmacher bit positions (the exact
@@ -629,7 +627,7 @@ object Layout {
     * metadata (files × [[Q49Bits]]/64 words).
     */
   private[graft] def fileBlooms(s: SparkSession, dir: String): Map[String, Array[Long]] =
-    fileBloomCache.getOrElseUpdate((s.sparkContext.applicationId, dir), {
+    CorpusCache(s, dir, "q49.blooms") {
       graft.functions.GraftFunctions.register(s)
       val nWords = Q49Bits / 64
       val words = clusteredOrders(s, dir)
@@ -648,7 +646,7 @@ object Layout {
           rs.foreach(r => arr(r.getLong(1).toInt) = r.getLong(2))
           f -> arr
         }
-    })
+    }
 
   /** q49's probe set: the [[Q49Probes]] smallest order keys AT OR ABOVE
     * the key-domain midpoint (deterministic at every SF; mid-domain, so
@@ -660,13 +658,10 @@ object Layout {
     */
   // Probe keys are planning metadata read twice per q49 run (the file
   // selection and the exact filter) plus by every BloomSkipSpec probe —
-  // memoized like fileBlooms, same (applicationId, dir) lifetime, so
-  // the midpoint scan and the top-k run once per session.
-  private val probeKeyCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Seq[(Long, Long)]]
-
+  // memoized like fileBlooms, so the midpoint scan and the top-k run
+  // once per session.
   private[graft] def probeKeyHashes(s: SparkSession, dir: String): Seq[(Long, Long)] =
-    probeKeyCache.getOrElseUpdate((s.sparkContext.applicationId, dir), {
+    CorpusCache(s, dir, "q49.probes") {
       graft.functions.GraftFunctions.register(s)
       val orders = t(s, dir, "orders")
       val mid = graft.BoundedCollect.rows(
@@ -678,7 +673,7 @@ object Layout {
           graft.pipeline.Portable.md5Long(col("o_orderkey").cast("string")).as("h"))
       graft.BoundedCollect.rows(pk, Q49Probes, "q49 probe keys")
         .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    })
+    }
 
   /** Planning-time file selection: the files whose bloom might contain
     * ANY probe key (union over probes — a point-lookup batch). No
@@ -766,14 +761,6 @@ object Layout {
   private final case class ZLayout(
       df: DataFrame, ckMin: Long, ckSpan: Long, dayMin: Long, daySpan: Long)
 
-  // Keyed by (applicationId, dir) — the SAME lifetime as the layout path
-  // the dims describe. Keying on dir alone outlives the layout: if the
-  // corpus at a dir is regenerated inside a long-lived JVM, a later
-  // application would rebuild its (per-applicationId) layout with the
-  // STALE grid geometry and diverge from the oracle's recomputed grid
-  // (ADVICE r6).
-  private val zDims = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Long, Long)]
-
   /** `orders` with the derived day number both curve layouts cluster on.
     * o_orderdate is TIMESTAMP_NTZ; session tz is UTC, so the cast reads
     * the same instant DuckDB's epoch_us sees (q25 precedent).
@@ -784,21 +771,22 @@ object Layout {
         expr("unix_micros(CAST(o_orderdate AS TIMESTAMP)) div 86400000000"))
 
   /** The (custkey, day) grid geometry shared by q37's Morton and q63's
-    * Hilbert layouts — ONE computation per (applicationId, corpus), so
-    * both curves cluster the identical 16×16 grid and their covers are
-    * comparable cell-for-cell.
+    * Hilbert layouts — ONE computation per (session, corpus listing),
+    * so both curves cluster the identical 16×16 grid and their covers
+    * are comparable cell-for-cell. Valid exactly as long as the layout
+    * path the dims describe: a corpus regenerated at the same dir gets
+    * a new layout AND new dims, never a layout over stale geometry
+    * (ADVICE r6).
     */
-  private def gridDims(s: SparkSession, dir: String): (Long, Long, Long, Long) = {
-    val zKey = s"${s.sparkContext.applicationId}|$dir"
-    zDims.computeIfAbsent(zKey, { _ =>
+  private def gridDims(s: SparkSession, dir: String): (Long, Long, Long, Long) =
+    CorpusCache(s, dir, "q37.grid") {
       val r = graft.BoundedCollect.rows(
         ordersWithDay(s, dir).agg(
           min("o_custkey"), max("o_custkey"), min("day_no"), max("day_no")),
         1, "q37/q63 grid dims")(0)
       (r.getLong(0), r.getLong(1) - r.getLong(0) + 1,
         r.getLong(2), r.getLong(3) - r.getLong(2) + 1)
-    })
-  }
+    }
 
   private def zorderedOrders(s: SparkSession, dir: String): ZLayout = {
     val withDay = ordersWithDay(s, dir)

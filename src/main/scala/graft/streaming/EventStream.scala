@@ -454,6 +454,12 @@ object EventStream {
     * ingest-time shape of a 100 TB pipeline: near-duplicate bursts
     * (retries, crawler refetches) collapse inside the window; the
     * batch d1 pass remains the global, exact backstop.
+    *
+    * Output contract: the `value` column is rewritten in place as
+    * `value + 0.0` — so −0.0 comes out as +0.0 (every other value, NULL
+    * included, passes unchanged), and a non-double `value` is implicitly
+    * cast to DOUBLE. The output also carries the added `fingerprint`
+    * column.
     */
   def dedupStream(events: DataFrame, watermark: String = "2 hours"): DataFrame = {
     val fp = events

@@ -1,7 +1,8 @@
 package graft
 
 /** The facade is the library's front door — pin that one `register`
-  * call makes the whole surface reachable from plain `spark.sql`.
+  * call makes the whole surface reachable from plain `spark.sql`, and
+  * that `sql` reads the corpus as it is at the call.
   */
 class GraftApiSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
@@ -30,5 +31,20 @@ class GraftApiSpec extends SparkSpec {
       "SELECT count(*) AS n FROM lineitem JOIN orders ON l_orderkey = o_orderkey")
       .collect()(0).getLong(0)
     assert(n > 0)
+  }
+
+  test("sql reads a corpus rewritten in place between two calls") {
+    val fix = java.nio.file.Files.createTempDirectory("graft-api-rewrite").toString
+    Tables.names.foreach(n => java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"$dir/$n.parquet"), java.nio.file.Paths.get(s"$fix/$n.parquet")))
+    def keys = Graft.sql(spark, fix, "SELECT o_orderkey FROM orders")
+      .collect().map(_.getLong(0)).toSet
+    val all = keys
+    val kept = all.filter(_ % 5 == 0)
+    Tables.read(spark, s"$dir/orders.parquet")
+      .filter(org.apache.spark.sql.functions.col("o_orderkey") % 5 === 0)
+      .write.mode("overwrite").parquet(s"$fix/orders.parquet")
+    assert(kept.nonEmpty && kept != all)
+    assert(keys == kept, "the second call must read the rewritten orders")
   }
 }

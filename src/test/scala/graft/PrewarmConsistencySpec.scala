@@ -3,13 +3,12 @@ package graft
 import org.apache.spark.sql.DataFrame
 
 /** The bench prewarms shared index artifacts by KEY
-  * ([[graft.pipeline.Materialized.getOrBuild]] is key-trusting: a hit
-  * returns the live table without comparing plans). If an operator's
-  * own construction ever drifts from the prewarm's under the same key,
-  * the prewarmed table would silently serve the WRONG shape. This spec
-  * pins the contract: every index-backed operator returns identical
-  * rows whether its caches were filled by its own first run or by the
-  * prewarm helpers.
+  * ([[graft.CorpusCache]] is key-trusting: a hit returns the live table
+  * without comparing plans). If an operator's own construction ever
+  * drifts from the prewarm's under the same key, the prewarmed table
+  * would silently serve the WRONG shape. This spec pins the contract:
+  * every index-backed operator returns identical rows whether its
+  * caches were filled by its own first run or by the prewarm helpers.
   */
 class PrewarmConsistencySpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
@@ -19,22 +18,18 @@ class PrewarmConsistencySpec extends SparkSpec {
     "s3_cosine_neardup", "s4_knn_ivf", "s5_knn_sq8",
     "s6_knn_pq", "s8_ann_layout", "t6_bigram_lm", "m6_media_neardup",
     "d10_semantic_clusters",
-    // round 7: s10/s11's frozen artifacts (s10.cent|dir, s10.cb|dir,
-    // s10.baseasg|dir) joined the prewarm set
+    // round 7: s10/s11's frozen artifacts (s10.cent, s10.cb,
+    // s10.baseasg) joined the prewarm set
     "s10_ann_delta", "s11_ann_drift",
-    // round 8: m7/m8's shared canonical-thumbnail table (m78.thumb|dir)
-    // and s12's flagged-member table (s12.members|dir) over the s10
+    // round 8: m7/m8's shared canonical-thumbnail table (m78.thumb)
+    // and s12's flagged-member table (s12.members) over the s10
     // artifacts
     "m7_resize_neardup", "m8_phash_neardup", "s12_ann_retrain",
     // round 8 second wave: s13's base layout (graft_s13_base files)
     // joined the prewarm set
     "s13_ann_compact")
 
-  private def release(): Unit = {
-    graft.pipeline.Materialized.releaseMatching(_.endsWith(s"|$dir"))
-    graft.pipeline.Dedup.releaseIndex(spark, dir)
-    graft.pipeline.Similarity.releaseBlockStats(spark)
-  }
+  private def release(): Unit = CorpusCache.release(dir)
 
   private def rows(df: DataFrame): Set[String] =
     df.collect().map(_.toString).toSet

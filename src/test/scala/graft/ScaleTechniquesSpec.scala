@@ -205,12 +205,7 @@ class ScaleTechniquesSpec extends SparkSpec {
         .groupBy("piece").count().agg(max("count")).first().getLong(0)
       assert(buckets <= 8 * Dedup.D4bTargetBucket,
         s"random-collision bucket not bounded: $buckets > ${8 * Dedup.D4bTargetBucket}")
-    } finally {
-      // fixture teardown: drop the materialized signature table so a
-      // rewritten fixture dir can never serve a stale cache
-      graft.pipeline.Materialized.releaseMatching(_.endsWith(s"|$fixtureDir"))
-      graft.pipeline.Dedup.releaseIndex(spark, fixtureDir)
-    }
+    } finally graft.CorpusCache.release(fixtureDir) // fixture teardown
   }
 
   test("round-6 cuts stay bounded at both gate SFs: quota, top-k, z-cover") {

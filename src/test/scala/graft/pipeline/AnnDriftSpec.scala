@@ -59,7 +59,6 @@ class AnnDriftSpec extends SparkSpec {
     assert(hot.map(_.getLong(2)).sum * 2 > deltaTotal,
       "hot cells should hold most of the piled delta")
     // cleanup the materialized frozen artifacts for this throwaway dir
-    graft.pipeline.Materialized.releaseMatching(_.endsWith(s"|$dir"))
-    Similarity.releaseBlockStats(spark)
+    graft.CorpusCache.release(dir)
   }
 }

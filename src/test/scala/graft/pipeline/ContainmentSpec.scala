@@ -34,10 +34,7 @@ class ContainmentSpec extends SparkSpec {
       val d2 = q("d2_ngram_jaccard").run(spark, dir).collect()
       assert(!d2.exists(r => r.getLong(0) == 1L && r.getLong(1) == 2L),
         "the inclusion must be exactly what the symmetric rule cannot see")
-    } finally {
-      Dedup.releaseIndex(spark, dir)
-      Materialized.releaseMatching(_.endsWith(s"|$dir"))
-    }
+    } finally graft.CorpusCache.release(dir)
   }
 
   test("pair candidates meet through the shingle equi-join — never a cartesian") {

@@ -55,11 +55,6 @@ class CurationSpec extends SparkSpec {
       .withColumn("n_chars", length(col("text")))
     val dir = "target/curation-retention-fixture"
     fixtures.coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    // the fixture dir was JUST (re)written: drop any cached tables a
-    // previous run of this suite materialized for the same path —
-    // Materialized/shingleIndex key by path and would serve stale data
-    Materialized.releaseMatching(_.endsWith(s"|$dir"))
-    Dedup.releaseIndex(spark, dir)
     try {
       val manifest = SparkEntry.queries("p1_curation")(spark, dir)
         .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -71,10 +66,7 @@ class CurationSpec extends SparkSpec {
       assert(manifest.contains(1L),
         s"doc 1 must survive: its keeper (doc 0) was gated out; manifest=$manifest")
       assert(!manifest.contains(0L), "doc 0 exceeds the length gate")
-    } finally {
-      Materialized.releaseMatching(_.endsWith(s"|$dir"))
-      Dedup.releaseIndex(spark, dir)
-    }
+    } finally graft.CorpusCache.release(dir)
   }
 
   test("the canonical (lowest-id) copy survives exact dedup, not an arbitrary one") {
@@ -119,8 +111,6 @@ class CurationSpec extends SparkSpec {
       .withColumn("n_chars", length(col("text")))
     val fdir = "target/p2-delta-fixture"
     fixtures.coalesce(1).write.mode("overwrite").parquet(s"$fdir/documents.parquet")
-    Materialized.releaseMatching(_.endsWith(s"|$fdir"))
-    Dedup.releaseIndex(spark, fdir)
     try {
       // sanity: the cross-tier near-dup pair really LSH-verifies
       val dups = Dedup.lshVerifiedPairs(spark, fdir)
@@ -133,10 +123,7 @@ class CurationSpec extends SparkSpec {
       assert(accepted == Set(21L, 23L),
         s"expected {21, 23}: 5 loses to the lake despite its lower id, " +
           s"20 is an exact lake dup, 22 loses to 21, 24 is gated; got $accepted")
-    } finally {
-      Materialized.releaseMatching(_.endsWith(s"|$fdir"))
-      Dedup.releaseIndex(spark, fdir)
-    }
+    } finally graft.CorpusCache.release(fdir)
   }
 
   test("p2 on real data: delta-only ids, unique, no intact verified pair") {

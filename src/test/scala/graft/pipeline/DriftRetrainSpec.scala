@@ -16,10 +16,7 @@ import org.apache.spark.sql.functions._
 class DriftRetrainSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
-  private def release(): Unit = {
-    Materialized.releaseMatching(_.endsWith(s"|$dir"))
-    Similarity.releaseBlockStats(spark)
-  }
+  private def release(): Unit = graft.CorpusCache.release(dir)
 
   test("retrain set is non-degenerate and honors the hot-or-top-R rule") {
     val rep = Similarity.annDriftReport(spark, dir).cache()
@@ -89,7 +86,7 @@ class DriftRetrainSpec extends SparkSpec {
       .select(col("vec_id"), col("cid").as("old_cid"))
       .join(Similarity.s12Reassign(spark, dir), "vec_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    release() // drop every |dir|-keyed artifact: members, centroids, assignments
+    release() // drop every artifact of dir: members, centroids, assignments
     val fresh = Similarity.s12Members(spark, dir)
       .select(col("vec_id"), col("cid").as("old_cid"))
       .join(Similarity.s12Reassign(spark, dir), "vec_id")

@@ -154,7 +154,6 @@ class PipelineOpsSpec extends SparkSpec {
       // (owned by 3), plus the two seam trigrams only 4 has -> 0.5
       (4L, "alpha beta gamma zeta eta theta"),
     ))
-    Dedup.releaseIndex(spark, fixtureDir) // fixture dir is rewritten in place
     try {
       val nv = SparkEntry.queries("t11_novelty")(spark, fixtureDir)
         .collect().map(r => r.getLong(0) -> r.getAs[Double]("novelty")).toMap
@@ -165,6 +164,6 @@ class PipelineOpsSpec extends SparkSpec {
       val all = SparkEntry.queries("t11_novelty")(spark, fixtureDir)
         .agg(min("novelty"), max("novelty")).head()
       assert(all.getDouble(0) >= 0.0 && all.getDouble(1) <= 1.0)
-    } finally Dedup.releaseIndex(spark, fixtureDir)
+    } finally graft.CorpusCache.release(fixtureDir)
   }
 }

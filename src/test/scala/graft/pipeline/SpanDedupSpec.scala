@@ -12,10 +12,6 @@ class SpanDedupSpec extends SparkSpec {
     import spark.implicits._
     rows.toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    // d8's position table is session-materialized per corpus dir and the
-    // cache is NOT change-detecting (see Materialized) — drop any copy
-    // from a previous test run before querying the rewritten fixture.
-    Materialized.releaseMatching(_.contains(dir))
   }
 
   private def run(dir: String) =

@@ -36,23 +36,19 @@ class HotKeySaltSpec extends SparkSpec {
     // cut (λ≈12 vs cut 10) — at sf0.01 the head samples λ≈120, so the
     // hot branch engages deterministically
     val skewDir = graft.bench.SkewBench.prepare(spark, "/root/testdata/sf0.01")
-    try {
-      // the fixture's hot key exceeds the cut (20% of the corpus on one
-      // key) UNDER THE OPERATOR'S OWN SAMPLED CENSUS, so the ×S branch
-      // actually runs
-      val hotCount = graft.Tables.t(spark, skewDir, "lineitem")
-        .sample(withReplacement = false, Advanced.CensusRate, seed = 42)
-        .groupBy("l_orderkey").agg(count(lit(1)).as("cnt"))
-        .filter(col("cnt") > Advanced.HotKeyRows * Advanced.CensusRate).count()
-      assert(hotCount >= 1, "fixture must produce at least one sampled-hot key")
-      val got = salted(skewDir)
-        .orderBy("o_orderstatus").collect().toSeq
-      val exp = plainJoin(skewDir)
-        .orderBy("o_orderstatus").collect().toSeq
-      assert(got == exp, s"salted result must equal the plain join:\n$got\nvs\n$exp")
-    } finally {
-      graft.pipeline.Materialized.releaseMatching(_ => false) // no-op guard
-    }
+    // the fixture's hot key exceeds the cut (20% of the corpus on one
+    // key) UNDER THE OPERATOR'S OWN SAMPLED CENSUS, so the ×S branch
+    // actually runs
+    val hotCount = graft.Tables.t(spark, skewDir, "lineitem")
+      .sample(withReplacement = false, Advanced.CensusRate, seed = 42)
+      .groupBy("l_orderkey").agg(count(lit(1)).as("cnt"))
+      .filter(col("cnt") > Advanced.HotKeyRows * Advanced.CensusRate).count()
+    assert(hotCount >= 1, "fixture must produce at least one sampled-hot key")
+    val got = salted(skewDir)
+      .orderBy("o_orderstatus").collect().toSeq
+    val exp = plainJoin(skewDir)
+      .orderBy("o_orderstatus").collect().toSeq
+    assert(got == exp, s"salted result must equal the plain join:\n$got\nvs\n$exp")
   }
 
   test("uniform corpus: hot set is empty and only the cold (salt-0) branch carries rows") {
