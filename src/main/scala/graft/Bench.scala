@@ -39,27 +39,7 @@ object Bench {
     // degraded 50× from eviction churn, while the same query on the same
     // fixture in a fresh JVM ran in 1 s.
 
-    // Noise-calibration cell: a fixed single-threaded pure-CPU kernel
-    // (xorshift stream sum, no allocation, no Spark) timed at each
-    // phase boundary. The container's co-tenant load swings single-core
-    // throughput ~1.5-3× between minute-scale windows (VERDICT r4
-    // item 3), and a pure-CPU constant exposes exactly that factor:
-    // consumers can divide a phase's cells by (cal_phase / min cal) to
-    // separate plan regressions from window noise. ~150 ms per sample,
-    // min-of-3 adjacent samples per phase (the kernel itself is
-    // constant work; min strips scheduler preemption).
-    def noiseCal(): Double = {
-      def onceCal(): Double = {
-        var x = 0x9E3779B97F4A7C15L; var s = 0L; var i = 0
-        val t0 = System.nanoTime()
-        while (i < 100000000) {
-          x ^= x << 13; x ^= x >>> 7; x ^= x << 17; s += x; i += 1
-        }
-        if (s == 42) System.err.println("") // keep the loop observable
-        (System.nanoTime() - t0) / 1e6
-      }
-      Seq.fill(3)(onceCal()).min
-    }
+    // Noise calibration at each phase boundary (graft.bench.NoiseCal).
     val cal = scala.collection.mutable.LinkedHashMap.empty[String, Double]
 
     // Anchor artifacts to the repo, not the process CWD: honor
@@ -113,7 +93,8 @@ object Bench {
     // timed while C2 deoptimizes/recompiles the sort loop for the newly
     // appearing column classes (observed 3-10x inflation on the
     // dictionary cases when skipped; fresh-JVM-per-case sweeps match
-    // KernelProbe only with this pass in place).
+    // the per-phase kernel times of `perfbench --trace 1`, sort.lexsort_us
+    // / rowformat_us / take_us, only with this pass in place).
     val sweepCases = Seq("utf8-tuple", "mixed-tuple", "dictionary-tuple", "mixed-dictionary-tuple")
     sweepCases.foreach { cn =>
       val c = graft.datagen.Case.byName(cn)
@@ -177,7 +158,7 @@ object Bench {
           pts
         }
       } yield s"${p.caseName}|${p.strategy}|${p.batchSize}" -> ((p.avgUs, p.minUs)))
-    cal("sweep1") = noiseCal()
+    cal("sweep1") = graft.bench.NoiseCal.ms()
     val sweepPass1 = sweepPass()
     mark("sweep pass 1")
 
@@ -276,9 +257,9 @@ object Bench {
     val headline = SparkEntry.inventory.filter(_.benchHeadline)
     headline.headOption.foreach(q => once(q, benchDir))
 
-    cal("queries") = noiseCal()
+    cal("queries") = graft.bench.NoiseCal.ms()
     val results = timePass(headline, benchDir, recordCard = true)
-    cal("queries_end") = noiseCal()
+    cal("queries_end") = graft.bench.NoiseCal.ms()
     CorpusCache.release(benchDir)
     mark("query pass")
 
@@ -412,7 +393,7 @@ object Bench {
     // minutes (co-tenant load), and the in-task sweep medians are fully
     // exposed to it. Two windows far apart make one quiet window likely;
     // min = the kernel's actual cost, not the neighbors'.
-    cal("sweep2") = noiseCal()
+    cal("sweep2") = graft.bench.NoiseCal.ms()
     val sweepPass2 = sweepPass()
     mark("sweep pass 2")
     // component-wise min-merge: min-of-mins is the noise-robust cell,

@@ -201,17 +201,6 @@ object ScaleProbe {
     outDir
   }
 
-  private def noiseCal(): Double = {
-    def once(): Double = {
-      var x = 0x9E3779B97F4A7C15L; var sum = 0L; var i = 0
-      val t0 = System.nanoTime()
-      while (i < 100000000) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; sum += x; i += 1 }
-      if (sum == 42) System.err.println("")
-      (System.nanoTime() - t0) / 1e6
-    }
-    Seq.fill(3)(once()).min
-  }
-
   def main(args: Array[String]): Unit = {
     // `ScaleProbe [factor...] [--cells=a,b] [--tables=t1,t2]` — cells
     // narrows the probe (e.g. ONE cell at 100×), tables narrows the dir
@@ -246,7 +235,7 @@ object ScaleProbe {
     val cals = scala.collection.mutable.LinkedHashMap.empty[Int, Double]
     factors.foreach { r =>
       val dir = if (r == 1) baseDir else buildDir(spark, baseDir, outRoot, r, onlyTables)
-      cals(r) = noiseCal()
+      cals(r) = NoiseCal.ms()
       val t0 = System.nanoTime()
       // prewarm exactly what the probed cells read, per the explicit
       // dependency map; unmapped cells fall back to prewarming whatever

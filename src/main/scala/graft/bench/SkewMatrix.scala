@@ -115,19 +115,8 @@ object SkewMatrix {
 
     def num(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    // single-core noise cal (the Bench kernel): stamps the host window
-    // so two matrix runs are comparable
-    def noiseCal(): Double = {
-      def once(): Double = {
-        var x = 0x9E3779B97F4A7C15L; var s = 0L; var i = 0
-        val t0 = System.nanoTime()
-        while (i < 100000000) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; s += x; i += 1 }
-        if (s == 42) System.err.println("")
-        (System.nanoTime() - t0) / 1e6
-      }
-      Seq.fill(3)(once()).min
-    }
-    println(s"""{"noise_cal_ms":${num(noiseCal())}}""")
+    // stamps the host window so two matrix runs are comparable
+    println(s"""{"noise_cal_ms":${num(NoiseCal.ms())}}""")
     val results = scala.collection.mutable.LinkedHashMap.empty[(String, String, String), Double]
     fixtures.foreach { case (fn, dir) =>
       shapes.foreach { case (shn, sh) =>

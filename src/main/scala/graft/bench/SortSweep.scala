@@ -46,22 +46,21 @@ final case class DataPoint(
   * cannot reproduce that protocol here: local job-launch overhead is
   * ~50 ms/job in this environment — 20× the entire workload. So the sweep
   * measures **inside one Spark task** (`mapPartitions` over the cached
-  * single-partition batch): the rows are materialized to an `Array[Row]`
-  * (the RecordBatch analog), then each strategy's sort kernel is timed
-  * over `iters` iterations after JIT warm-up, on a fresh copy each time —
-  * mirroring the reference's per-iteration regenerated (byte-identical)
-  * batch. Distribution across executors is untouched engine behavior
-  * (`BatchSort.sortBatch` — used by the correctness suite and queries);
-  * the sweep isolates the kernel cost the way the reference does.
+  * single-partition batch): the rows are materialized to a
+  * [[graft.sort.ColumnBatch]] (the RecordBatch analog, dictionary-encoded
+  * where the case says so), then each strategy's [[graft.sort.ColumnSort]]
+  * kernel is timed over `iters` iterations after JIT warm-up, each
+  * iteration sorting the same byte-identical batch into a fresh one —
+  * mirroring the reference's per-iteration regenerated batch.
   *
-  *  - dyn-comparator (strategy A, `src/lib.rs:33-34`): chained per-column
-  *    comparator sort of the row array = Arrow's `lexsort_to_indices`
-  *    comparator chain. Timed region: comparator sort (+ implicit gather —
-  *    we sort row references, which fuses the reference's lexsort + take).
-  *  - rows-format (strategy B, `src/lib.rs:35-53`): memcmp-key encode →
-  *    byte-wise sort → gather, converter rebuilt per call exactly like the
-  *    reference's per-call `RowConverter::new` (non-amortized cost — that
-  *    was PR #5292's point). See [[graft.sort.RowFormatSort]].
+  *  - dyn-comparator (strategy A, `src/lib.rs:33-34`):
+  *    `ColumnSort.lexsortIndices`, the per-column comparator chain of
+  *    Arrow's `lexsort_to_indices`, then `take`.
+  *  - rows-format (strategy B, `src/lib.rs:35-53`):
+  *    `ColumnSort.rowFormatIndices`, memcmp-key encode → byte-wise sort,
+  *    then `take`; the encoding is rebuilt per call exactly like the
+  *    reference's per-call `RowConverter::new` (the non-amortized cost
+  *    is what the reference experiment measures).
   */
 object SortSweep {
 
@@ -110,7 +109,16 @@ object SortSweep {
       merge: Boolean = false,
   )
 
+  val Usage =
+    "usage: SortSweep [--case c] [--begin N] [--end N] [--step-size N] [--iters N] " +
+      "[--out dir] [--parquet] [--merge]   (1 <= begin <= end, step-size >= 1, iters >= 1)"
+
+  /** Flags to [[Opt]]. A range or an iteration count that measures
+    * nothing is rejected: zero iterations would write `avg_us` = 0.0, a
+    * failed cell posing as the fastest.
+    */
   def parseArgs(args: Array[String]): Opt = {
+    def usage(problem: String) = throw new IllegalArgumentException(s"$problem\n$Usage")
     @annotation.tailrec
     def go(rest: List[String], o: Opt): Opt = rest match {
       case "--case" :: v :: t => go(t, o.copy(caseName = v))
@@ -122,9 +130,13 @@ object SortSweep {
       case "--parquet" :: t => go(t, o.copy(parquet = true))
       case "--merge" :: t => go(t, o.copy(merge = true))
       case Nil => o
-      case x :: _ => throw new IllegalArgumentException(s"unknown arg $x")
+      case x :: _ => usage(s"unknown arg $x")
     }
-    go(args.toList, Opt())
+    val o = go(args.toList, Opt())
+    if (o.iters < 1) usage(s"--iters must be >= 1, got ${o.iters}")
+    if (o.stepSize < 1) usage(s"--step-size must be >= 1, got ${o.stepSize}")
+    if (o.begin < 1 || o.begin > o.end) usage(s"need 1 <= begin <= end, got ${o.begin}..${o.end}")
+    o
   }
 
   def sweep(spark: SparkSession, opt: Opt): Seq[DataPoint] = {

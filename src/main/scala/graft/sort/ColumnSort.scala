@@ -11,11 +11,14 @@ import org.apache.spark.sql.types._
   * 56-73`). Encoding through boxed `Row`s would spend the whole budget
   * pointer-chasing the heap; these kernels read primitive arrays.
   *
-  * Column representation: `Array[Double] | Array[Long] | Array[String]`
-  * (the three types the reference generates, SURVEY §1.2; nulls are not
-  * representable here — the reference's generated batches are null-free,
-  * `src/data.rs:220-231`; the null-handling paths live in the Row-level
-  * kernels of [[BatchSort]]/[[RowFormatSort]] which the engine uses).
+  * Column representation: `Array[Double] | Array[Long] | Utf8Col |
+  * DictCol` (the types the reference generates, SURVEY §1.2), and a
+  * [[NullableCol]] around one of them when the column holds a null.
+  * Null contract (Arrow's kernel default): both strategies sort every
+  * column ascending with nulls first, all nulls equal. The reference's
+  * generated batches are null-free (`src/data.rs:220-231`), and a
+  * null-free column stays a raw array, so the benchmark's batches never
+  * meet the null paths.
   */
 /** UTF-8 string column in Arrow's physical layout: raw bytes, compared
   * with `Arrays.compareUnsigned` (a JIT-vectorized memcmp) — the same
@@ -99,33 +102,32 @@ final class DictCol(val codes: Array[Int], val dict: Array[String]) extends Seri
   /** rank(code) = position of dict(code) in UTF-8 sort order. */
   lazy val ranks: Array[Int] = {
     val order = dict.indices.sortBy(identity)(Ordering.comparatorToOrdering(
-      (a: Int, b: Int) => BatchSort.compareUtf8(dict(a), dict(b))))
+      (a: Int, b: Int) => RowOrder.compareUtf8(dict(a), dict(b))))
     val r = new Array[Int](dict.length)
     order.zipWithIndex.foreach { case (dictIdx, rank) => r(dictIdx) = rank }
     r
   }
 }
 
+/** A column that holds a null: a null-free column `values` and each
+  * row's null flag — Arrow's validity bitmap, one byte a row. No order
+  * reads the value under a null ([[ColumnBatch.fromRows]] puts 0 or the
+  * empty string there).
+  */
+final class NullableCol(val values: AnyRef, val isNull: Array[Boolean]) extends Serializable
+
 final case class ColumnBatch(schema: StructType, cols: Array[AnyRef]) {
   def numRows: Int = if (cols.isEmpty) 0 else ColumnBatch.len(cols(0))
 
   def toRows: IndexedSeq[Row] =
-    (0 until numRows).map { i =>
-      Row.fromSeq(cols.toIndexedSeq.map {
-        case a: Array[Double] => a(i)
-        case a: Array[Long] => a(i)
-        case a: Utf8Col => new String(a.values(i), java.nio.charset.StandardCharsets.UTF_8)
-        case d: DictCol => d.dict(d.codes(i))
-        case other => throw new IllegalStateException(s"bad column $other")
-      })
-    }
+    (0 until numRows).map(i => Row.fromSeq(cols.toIndexedSeq.map(ColumnBatch.value(_, i))))
 
   /** Dictionary-encode the given string columns (reference generator
     * behavior for the dictionary cases).
     */
   def dictEncoded(colIdxs: Set[Int]): ColumnBatch = {
-    val out = cols.zipWithIndex.map {
-      case (a: Utf8Col, i) if colIdxs.contains(i) =>
+    def encode(col: AnyRef): AnyRef = col match {
+      case a: Utf8Col =>
         val dict = new java.util.LinkedHashMap[String, Integer]()
         val codes = a.values.map { b =>
           val s = new String(b, java.nio.charset.StandardCharsets.UTF_8)
@@ -133,10 +135,11 @@ final case class ColumnBatch(schema: StructType, cols: Array[AnyRef]) {
           if (c == null) { c = dict.size(); dict.put(s, c) }
           c.intValue()
         }
-        new DictCol(codes, dict.keySet().toArray(new Array[String](0))): AnyRef
-      case (c, _) => c
+        new DictCol(codes, dict.keySet().toArray(new Array[String](0)))
+      case c: NullableCol => new NullableCol(encode(c.values), c.isNull)
+      case c => c
     }
-    ColumnBatch(schema, out)
+    ColumnBatch(schema, cols.zipWithIndex.map { case (c, i) => if (colIdxs.contains(i)) encode(c) else c })
   }
 }
 
@@ -146,30 +149,60 @@ object ColumnBatch {
     case a: Array[Long] => a.length
     case a: Utf8Col => a.values.length
     case d: DictCol => d.codes.length
+    case c: NullableCol => c.isNull.length
     case other => throw new IllegalArgumentException(s"bad column $other")
   }
 
+  private def value(col: AnyRef, i: Int): Any = col match {
+    case a: Array[Double] => a(i)
+    case a: Array[Long] => a(i)
+    case a: Utf8Col => new String(a.values(i), java.nio.charset.StandardCharsets.UTF_8)
+    case d: DictCol => d.dict(d.codes(i))
+    case c: NullableCol => if (c.isNull(i)) null else value(c.values, i)
+    case other => throw new IllegalStateException(s"bad column $other")
+  }
+
+  /** Columns of `rows` by `schema`; a column that holds a null becomes a
+    * [[NullableCol]], every other one a raw column.
+    */
   def fromRows(rows: IndexedSeq[Row], schema: StructType): ColumnBatch = {
     val n = rows.length
     val cols: Array[AnyRef] = schema.fields.zipWithIndex.map { case (f, j) =>
-      f.dataType match {
+      // one pass per column, as for a null-free one: a null row sets its
+      // flag and leaves the value slot at its default
+      val isNull = new Array[Boolean](n)
+      var nulls = 0
+      val values: AnyRef = f.dataType match {
         case DoubleType =>
           val a = new Array[Double](n); var i = 0
-          while (i < n) { a(i) = rows(i).getDouble(j); i += 1 }; a: AnyRef
+          while (i < n) {
+            val r = rows(i)
+            if (r.isNullAt(j)) { isNull(i) = true; nulls += 1 } else a(i) = r.getDouble(j)
+            i += 1
+          }
+          a
         case LongType =>
           val a = new Array[Long](n); var i = 0
-          while (i < n) { a(i) = rows(i).getLong(j); i += 1 }; a: AnyRef
+          while (i < n) {
+            val r = rows(i)
+            if (r.isNullAt(j)) { isNull(i) = true; nulls += 1 } else a(i) = r.getLong(j)
+            i += 1
+          }
+          a
         case StringType =>
           // Arrow-faithful layout: strings live as UTF-8 bytes, so the
           // kernels memcmp instead of walking UTF-16 chars
           val a = new Array[Array[Byte]](n); var i = 0
           while (i < n) {
-            a(i) = rows(i).getString(j).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+            val r = rows(i)
+            if (r.isNullAt(j)) { isNull(i) = true; nulls += 1; a(i) = Array.emptyByteArray }
+            else a(i) = r.getString(j).getBytes(java.nio.charset.StandardCharsets.UTF_8)
             i += 1
           }
-          Utf8Col(a): AnyRef
+          Utf8Col(a)
         case other => throw new IllegalArgumentException(s"unsupported columnar type $other")
       }
+      if (nulls > 0) new NullableCol(values, isNull) else values
     }
     ColumnBatch(schema, cols)
   }
@@ -186,7 +219,7 @@ object ColumnSort {
 
   private def colCmp(col: AnyRef): ColCmp = col match {
     case a: Array[Double] => new ColCmp {
-      def cmp(i: Int, j: Int) = BatchSort.compareDouble(a(i), a(j))
+      def cmp(i: Int, j: Int) = RowOrder.compareDouble(a(i), a(j))
     }
     case a: Array[Long] => new ColCmp {
       def cmp(i: Int, j: Int) = java.lang.Long.compare(a(i), a(j))
@@ -230,6 +263,14 @@ object ColumnSort {
       private val r = d.ranks; private val c = d.codes
       def cmp(i: Int, j: Int) = java.lang.Integer.compare(r(c(i)), r(c(j)))
     }
+    case c: NullableCol => new ColCmp {
+      private val nul = c.isNull; private val values = colCmp(c.values)
+      def cmp(i: Int, j: Int) = {
+        val ni = nul(i); val nj = nul(j)
+        if (ni || nj) java.lang.Boolean.compare(nj, ni) // nulls first
+        else values.cmp(i, j)
+      }
+    }
     case other => throw new IllegalArgumentException(s"bad column $other")
   }
 
@@ -243,7 +284,8 @@ object ColumnSort {
     * NaN/zero normalization from the hot path (the same reason Spark's
     * UnsafeExternalSorter sorts on an 8-byte radix prefix first).
     * Returns null when no exact key exists (general utf8: a prefix tie
-    * does NOT imply equality).
+    * does NOT imply equality; a nullable column: a null needs a 65th
+    * value below every 64-bit key).
     */
   private def exactLeadingKey(col: AnyRef): Array[Long] = col match {
     case a: Array[Double] =>
@@ -389,13 +431,19 @@ object ColumnSort {
         w.len += 4
       }
     }
+    case c: NullableCol => new ColEnc {
+      private val nul = c.isNull; private val values = colEnc(c.values)
+      def enc(i: Int, w: KeyWriter) =
+        if (nul(i)) w.put(0x00) else { w.put(0x01); values.enc(i, w) }
+    }
     case other => throw new IllegalArgumentException(s"bad column $other")
   }
 
   /** Bits of normalized key a column contributes when it is FIXED-width
     * and register-packable; -1 when it isn't. Dict columns need only
     * ceil(log2(|dict|)) bits (the rank), primitives 64, short zero-free
-    * utf8 64 (the padded prefix is a complete order-preserving key).
+    * utf8 64 (the padded prefix is a complete order-preserving key); a
+    * nullable column never packs.
     */
   private def packedBits(col: AnyRef): Int = col match {
     case d: DictCol =>
@@ -468,10 +516,25 @@ object ColumnSort {
     * [[keyedIndices]].
     */
   def rowFormatIndices(batch: ColumnBatch): Array[Int] = {
-    val n = batch.numRows
     val bits = batch.cols.map(packedBits)
     if (batch.cols.nonEmpty && !bits.contains(-1) && bits.sum <= 128)
       return packedRowIndices(batch, bits)
+    val (slab, offsets) = encodeRows(batch)
+    val chain = new IndexCmp {
+      def lt(i: Int, j: Int): Boolean =
+        java.util.Arrays.compareUnsigned(
+          slab, offsets(i), offsets(i + 1), slab, offsets(j), offsets(j + 1)) < 0
+    }
+    keyedIndices(batch, chain, chain)
+  }
+
+  /** Every row's normalized key ([[KeyCodec]]) in one slab, row i at
+    * `[offsets(i), offsets(i + 1))` — Arrow's `Rows` buffer layout: one
+    * allocation per call instead of one per row keeps GC out of the
+    * measured loop.
+    */
+  private[sort] def encodeRows(batch: ColumnBatch): (Array[Byte], Array[Int]) = {
+    val n = batch.numRows
     val encs = batch.cols.map(colEnc) // hoisted: no per-row type dispatch
     val w = new KeyWriter(slabCapacity(n, batch.cols.length))
     val offsets = new Array[Int](n + 1)
@@ -485,13 +548,7 @@ object ColumnSort {
       offsets(i + 1) = w.len
       i += 1
     }
-    val slab = w.buf
-    val chain = new IndexCmp {
-      def lt(i: Int, j: Int): Boolean =
-        java.util.Arrays.compareUnsigned(
-          slab, offsets(i), offsets(i + 1), slab, offsets(j), offsets(j + 1)) < 0
-    }
-    keyedIndices(batch, chain, chain)
+    (w.buf, offsets)
   }
 
   /** Initial slab capacity for `rows` rows of `cols` fields, at 12 bytes
@@ -520,40 +577,43 @@ object ColumnSort {
     var ident = idx.length == batch.numRows
     var ii = 0
     while (ident && ii < idx.length) { ident = idx(ii) == ii; ii += 1 }
-    if (ident) {
-      val out: Array[AnyRef] = batch.cols.map {
-        case a: Array[Double] => a.clone(): AnyRef
-        case a: Array[Long] => a.clone(): AnyRef
-        case a: Utf8Col =>
-          Utf8Col.withPrefixes(
-            a.values.clone(), a.prefixes.clone(), a.allShort, a.noZeroBytes): AnyRef
-        case d: DictCol => new DictCol(d.codes.clone(), d.dict): AnyRef
-        case other => throw new IllegalArgumentException(s"bad column $other")
+    ColumnBatch(batch.schema, if (ident) batch.cols.map(copyCol) else batch.cols.map(gatherCol(_, idx)))
+  }
+
+  private def copyCol(col: AnyRef): AnyRef = col match {
+    case a: Array[Double] => a.clone()
+    case a: Array[Long] => a.clone()
+    case a: Utf8Col =>
+      Utf8Col.withPrefixes(a.values.clone(), a.prefixes.clone(), a.allShort, a.noZeroBytes)
+    case d: DictCol => new DictCol(d.codes.clone(), d.dict)
+    case c: NullableCol => new NullableCol(copyCol(c.values), c.isNull.clone())
+    case other => throw new IllegalArgumentException(s"bad column $other")
+  }
+
+  private def gatherCol(col: AnyRef, idx: Array[Int]): AnyRef = col match {
+    case a: Array[Double] =>
+      val r = new Array[Double](idx.length); var i = 0
+      while (i < idx.length) { r(i) = a(idx(i)); i += 1 }; r
+    case a: Array[Long] =>
+      val r = new Array[Long](idx.length); var i = 0
+      while (i < idx.length) { r(i) = a(idx(i)); i += 1 }; r
+    case a: Utf8Col =>
+      val r = new Array[Array[Byte]](idx.length)
+      val rp = new Array[Long](idx.length)
+      var i = 0
+      while (i < idx.length) {
+        val s = idx(i); r(i) = a.values(s); rp(i) = a.prefixes(s); i += 1
       }
-      return ColumnBatch(batch.schema, out)
-    }
-    val out: Array[AnyRef] = batch.cols.map {
-      case a: Array[Double] =>
-        val r = new Array[Double](idx.length); var i = 0
-        while (i < idx.length) { r(i) = a(idx(i)); i += 1 }; r: AnyRef
-      case a: Array[Long] =>
-        val r = new Array[Long](idx.length); var i = 0
-        while (i < idx.length) { r(i) = a(idx(i)); i += 1 }; r: AnyRef
-      case a: Utf8Col =>
-        val r = new Array[Array[Byte]](idx.length)
-        val rp = new Array[Long](idx.length)
-        var i = 0
-        while (i < idx.length) {
-          val s = idx(i); r(i) = a.values(s); rp(i) = a.prefixes(s); i += 1
-        }
-        Utf8Col.withPrefixes(r, rp, a.allShort, a.noZeroBytes): AnyRef
-      case d: DictCol =>
-        val r = new Array[Int](idx.length); var i = 0
-        while (i < idx.length) { r(i) = d.codes(idx(i)); i += 1 }
-        new DictCol(r, d.dict): AnyRef
-      case other => throw new IllegalArgumentException(s"bad column $other")
-    }
-    ColumnBatch(batch.schema, out)
+      Utf8Col.withPrefixes(r, rp, a.allShort, a.noZeroBytes)
+    case d: DictCol =>
+      val r = new Array[Int](idx.length); var i = 0
+      while (i < idx.length) { r(i) = d.codes(idx(i)); i += 1 }
+      new DictCol(r, d.dict)
+    case c: NullableCol =>
+      val r = new Array[Boolean](idx.length); var i = 0
+      while (i < idx.length) { r(i) = c.isNull(idx(i)); i += 1 }
+      new NullableCol(gatherCol(c.values, idx), r)
+    case other => throw new IllegalArgumentException(s"bad column $other")
   }
 
   def sortBatch(batch: ColumnBatch, rowFormat: Boolean): ColumnBatch =
@@ -572,8 +632,9 @@ object ColumnSort {
       * order, and equal keys mean equal rows.
       */
     case object Complete extends KeyOutcome
-    /** Only exact keys packed, but a column lost its low bits or did
-      * not fit: equal keys still need the tie comparator.
+    /** Only exact keys packed, but a column lost its low bits, did not
+      * fit, or is nullable (it has no key, so packing stops before it):
+      * equal keys still need the tie comparator.
       */
     case object Truncated extends KeyOutcome
     /** A utf8 prefix was packed: equal keys say nothing about the
@@ -596,11 +657,12 @@ object ColumnSort {
     * into `63 - idxBits` key bits above the row index. Each column is
     * range-compressed: its unsigned min is subtracted, and it takes the
     * `64 - nlz(max - min)` bits its span needs (0 for a constant
-    * column). Packing stops after an inexact column or after one that
-    * fits only partly (it keeps its top bits). Every step is monotone
-    * in the row order, so a key never orders two rows against the
-    * comparator: it is ≤ where they are in order, and equal only where
-    * the packed columns could not tell them apart.
+    * column). Packing stops after an inexact column, after one that
+    * fits only partly (it keeps its top bits), and before a nullable
+    * one. Every step is monotone in the row order, so a key never
+    * orders two rows against the comparator: it is ≤ where they are in
+    * order, and equal only where the packed columns could not tell them
+    * apart.
     */
   private[sort] def packKeys(cols: Array[AnyRef], n: Int, idxBits: Int): PackedKeys = {
     val words = new Array[Long](n)
@@ -608,7 +670,7 @@ object ColumnSort {
     var used = 0
     var outcome: KeyOutcome = KeyOutcome.Complete
     var j = 0
-    while (j < cols.length && outcome == KeyOutcome.Complete) {
+    while (j < cols.length && outcome == KeyOutcome.Complete && !cols(j).isInstanceOf[NullableCol]) {
       val exact = exactLeadingKey(cols(j))
       val k = if (exact != null) exact else cols(j) match {
         case u: Utf8Col => u.prefixes
@@ -634,6 +696,8 @@ object ColumnSort {
       }
       j += 1
     }
+    // stopped before a nullable column
+    if (j < cols.length && outcome == KeyOutcome.Complete) outcome = KeyOutcome.Truncated
     var i = 0
     while (i < n) { words(i) = (words(i) << idxBits) | i; i += 1 }
     new PackedKeys(words, used, idxBits, outcome)
@@ -730,15 +794,15 @@ object ColumnSort {
     else sortPacked(packKeys(batch.cols, n, idxBitsFor(n)), ties)
   }
 
-  /** Stable bottom-up merge sort of `0 until n` by `lt`, with the
-    * already-ordered-segments shortcut (presorted input → O(n) compares).
-    * Primitive int arrays: a `Comparator[Integer]` would box every index.
-    * The reference order the key-carrying sort reproduces, and the
-    * sort of [[RowFormatSort]]'s row kernel.
+  /** Stable bottom-up merge sort of `0 until n` by `c`, after the
+    * presorted scan (sorted input → O(n) compares): the reference order
+    * the key-carrying sort must reproduce, index for index.
     */
-  private[sort] def sortedIndices(n: Int, c: IndexCmp): Array[Int] =
-    if (scanSorted(n, c) == n) Array.tabulate(n)(identity)
-    else mergeIndices(n, c)
+  private[sort] def sortedIndices(n: Int, c: IndexCmp): Array[Int] = {
+    val idx = Array.tabulate(n)(identity)
+    if (scanSorted(n, c) < n) mergeRun(idx, 0, n, c)
+    idx
+  }
 
   /** Adaptive fast-path detector: one O(n) scan, returning the length of
     * the leading sorted run (== n for fully-ordered input, which then
@@ -752,12 +816,6 @@ object ColumnSort {
     var s = 1
     while (s < n && !c.lt(s, s - 1)) s += 1
     s
-  }
-
-  private def mergeIndices(n: Int, c: IndexCmp): Array[Int] = {
-    val idx = Array.tabulate(n)(identity)
-    mergeRun(idx, 0, n, c)
-    idx
   }
 
   /** Stable insertion sort of `idx[lo, hi)` by `c`. */

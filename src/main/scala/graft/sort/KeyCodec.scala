@@ -1,7 +1,25 @@
 package graft.sort
 
-/** Shared memcmp-key building blocks for the row-format sort kernels
-  * (see [[RowFormatSort]] for the encoding spec).
+/** Building blocks of the row-format strategy's normalized key
+  * (reference `src/lib.rs:35-53`: `RowConverter::convert_columns`): each
+  * row's columns encode, in schema order, into one byte string whose
+  * unsigned byte order is the row order. The encoding is the classic
+  * order-preserving ("normalized key") format — the idea behind Arrow's
+  * row format and Spark's `UnsafeExternalRowSorter` prefix keys:
+  *  - a nullable column: null → a single 0x00 marker; non-null → 0x01,
+  *    then the value encoding (ascending, nulls first — the shared
+  *    Arrow/Spark default). Null-free columns carry no marker.
+  *  - i64 → big-endian with the sign bit flipped.
+  *  - f64 → [[doubleBits]], big-endian.
+  *  - utf8 → the UTF-8 bytes with 0x00 escaped as (0x00,0xFF) and a
+  *    (0x00,0x01) terminator ([[putUtf8Bytes]]), preserving prefix-first
+  *    order for any input; a column of zero-free strings skips the
+  *    escape, and one whose strings also fit 8 bytes writes its
+  *    zero-padded 8-byte prefix as a fixed-width field.
+  *  - dictionary → the value's 4-byte big-endian rank in the batch's
+  *    dictionary.
+  * Every field is fixed-width or terminated, so no field's bytes can run
+  * into the next field's.
   */
 private[sort] object KeyCodec {
 
@@ -10,8 +28,9 @@ private[sort] object KeyCodec {
     java.lang.invoke.MethodHandles.byteArrayViewVarHandle(
       classOf[Array[Long]], java.nio.ByteOrder.BIG_ENDIAN)
 
-  /** IEEE-754 monotonic transform; -0.0/NaN normalized to match Spark SQL
-    * double ordering (NaN greatest, NaN==NaN, -0.0==0.0).
+  /** IEEE-754 monotonic transform (negative → ~bits, else bits |
+    * signbit); -0.0 and NaN normalized first to match Spark SQL double
+    * ordering (NaN greatest, NaN==NaN, -0.0==0.0).
     */
   def doubleBits(d: Double): Long = {
     val norm = if (d.isNaN) Double.NaN else if (d == 0.0d) 0.0d else d
@@ -19,10 +38,6 @@ private[sort] object KeyCodec {
     if (bits < 0) ~bits else bits | Long.MinValue
   }
 
-  /** UTF-8 encode straight into the key buffer — `String.getBytes` would
-    * allocate a temp array per value in the hot loop. 0x00 escaped as
-    * (0x00,0xFF); (0x00,0x01) terminator keeps prefix-first order.
-    */
   /** Escape-copy already-encoded UTF-8 bytes (Arrow layout) into the key
     * buffer: 0x00 → (0x00,0xFF), then the (0x00,0x01) terminator.
     */
@@ -37,30 +52,6 @@ private[sort] object KeyCodec {
     }
     w.buf(w.len) = 0; w.buf(w.len + 1) = 1; w.len += 2
   }
-
-  def putString(w: KeyWriter, s: String): Unit = {
-    val n = s.length
-    w.ensure(n * 3 + 4) // worst case for BMP chars + terminator
-    var i = 0
-    while (i < n) {
-      val c = s.charAt(i)
-      if (c == 0) { w.put(0x00); w.put(0xff) } // escape embedded NUL
-      else if (c < 0x80) { w.buf(w.len) = c.toByte; w.len += 1 }
-      else if (c < 0x800) {
-        w.put(0xc0 | (c >> 6)); w.put(0x80 | (c & 0x3f))
-      } else if (Character.isHighSurrogate(c) && i + 1 < n && Character.isLowSurrogate(s.charAt(i + 1))) {
-        val cp = Character.toCodePoint(c, s.charAt(i + 1))
-        w.ensure(4)
-        w.put(0xf0 | (cp >> 18)); w.put(0x80 | ((cp >> 12) & 0x3f))
-        w.put(0x80 | ((cp >> 6) & 0x3f)); w.put(0x80 | (cp & 0x3f))
-        i += 1
-      } else {
-        w.put(0xe0 | (c >> 12)); w.put(0x80 | ((c >> 6) & 0x3f)); w.put(0x80 | (c & 0x3f))
-      }
-      i += 1
-    }
-    w.put(0x00); w.put(0x01) // terminator < any continuation
-  }
 }
 
 /** Unsynchronized growable byte sink (ByteArrayOutputStream's lock and
@@ -69,7 +60,6 @@ private[sort] object KeyCodec {
 private[sort] final class KeyWriter(initial: Int) {
   var buf = new Array[Byte](initial)
   var len = 0
-  def reset(): Unit = len = 0
   def ensure(n: Int): Unit =
     if (len + n > buf.length)
       buf = java.util.Arrays.copyOf(buf, math.max(buf.length * 2, len + n))
@@ -79,5 +69,4 @@ private[sort] final class KeyWriter(initial: Int) {
     KeyCodec.LongBE.set(buf, len, x)
     len += 8
   }
-  def key(): Array[Byte] = java.util.Arrays.copyOf(buf, len)
 }

@@ -41,7 +41,6 @@ class DriverScalarBoundSpec extends SparkSpec {
       "core.scala",       // BoundedCollect itself
       "SortSweep.scala",  // bench harness collecting timing rows, not data
       "SkewBench.scala",  // bench fixture prep (1-row agg for the hot key)
-      "KernelProbe.scala", // debug main
       "ScaleProbe.scala", // dev scale harness (1-row max-key scalar per table build)
     )
     // Dataset driver-pull spellings. `.take(`/`.head(n)` are EXCLUDED

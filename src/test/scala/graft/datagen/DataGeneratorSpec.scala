@@ -1,7 +1,7 @@
 package graft.datagen
 
 import graft.SparkSpec
-import graft.sort.BatchSort
+import graft.sort.RowOrder
 
 /** Distributional-contract tests for the generators (SURVEY §5:
   * low-card = exactly the 100 strings value0..value99; high-card 20-char
@@ -49,7 +49,7 @@ class DataGeneratorSpec extends SparkSpec {
     for (c <- Case.all) {
       val rows = c.rows(1000)
       assert(rows.forall(r => (0 until r.length).forall(!r.isNullAt(_))), s"${c.name} has nulls")
-      val ord = BatchSort.rowOrdering(c.schema)
+      val ord = RowOrder.rowOrdering(c.schema)
       rows.sliding(2).foreach {
         case Seq(a, b) => assert(ord.compare(a, b) <= 0, s"${c.name} not pre-sorted")
         case _ =>

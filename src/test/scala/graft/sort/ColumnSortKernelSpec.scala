@@ -14,8 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * ties included, so the packed key and the tie-run pass together must
   * reproduce a stable sort. Each fixture names the key outcome it hits
   * at 1025 rows: complete (the key is the row order, no tie pass),
-  * truncated (exact keys that lost bits or did not fit) or inexact (a
-  * utf8 prefix was packed).
+  * truncated (exact keys that lost bits, did not fit, or stopped before
+  * a nullable column) or inexact (a utf8 prefix was packed).
   */
 class ColumnSortKernelSpec extends AnyFunSuite {
 
@@ -39,14 +39,15 @@ class ColumnSortKernelSpec extends AnyFunSuite {
     assert(ColumnSort.rowFormatIndices(b).toSeq == ref.toSeq, s"$label: row format != stable reference")
   }
 
-  private def field(name: String, t: DataType) = StructField(name, t, nullable = false)
+  private def typeOf(col: AnyRef): DataType = col match {
+    case _: Array[Double] => DoubleType
+    case _: Array[Long] => LongType
+    case c: NullableCol => typeOf(c.values)
+    case _ => StringType
+  }
   private def batch(cols: (String, AnyRef)*): ColumnBatch = ColumnBatch(
     StructType(cols.map { case (name, col) =>
-      field(name, col match {
-        case _: Array[Double] => DoubleType
-        case _: Array[Long] => LongType
-        case _ => StringType
-      })
+      StructField(name, typeOf(col), nullable = col.isInstanceOf[NullableCol])
     }),
     cols.map(_._2).toArray)
 
@@ -55,6 +56,11 @@ class ColumnSortKernelSpec extends AnyFunSuite {
   private def utf8(n: Int)(f: => String): Utf8Col = Utf8Col(Array.fill(n)(f.getBytes(UTF_8)))
   private def dict(rng: scala.util.Random, n: Int, values: IndexedSeq[String]): DictCol =
     new DictCol(Array.fill(n)(rng.nextInt(values.length)), values.toArray)
+  /** `values` with about a quarter of its rows null; the value under a
+    * null stays, and no order may read it.
+    */
+  private def nullable(rng: scala.util.Random, n: Int, values: AnyRef): NullableCol =
+    new NullableCol(values, Array.fill(n)(rng.nextInt(4) == 0))
 
   private val specialDoubles =
     IndexedSeq(Double.NaN, -0.0d, 0.0d, Double.PositiveInfinity, Double.NegativeInfinity, 1.5d, -1.5d)
@@ -107,6 +113,16 @@ class ColumnSortKernelSpec extends AnyFunSuite {
     Fixture("mixed-length strings, then doubles", KeyOutcome.Inexact, (rng, n) => batch(
       "a" -> utf8(n)(pick(rng, IndexedSeq("value", "value-long-", "v\u0000", "")) + rng.nextInt(12)),
       "b" -> Array.fill(n)(pick(rng, specialDoubles)))),
+    // a nullable column has no key, so packing stops before it: here
+    // before the first column, and one tie run covers the whole batch
+    Fixture("nullable leading column", KeyOutcome.Truncated, (rng, n) => batch(
+      "a" -> nullable(rng, n, longs(n)(rng.nextInt(5).toLong)),
+      "b" -> nullable(rng, n, utf8(n)(pick(rng, nulStrings))),
+      "c" -> longs(n)(rng.nextInt(3).toLong))),
+    Fixture("nullable doubles and dict after a long", KeyOutcome.Truncated, (rng, n) => batch(
+      "a" -> longs(n)(rng.nextInt(4).toLong),
+      "b" -> nullable(rng, n, Array.fill(n)(pick(rng, specialDoubles))),
+      "c" -> nullable(rng, n, dict(rng, n, IndexedSeq("x", "y", "z"))))),
   )
 
   private val sizes = Seq(0, 1, 2, 15, 16, 17, 1023, 1024, 1025)
@@ -145,6 +161,26 @@ class ColumnSortKernelSpec extends AnyFunSuite {
     assert(44800000 * 4 * 12 < 0)
     assert(ColumnSort.slabCapacity(44800000, 4) == Int.MaxValue - 8)
     assert(ColumnSort.slabCapacity(Int.MaxValue, 1000) == Int.MaxValue - 8)
+  }
+
+  test("utf8 order: U+FFFD sorts before U+1F600 as Utf8Col and DictCol") {
+    // UTF-16 puts U+1F600 (surrogates D83D DE00) before U+FFFD; code
+    // points and UTF-8 bytes (EF BF BD against F0 9F 98 80) put it after.
+    // The expected order is literal: DictCol.ranks and RowOrder share
+    // compareUtf8, so checking against RowOrder would miss its mistakes.
+    val short = Seq("😀x", "\uFFFD", "😀", "a")
+    val mixed = short ++ Seq("\uFFFD-long-string", "😀-long-string")
+    for ((input, expected) <- Seq(
+        short -> Seq("a", "\uFFFD", "😀", "😀x"),
+        mixed -> Seq("a", "\uFFFD", "\uFFFD-long-string", "😀", "😀-long-string", "😀x"))) {
+      val layouts = Seq[(String, AnyRef)](
+        "Utf8Col" -> Utf8Col(input.map(_.getBytes(UTF_8)).toArray),
+        "DictCol" -> new DictCol(input.indices.toArray, input.toArray))
+      for ((layout, col) <- layouts; rowFormat <- Seq(false, true)) {
+        val sorted = ColumnSort.sortBatch(batch("s" -> col), rowFormat).toRows.map(_.getString(0))
+        assert(sorted == expected, s"$layout rowFormat=$rowFormat")
+      }
+    }
   }
 
   // the benchmark's four cases, shuffled, at its 100k rows: dictionary

@@ -1,41 +1,40 @@
 package graft.sort
 
-import graft.SparkSpec
 import graft.datagen.Case
-import graft.sort.BatchSort.Strategy
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
+import org.scalatest.funsuite.AnyFunSuite
 
 /** Differential suite: the two sort strategies must produce identical
   * output — the property the reference assumes but never checks (its
-  * harness compares only runtimes, `src/main.rs:46-55`; SURVEY §5).
-  * Includes adversarial inputs (nulls, NaN, ±0.0, ±Inf, empty and
-  * non-ASCII strings) that the reference generators never produce.
+  * harness compares only runtimes, `src/main.rs:46-55`; SURVEY §5) — and
+  * both must sort to the [[RowOrder]] reference. Includes adversarial
+  * inputs (nulls, NaN, ±0.0, ±Inf, empty and non-ASCII strings) that the
+  * reference generators never produce.
   */
-class SortDifferentialSpec extends SparkSpec {
+class SortDifferentialSpec extends AnyFunSuite {
 
   /** -0.0→0.0 and NaN→canonical so multiset comparison is stable across
-    * Spark's internal signed-zero normalization.
+    * signed-zero normalization.
     */
   private def canon(v: Any): Any = v match {
     case d: Double if d.isNaN => "NaN" // NaN != NaN under ==; use a token
     case d: Double if d == 0.0d => 0.0d
-    case f: Float if f.isNaN => "NaN"
-    case f: Float if f == 0.0f => 0.0f
     case x => x
   }
   private def canonRows(rows: Seq[Row]): Seq[Seq[Any]] =
     rows.map(_.toSeq.map(canon))
 
-  private def assertBothStrategiesAgree(df: DataFrame): Unit = {
-    val a = BatchSort.sortBatch(df, Strategy.DynComparator).collect().toSeq
-    val b = BatchSort.sortBatch(df, Strategy.RowFormat).collect().toSeq
-    val input = df.collect().toSeq
+  private def assertBothStrategiesAgree(
+      input: IndexedSeq[Row], schema: StructType, dictCols: Set[Int] = Set.empty): Unit = {
+    val batch = ColumnBatch.fromRows(input, schema).dictEncoded(dictCols)
+    val a = ColumnSort.sortBatch(batch, rowFormat = false).toRows
+    val b = ColumnSort.sortBatch(batch, rowFormat = true).toRows
     // 1. both outputs are permutations of the input
     assert(canonRows(a).sorted(SeqOrdering) == canonRows(input).sorted(SeqOrdering))
     assert(canonRows(b).sorted(SeqOrdering) == canonRows(input).sorted(SeqOrdering))
     // 2. both outputs are non-decreasing under the composite key
-    val ord = BatchSort.rowOrdering(df.schema)
+    val ord = RowOrder.rowOrdering(schema)
     def assertSorted(rows: Seq[Row], label: String): Unit =
       rows.sliding(2).zipWithIndex.foreach {
         case (Seq(x, y), i) => assert(ord.compare(x, y) <= 0, s"$label out of order at $i: $x > $y")
@@ -61,9 +60,8 @@ class SortDifferentialSpec extends SparkSpec {
           case (null, null) => 0
           case (null, _) => -1
           case (_, null) => 1
-          case (p: Double, q: Double) => BatchSort.compareDouble(p, q)
-          case (p: Float, q: Float) => BatchSort.compareDouble(p.toDouble, q.toDouble)
-          case (p: String, q: String) => BatchSort.compareUtf8(p, q)
+          case (p: Double, q: Double) => RowOrder.compareDouble(p, q)
+          case (p: String, q: String) => RowOrder.compareUtf8(p, q)
           case (p, q) => p.toString.compareTo(q.toString)
         }
         if (c != 0) return c
@@ -72,18 +70,40 @@ class SortDifferentialSpec extends SparkSpec {
     }
   }
 
-  for (c <- Case.all; n <- Seq(0, 1, 100, 5000)) {
-    test(s"differential: ${c.name} n=$n") {
-      assertBothStrategiesAgree(c.df(spark, n))
+  /** `rows` stably sorted by their [[ColumnSort.encodeRows]] keys alone:
+    * the byte encoding, without the packed-key path or the presorted scan.
+    */
+  private def sortedByKeys(rows: IndexedSeq[Row], schema: StructType, dictCols: Set[Int]): Seq[Row] = {
+    val (slab, off) = ColumnSort.encodeRows(ColumnBatch.fromRows(rows, schema).dictEncoded(dictCols))
+    val idx = Array.tabulate[Integer](rows.length)(Integer.valueOf)
+    java.util.Arrays.sort(idx, (x: Integer, y: Integer) =>
+      java.util.Arrays.compareUnsigned(slab, off(x), off(x + 1), slab, off(y), off(y + 1)))
+    idx.toSeq.map(rows(_))
+  }
+
+  private def assertKeyOrder(rows: IndexedSeq[Row], schema: StructType, dictCols: Set[Int] = Set.empty): Unit = {
+    val viaBytes = sortedByKeys(rows, schema, dictCols)
+    val ord = RowOrder.rowOrdering(schema)
+    val viaCmp = rows.toArray
+    java.util.Arrays.sort(viaCmp, ord)
+    viaBytes.zip(viaCmp).zipWithIndex.foreach { case ((x, y), i) =>
+      assert(ord.compare(x, y) == 0, s"kernels disagree at $i: $x vs $y")
     }
   }
 
+  for (c <- Case.all; n <- Seq(0, 1, 100, 5000)) {
+    test(s"differential: ${c.name} n=$n") {
+      assertBothStrategiesAgree(new scala.util.Random(n).shuffle(c.rows(n)), c.schema, c.dictCols)
+    }
+  }
+
+  private val adversarialSchema = StructType(Seq(
+    StructField("d", DoubleType, nullable = true),
+    StructField("s", StringType, nullable = true),
+    StructField("l", LongType, nullable = true)))
+
   test("differential: adversarial doubles/strings/nulls") {
-    val schema = StructType(Seq(
-      StructField("d", DoubleType, nullable = true),
-      StructField("s", StringType, nullable = true),
-      StructField("l", LongType, nullable = true)))
-    val rows = Seq(
+    val rows = IndexedSeq(
       Row(Double.NaN, "a", 1L),
       Row(-0.0d, "a", 2L),
       Row(0.0d, "a", 3L),
@@ -96,29 +116,18 @@ class SortDifferentialSpec extends SparkSpec {
       Row(-1.0e300, "ascii", Long.MinValue),
       Row(1.0e-300, "ASCII", Long.MaxValue),
     )
-    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-    assertBothStrategiesAgree(df)
+    assertBothStrategiesAgree(rows, adversarialSchema)
+    assertBothStrategiesAgree(rows, adversarialSchema, dictCols = Set(1))
   }
 
   for (c <- Case.all) {
     test(s"kernel differential: rows-format encoding agrees with comparator on ${c.name}") {
-      val rows = c.rows(3000).toArray
-      val viaBytes = RowFormatSort.sortKernel(rows.clone(), c.schema)
-      val viaCmp = rows.clone()
-      java.util.Arrays.sort(viaCmp, BatchSort.rowOrdering(c.schema))
-      val ord = BatchSort.rowOrdering(c.schema)
-      viaBytes.zip(viaCmp).zipWithIndex.foreach { case ((x, y), i) =>
-        assert(ord.compare(x, y) == 0, s"kernels disagree at $i: $x vs $y")
-      }
+      assertKeyOrder(new scala.util.Random(3).shuffle(c.rows(3000)), c.schema, c.dictCols)
     }
   }
 
   test("kernel differential: adversarial values through the byte encoding") {
-    val schema = StructType(Seq(
-      StructField("d", DoubleType, nullable = true),
-      StructField("s", StringType, nullable = true),
-      StructField("l", LongType, nullable = true)))
-    val rows = Array(
+    val rows = IndexedSeq(
       Row(Double.NaN, "a", 1L),
       Row(-0.0d, "a\u0000b", 2L), // embedded NUL exercises the escape
       Row(0.0d, "a", 3L),
@@ -129,13 +138,8 @@ class SortDifferentialSpec extends SparkSpec {
       Row(-1.5d, "b", Long.MaxValue),
       Row(null, null, null),
     )
-    val viaBytes = RowFormatSort.sortKernel(rows.clone(), schema)
-    val viaCmp = rows.clone()
-    val ord = BatchSort.rowOrdering(schema)
-    java.util.Arrays.sort(viaCmp, ord)
-    viaBytes.zip(viaCmp).zipWithIndex.foreach { case ((x, y), i) =>
-      assert(ord.compare(x, y) == 0, s"kernels disagree at $i: $x vs $y")
-    }
+    assertKeyOrder(rows, adversarialSchema)
+    assertKeyOrder(rows, adversarialSchema, dictCols = Set(1))
   }
 
   for (c <- Case.all; rowFormat <- Seq(false, true)) {
@@ -145,8 +149,8 @@ class SortDifferentialSpec extends SparkSpec {
       val batch = ColumnBatch.fromRows(rows, c.schema)
       val sorted = ColumnSort.sortBatch(batch, rowFormat).toRows
       val expected = rows.toArray
-      java.util.Arrays.sort(expected, BatchSort.rowOrdering(c.schema))
-      val ord = BatchSort.rowOrdering(c.schema)
+      java.util.Arrays.sort(expected, RowOrder.rowOrdering(c.schema))
+      val ord = RowOrder.rowOrdering(c.schema)
       sorted.zip(expected).zipWithIndex.foreach { case ((x, y), i) =>
         assert(ord.compare(x, y) == 0, s"columnar $label disagrees at $i: $x vs $y")
       }
@@ -166,7 +170,7 @@ class SortDifferentialSpec extends SparkSpec {
       val batch = ColumnBatch.fromRows(rows, c.schema).dictEncoded(c.dictCols)
       val sorted = ColumnSort.sortBatch(batch, rowFormat).toRows
       val expected = rows.toArray
-      val ord = BatchSort.rowOrdering(c.schema)
+      val ord = RowOrder.rowOrdering(c.schema)
       java.util.Arrays.sort(expected, ord)
       sorted.zip(expected).zipWithIndex.foreach { case ((x, y), i) =>
         assert(ord.compare(x, y) == 0, s"columnar $label disagrees at $i: $x vs $y")
@@ -211,7 +215,7 @@ class SortDifferentialSpec extends SparkSpec {
       val batch = ColumnBatch.fromRows(rows, schema)
       val sorted = ColumnSort.sortBatch(batch, rowFormat).toRows
       val expected = rows.toArray
-      val ord = BatchSort.rowOrdering(schema)
+      val ord = RowOrder.rowOrdering(schema)
       java.util.Arrays.sort(expected, ord)
       sorted.zip(expected).zipWithIndex.foreach { case ((x, y), i) =>
         assert(ord.compare(x, y) == 0, s"columnar $label disagrees at $i: $x vs $y")
@@ -219,13 +223,26 @@ class SortDifferentialSpec extends SparkSpec {
       // the NUL-bearing column must not collapse distinct values
       assert(sorted.map(_.getString(0)).toSeq ==
         rows.map(_.getString(0)).sorted(Ordering.comparatorToOrdering(
-          (a: String, b: String) => BatchSort.compareUtf8(a, b))))
+          (a: String, b: String) => RowOrder.compareUtf8(a, b))))
     }
   }
 
   test("sort key covers every column in schema order, ascending") {
-    val df = Case.MixedTuple.df(spark, 10)
-    val exprs = BatchSort.sortExprs(df.schema)
-    assert(exprs.size == df.schema.size)
+    // a base row, then one row per column j that ties it on every other
+    // column and is larger at j: sorted, the row bumped at the LAST
+    // column comes right after the base and the one bumped at column 0
+    // comes last, so every column counts, ascending, and an earlier
+    // column outranks a later one
+    for (c <- Case.all; rowFormat <- Seq(false, true)) {
+      val base = c.rows(1).head
+      def bumped(j: Int): Row = Row.fromSeq(base.toSeq.updated(j, base.get(j) match {
+        case d: Double => d + 1
+        case l: Long => l + 1
+        case s: String => s + "~"
+      }))
+      val expected = base +: c.schema.indices.reverse.map(bumped)
+      val batch = ColumnBatch.fromRows(expected.reverse, c.schema).dictEncoded(c.dictCols)
+      assert(ColumnSort.sortBatch(batch, rowFormat).toRows == expected, s"${c.name} rowFormat=$rowFormat")
+    }
   }
 }

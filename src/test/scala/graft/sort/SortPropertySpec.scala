@@ -1,17 +1,17 @@
 package graft.sort
 
-import graft.SparkSpec
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
+import org.scalatest.funsuite.AnyFunSuite
 
 /** Property-based differential tests (SURVEY §5): for arbitrary rows —
   * including nulls, NaN, ±0.0, empty/weird strings — every sort kernel
   * yields a permutation of its input, non-decreasing under the composite
   * key, and all kernels agree at key level.
   */
-class SortPropertySpec extends SparkSpec {
+class SortPropertySpec extends AnyFunSuite {
 
   /** Drive scalacheck generators deterministically (no scalatestplus
     * bridge in the offline dep set): 30 samples per property, seeded.
@@ -43,36 +43,42 @@ class SortPropertySpec extends SparkSpec {
   private val genRows: Gen[List[Row]] =
     Gen.listOfN(60, Gen.zip(genDouble, genString, genLong).map { case (d, s, l) => Row(d, s, l) })
 
-  private def canonKey(rows: Seq[Row]): Seq[String] = {
-    val enc = RowFormatSort.encodeKey(schema)
-    rows.map(r => enc(r).map("%02x".format(_)).mkString).sorted
+  /** Each row's [[ColumnSort.encodeRows]] key, as hex. */
+  private def keys(rows: Seq[Row]): IndexedSeq[String] = {
+    val (slab, off) = ColumnSort.encodeRows(ColumnBatch.fromRows(rows.toIndexedSeq, schema))
+    rows.indices.map(i => slab.slice(off(i), off(i + 1)).map("%02x".format(_)).mkString)
   }
 
   test("property: row kernel is a sorted permutation and matches the comparator") {
-    val ord = BatchSort.rowOrdering(schema)
+    val ord = RowOrder.rowOrdering(schema)
     forAllSamples(genRows) { rowsList =>
-      val rows = rowsList.toArray
-      val viaBytes = RowFormatSort.sortKernel(rows.clone(), schema)
-      val viaCmp = rows.clone()
+      val rows = rowsList.toIndexedSeq
+      val viaCmp = rows.toArray
       java.util.Arrays.sort(viaCmp, ord)
-      // permutation (multiset equality via canonical key encoding)
-      assert(canonKey(viaBytes.toSeq) == canonKey(rows.toSeq))
-      // non-decreasing + key-level agreement
-      viaBytes.toSeq.sliding(2).foreach {
-        case Seq(a, b) => assert(ord.compare(a, b) <= 0)
-        case _ =>
+      for (rowFormat <- Seq(false, true)) {
+        val viaKernel = ColumnSort.sortBatch(ColumnBatch.fromRows(rows, schema), rowFormat).toRows
+        // permutation (multiset equality via canonical key encoding)
+        assert(keys(viaKernel).sorted == keys(rows).sorted)
+        // non-decreasing + key-level agreement
+        viaKernel.sliding(2).foreach {
+          case Seq(a, b) => assert(ord.compare(a, b) <= 0)
+          case _ =>
+        }
+        viaKernel.zip(viaCmp).foreach { case (a, b) => assert(ord.compare(a, b) == 0) }
       }
-      viaBytes.zip(viaCmp).foreach { case (a, b) => assert(ord.compare(a, b) == 0) }
     }
   }
 
   test("property: key encoding is order-isomorphic to the comparator") {
-    val ord = BatchSort.rowOrdering(schema)
-    val enc = RowFormatSort.encodeKey(schema)
+    val ord = RowOrder.rowOrdering(schema)
     forAllSamples(genRows) { rowsList =>
-      for (a <- rowsList.take(15); b <- rowsList.take(15)) {
+      val rows = rowsList.take(15)
+      val (slab, off) = ColumnSort.encodeRows(ColumnBatch.fromRows(rows.toIndexedSeq, schema))
+      for (i <- rows.indices; j <- rows.indices) {
+        val (a, b) = (rows(i), rows(j))
         val byCmp = Integer.signum(ord.compare(a, b))
-        val byKey = Integer.signum(java.util.Arrays.compareUnsigned(enc(a), enc(b)))
+        val byKey = Integer.signum(
+          java.util.Arrays.compareUnsigned(slab, off(i), off(i + 1), slab, off(j), off(j + 1)))
         assert(byCmp == byKey, s"ordering mismatch for $a vs $b: cmp=$byCmp key=$byKey")
       }
     }
