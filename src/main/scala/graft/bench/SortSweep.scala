@@ -57,10 +57,12 @@ final case class DataPoint(
   *    `ColumnSort.lexsortIndices`, the per-column comparator chain of
   *    Arrow's `lexsort_to_indices`, then `take`.
   *  - rows-format (strategy B, `src/lib.rs:35-53`):
-  *    `ColumnSort.rowFormatIndices`, memcmp-key encode → byte-wise sort,
-  *    then `take`; the encoding is rebuilt per call exactly like the
-  *    reference's per-call `RowConverter::new` (the non-amortized cost
-  *    is what the reference experiment measures).
+  *    `ColumnSort.rowFormatIndices`, ordered by the memcmp normalized
+  *    key, then `take`. Both strategies sort on a packed leading key
+  *    first; row format encodes the full key only for rows whose packed
+  *    keys tie, per call (nothing is cached between calls). The
+  *    reference's `RowConverter` encodes every row up front, so its
+  *    encode cost (BASELINE.md) has no counterpart here.
   */
 object SortSweep {
 
@@ -288,8 +290,12 @@ object SortSweep {
   }
 
   /** Stream count for the merge cells: 8 — a typical spill-run /
-    * stream-buffer fan-in, and large enough that the merge's log₂(k)=3
-    * compare depth is visibly cheaper than the re-sort's log₂(n)≈17.
+    * stream-buffer fan-in. The merge plays log₂(k) = 3 packed-key
+    * matches per row; the re-sort radix-sorts the same packed keys. At
+    * 100k rows the merge does not beat the re-sort: perfbench
+    * `sort_kernel` on a 4-core host, median of 3 runs' fastest cell,
+    * gather included, puts it at 1.65 against 1.56 ms for mixed-tuple
+    * and 1.45 against 1.38 ms for utf8-tuple.
     */
   val MergeStreamCount = 8
 }

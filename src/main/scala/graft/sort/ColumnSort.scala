@@ -304,22 +304,16 @@ object ColumnSort {
     case _ => null
   }
 
-  /** The full lexicographic index comparator for a batch — the chain
-    * [[lexsortIndices]] orders key ties with (leading exact 64-bit keys
-    * hoisted to primitive long compares, megamorphic per-column chain
-    * for the rest), also used by consumers that ORDER BY it without
-    * sorting: the k-way merge of sorted runs ([[MergeStreams]]). Built
-    * eagerly (both hoisted key arrays): its callers compare across
-    * unsorted positions.
+  /** The full lexicographic index comparator for a batch: the first two
+    * columns' exact keys (where they have one) as unsigned long
+    * compares, then the megamorphic per-column chain for the rest.
+    * Lexsort orders rows whose packed keys tie with it, and so does the
+    * k-way merge of sorted runs ([[MergeStreams]]). Both compare across
+    * unsorted positions, so the key arrays are built eagerly.
     */
-  private[sort] def fullChain(batch: ColumnBatch): IndexCmp = hoistedChain(batch.cols, 2)
-
-  /** Lexicographic comparator over `cols` with up to `hoist` leading
-    * columns (while each has an exact key) compared as unsigned longs
-    * ahead of the per-column chain.
-    */
-  private def hoistedChain(cols: Array[AnyRef], hoist: Int): IndexCmp = {
-    val k0 = if (hoist > 0 && cols.nonEmpty) exactLeadingKey(cols(0)) else null
+  private[sort] def fullChain(batch: ColumnBatch): IndexCmp = {
+    val cols = batch.cols
+    val k0 = if (cols.nonEmpty) exactLeadingKey(cols(0)) else null
     if (k0 == null) {
       val cmps = cols.map(colCmp)
       return new IndexCmp {
@@ -334,7 +328,7 @@ object ColumnSort {
         }
       }
     }
-    val k1 = if (hoist > 1 && cols.length > 1) exactLeadingKey(cols(1)) else null
+    val k1 = if (cols.length > 1) exactLeadingKey(cols(1)) else null
     if (k1 == null) {
       val rest = cols.drop(1).map(colCmp)
       return new IndexCmp {
@@ -370,19 +364,13 @@ object ColumnSort {
   }
 
   /** Strategy A: chained per-column comparators over an index vector.
-    * The presorted scan runs with only the first column's exact key
-    * hoisted (building more key arrays would be pure O(n) overhead on
-    * sorted input). Unsorted input goes through the key-carrying radix
-    * sort ([[keyedIndices]]), and [[fullChain]] orders only the runs of
-    * rows whose packed leading keys tie.
+    * The packed key ([[keyedIndices]]) runs the presorted scan and the
+    * radix sort; [[fullChain]] orders only rows whose packed keys tie,
+    * and is built only when two such rows meet.
     */
-  def lexsortIndices(batch: ColumnBatch): Array[Int] =
-    keyedIndices(batch, hoistedChain(batch.cols, 1), fullChain(batch))
+  def lexsortIndices(batch: ColumnBatch): Array[Int] = keyedIndices(batch, fullChain(batch))
 
-  /** Strategy B: row-format (normalized-key) encode into one slab, then
-    * sort, with the byte compare ordering leading-key ties
-    * (`src/lib.rs:35-53` rebuilt columnar).
-    */
+  /** Strategy B's normalized-key encoder ([[KeyCodec]]), one per column. */
   private abstract class ColEnc {
     def enc(i: Int, w: KeyWriter): Unit
   }
@@ -463,75 +451,80 @@ object ColumnSort {
     case a: Utf8Col => a.prefixes(_)
   }
 
-  /** Row-format fast path: when every column's normalized key is fixed
-    * width and they sum to ≤128 bits, the whole row key packs into one
-    * or two machine words (dict ranks in log2(|dict|) bits, primitives/
-    * short-utf8 in 64) — the same normalized-key bytes as the slab
-    * encoding, held as a (hi, lo) long pair per row instead of a heap
-    * slab. The pair compare runs the presorted scan and orders the
-    * leading-key ties of [[keyedIndices]]; keys are COMPLETE (every
-    * column participates), so a pair tie means identical rows.
+  /** Row i's normalized key: every column's field, in schema order. */
+  private def encodeRow(encs: Array[ColEnc], i: Int, w: KeyWriter): Unit = {
+    var j = 0
+    while (j < encs.length) { encs(j).enc(i, w); j += 1 }
+  }
+
+  /** Row-format tie order when every column's normalized key is fixed
+    * width and they sum to ≤128 bits: the row key packs into one (hi,
+    * lo) pair of words (dict ranks in log2(|dict|) bits, primitives and
+    * short utf8 in 64) whose order is the slab bytes' order. A compare
+    * packs the pairs of the two rows it reads.
     */
-  private def packedRowIndices(batch: ColumnBatch, bits: Array[Int]): Array[Int] = {
-    val n = batch.numRows
-    val fields = batch.cols.map(packedField)
-    val his = new Array[Long](n)
-    val los = new Array[Long](n)
-    var i = 0
-    while (i < n) {
-      var hi = 0L; var lo = 0L
+  private final class PackedRowCmp(fields: Array[Int => Long], bits: Array[Int]) extends IndexCmp {
+    private var hi = 0L // high word of the row `lo` packed last
+    private def lo(i: Int): Long = {
+      var h = 0L; var l = 0L
       var j = 0
       while (j < fields.length) {
         val b = bits(j)
         val v = fields(j)(i)
-        // shift the 128-bit (hi, lo) accumulator left by b, then OR in v.
-        // b == 64: everything accumulated so far still fits in lo (total
-        // key ≤ 128 bits), so the shift is exactly hi ← lo, lo ← v.
-        if (b == 64) { hi = lo; lo = v }
-        else { hi = (hi << b) | (lo >>> (64 - b)); lo = (lo << b) | v }
+        // shift the 128-bit (h, l) accumulator left by b, then OR in v.
+        // b == 64: everything accumulated so far still fits in l (total
+        // key ≤ 128 bits), so the shift is exactly h ← l, l ← v.
+        if (b == 64) { h = l; l = v }
+        else { h = (h << b) | (l >>> (64 - b)); l = (l << b) | v }
         j += 1
       }
-      his(i) = hi; los(i) = lo
-      i += 1
+      hi = h
+      l
     }
-    val anyHi = bits.sum > 64
-    val chain: IndexCmp =
-      if (anyHi) new IndexCmp {
-        def lt(i: Int, j: Int): Boolean = {
-          val c = java.lang.Long.compareUnsigned(his(i), his(j))
-          if (c != 0) c < 0
-          else java.lang.Long.compareUnsigned(los(i), los(j)) < 0
-        }
-      }
-      else new IndexCmp {
-        def lt(i: Int, j: Int): Boolean =
-          java.lang.Long.compareUnsigned(los(i), los(j)) < 0
-      }
-    keyedIndices(batch, chain, chain)
+    def lt(i: Int, j: Int): Boolean = {
+      val loI = lo(i); val hiI = hi
+      val loJ = lo(j)
+      val c = java.lang.Long.compareUnsigned(hiI, hi)
+      if (c != 0) c < 0 else java.lang.Long.compareUnsigned(loI, loJ) < 0
+    }
   }
 
-  /** Strategy B: every row's normalized key in one slab (or, when the
-    * keys are narrow, in [[packedRowIndices]]' long pairs). The slab
-    * memcmp runs the presorted scan and orders the leading-key ties of
-    * [[keyedIndices]].
+  /** Row-format tie order over the normalized-key bytes, encoding a row
+    * into one growing slab the first time a compare reads it: only rows
+    * whose packed keys tie are ever encoded. Row i's key is `[from(i),
+    * until(i))`; `until(i) == 0` marks a row not yet encoded (every key
+    * is at least one byte long).
     */
-  def rowFormatIndices(batch: ColumnBatch): Array[Int] = {
+  private final class SlabRowCmp(batch: ColumnBatch) extends IndexCmp {
+    private val encs = batch.cols.map(colEnc)
+    private val w = new KeyWriter(1024)
+    private val from = new Array[Int](batch.numRows)
+    private val until = new Array[Int](batch.numRows)
+    private def encode(i: Int): Unit =
+      if (until(i) == 0) { from(i) = w.len; encodeRow(encs, i, w); until(i) = w.len }
+    def lt(i: Int, j: Int): Boolean = {
+      encode(i); encode(j)
+      java.util.Arrays.compareUnsigned(w.buf, from(i), until(i), w.buf, from(j), until(j)) < 0
+    }
+  }
+
+  /** Strategy B: the row-format normalized key (`src/lib.rs:35-53`
+    * rebuilt columnar). The packed key ([[keyedIndices]]) runs the
+    * presorted scan and the radix sort; a row's full key ([[PackedRowCmp]]
+    * words, else [[SlabRowCmp]] bytes) is built only when its packed key
+    * ties with another's, so the order is still the normalized-key
+    * bytes' order.
+    */
+  def rowFormatIndices(batch: ColumnBatch): Array[Int] = keyedIndices(batch, {
     val bits = batch.cols.map(packedBits)
     if (batch.cols.nonEmpty && !bits.contains(-1) && bits.sum <= 128)
-      return packedRowIndices(batch, bits)
-    val (slab, offsets) = encodeRows(batch)
-    val chain = new IndexCmp {
-      def lt(i: Int, j: Int): Boolean =
-        java.util.Arrays.compareUnsigned(
-          slab, offsets(i), offsets(i + 1), slab, offsets(j), offsets(j + 1)) < 0
-    }
-    keyedIndices(batch, chain, chain)
-  }
+      new PackedRowCmp(batch.cols.map(packedField), bits)
+    else new SlabRowCmp(batch)
+  })
 
   /** Every row's normalized key ([[KeyCodec]]) in one slab, row i at
-    * `[offsets(i), offsets(i + 1))` — Arrow's `Rows` buffer layout: one
-    * allocation per call instead of one per row keeps GC out of the
-    * measured loop.
+    * `[offsets(i), offsets(i + 1))` — Arrow's `Rows` buffer layout, the
+    * keys [[SlabRowCmp]] builds row by row.
     */
   private[sort] def encodeRows(batch: ColumnBatch): (Array[Byte], Array[Int]) = {
     val n = batch.numRows
@@ -540,11 +533,7 @@ object ColumnSort {
     val offsets = new Array[Int](n + 1)
     var i = 0
     while (i < n) {
-      var j = 0
-      while (j < encs.length) {
-        encs(j).enc(i, w)
-        j += 1
-      }
+      encodeRow(encs, i, w)
       offsets(i + 1) = w.len
       i += 1
     }
@@ -557,7 +546,7 @@ object ColumnSort {
     * allocates. [[KeyWriter]] grows the slab when keys run longer.
     */
   private[sort] def slabCapacity(rows: Int, cols: Int): Int =
-    math.min(math.max(64L, rows.toLong * cols * 12), Int.MaxValue - 8L).toInt
+    math.min(math.max(64L, rows.toLong * cols * 12), KeyWriter.MaxSize.toLong).toInt
 
   /** `take`: gather every column by the index vector (`src/lib.rs:56-73`;
     * bounds checks are JVM-inherent — the reference disables Arrow's,
@@ -655,14 +644,16 @@ object ColumnSort {
   /** Pack the leading columns' normalized keys ([[exactLeadingKey]]; a
     * general utf8 column contributes its prefixes as an inexact key)
     * into `63 - idxBits` key bits above the row index. Each column is
-    * range-compressed: its unsigned min is subtracted, and it takes the
-    * `64 - nlz(max - min)` bits its span needs (0 for a constant
-    * column). Packing stops after an inexact column, after one that
-    * fits only partly (it keeps its top bits), and before a nullable
-    * one. Every step is monotone in the row order, so a key never
-    * orders two rows against the comparator: it is ≤ where they are in
-    * order, and equal only where the packed columns could not tell them
-    * apart.
+    * range-compressed: its unsigned min is subtracted, the low bits
+    * every value shares (zero in OR of `k(i) ^ k(0)`) are shifted out,
+    * and it takes the bits the rest of its span needs (0 for a constant
+    * column) — so integral doubles below 2^17 take 27 bits, not 63.
+    * Packing stops after an inexact column, after one that fits only
+    * partly (it keeps its top bits), and before a nullable one. Every
+    * step is monotone in the row order, so a key never orders two rows
+    * against the comparator: it is ≤ where they are in order, and equal
+    * only where the packed columns could not tell them apart. Every
+    * sort of this object, and the k-way merge, starts here.
     */
   private[sort] def packKeys(cols: Array[AnyRef], n: Int, idxBits: Int): PackedKeys = {
     val words = new Array[Long](n)
@@ -677,18 +668,24 @@ object ColumnSort {
         case other => throw new IllegalArgumentException(s"bad column $other")
       }
       if (exact == null) outcome = KeyOutcome.Inexact
-      var min = -1L; var max = 0L
+      // unsigned min and max as signed ones over sign-flipped values
+      var lo = Long.MaxValue; var hi = Long.MinValue; var differ = 0L
+      val first = if (n == 0) 0L else k(0)
       var i = 0
       while (i < n) {
         val v = k(i)
-        if (java.lang.Long.compareUnsigned(v, min) < 0) min = v
-        if (java.lang.Long.compareUnsigned(v, max) > 0) max = v
+        lo = math.min(lo, v ^ Long.MinValue)
+        hi = math.max(hi, v ^ Long.MinValue)
+        differ |= v ^ first
         i += 1
       }
-      val span = if (n == 0) 0 else 64 - java.lang.Long.numberOfLeadingZeros(max - min)
+      val min = lo ^ Long.MinValue; val max = hi ^ Long.MinValue
+      // min and max share those low bits, so max - min is zero in them
+      val shared = java.lang.Long.numberOfTrailingZeros(differ)
+      val span = if (differ == 0) 0 else 64 - java.lang.Long.numberOfLeadingZeros(max - min) - shared
       val b = math.min(span, budget - used)
-      val drop = span - b
-      if (drop > 0 && outcome == KeyOutcome.Complete) outcome = KeyOutcome.Truncated
+      val drop = shared + span - b
+      if (b < span && outcome == KeyOutcome.Complete) outcome = KeyOutcome.Truncated
       if (b > 0) {
         i = 0
         while (i < n) { words(i) = (words(i) << b) | ((k(i) - min) >>> drop); i += 1 }
@@ -784,38 +781,41 @@ object ColumnSort {
   /** Tie runs up to this length are insertion-sorted. */
   private val InsertionRun = 16
 
-  /** Sort `0 until n`: the presorted scan by `scan` first (sorted input
-    * returns the identity in O(n)), else the key-carrying sort of the
-    * batch's leading columns with `ties` ordering equal keys.
+  /** Sort `0 until n` on the packed key of the batch's leading columns
+    * ([[packKeys]]), with `ties` ordering rows whose keys are equal; it
+    * is built the first time two such rows meet. One scan over the
+    * packed words comes first: sorted input (the reference's generated
+    * batches are, `src/data.rs` sorts every case) returns the identity
+    * in O(n). Anything else goes to [[sortPacked]] on the same words.
     */
-  private def keyedIndices(batch: ColumnBatch, scan: IndexCmp, ties: => IndexCmp): Array[Int] = {
+  private def keyedIndices(batch: ColumnBatch, ties: => IndexCmp): Array[Int] = {
     val n = batch.numRows
-    if (scanSorted(n, scan) == n) Array.tabulate(n)(identity)
-    else sortPacked(packKeys(batch.cols, n, idxBitsFor(n)), ties)
+    val keys = packKeys(batch.cols, n, idxBitsFor(n))
+    lazy val cmp = ties
+    val words = keys.words
+    val shift = keys.idxBits
+    val complete = keys.outcome == KeyOutcome.Complete
+    var s = 1
+    var sorted = true
+    while (sorted && s < n) {
+      val a = words(s - 1) >>> shift
+      val b = words(s) >>> shift
+      sorted = a < b || (a == b && (complete || !cmp.lt(s, s - 1)))
+      s += 1
+    }
+    if (sorted) Array.range(0, n) else sortPacked(keys, cmp)
   }
 
-  /** Stable bottom-up merge sort of `0 until n` by `c`, after the
+  /** Stable bottom-up merge sort of `0 until n` by `c`, after a
     * presorted scan (sorted input → O(n) compares): the reference order
     * the key-carrying sort must reproduce, index for index.
     */
   private[sort] def sortedIndices(n: Int, c: IndexCmp): Array[Int] = {
     val idx = Array.tabulate(n)(identity)
-    if (scanSorted(n, c) < n) mergeRun(idx, 0, n, c)
-    idx
-  }
-
-  /** Adaptive fast-path detector: one O(n) scan, returning the length of
-    * the leading sorted run (== n for fully-ordered input, which then
-    * skips key packing and sorting entirely). The reference gets this
-    * for free — Rust's `sort_unstable_by` is pdqsort, which detects
-    * ascending runs, and the benchmark's generated batches ARE pre-sorted
-    * (src/data.rs sorts every case at build time).
-    */
-  private def scanSorted(n: Int, c: IndexCmp): Int = {
-    if (n < 2) return n
     var s = 1
     while (s < n && !c.lt(s, s - 1)) s += 1
-    s
+    if (s < n) mergeRun(idx, 0, n, c)
+    idx
   }
 
   /** Stable insertion sort of `idx[lo, hi)` by `c`. */

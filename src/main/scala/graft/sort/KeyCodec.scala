@@ -42,7 +42,7 @@ private[sort] object KeyCodec {
     * buffer: 0x00 → (0x00,0xFF), then the (0x00,0x01) terminator.
     */
   def putUtf8Bytes(w: KeyWriter, bytes: Array[Byte]): Unit = {
-    w.ensure(bytes.length * 2 + 2)
+    w.ensure(bytes.length * 2L + 2)
     var i = 0
     while (i < bytes.length) {
       val b = bytes(i)
@@ -60,13 +60,33 @@ private[sort] object KeyCodec {
 private[sort] final class KeyWriter(initial: Int) {
   var buf = new Array[Byte](initial)
   var len = 0
-  def ensure(n: Int): Unit =
-    if (len + n > buf.length)
-      buf = java.util.Arrays.copyOf(buf, math.max(buf.length * 2, len + n))
+  /** Room for `n` more bytes. Sizes are computed in Long, so a buffer
+    * near the JVM array limit fails here, by name, instead of wrapping
+    * negative and failing at the next store.
+    */
+  def ensure(n: Long): Unit = {
+    val need = len + n
+    if (need > buf.length) buf = java.util.Arrays.copyOf(buf, KeyWriter.grownSize(buf.length, need))
+  }
   def put(b: Int): Unit = { ensure(1); buf(len) = b.toByte; len += 1 }
   def putLong(x: Long): Unit = {
     ensure(8)
     KeyCodec.LongBE.set(buf, len, x)
     len += 8
+  }
+}
+
+private[sort] object KeyWriter {
+  /** The largest byte array the JVM allocates. */
+  val MaxSize: Int = Int.MaxValue - 8
+
+  /** A buffer of `current` bytes grown to hold `need`: doubled, at
+    * least `need`, at most [[MaxSize]].
+    */
+  def grownSize(current: Int, need: Long): Int = {
+    if (need > MaxSize)
+      throw new IllegalStateException(
+        s"row-format key buffer needs $need bytes, past the JVM array limit of $MaxSize")
+    math.min(math.max(current * 2L, need), MaxSize.toLong).toInt
   }
 }

@@ -7,7 +7,7 @@ package graft.sort
   * k-way merge of sorted runs against a full re-sort. [[scatter]] is
   * the kernel-level twin of that setup (the distributed twin is
   * [[graft.datagen.SplitBatch.splitBatch]]); [[mergeRuns]] is the merge
-  * itself: a loser-tree over the batch's lexicographic comparator.
+  * itself: a loser-tree over the batch's packed keys.
   *
   * Scale note: this IS the shape of Spark's own shuffle-merge /
   * spill-run combining (UnsafeSorterSpillMerger is a priority queue
@@ -51,11 +51,13 @@ object MergeStreams {
 
   /** K-way merge of contiguous sorted runs into one sorted index
     * vector, via a LOSER TREE (the tournament structure every external
-    * merge uses — one comparator call per level, log₂(k) per emitted
-    * row, no sift-down double-compares like a binary heap). Stable
-    * across runs: ties emit the lower run id first, which — because
-    * [[scatter]]'s runs partition a stable sort's output in order — is
-    * exactly the original sorted order.
+    * merge uses — one match per level, log₂(k) per emitted row, no
+    * sift-down double-compares like a binary heap). A match compares the
+    * two head rows' packed keys ([[ColumnSort.packKeys]]), and the
+    * batch's full comparator only where those are equal and the key is
+    * not complete. Stable across runs: ties emit the lower run id first,
+    * which — because [[scatter]]'s runs partition a stable sort's output
+    * in order — is exactly the original sorted order.
     */
   def mergeRuns(batch: ColumnBatch, offsets: Array[Int]): Array[Int] = {
     // zero-based contract made executable: the emit loop counts to
@@ -75,70 +77,84 @@ object MergeStreams {
         s"mergeRuns: offsets must be non-decreasing, got ${offsets(r)} then ${offsets(r + 1)}")
       r += 1
     }
-    val out = new Array[Int](n)
-    if (k == 1) { // single run: already sorted — no comparator needed
-      var i = 0
-      while (i < n) { out(i) = i; i += 1 }
-      return out
-    }
-    val cmp = ColumnSort.fullChain(batch) // built only when a merge will run
-    val head = new Array[Int](k) // next unconsumed position per run
-    java.lang.System.arraycopy(offsets, 0, head, 0, k)
-    // run a BEATS run b iff a's head row sorts strictly before b's, or
-    // ties with a lower run id (stability); exhausted runs always lose
-    def beats(a: Int, b: Int): Boolean = {
-      if (head(a) >= offsets(a + 1)) return false
-      if (head(b) >= offsets(b + 1)) return true
-      val i = head(a); val j = head(b)
-      if (cmp.lt(i, j)) true
-      else if (cmp.lt(j, i)) false
-      else a < b
-    }
-    // loser tree over the next-power-of-two bracket: internal nodes
-    // store the LOSER of their subtree's match, the overall winner sits
-    // outside the tree. Init plays every match bottom-up (leaves are
-    // virtual: run id for < k, the always-losing sentinel -1 above);
-    // after emitting, only the consumed run's key changed, so replaying
-    // that run's leaf-to-root path against the stored losers restores
-    // the invariant — one MATCH per level, log2(k) per emitted row
-    // (a binary heap sifts down with two matches per level). A match
-    // here costs up to two `lt` probes (the lt-only comparator can't
-    // 3-way; the second probe runs only on non-strict orderings to
-    // detect the tie the run-id rule breaks).
+    if (k == 1) return Array.range(0, n) // single run: already sorted
+    val keys = ColumnSort.packKeys(batch.cols, n, ColumnSort.idxBitsFor(n))
+    val words = keys.words
+    val shift = keys.idxBits
+    val complete = keys.outcome == ColumnSort.KeyOutcome.Complete
+    lazy val cmp = ColumnSort.fullChain(batch) // built at the first key tie it must break
+    // loser tree over the next-power-of-two bracket, its spare leaves
+    // empty runs: internal nodes store the LOSER of their subtree's
+    // match, the overall winner sits outside the tree. Init plays every
+    // match bottom-up; after emitting, only the consumed run's head
+    // changed, so replaying that run's leaf-to-root path against the
+    // stored losers restores the invariant — one MATCH per level,
+    // log2(k) per emitted row (a binary heap sifts down with two
+    // matches per level).
     var m = 1
     while (m < k) m <<= 1
+    val head = new Array[Int](m) // next unconsumed position per run
+    val end = new Array[Int](m)
+    val word = new Array[Long](m) // the head row's packed word; Long.MaxValue once exhausted
+    r = 0
+    while (r < m) {
+      head(r) = if (r < k) offsets(r) else n
+      end(r) = if (r < k) offsets(r + 1) else n
+      word(r) = if (head(r) < end(r)) words(head(r)) else Long.MaxValue
+      r += 1
+    }
+    // run a BEATS run b iff a's head row sorts strictly before b's, or
+    // ties with a lower run id (stability); exhausted runs always lose.
+    // Head words whose keys differ decide alone, and so do two different
+    // words of a complete key: equal keys then compare row indices, whose
+    // order is the run order. The rest — an exhausted run, or a key tie
+    // the key cannot break — costs up to two `lt` probes (the lt-only
+    // comparator can't 3-way; the second probe detects the tie the
+    // run-id rule breaks).
+    def beats(a: Int, b: Int): Boolean = {
+      val wa = word(a); val wb = word(b)
+      if (((wa ^ wb) >>> shift) != 0 || (complete && wa != wb)) wa < wb
+      else {
+        val i = head(a); val j = head(b)
+        if (i >= end(a)) false
+        else if (j >= end(b)) true
+        else if (cmp.lt(i, j)) true
+        else if (cmp.lt(j, i)) false
+        else a < b
+      }
+    }
     val tree = new Array[Int](m) // losers; tree(0) unused
     def init(node: Int): Int = { // returns the subtree's winner
-      if (node >= m) { if (node - m < k) node - m else -1 }
+      if (node >= m) node - m
       else {
         val a = init(2 * node)
         val b = init(2 * node + 1)
-        val aWins = a != -1 && (b == -1 || beats(a, b))
-        if (aWins) { tree(node) = b; a } else { tree(node) = a; b }
+        if (beats(a, b)) { tree(node) = b; a } else { tree(node) = a; b }
       }
     }
     var winner = init(1)
-    def replay(run: Int): Unit = {
-      var cur = run
-      var node = (m + run) >> 1
-      while (node >= 1) {
-        val other = tree(node)
-        val curWins =
-          if (cur == -1) false
-          else other == -1 || beats(cur, other)
-        if (!curWins) { tree(node) = cur; cur = other }
-        node >>= 1
-      }
-      winner = cur
-    }
+    val out = new Array[Int](n)
     var outPos = 0
     while (outPos < n) {
       val w = winner
-      out(outPos) = head(w)
+      val i = head(w)
+      out(outPos) = i
       outPos += 1
-      head(w) += 1
+      head(w) = i + 1
+      word(w) = if (i + 1 < end(w)) words(i + 1) else Long.MaxValue
       // replay the winner's leaf with its new head (or exhausted)
-      replay(w)
+      var cur = w
+      var node = (m + w) >> 1
+      while (node >= 1) {
+        val other = tree(node)
+        // unconditional store and selects: the JIT emits conditional
+        // moves for the match outcome, which no branch predictor knows
+        val lost = !beats(cur, other)
+        tree(node) = if (lost) cur else other
+        cur = if (lost) other else cur
+        node >>= 1
+      }
+      winner = cur
     }
     out
   }

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.datagen.Case
 import graft.sort.ColumnSort.KeyOutcome
-import graft.sort.ColumnSortKernelSpec.Fixture
+import graft.sort.ColumnSortKernelSpec._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,9 +18,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * a nullable column) or inexact (a utf8 prefix was packed).
   */
 class ColumnSortKernelSpec extends AnyFunSuite {
-
-  private def reference(b: ColumnBatch): Array[Int] =
-    ColumnSort.sortedIndices(b.numRows, ColumnSort.fullChain(b))
 
   /** An independent stable sort (TimSort over boxed indices) by the same
     * comparator, so the reference itself is checked too.
@@ -38,6 +35,161 @@ class ColumnSortKernelSpec extends AnyFunSuite {
     assert(ColumnSort.lexsortIndices(b).toSeq == ref.toSeq, s"$label: lexsort != stable reference")
     assert(ColumnSort.rowFormatIndices(b).toSeq == ref.toSeq, s"$label: row format != stable reference")
   }
+
+  for (f <- fixtures; n <- sizes) {
+    test(s"exact order: ${f.name}, n=$n") {
+      val b = f.at(n)
+      assert(reference(b).toSeq == timsortReference(b).toSeq, "merge reference is not the stable sort")
+      assertExactOrder(b, s"${f.name} n=$n")
+    }
+  }
+
+  for (f <- fixtures) {
+    test(s"key outcome at 1025 rows: ${f.name} is ${f.outcome}") {
+      val b = f.make(new scala.util.Random(7), 1025)
+      assert(ColumnSort.packKeys(b.cols, 1025, ColumnSort.idxBitsFor(1025)).outcome == f.outcome)
+    }
+
+    test(s"packing with 31 index bits keeps the exact order: ${f.name}") {
+      val b = f.make(new scala.util.Random(11), 1025)
+      val keys = ColumnSort.packKeys(b.cols, 1025, idxBits = 31)
+      assert(keys.keyBits <= 32)
+      assert(ColumnSort.sortPacked(keys, ColumnSort.fullChain(b)).toSeq == reference(b).toSeq)
+    }
+  }
+
+  test("index bits: ceil(log2 n), 31 at the largest batch") {
+    assert(Seq(0, 1, 2, 3, 4, 5, 1024, 1025).map(ColumnSort.idxBitsFor) == Seq(0, 0, 1, 2, 2, 3, 10, 11))
+    assert(ColumnSort.idxBitsFor(Int.MaxValue) == 31)
+  }
+
+  test("slab capacity is computed in Long and clamped") {
+    assert(ColumnSort.slabCapacity(0, 3) == 64)
+    assert(ColumnSort.slabCapacity(100, 4) == 4800)
+    // 44.8M rows at 4 columns: the Int product goes negative
+    assert(44800000 * 4 * 12 < 0)
+    assert(ColumnSort.slabCapacity(44800000, 4) == Int.MaxValue - 8)
+    assert(ColumnSort.slabCapacity(Int.MaxValue, 1000) == Int.MaxValue - 8)
+  }
+
+  test("utf8 order: U+FFFD sorts before U+1F600 as Utf8Col and DictCol") {
+    // UTF-16 puts U+1F600 (surrogates D83D DE00) before U+FFFD; code
+    // points and UTF-8 bytes (EF BF BD against F0 9F 98 80) put it after.
+    // The expected order is literal: DictCol.ranks and RowOrder share
+    // compareUtf8, so checking against RowOrder would miss its mistakes.
+    val short = Seq("😀x", "\uFFFD", "😀", "a")
+    val mixed = short ++ Seq("\uFFFD-long-string", "😀-long-string")
+    for ((input, expected) <- Seq(
+        short -> Seq("a", "\uFFFD", "😀", "😀x"),
+        mixed -> Seq("a", "\uFFFD", "\uFFFD-long-string", "😀", "😀-long-string", "😀x"))) {
+      val layouts = Seq[(String, AnyRef)](
+        "Utf8Col" -> Utf8Col(input.map(_.getBytes(UTF_8)).toArray),
+        "DictCol" -> new DictCol(input.indices.toArray, input.toArray))
+      for ((layout, col) <- layouts; rowFormat <- Seq(false, true)) {
+        val sorted = ColumnSort.sortBatch(batch("s" -> col), rowFormat).toRows.map(_.getString(0))
+        assert(sorted == expected, s"$layout rowFormat=$rowFormat")
+      }
+    }
+  }
+
+  // the benchmark's four cases, shuffled, at its 100k rows: dictionary
+  // ranks pack completely; mixed-tuple's key (27 f64 bits, 12 of the
+  // first string) runs out inside the second string; utf8-tuple packs
+  // two exact prefixes, then the inexact high-card one
+  private val caseOutcomes = Seq(
+    Case.Utf8Tuple -> KeyOutcome.Inexact,
+    Case.MixedTuple -> KeyOutcome.Truncated,
+    Case.DictionaryTuple -> KeyOutcome.Complete,
+    Case.MixedDictionaryTuple -> KeyOutcome.Complete)
+
+  for ((c, outcome) <- caseOutcomes) {
+    test(s"exact order: shuffled ${c.name} at 100k rows ($outcome)") {
+      val n = 100000
+      val rows = new scala.util.Random(5).shuffle(c.rows(n))
+      val b = ColumnBatch.fromRows(rows, c.schema).dictEncoded(c.dictCols)
+      val keys = ColumnSort.packKeys(b.cols, n, ColumnSort.idxBitsFor(n))
+      assert(keys.outcome == outcome)
+      if (c == Case.DictionaryTuple) assert(keys.keyBits == 21)
+      if (c == Case.MixedDictionaryTuple) assert(keys.keyBits == 38)
+      assertExactOrder(b, s"shuffled ${c.name}")
+    }
+  }
+
+  private lazy val presorted = Case.all.map(c => c -> c.rows(100000)).toMap
+
+  for (c <- Case.all) {
+    test(s"exact order: presorted ${c.name} at 100k rows") {
+      val b = ColumnBatch.fromRows(presorted(c), c.schema).dictEncoded(c.dictCols)
+      val identity = (0 until 100000).toSeq
+      assert(ColumnSort.lexsortIndices(b).toSeq == identity, "lexsort")
+      assert(ColumnSort.rowFormatIndices(b).toSeq == identity, "row format")
+    }
+  }
+
+  // the presorted scan compares packed keys and asks the tie comparator
+  // only where two keys are equal: an inversion between two such rows
+  // is the one a pack-first scan could miss
+  for (f <- fixtures) {
+    test(s"presorted scan catches an inversion under an equal packed key: ${f.name}") {
+      val n = 1025
+      val b = f.at(n)
+      val sorted = ColumnSort.take(b, reference(b))
+      val keys = ColumnSort.packKeys(sorted.cols, n, ColumnSort.idxBitsFor(n))
+      val chain = ColumnSort.fullChain(sorted)
+      def key(i: Int) = keys.words(i) >>> keys.idxBits
+      val s = (1 until n).find(s => key(s) == key(s - 1) && chain.lt(s - 1, s))
+      if (f.outcome == KeyOutcome.Complete) assert(s.isEmpty, "a complete key tied two different rows")
+      s match {
+        case Some(i) =>
+          val swap = Array.tabulate(n)(identity)
+          swap(i) = i - 1; swap(i - 1) = i
+          val nearlySorted = ColumnSort.take(sorted, swap)
+          assert(reference(nearlySorted).toSeq != (0 until n), "the swap left the batch sorted")
+          assertExactOrder(nearlySorted, s"${f.name} with rows ${i - 1} and $i swapped")
+        case None => // no such pair (i64 budget split: its 40 leading bits never repeat)
+          assertExactOrder(sorted, s"sorted ${f.name}")
+      }
+    }
+  }
+
+  test("shared low bits: mixed-tuple's f64 column alone packs in at most 27 bits, complete") {
+    val n = 100000
+    val b = ColumnBatch.fromRows(presorted(Case.MixedTuple), Case.MixedTuple.schema)
+    val keys = ColumnSort.packKeys(Array(b.cols(0)), n, ColumnSort.idxBitsFor(n))
+    assert(keys.keyBits <= 27)
+    assert(keys.outcome == KeyOutcome.Complete)
+  }
+
+  test("KeyWriter fails by name past the JVM array limit instead of wrapping") {
+    val w = new KeyWriter(16)
+    w.len = Int.MaxValue - 4 // no big allocation: only the length is near the limit
+    val e = intercept[IllegalStateException](w.ensure(8))
+    assert(e.getMessage.contains("JVM array limit"))
+    intercept[IllegalStateException](w.putLong(1L))
+    intercept[IllegalStateException](KeyCodec.putUtf8Bytes(w, Array[Byte](1, 2)))
+    assert(w.buf.length == 16)
+  }
+
+  test("KeyWriter growth doubles in Long and is capped at the array limit") {
+    assert(KeyWriter.grownSize(64, 65) == 128)
+    assert(KeyWriter.grownSize(64, 1000) == 1000)
+    // doubling past Int.MaxValue goes negative in Int
+    assert((Int.MaxValue / 2 + 1) * 2 < 0)
+    assert(KeyWriter.grownSize(Int.MaxValue / 2 + 1, Int.MaxValue / 2 + 2L) == KeyWriter.MaxSize)
+    assert(KeyWriter.grownSize(16, KeyWriter.MaxSize.toLong) == KeyWriter.MaxSize)
+  }
+}
+
+/** The adversarial fixtures, shared with [[MergeStreamsKernelSpec]]. */
+object ColumnSortKernelSpec {
+  final case class Fixture(name: String, outcome: KeyOutcome, make: (scala.util.Random, Int) => ColumnBatch) {
+    /** The fixture at `n` rows, from the seed every exact-order test uses. */
+    def at(n: Int): ColumnBatch = make(new scala.util.Random(n * 31 + name.hashCode), n)
+  }
+
+  /** The stable reference order: merge sort by the full comparator. */
+  def reference(b: ColumnBatch): Array[Int] =
+    ColumnSort.sortedIndices(b.numRows, ColumnSort.fullChain(b))
 
   private def typeOf(col: AnyRef): DataType = col match {
     case _: Array[Double] => DoubleType
@@ -67,7 +219,7 @@ class ColumnSortKernelSpec extends AnyFunSuite {
   private val extremeLongs = IndexedSeq(Long.MinValue, Long.MaxValue, -1L, 0L, 1L)
   private val nulStrings = IndexedSeq("", "a", "a\u0000", "a\u0000\u0000", "\u0000", "b", "a\u0000b", "ab")
 
-  private val fixtures = Seq(
+  val fixtures: Seq[Fixture] = Seq(
     // three dict ranks (one a 1-entry dict: a 0-bit span) and a small
     // range long fit in the budget together
     Fixture("dict columns", KeyOutcome.Complete, (rng, n) => batch(
@@ -123,89 +275,12 @@ class ColumnSortKernelSpec extends AnyFunSuite {
       "a" -> longs(n)(rng.nextInt(4).toLong),
       "b" -> nullable(rng, n, Array.fill(n)(pick(rng, specialDoubles))),
       "c" -> nullable(rng, n, dict(rng, n, IndexedSeq("x", "y", "z"))))),
+    // multiples of 2^40 over the whole i64 range and non-negative
+    // integral doubles: both shed their shared low zero bits and fit
+    Fixture("shared low zero bits", KeyOutcome.Complete, (rng, n) => batch(
+      "a" -> longs(n)(rng.nextLong() >> 40 << 40),
+      "b" -> Array.fill(n)(rng.nextInt(1024).toDouble))),
   )
 
-  private val sizes = Seq(0, 1, 2, 15, 16, 17, 1023, 1024, 1025)
-
-  for (f <- fixtures; n <- sizes) {
-    test(s"exact order: ${f.name}, n=$n") {
-      val b = f.make(new scala.util.Random(n * 31 + f.name.hashCode), n)
-      assert(reference(b).toSeq == timsortReference(b).toSeq, "merge reference is not the stable sort")
-      assertExactOrder(b, s"${f.name} n=$n")
-    }
-  }
-
-  for (f <- fixtures) {
-    test(s"key outcome at 1025 rows: ${f.name} is ${f.outcome}") {
-      val b = f.make(new scala.util.Random(7), 1025)
-      assert(ColumnSort.packKeys(b.cols, 1025, ColumnSort.idxBitsFor(1025)).outcome == f.outcome)
-    }
-
-    test(s"packing with 31 index bits keeps the exact order: ${f.name}") {
-      val b = f.make(new scala.util.Random(11), 1025)
-      val keys = ColumnSort.packKeys(b.cols, 1025, idxBits = 31)
-      assert(keys.keyBits <= 32)
-      assert(ColumnSort.sortPacked(keys, ColumnSort.fullChain(b)).toSeq == reference(b).toSeq)
-    }
-  }
-
-  test("index bits: ceil(log2 n), 31 at the largest batch") {
-    assert(Seq(0, 1, 2, 3, 4, 5, 1024, 1025).map(ColumnSort.idxBitsFor) == Seq(0, 0, 1, 2, 2, 3, 10, 11))
-    assert(ColumnSort.idxBitsFor(Int.MaxValue) == 31)
-  }
-
-  test("slab capacity is computed in Long and clamped") {
-    assert(ColumnSort.slabCapacity(0, 3) == 64)
-    assert(ColumnSort.slabCapacity(100, 4) == 4800)
-    // 44.8M rows at 4 columns: the Int product goes negative
-    assert(44800000 * 4 * 12 < 0)
-    assert(ColumnSort.slabCapacity(44800000, 4) == Int.MaxValue - 8)
-    assert(ColumnSort.slabCapacity(Int.MaxValue, 1000) == Int.MaxValue - 8)
-  }
-
-  test("utf8 order: U+FFFD sorts before U+1F600 as Utf8Col and DictCol") {
-    // UTF-16 puts U+1F600 (surrogates D83D DE00) before U+FFFD; code
-    // points and UTF-8 bytes (EF BF BD against F0 9F 98 80) put it after.
-    // The expected order is literal: DictCol.ranks and RowOrder share
-    // compareUtf8, so checking against RowOrder would miss its mistakes.
-    val short = Seq("😀x", "\uFFFD", "😀", "a")
-    val mixed = short ++ Seq("\uFFFD-long-string", "😀-long-string")
-    for ((input, expected) <- Seq(
-        short -> Seq("a", "\uFFFD", "😀", "😀x"),
-        mixed -> Seq("a", "\uFFFD", "\uFFFD-long-string", "😀", "😀-long-string", "😀x"))) {
-      val layouts = Seq[(String, AnyRef)](
-        "Utf8Col" -> Utf8Col(input.map(_.getBytes(UTF_8)).toArray),
-        "DictCol" -> new DictCol(input.indices.toArray, input.toArray))
-      for ((layout, col) <- layouts; rowFormat <- Seq(false, true)) {
-        val sorted = ColumnSort.sortBatch(batch("s" -> col), rowFormat).toRows.map(_.getString(0))
-        assert(sorted == expected, s"$layout rowFormat=$rowFormat")
-      }
-    }
-  }
-
-  // the benchmark's four cases, shuffled, at its 100k rows: dictionary
-  // ranks pack completely; the f64 column's 63-bit span is truncated;
-  // utf8-tuple packs two exact prefixes, then the inexact high-card one
-  private val caseOutcomes = Seq(
-    Case.Utf8Tuple -> KeyOutcome.Inexact,
-    Case.MixedTuple -> KeyOutcome.Truncated,
-    Case.DictionaryTuple -> KeyOutcome.Complete,
-    Case.MixedDictionaryTuple -> KeyOutcome.Complete)
-
-  for ((c, outcome) <- caseOutcomes) {
-    test(s"exact order: shuffled ${c.name} at 100k rows ($outcome)") {
-      val n = 100000
-      val rows = new scala.util.Random(5).shuffle(c.rows(n))
-      val b = ColumnBatch.fromRows(rows, c.schema).dictEncoded(c.dictCols)
-      val keys = ColumnSort.packKeys(b.cols, n, ColumnSort.idxBitsFor(n))
-      assert(keys.outcome == outcome)
-      if (c == Case.DictionaryTuple) assert(keys.keyBits == 21)
-      if (c == Case.MixedDictionaryTuple) assert(keys.keyBits == 38)
-      assertExactOrder(b, s"shuffled ${c.name}")
-    }
-  }
-}
-
-object ColumnSortKernelSpec {
-  final case class Fixture(name: String, outcome: KeyOutcome, make: (scala.util.Random, Int) => ColumnBatch)
+  val sizes = Seq(0, 1, 2, 15, 16, 17, 1023, 1024, 1025)
 }
