@@ -294,8 +294,8 @@ object SortSweep {
     * matches per row; the re-sort radix-sorts the same packed keys. At
     * 100k rows the merge does not beat the re-sort: perfbench
     * `sort_kernel` on a 4-core host, median of 3 runs' fastest cell,
-    * gather included, puts it at 1.65 against 1.56 ms for mixed-tuple
-    * and 1.45 against 1.38 ms for utf8-tuple.
+    * gather included, puts it at 1.70 against 1.59 ms for mixed-tuple
+    * and 1.49 against 1.40 ms for utf8-tuple.
     */
   val MergeStreamCount = 8
 }

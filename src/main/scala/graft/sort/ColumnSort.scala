@@ -427,66 +427,10 @@ object ColumnSort {
     case other => throw new IllegalArgumentException(s"bad column $other")
   }
 
-  /** Bits of normalized key a column contributes when it is FIXED-width
-    * and register-packable; -1 when it isn't. Dict columns need only
-    * ceil(log2(|dict|)) bits (the rank), primitives 64, short zero-free
-    * utf8 64 (the padded prefix is a complete order-preserving key); a
-    * nullable column never packs.
-    */
-  private def packedBits(col: AnyRef): Int = col match {
-    case d: DictCol =>
-      math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, d.dict.length - 1L)).toInt)
-    case _: Array[Long] => 64
-    case _: Array[Double] => 64
-    case a: Utf8Col if a.allShort && a.noZeroBytes => 64
-    case _ => -1
-  }
-
-  private def packedField(col: AnyRef): Int => Long = col match {
-    case d: DictCol =>
-      val r = d.ranks; val c = d.codes
-      i => r(c(i)).toLong
-    case a: Array[Long] => i => a(i) ^ Long.MinValue
-    case a: Array[Double] => i => KeyCodec.doubleBits(a(i))
-    case a: Utf8Col => a.prefixes(_)
-  }
-
   /** Row i's normalized key: every column's field, in schema order. */
   private def encodeRow(encs: Array[ColEnc], i: Int, w: KeyWriter): Unit = {
     var j = 0
     while (j < encs.length) { encs(j).enc(i, w); j += 1 }
-  }
-
-  /** Row-format tie order when every column's normalized key is fixed
-    * width and they sum to ≤128 bits: the row key packs into one (hi,
-    * lo) pair of words (dict ranks in log2(|dict|) bits, primitives and
-    * short utf8 in 64) whose order is the slab bytes' order. A compare
-    * packs the pairs of the two rows it reads.
-    */
-  private final class PackedRowCmp(fields: Array[Int => Long], bits: Array[Int]) extends IndexCmp {
-    private var hi = 0L // high word of the row `lo` packed last
-    private def lo(i: Int): Long = {
-      var h = 0L; var l = 0L
-      var j = 0
-      while (j < fields.length) {
-        val b = bits(j)
-        val v = fields(j)(i)
-        // shift the 128-bit (h, l) accumulator left by b, then OR in v.
-        // b == 64: everything accumulated so far still fits in l (total
-        // key ≤ 128 bits), so the shift is exactly h ← l, l ← v.
-        if (b == 64) { h = l; l = v }
-        else { h = (h << b) | (l >>> (64 - b)); l = (l << b) | v }
-        j += 1
-      }
-      hi = h
-      l
-    }
-    def lt(i: Int, j: Int): Boolean = {
-      val loI = lo(i); val hiI = hi
-      val loJ = lo(j)
-      val c = java.lang.Long.compareUnsigned(hiI, hi)
-      if (c != 0) c < 0 else java.lang.Long.compareUnsigned(loI, loJ) < 0
-    }
   }
 
   /** Row-format tie order over the normalized-key bytes, encoding a row
@@ -510,17 +454,11 @@ object ColumnSort {
 
   /** Strategy B: the row-format normalized key (`src/lib.rs:35-53`
     * rebuilt columnar). The packed key ([[keyedIndices]]) runs the
-    * presorted scan and the radix sort; a row's full key ([[PackedRowCmp]]
-    * words, else [[SlabRowCmp]] bytes) is built only when its packed key
-    * ties with another's, so the order is still the normalized-key
-    * bytes' order.
+    * presorted scan and the radix sort; a row's full key bytes
+    * ([[SlabRowCmp]]) are built only when its packed key ties with
+    * another's, so the order is still the normalized-key bytes' order.
     */
-  def rowFormatIndices(batch: ColumnBatch): Array[Int] = keyedIndices(batch, {
-    val bits = batch.cols.map(packedBits)
-    if (batch.cols.nonEmpty && !bits.contains(-1) && bits.sum <= 128)
-      new PackedRowCmp(batch.cols.map(packedField), bits)
-    else new SlabRowCmp(batch)
-  })
+  def rowFormatIndices(batch: ColumnBatch): Array[Int] = keyedIndices(batch, new SlabRowCmp(batch))
 
   /** Every row's normalized key ([[KeyCodec]]) in one slab, row i at
     * `[offsets(i), offsets(i + 1))` — Arrow's `Rows` buffer layout, the
@@ -633,9 +571,31 @@ object ColumnSort {
     case object Inexact extends KeyOutcome
   }
 
-  /** One long per row, `(key << idxBits) | row`, with `keyBits` key bits. */
+  /** One long per row, `(key << idxBits) | row`, with `keyBits` key bits.
+    * Words are non-negative, so `<` on two words that [[decides]] is
+    * their rows' order.
+    */
   private[sort] final class PackedKeys(
-      val words: Array[Long], val keyBits: Int, val idxBits: Int, val outcome: KeyOutcome)
+      val words: Array[Long], val keyBits: Int, val idxBits: Int, val outcome: KeyOutcome) {
+    /** Equal keys mean equal rows: no tie ever needs the comparator. */
+    val complete: Boolean = outcome == KeyOutcome.Complete
+
+    /** Low bits a word's order ignores: none for a complete key (row
+      * indices break its ties), else the row index.
+      */
+    private val tieShift = if (complete) 0 else idxBits
+
+    /** Whether words `a` and `b` alone order their rows (as `a < b`):
+      * their keys differ, or the key is complete and the row indices
+      * break the tie. Otherwise only the tie comparator can.
+      */
+    def decides(a: Long, b: Long): Boolean = ((a ^ b) >>> tieShift) != 0
+  }
+
+  private[sort] object PackedKeys {
+    /** No word sorts after it: the head word of an exhausted merge run. */
+    val Last: Long = Long.MaxValue
+  }
 
   /** Bits a row index of a batch of `n` rows needs: ceil(log2 n). */
   private[sort] def idxBitsFor(n: Int): Int =
@@ -762,14 +722,12 @@ object ColumnSort {
     val idx = new Array[Int](n)
     var i = 0
     while (i < n) { idx(i) = (sorted(i) & idxMask).toInt; i += 1 }
-    if (keys.outcome != KeyOutcome.Complete) {
+    if (!keys.complete) {
       lazy val cmp = ties
-      val shift = keys.idxBits
       var lo = 0
       while (lo < n) {
-        val key = sorted(lo) >>> shift
         var hi = lo + 1
-        while (hi < n && (sorted(hi) >>> shift) == key) hi += 1
+        while (hi < n && !keys.decides(sorted(lo), sorted(hi))) hi += 1
         if (hi - lo > InsertionRun) mergeRun(idx, lo, hi, cmp)
         else if (hi - lo > 1) insertionRun(idx, lo, hi, cmp)
         lo = hi
@@ -793,14 +751,11 @@ object ColumnSort {
     val keys = packKeys(batch.cols, n, idxBitsFor(n))
     lazy val cmp = ties
     val words = keys.words
-    val shift = keys.idxBits
-    val complete = keys.outcome == KeyOutcome.Complete
     var s = 1
     var sorted = true
     while (sorted && s < n) {
-      val a = words(s - 1) >>> shift
-      val b = words(s) >>> shift
-      sorted = a < b || (a == b && (complete || !cmp.lt(s, s - 1)))
+      val a = words(s - 1); val b = words(s)
+      sorted = if (keys.decides(a, b)) a < b else !cmp.lt(s, s - 1)
       s += 1
     }
     if (sorted) Array.range(0, n) else sortPacked(keys, cmp)

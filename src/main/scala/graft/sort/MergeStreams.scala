@@ -1,5 +1,7 @@
 package graft.sort
 
+import graft.sort.ColumnSort.PackedKeys.Last
+
 /** The merge half of the sort-merge experiment the reference scaffolds
   * but never runs: `split_batch`/`take_columns` (`src/data.rs:245-294`,
   * dead code under `#![allow(dead_code)]`) scatter a SORTED batch into
@@ -80,8 +82,6 @@ object MergeStreams {
     if (k == 1) return Array.range(0, n) // single run: already sorted
     val keys = ColumnSort.packKeys(batch.cols, n, ColumnSort.idxBitsFor(n))
     val words = keys.words
-    val shift = keys.idxBits
-    val complete = keys.outcome == ColumnSort.KeyOutcome.Complete
     lazy val cmp = ColumnSort.fullChain(batch) // built at the first key tie it must break
     // loser tree over the next-power-of-two bracket, its spare leaves
     // empty runs: internal nodes store the LOSER of their subtree's
@@ -95,25 +95,24 @@ object MergeStreams {
     while (m < k) m <<= 1
     val head = new Array[Int](m) // next unconsumed position per run
     val end = new Array[Int](m)
-    val word = new Array[Long](m) // the head row's packed word; Long.MaxValue once exhausted
+    val word = new Array[Long](m) // the head row's packed word; Last once exhausted
     r = 0
     while (r < m) {
       head(r) = if (r < k) offsets(r) else n
       end(r) = if (r < k) offsets(r + 1) else n
-      word(r) = if (head(r) < end(r)) words(head(r)) else Long.MaxValue
+      word(r) = if (head(r) < end(r)) words(head(r)) else Last
       r += 1
     }
     // run a BEATS run b iff a's head row sorts strictly before b's, or
     // ties with a lower run id (stability); exhausted runs always lose.
-    // Head words whose keys differ decide alone, and so do two different
-    // words of a complete key: equal keys then compare row indices, whose
-    // order is the run order. The rest — an exhausted run, or a key tie
-    // the key cannot break — costs up to two `lt` probes (the lt-only
+    // Head words that decide order the runs alone (row indices follow
+    // run order). The rest — an exhausted run, or a key tie the key
+    // cannot break — costs up to two `lt` probes (the lt-only
     // comparator can't 3-way; the second probe detects the tie the
     // run-id rule breaks).
     def beats(a: Int, b: Int): Boolean = {
       val wa = word(a); val wb = word(b)
-      if (((wa ^ wb) >>> shift) != 0 || (complete && wa != wb)) wa < wb
+      if (keys.decides(wa, wb)) wa < wb
       else {
         val i = head(a); val j = head(b)
         if (i >= end(a)) false
@@ -141,7 +140,7 @@ object MergeStreams {
       out(outPos) = i
       outPos += 1
       head(w) = i + 1
-      word(w) = if (i + 1 < end(w)) words(i + 1) else Long.MaxValue
+      word(w) = if (i + 1 < end(w)) words(i + 1) else Last
       // replay the winner's leaf with its new head (or exhausted)
       var cur = w
       var node = (m + w) >> 1
