@@ -86,9 +86,8 @@ object SortSweep {
             Double.box(p.avgUs), Double.box(p.minUs))))
       .mkString("\n") + "\n"
     Files.writeString(csvPath, csv)
-    Files.writeString(Paths.get(opt.out, s"$label.svg"), SvgChart.render(points))
     Files.write(Paths.get(opt.out, s"$label.png"), PngChart.render(points))
-    println(s"[sweep] wrote ${points.size} points -> $csvPath (+ .svg/.png)")
+    println(s"[sweep] wrote ${points.size} points -> $csvPath (+ .png)")
     spark.stop()
   }
 
@@ -390,54 +389,5 @@ object PngChart {
     val bos = new java.io.ByteArrayOutputStream()
     javax.imageio.ImageIO.write(img, "png", bos)
     bos.toByteArray
-  }
-}
-
-/** Dependency-free SVG line chart standing in for the reference's plotters
-  * PNG sink (`src/lib.rs:97-160`): x = batch size, y = µs, red =
-  * DynComparator, blue = rows-format — same legend colors as the reference.
-  */
-object SvgChart {
-  def render(points: Seq[DataPoint]): String = {
-    val (w, h, mL, mB, mT, mR) = (1024, 500, 70, 45, 30, 20)
-    val series = points.groupBy(_.strategy)
-    if (points.isEmpty) return s"""<svg xmlns="http://www.w3.org/2000/svg" width="$w" height="$h"/>"""
-    val xs = points.map(_.batchSize.toDouble)
-    val ys = points.map(_.avgUs)
-    val (x0, x1) = (xs.min, math.max(xs.max, xs.min + 1))
-    val (y0, y1) = (0.0, math.max(ys.max, 1.0))
-    def px(x: Double) = mL + (x - x0) / (x1 - x0) * (w - mL - mR)
-    def py(y: Double) = h - mB - (y - y0) / (y1 - y0) * (h - mB - mT)
-    val colors = Map(
-      "dyn-comparator" -> "#cc2222", "rows-format" -> "#2222cc",
-      "kway-merge" -> "#cc2222", "full-resort" -> "#2222cc")
-    // Locale.ROOT: a comma-decimal default locale would corrupt the
-    // SVG coordinate list (same hazard as the bench JSON)
-    def c1(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
-    val lines = series.toSeq.sortBy(_._1).map { case (name, pts) =>
-      val d = pts.sortBy(_.batchSize)
-        .map(p => s"${c1(px(p.batchSize.toDouble))},${c1(py(p.avgUs))}").mkString(" ")
-      s"""<polyline fill="none" stroke="${colors.getOrElse(name, "#333")}" stroke-width="1.5" points="$d"/>"""
-    }.mkString("\n")
-    val caption = points.head.caseName
-    s"""<svg xmlns="http://www.w3.org/2000/svg" width="$w" height="$h" font-family="sans-serif" font-size="12">
-<rect width="$w" height="$h" fill="white"/>
-<text x="${w / 2}" y="18" text-anchor="middle" font-size="15">$caption</text>
-<line x1="$mL" y1="${h - mB}" x2="${w - mR}" y2="${h - mB}" stroke="black"/>
-<line x1="$mL" y1="$mT" x2="$mL" y2="${h - mB}" stroke="black"/>
-<text x="${w / 2}" y="${h - 8}" text-anchor="middle">batch size (row count)</text>
-<text x="14" y="${h / 2}" text-anchor="middle" transform="rotate(-90 14 ${h / 2})">avg runtime (microsecs)</text>
-<text x="$mL" y="${h - mB + 16}">${x0.toInt}</text>
-<text x="${w - mR}" y="${h - mB + 16}" text-anchor="end">${x1.toInt}</text>
-<text x="${mL - 4}" y="${py(y1) + 4}" text-anchor="end">${y1.toInt}</text>
-<text x="${mL - 4}" y="${h - mB}" text-anchor="end">0</text>
-${series.keys.toSeq.sorted.zipWithIndex.map { case (st, i) =>
-        s"""<rect x="${w - 240}" y="${mT + i * 18}" width="12" height="12" fill="${colors
-          .getOrElse(st, "#333")}"/><text x="${w - 222}" y="${mT + 11 + i * 18}">$st</text>"""
-      }.mkString("\n")}
-$lines
-</svg>
-"""
   }
 }

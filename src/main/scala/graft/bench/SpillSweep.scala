@@ -29,7 +29,7 @@ import org.apache.spark.sql.SparkSession
   * (job-launch ~50 ms floors the small sizes — read the cliff from
   * size-to-size ratios within a strategy, not from the smallest cells;
   * both mean and min ship like every sweep cell). Artifacts land beside
-  * the kernel sweep's: `results/<case>-spill.{csv,svg,png}`.
+  * the kernel sweep's: `results/<case>-spill.{csv,png}`.
   */
 object SpillSweep {
   /** Force-spill cap in elements: inside the swept size range so the
@@ -95,8 +95,7 @@ object SpillSweep {
             Double.box(p.avgUs), Double.box(p.minUs))))
       .mkString("\n") + "\n"
     Files.writeString(Paths.get(out, s"$label.csv"), csv)
-    Files.writeString(Paths.get(out, s"$label.svg"), SvgChart.render(points))
     Files.write(Paths.get(out, s"$label.png"), PngChart.render(points))
-    println(s"[spill] wrote ${points.size} points -> $out/$label.csv (+ .svg/.png)")
+    println(s"[spill] wrote ${points.size} points -> $out/$label.csv (+ .png)")
   }
 }

@@ -231,17 +231,6 @@ object ColumnSort {
       private val p = a.prefixes
       def cmp(i: Int, j: Int) = java.lang.Long.compareUnsigned(p(i), p(j))
     }
-    case a: Utf8Col if a.allShort => new ColCmp {
-      // short strings that may contain 0x00: a prefix tie means the
-      // strings agree on their overlap and differ only in TRAILING zero
-      // bytes ("a" vs "a\u0000"), so memcmp order is exactly length order
-      private val p = a.prefixes
-      private val v = a.values
-      def cmp(i: Int, j: Int) = {
-        val c = java.lang.Long.compareUnsigned(p(i), p(j))
-        if (c != 0) c else Integer.compare(v(i).length, v(j).length)
-      }
-    }
     case a: Utf8Col => new ColCmp {
       private val v = a.values
       private val p = a.prefixes
@@ -274,20 +263,14 @@ object ColumnSort {
     case other => throw new IllegalArgumentException(s"bad column $other")
   }
 
-  /** Normalized 8-byte leading key for the FIRST sort column, when one
-    * exists whose unsigned-long order is EXACT (a key tie means the
-    * column values are equal, so the chain may fall through to column 1):
-    * f64 → order-preserving bit flip, i64 → sign flip, dict → rank,
-    * short-only utf8 → the zero-padded prefix. The first column decides
-    * the vast majority of comparisons in a lexsort, and inlining it as a
-    * primitive long compare removes the megamorphic comparator dispatch +
-    * NaN/zero normalization from the hot path (the same reason Spark's
-    * UnsafeExternalSorter sorts on an 8-byte radix prefix first).
-    * Returns null when no exact key exists (general utf8: a prefix tie
-    * does NOT imply equality; a nullable column: a null needs a 65th
-    * value below every 64-bit key).
+  /** A column's exact 8-byte key, where one exists: unsigned-long order
+    * is the column's order and equal keys mean equal values. f64 →
+    * order-preserving bit flip, i64 → sign flip, dict → rank, short
+    * zero-free utf8 → the zero-padded prefix. Returns null when no exact
+    * key exists (general utf8: a prefix tie does NOT imply equality; a
+    * nullable column: a null needs a 65th value below every 64-bit key).
     */
-  private def exactLeadingKey(col: AnyRef): Array[Long] = col match {
+  private def exactKey(col: AnyRef): Array[Long] = col match {
     case a: Array[Double] =>
       val k = new Array[Long](a.length); var i = 0
       while (i < a.length) { k(i) = KeyCodec.doubleBits(a(i)); i += 1 }; k
@@ -299,62 +282,25 @@ object ColumnSort {
       val k = new Array[Long](c.length); var i = 0
       while (i < c.length) { k(i) = r(c(i)).toLong; i += 1 }; k
     // noZeroBytes required: with 0x00 bytes a zero PAD ties with a real
-    // zero byte ("a" vs "a\u0000"), so the key would falsely fall through
+    // zero byte ("a" vs "a\u0000"), so equal keys would not mean equal
     case a: Utf8Col if a.allShort && a.noZeroBytes => a.prefixes
     case _ => null
   }
 
-  /** The full lexicographic index comparator for a batch: the first two
-    * columns' exact keys (where they have one) as unsigned long
-    * compares, then the megamorphic per-column chain for the rest.
-    * Lexsort orders rows whose packed keys tie with it, and so does the
-    * k-way merge of sorted runs ([[MergeStreams]]). Both compare across
-    * unsorted positions, so the key arrays are built eagerly.
+  /** Lexsort's tie comparator: the per-column chain Arrow's
+    * `lexsort_to_indices` builds (`src/lib.rs:33-34`), the first column
+    * that differs deciding. Each sort builds it over the columns its
+    * packed key did not settle, `cols.drop(keys.settled)`
+    * ([[packKeys]]); over all of a batch's columns it is the tests'
+    * reference order.
     */
-  private[sort] def fullChain(batch: ColumnBatch): IndexCmp = {
-    val cols = batch.cols
-    val k0 = if (cols.nonEmpty) exactLeadingKey(cols(0)) else null
-    if (k0 == null) {
-      val cmps = cols.map(colCmp)
-      return new IndexCmp {
-        def lt(i: Int, j: Int): Boolean = {
-          var k = 0
-          while (k < cmps.length) {
-            val c = cmps(k).cmp(i, j)
-            if (c != 0) return c < 0
-            k += 1
-          }
-          false
-        }
-      }
-    }
-    val k1 = if (cols.length > 1) exactLeadingKey(cols(1)) else null
-    if (k1 == null) {
-      val rest = cols.drop(1).map(colCmp)
-      return new IndexCmp {
-        def lt(i: Int, j: Int): Boolean = {
-          val c0 = java.lang.Long.compareUnsigned(k0(i), k0(j))
-          if (c0 != 0) return c0 < 0
-          var k = 0
-          while (k < rest.length) {
-            val c = rest(k).cmp(i, j)
-            if (c != 0) return c < 0
-            k += 1
-          }
-          false
-        }
-      }
-    }
-    val rest2 = cols.drop(2).map(colCmp)
+  private[sort] def colChain(cols: Array[AnyRef]): IndexCmp = {
+    val cmps = cols.map(colCmp)
     new IndexCmp {
       def lt(i: Int, j: Int): Boolean = {
-        val c0 = java.lang.Long.compareUnsigned(k0(i), k0(j))
-        if (c0 != 0) return c0 < 0
-        val c1 = java.lang.Long.compareUnsigned(k1(i), k1(j))
-        if (c1 != 0) return c1 < 0
         var k = 0
-        while (k < rest2.length) {
-          val c = rest2(k).cmp(i, j)
+        while (k < cmps.length) {
+          val c = cmps(k).cmp(i, j)
           if (c != 0) return c < 0
           k += 1
         }
@@ -365,10 +311,10 @@ object ColumnSort {
 
   /** Strategy A: chained per-column comparators over an index vector.
     * The packed key ([[keyedIndices]]) runs the presorted scan and the
-    * radix sort; [[fullChain]] orders only rows whose packed keys tie,
+    * radix sort; [[colChain]] orders only rows whose packed keys tie,
     * and is built only when two such rows meet.
     */
-  def lexsortIndices(batch: ColumnBatch): Array[Int] = keyedIndices(batch, fullChain(batch))
+  def lexsortIndices(batch: ColumnBatch): Array[Int] = keyedIndices(batch, colChain)
 
   /** Strategy B's normalized-key encoder ([[KeyCodec]]), one per column. */
   private abstract class ColEnc {
@@ -433,17 +379,20 @@ object ColumnSort {
     while (j < encs.length) { encs(j).enc(i, w); j += 1 }
   }
 
-  /** Row-format tie order over the normalized-key bytes, encoding a row
-    * into one growing slab the first time a compare reads it: only rows
-    * whose packed keys tie are ever encoded. Row i's key is `[from(i),
-    * until(i))`; `until(i) == 0` marks a row not yet encoded (every key
-    * is at least one byte long).
+  /** Row-format tie order over the normalized-key bytes of `cols`, the
+    * columns the packed key did not settle: rows it is asked about agree
+    * on every settled column, whose fields would encode to identical
+    * leading bytes, so the bytes of the rest order them as the full key
+    * would. A row is encoded into one growing slab the first time a
+    * compare reads it, so only rows whose packed keys tie are ever
+    * encoded. Row i's key is `[from(i), until(i))`; `until(i) == 0` marks
+    * a row not yet encoded (every key is at least one byte long).
     */
-  private final class SlabRowCmp(batch: ColumnBatch) extends IndexCmp {
-    private val encs = batch.cols.map(colEnc)
+  private final class SlabRowCmp(cols: Array[AnyRef], n: Int) extends IndexCmp {
+    private val encs = cols.map(colEnc)
     private val w = new KeyWriter(1024)
-    private val from = new Array[Int](batch.numRows)
-    private val until = new Array[Int](batch.numRows)
+    private val from = new Array[Int](n)
+    private val until = new Array[Int](n)
     private def encode(i: Int): Unit =
       if (until(i) == 0) { from(i) = w.len; encodeRow(encs, i, w); until(i) = w.len }
     def lt(i: Int, j: Int): Boolean = {
@@ -454,15 +403,16 @@ object ColumnSort {
 
   /** Strategy B: the row-format normalized key (`src/lib.rs:35-53`
     * rebuilt columnar). The packed key ([[keyedIndices]]) runs the
-    * presorted scan and the radix sort; a row's full key bytes
+    * presorted scan and the radix sort; a row's key bytes
     * ([[SlabRowCmp]]) are built only when its packed key ties with
     * another's, so the order is still the normalized-key bytes' order.
     */
-  def rowFormatIndices(batch: ColumnBatch): Array[Int] = keyedIndices(batch, new SlabRowCmp(batch))
+  def rowFormatIndices(batch: ColumnBatch): Array[Int] =
+    keyedIndices(batch, new SlabRowCmp(_, batch.numRows))
 
   /** Every row's normalized key ([[KeyCodec]]) in one slab, row i at
-    * `[offsets(i), offsets(i + 1))` — Arrow's `Rows` buffer layout, the
-    * keys [[SlabRowCmp]] builds row by row.
+    * `[offsets(i), offsets(i + 1))` — Arrow's `Rows` buffer layout, which
+    * [[SlabRowCmp]] builds row by row over the unsettled columns.
     */
   private[sort] def encodeRows(batch: ColumnBatch): (Array[Byte], Array[Int]) = {
     val n = batch.numRows
@@ -550,35 +500,17 @@ object ColumnSort {
     def lt(i: Int, j: Int): Boolean
   }
 
-  /** How much of the row order the packed leading key of [[packKeys]]
-    * decides.
-    */
-  private[sort] sealed trait KeyOutcome
-  private[sort] object KeyOutcome {
-    /** Every column packed exactly and in full: the key IS the row
-      * order, and equal keys mean equal rows.
-      */
-    case object Complete extends KeyOutcome
-    /** Only exact keys packed, but a column lost its low bits, did not
-      * fit, or is nullable (it has no key, so packing stops before it):
-      * equal keys still need the tie comparator.
-      */
-    case object Truncated extends KeyOutcome
-    /** A utf8 prefix was packed: equal keys say nothing about the
-      * bytes past it (or, for short strings with 0x00 bytes, about a
-      * zero pad against a real zero byte).
-      */
-    case object Inexact extends KeyOutcome
-  }
-
   /** One long per row, `(key << idxBits) | row`, with `keyBits` key bits.
     * Words are non-negative, so `<` on two words that [[decides]] is
-    * their rows' order.
+    * their rows' order. The key packs the first `settled` of the batch's
+    * `columns` exactly and in full, so rows with equal keys are equal on
+    * those columns: every tie comparator is built over the rest, and is
+    * only ever asked about rows whose packed keys are equal.
     */
   private[sort] final class PackedKeys(
-      val words: Array[Long], val keyBits: Int, val idxBits: Int, val outcome: KeyOutcome) {
+      val words: Array[Long], val keyBits: Int, val idxBits: Int, val settled: Int, columns: Int) {
     /** Equal keys mean equal rows: no tie ever needs the comparator. */
-    val complete: Boolean = outcome == KeyOutcome.Complete
+    val complete: Boolean = settled == columns
 
     /** Low bits a word's order ignores: none for a complete key (row
       * indices break its ties), else the row index.
@@ -601,33 +533,34 @@ object ColumnSort {
   private[sort] def idxBitsFor(n: Int): Int =
     if (n < 2) 0 else 32 - Integer.numberOfLeadingZeros(n - 1)
 
-  /** Pack the leading columns' normalized keys ([[exactLeadingKey]]; a
-    * general utf8 column contributes its prefixes as an inexact key)
-    * into `63 - idxBits` key bits above the row index. Each column is
+  /** Pack the leading columns' normalized keys ([[exactKey]]; a general
+    * utf8 column contributes its prefixes as an inexact key) into
+    * `63 - idxBits` key bits above the row index. Each column is
     * range-compressed: its unsigned min is subtracted, the low bits
     * every value shares (zero in OR of `k(i) ^ k(0)`) are shifted out,
     * and it takes the bits the rest of its span needs (0 for a constant
-    * column) — so integral doubles below 2^17 take 27 bits, not 63.
-    * Packing stops after an inexact column, after one that fits only
-    * partly (it keeps its top bits), and before a nullable one. Every
-    * step is monotone in the row order, so a key never orders two rows
-    * against the comparator: it is ≤ where they are in order, and equal
-    * only where the packed columns could not tell them apart. Every
-    * sort of this object, and the k-way merge, starts here.
+    * column) — so integral doubles below 2^17 take 27 bits, not 63. A
+    * column whose exact key fits in full is settled, and packing goes on
+    * only past a settled column: it stops after an inexact column or one
+    * that fits only partly (it keeps its top bits), and before a
+    * nullable one. Every step is monotone in the row order, so a key
+    * never orders two rows against the comparator: it is ≤ where they
+    * are in order, and equal only where the packed columns could not
+    * tell them apart. Every sort of this object, and the k-way merge,
+    * starts here.
     */
   private[sort] def packKeys(cols: Array[AnyRef], n: Int, idxBits: Int): PackedKeys = {
     val words = new Array[Long](n)
     val budget = 63 - idxBits
     var used = 0
-    var outcome: KeyOutcome = KeyOutcome.Complete
+    var settled = 0
     var j = 0
-    while (j < cols.length && outcome == KeyOutcome.Complete && !cols(j).isInstanceOf[NullableCol]) {
-      val exact = exactLeadingKey(cols(j))
+    while (j == settled && j < cols.length && !cols(j).isInstanceOf[NullableCol]) {
+      val exact = exactKey(cols(j))
       val k = if (exact != null) exact else cols(j) match {
         case u: Utf8Col => u.prefixes
         case other => throw new IllegalArgumentException(s"bad column $other")
       }
-      if (exact == null) outcome = KeyOutcome.Inexact
       // unsigned min and max as signed ones over sign-flipped values
       var lo = Long.MaxValue; var hi = Long.MinValue; var differ = 0L
       val first = if (n == 0) 0L else k(0)
@@ -645,19 +578,17 @@ object ColumnSort {
       val span = if (differ == 0) 0 else 64 - java.lang.Long.numberOfLeadingZeros(max - min) - shared
       val b = math.min(span, budget - used)
       val drop = shared + span - b
-      if (b < span && outcome == KeyOutcome.Complete) outcome = KeyOutcome.Truncated
       if (b > 0) {
         i = 0
         while (i < n) { words(i) = (words(i) << b) | ((k(i) - min) >>> drop); i += 1 }
         used += b
       }
+      if (exact != null && b == span) settled += 1
       j += 1
     }
-    // stopped before a nullable column
-    if (j < cols.length && outcome == KeyOutcome.Complete) outcome = KeyOutcome.Truncated
     var i = 0
     while (i < n) { words(i) = (words(i) << idxBits) | i; i += 1 }
-    new PackedKeys(words, used, idxBits, outcome)
+    new PackedKeys(words, used, idxBits, settled, cols.length)
   }
 
   /** Stable LSD radix sort of `words` by bits `[lo, lo + bits)`, in
@@ -740,16 +671,17 @@ object ColumnSort {
   private val InsertionRun = 16
 
   /** Sort `0 until n` on the packed key of the batch's leading columns
-    * ([[packKeys]]), with `ties` ordering rows whose keys are equal; it
-    * is built the first time two such rows meet. One scan over the
-    * packed words comes first: sorted input (the reference's generated
-    * batches are, `src/data.rs` sorts every case) returns the identity
-    * in O(n). Anything else goes to [[sortPacked]] on the same words.
+    * ([[packKeys]]), with `ties` over the columns the key did not settle
+    * ordering rows whose keys are equal; it is built the first time two
+    * such rows meet. One scan over the packed words comes first: sorted
+    * input (the reference's generated batches are, `src/data.rs` sorts
+    * every case) returns the identity in O(n). Anything else goes to
+    * [[sortPacked]] on the same words.
     */
-  private def keyedIndices(batch: ColumnBatch, ties: => IndexCmp): Array[Int] = {
+  private def keyedIndices(batch: ColumnBatch, ties: Array[AnyRef] => IndexCmp): Array[Int] = {
     val n = batch.numRows
     val keys = packKeys(batch.cols, n, idxBitsFor(n))
-    lazy val cmp = ties
+    lazy val cmp = ties(batch.cols.drop(keys.settled))
     val words = keys.words
     var s = 1
     var sorted = true

@@ -56,10 +56,11 @@ object MergeStreams {
     * merge uses — one match per level, log₂(k) per emitted row, no
     * sift-down double-compares like a binary heap). A match compares the
     * two head rows' packed keys ([[ColumnSort.packKeys]]), and the
-    * batch's full comparator only where those are equal and the key is
-    * not complete. Stable across runs: ties emit the lower run id first,
-    * which — because [[scatter]]'s runs partition a stable sort's output
-    * in order — is exactly the original sorted order.
+    * per-column chain over the columns the key did not settle only where
+    * those are equal and the key is not complete. Stable across runs:
+    * ties emit the lower run id first, which — because [[scatter]]'s
+    * runs partition a stable sort's output in order — is exactly the
+    * original sorted order.
     */
   def mergeRuns(batch: ColumnBatch, offsets: Array[Int]): Array[Int] = {
     // zero-based contract made executable: the emit loop counts to
@@ -82,7 +83,8 @@ object MergeStreams {
     if (k == 1) return Array.range(0, n) // single run: already sorted
     val keys = ColumnSort.packKeys(batch.cols, n, ColumnSort.idxBitsFor(n))
     val words = keys.words
-    lazy val cmp = ColumnSort.fullChain(batch) // built at the first key tie it must break
+    // built at the first key tie it must break
+    lazy val cmp = ColumnSort.colChain(batch.cols.drop(keys.settled))
     // loser tree over the next-power-of-two bracket, its spare leaves
     // empty runs: internal nodes store the LOSER of their subtree's
     // match, the overall winner sits outside the tree. Init plays every

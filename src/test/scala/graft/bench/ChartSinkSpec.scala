@@ -2,8 +2,8 @@ package graft.bench
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The sweep's plot sinks (reference `src/lib.rs:97-160` renders 1024×500
-  * PNGs; this build emits the same chart as both PNG and SVG).
+/** The sweep's plot sink: a 1024×500 PNG, as the reference renders
+  * (`src/lib.rs:97-160`).
   */
 class ChartSinkSpec extends AnyFunSuite {
 
@@ -33,11 +33,5 @@ class ChartSinkSpec extends AnyFunSuite {
     val bytes = PngChart.render(Seq.empty)
     val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
     assert(img.getWidth == 1024 && img.getHeight == 500)
-  }
-
-  test("SvgChart renders both series as polylines") {
-    val svg = SvgChart.render(pts)
-    assert(svg.contains("<svg") && svg.count(_ == '\n') > 3)
-    assert(svg.contains("#cc2222") && svg.contains("#2222cc"))
   }
 }

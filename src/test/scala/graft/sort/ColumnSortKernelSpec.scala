@@ -3,19 +3,21 @@ package graft.sort
 import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.datagen.Case
-import graft.sort.ColumnSort.KeyOutcome
 import graft.sort.ColumnSortKernelSpec._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Exact-order suite for the key-carrying columnar sort: both strategies'
   * index vectors must equal, index for index, the stable merge sort by
-  * the batch's full comparator (`sortedIndices(n, fullChain(b))`) —
-  * ties included, so the packed key and the tie-run pass together must
-  * reproduce a stable sort. Each fixture names the key outcome it hits
-  * at 1025 rows: complete (the key is the row order, no tie pass),
-  * truncated (exact keys that lost bits, did not fit, or stopped before
-  * a nullable column) or inexact (a utf8 prefix was packed).
+  * the per-column chain over all of the batch's columns
+  * (`sortedIndices(n, colChain(b.cols))`) — ties included, so the packed
+  * key and the tie-run pass over the unsettled columns together must
+  * reproduce a stable sort. Each fixture names how many leading columns
+  * its packed key settles at 1025 rows, and why packing stops there:
+  * Complete (every column settled, no tie pass), Truncated (an exact key
+  * lost bits, did not fit, or came before a nullable column) or Inexact
+  * (a utf8 prefix was packed). Rows with equal packed keys must be equal
+  * on the settled columns, since no tie comparator reads them.
   */
 class ColumnSortKernelSpec extends AnyFunSuite {
 
@@ -23,7 +25,7 @@ class ColumnSortKernelSpec extends AnyFunSuite {
     * comparator, so the reference itself is checked too.
     */
   private def timsortReference(b: ColumnBatch): Array[Int] = {
-    val cmp = ColumnSort.fullChain(b)
+    val cmp = ColumnSort.colChain(b.cols)
     val boxed = Array.tabulate[Integer](b.numRows)(Integer.valueOf)
     java.util.Arrays.sort(boxed, (x: Integer, y: Integer) =>
       if (cmp.lt(x, y)) -1 else if (cmp.lt(y, x)) 1 else 0)
@@ -47,14 +49,29 @@ class ColumnSortKernelSpec extends AnyFunSuite {
   for (f <- fixtures) {
     test(s"key outcome at 1025 rows: ${f.name} is ${f.outcome}") {
       val b = f.make(new scala.util.Random(7), 1025)
-      assert(ColumnSort.packKeys(b.cols, 1025, ColumnSort.idxBitsFor(1025)).outcome == f.outcome)
+      val keys = ColumnSort.packKeys(b.cols, 1025, ColumnSort.idxBitsFor(1025))
+      assert(keys.settled == f.settled)
+      assert(keys.complete == (f.outcome == "Complete"))
+    }
+
+    test(s"equal packed keys mean equal settled columns: ${f.name}") {
+      val n = 1025
+      val b = f.at(n)
+      val sorted = ColumnSort.take(b, reference(b))
+      val keys = ColumnSort.packKeys(sorted.cols, n, ColumnSort.idxBitsFor(n))
+      val settled = ColumnSort.colChain(sorted.cols.take(keys.settled))
+      def key(i: Int) = keys.words(i) >>> keys.idxBits
+      for (s <- 1 until n if key(s) == key(s - 1))
+        assert(!settled.lt(s - 1, s) && !settled.lt(s, s - 1),
+          s"rows ${s - 1} and $s share a packed key but differ on a settled column")
     }
 
     test(s"packing with 31 index bits keeps the exact order: ${f.name}") {
       val b = f.make(new scala.util.Random(11), 1025)
       val keys = ColumnSort.packKeys(b.cols, 1025, idxBits = 31)
       assert(keys.keyBits <= 32)
-      assert(ColumnSort.sortPacked(keys, ColumnSort.fullChain(b)).toSeq == reference(b).toSeq)
+      val ties = ColumnSort.colChain(b.cols.drop(keys.settled))
+      assert(ColumnSort.sortPacked(keys, ties).toSeq == reference(b).toSeq)
     }
   }
 
@@ -92,23 +109,25 @@ class ColumnSortKernelSpec extends AnyFunSuite {
     }
   }
 
-  // the benchmark's four cases, shuffled, at its 100k rows: dictionary
-  // ranks pack completely; mixed-tuple's key (27 f64 bits, 12 of the
-  // first string) runs out inside the second string; utf8-tuple packs
-  // two exact prefixes, then the inexact high-card one
+  // the benchmark's four cases, shuffled, at its 100k rows, with the
+  // columns their keys settle: dictionary ranks pack completely;
+  // mixed-tuple's f64 and both low-card strings settle, and its 46-bit
+  // key runs out inside the i64; utf8-tuple packs two exact prefixes,
+  // then the inexact high-card one
   private val caseOutcomes = Seq(
-    Case.Utf8Tuple -> KeyOutcome.Inexact,
-    Case.MixedTuple -> KeyOutcome.Truncated,
-    Case.DictionaryTuple -> KeyOutcome.Complete,
-    Case.MixedDictionaryTuple -> KeyOutcome.Complete)
+    Case.Utf8Tuple -> (2, "Inexact"),
+    Case.MixedTuple -> (3, "Truncated"),
+    Case.DictionaryTuple -> (3, "Complete"),
+    Case.MixedDictionaryTuple -> (4, "Complete"))
 
-  for ((c, outcome) <- caseOutcomes) {
+  for ((c, (settled, outcome)) <- caseOutcomes) {
     test(s"exact order: shuffled ${c.name} at 100k rows ($outcome)") {
       val n = 100000
       val rows = new scala.util.Random(5).shuffle(c.rows(n))
       val b = ColumnBatch.fromRows(rows, c.schema).dictEncoded(c.dictCols)
       val keys = ColumnSort.packKeys(b.cols, n, ColumnSort.idxBitsFor(n))
-      assert(keys.outcome == outcome)
+      assert(keys.settled == settled)
+      assert(keys.complete == (outcome == "Complete"))
       if (c == Case.DictionaryTuple) assert(keys.keyBits == 21)
       if (c == Case.MixedDictionaryTuple) assert(keys.keyBits == 38)
       assertExactOrder(b, s"shuffled ${c.name}")
@@ -135,10 +154,10 @@ class ColumnSortKernelSpec extends AnyFunSuite {
       val b = f.at(n)
       val sorted = ColumnSort.take(b, reference(b))
       val keys = ColumnSort.packKeys(sorted.cols, n, ColumnSort.idxBitsFor(n))
-      val chain = ColumnSort.fullChain(sorted)
+      val chain = ColumnSort.colChain(sorted.cols)
       def key(i: Int) = keys.words(i) >>> keys.idxBits
       val s = (1 until n).find(s => key(s) == key(s - 1) && chain.lt(s - 1, s))
-      if (f.outcome == KeyOutcome.Complete) assert(s.isEmpty, "a complete key tied two different rows")
+      if (keys.complete) assert(s.isEmpty, "a complete key tied two different rows")
       s match {
         case Some(i) =>
           val swap = Array.tabulate(n)(identity)
@@ -157,7 +176,7 @@ class ColumnSortKernelSpec extends AnyFunSuite {
     val b = ColumnBatch.fromRows(presorted(Case.MixedTuple), Case.MixedTuple.schema)
     val keys = ColumnSort.packKeys(Array(b.cols(0)), n, ColumnSort.idxBitsFor(n))
     assert(keys.keyBits <= 27)
-    assert(keys.outcome == KeyOutcome.Complete)
+    assert(keys.settled == 1 && keys.complete)
   }
 
   test("KeyWriter fails by name past the JVM array limit instead of wrapping") {
@@ -182,14 +201,18 @@ class ColumnSortKernelSpec extends AnyFunSuite {
 
 /** The adversarial fixtures, shared with [[MergeStreamsKernelSpec]]. */
 object ColumnSortKernelSpec {
-  final case class Fixture(name: String, outcome: KeyOutcome, make: (scala.util.Random, Int) => ColumnBatch) {
+  /** A fixture whose packed key settles `settled` leading columns at
+    * 1025 rows; `outcome` names why packing stops there, in test titles.
+    */
+  final case class Fixture(
+      name: String, settled: Int, outcome: String, make: (scala.util.Random, Int) => ColumnBatch) {
     /** The fixture at `n` rows, from the seed every exact-order test uses. */
     def at(n: Int): ColumnBatch = make(new scala.util.Random(n * 31 + name.hashCode), n)
   }
 
-  /** The stable reference order: merge sort by the full comparator. */
+  /** The stable reference order: merge sort by every column's comparator. */
   def reference(b: ColumnBatch): Array[Int] =
-    ColumnSort.sortedIndices(b.numRows, ColumnSort.fullChain(b))
+    ColumnSort.sortedIndices(b.numRows, ColumnSort.colChain(b.cols))
 
   private def typeOf(col: AnyRef): DataType = col match {
     case _: Array[Double] => DoubleType
@@ -222,62 +245,62 @@ object ColumnSortKernelSpec {
   val fixtures: Seq[Fixture] = Seq(
     // three dict ranks (one a 1-entry dict: a 0-bit span) and a small
     // range long fit in the budget together
-    Fixture("dict columns", KeyOutcome.Complete, (rng, n) => batch(
+    Fixture("dict columns", 4, "Complete", (rng, n) => batch(
       "a" -> dict(rng, n, IndexedSeq("pear", "apple", "fig", "kiwi", "date")),
       "b" -> dict(rng, n, IndexedSeq("only")),
       "c" -> dict(rng, n, (0 until 100).map(i => s"value$i")),
       "d" -> longs(n)(rng.nextInt(1000).toLong))),
     // few distinct rows: complete keys with many identical rows, whose
     // order the radix passes alone must keep stable
-    Fixture("duplicate small longs", KeyOutcome.Complete, (rng, n) => batch(
+    Fixture("duplicate small longs", 2, "Complete", (rng, n) => batch(
       "a" -> longs(n)(rng.nextInt(4).toLong),
       "b" -> longs(n)(rng.nextInt(6) - 3L))),
-    Fixture("constant columns", KeyOutcome.Complete, (rng, n) => batch(
+    Fixture("constant columns", 4, "Complete", (rng, n) => batch(
       "a" -> longs(n)(7L),
       "b" -> Array.fill(n)(Double.NaN),
       "c" -> utf8(n)("same"),
       "d" -> longs(n)(rng.nextInt(50).toLong))),
     // Long.MinValue and Long.MaxValue give a 64-bit span
-    Fixture("i64 extremes", KeyOutcome.Truncated, (rng, n) => batch(
+    Fixture("i64 extremes", 0, "Truncated", (rng, n) => batch(
       "a" -> longs(n)(if (rng.nextInt(3) == 0) pick(rng, extremeLongs) else rng.nextLong()),
       "b" -> dict(rng, n, IndexedSeq("x", "y", "z")))),
     // the budget runs out inside the third column, which keeps its top bits
-    Fixture("i64 budget split", KeyOutcome.Truncated, (rng, n) => batch(
+    Fixture("i64 budget split", 2, "Truncated", (rng, n) => batch(
       "a" -> longs(n)(rng.nextInt(1 << 20).toLong),
       "b" -> longs(n)(rng.nextInt(1 << 20).toLong),
       "c" -> longs(n)(rng.nextInt(1 << 20).toLong),
       "d" -> longs(n)(rng.nextInt(3).toLong))),
-    Fixture("f64 NaN, signed zeros and infinities", KeyOutcome.Truncated, (rng, n) => batch(
+    Fixture("f64 NaN, signed zeros and infinities", 0, "Truncated", (rng, n) => batch(
       "a" -> Array.fill(n)(if (rng.nextBoolean()) pick(rng, specialDoubles) else rng.nextInt(20) - 10.0d),
       "b" -> longs(n)(rng.nextInt(3).toLong))),
-    Fixture("short zero-free strings", KeyOutcome.Truncated, (rng, n) => batch(
+    Fixture("short zero-free strings", 0, "Truncated", (rng, n) => batch(
       "a" -> utf8(n)(rng.alphanumeric.take(rng.nextInt(9)).mkString),
       "b" -> longs(n)(rng.nextInt(3).toLong))),
     // a zero pad ties with a real 0x00 byte, so the prefix is inexact
-    Fixture("short strings with NUL bytes", KeyOutcome.Inexact, (rng, n) => batch(
+    Fixture("short strings with NUL bytes", 0, "Inexact", (rng, n) => batch(
       "a" -> utf8(n)(pick(rng, nulStrings)),
       "b" -> longs(n)(rng.nextInt(3).toLong))),
     // every string shares its first 8 bytes: a 0-bit key and one tie
     // run over the whole batch
-    Fixture("strings longer than 8 bytes", KeyOutcome.Inexact, (rng, n) => batch(
+    Fixture("strings longer than 8 bytes", 0, "Inexact", (rng, n) => batch(
       "a" -> utf8(n)("prefix--" + rng.alphanumeric.take(rng.nextInt(4)).mkString),
       "b" -> longs(n)(rng.nextInt(3).toLong))),
-    Fixture("mixed-length strings, then doubles", KeyOutcome.Inexact, (rng, n) => batch(
+    Fixture("mixed-length strings, then doubles", 0, "Inexact", (rng, n) => batch(
       "a" -> utf8(n)(pick(rng, IndexedSeq("value", "value-long-", "v\u0000", "")) + rng.nextInt(12)),
       "b" -> Array.fill(n)(pick(rng, specialDoubles)))),
     // a nullable column has no key, so packing stops before it: here
     // before the first column, and one tie run covers the whole batch
-    Fixture("nullable leading column", KeyOutcome.Truncated, (rng, n) => batch(
+    Fixture("nullable leading column", 0, "Truncated", (rng, n) => batch(
       "a" -> nullable(rng, n, longs(n)(rng.nextInt(5).toLong)),
       "b" -> nullable(rng, n, utf8(n)(pick(rng, nulStrings))),
       "c" -> longs(n)(rng.nextInt(3).toLong))),
-    Fixture("nullable doubles and dict after a long", KeyOutcome.Truncated, (rng, n) => batch(
+    Fixture("nullable doubles and dict after a long", 1, "Truncated", (rng, n) => batch(
       "a" -> longs(n)(rng.nextInt(4).toLong),
       "b" -> nullable(rng, n, Array.fill(n)(pick(rng, specialDoubles))),
       "c" -> nullable(rng, n, dict(rng, n, IndexedSeq("x", "y", "z"))))),
     // multiples of 2^40 over the whole i64 range and non-negative
     // integral doubles: both shed their shared low zero bits and fit
-    Fixture("shared low zero bits", KeyOutcome.Complete, (rng, n) => batch(
+    Fixture("shared low zero bits", 2, "Complete", (rng, n) => batch(
       "a" -> longs(n)(rng.nextLong() >> 40 << 40),
       "b" -> Array.fill(n)(rng.nextInt(1024).toDouble))),
   )

@@ -46,7 +46,7 @@ class MergeStreamsSpec extends SparkSpec {
     assert(offsets.sliding(2).forall { case Array(a, b) => a <= b })
     // every run is itself sorted (scatter preserves sorted order within
     // a stream) — checked through the batch's own comparator
-    val cmp = ColumnSort.fullChain(scattered)
+    val cmp = ColumnSort.colChain(scattered.cols)
     for (r <- 0 until 8; i <- offsets(r) + 1 until offsets(r + 1))
       assert(!cmp.lt(i, i - 1), s"run $r out of order at $i")
   }

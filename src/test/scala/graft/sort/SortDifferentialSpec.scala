@@ -196,11 +196,11 @@ class SortDifferentialSpec extends AnyFunSuite {
   // prefix-tie-means-equal shortcut must either require noZeroBytes or
   // tie-break by length — a false tie falls through to later sort
   // columns and produces genuinely mis-ordered output.
-  private val nulShort = IndexedSeq( // every string <=8 bytes: allShort comparator path
+  private val nulShort = IndexedSeq( // every string <=8 bytes: ties broken by length
     Row("a\u0000\u0000", 1L), Row("a", 9L), Row("a\u0000", 5L),
     Row("\u0000", 8L), Row("", 10L), Row("a\u0000b", 0L),
     Row("b", 2L), Row("a", 3L), Row("a\u0000", 4L))
-  private val nulMixed = nulShort ++ IndexedSeq( // >8-byte strings: general comparator path
+  private val nulMixed = nulShort ++ IndexedSeq( // >8-byte strings: ties broken by memcmp
     Row("longer-than-8-bytes\u0000", -1L), Row("longer-than-8-bytes", -2L),
     Row("len8-pad\u0000", -3L), Row("len8-pad", -4L))
   for (rowFormat <- Seq(false, true);

@@ -83,22 +83,4 @@ class SortPropertySpec extends AnyFunSuite {
       }
     }
   }
-
-  test("mixed-tuple dyn-comparator: the two-key hoist preconditions hold on generator data") {
-    // col0 is a raw Array[Double] (always exact-keyable via doubleBits)
-    // and col1's generator strings are <= 8 bytes with no NUL, so the
-    // prefix key qualifies: fullChain hoists both keys into long
-    // compares. That chain orders lexsort's runs of rows whose packed
-    // leading key ties (the f64 key is truncated to the key budget, so
-    // equal f64 values tie) and the k-way merge of MergeStreams.
-    val c = graft.datagen.Case.byName("mixed-tuple")
-    val cb = graft.sort.ColumnBatch.fromRows(c.rows(5000), c.schema)
-    assert(cb.cols(0).isInstanceOf[Array[Double]], "leading f64 must stay a primitive column")
-    cb.cols(1) match {
-      case u: graft.sort.Utf8Col =>
-        assert(u.allShort && u.noZeroBytes,
-          "utf_low1 must qualify for the prefix key (two-key hoist precondition)")
-      case other => fail(s"col1 expected Utf8Col, got ${other.getClass}")
-    }
-  }
 }

@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
 # Equivalent of the reference's runall.sh (/root/reference/runall.sh:1-8):
 # sweep every case over the published batch-size range and emit the
-# CSV + SVG + PNG charts into results/.
+# CSV + PNG charts into results/.
 #
 # Reference protocol: 250 -> 100000 step 500, 50 iters. That is 200
 # sizes x 4 cases; pass a coarser step (arg 1) / fewer iters (arg 2)
