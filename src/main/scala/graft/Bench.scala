@@ -253,7 +253,7 @@ object Bench {
     // Headline inventory: every Verify-gated cell except the pedagogical
     // twins (benchHeadline = false — currently q67, whose uniform ×S
     // replication tax is documented cost, not a production plan; its
-    // skew-regime numbers still ride the skew pass and SkewMatrix).
+    // skew-regime numbers still ride the skew pass).
     val headline = SparkEntry.inventory.filter(_.benchHeadline)
     headline.headOption.foreach(q => once(q, benchDir))
 

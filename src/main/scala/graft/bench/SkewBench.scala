@@ -80,8 +80,6 @@ object SkewBench {
       .write.mode("overwrite").parquet(s"$out/lineitem.parquet")
 
     // `orders` skew (round 9, for the q59/q60 twins): 20% of orders
-    // [harsh fixture note: see prepareHarsh below — this dir's 20% head
-    // proved below the pain threshold for the salt-vs-AQE question]
     // collapse onto ONE hot o_custkey (the zipf head on q59's
     // delta-join build/probe sides), and the hot l_orderkey's order is
     // forced HIGH-VALUE so q60's runtime bloom filter cannot shed the
@@ -103,47 +101,6 @@ object SkewBench {
           .otherwise(col("o_totalprice")))
       .write.mode("overwrite").parquet(s"$out/orders.parquet")
 
-    out
-  }
-
-  /** HARSHER join-skew fixture (VERDICT r11 item 1): the main fixture's
-    * 20% head never made the plain join hurt at local[32] (skew cell ≈
-    * uniform cell), so the salt-vs-AQE decision row was extrapolated.
-    * Here 60% of a ×4-replicated lineitem collapses onto ONE hot order
-    * key: the plain sort-merge join's hot reducer sorts ~60% of ~2.4M
-    * rows (sf0.1) while a uniform reducer carries ~3% — the ≥3× regime
-    * the decision matrix needs. `l_linenumber` is remapped to a value
-    * UNIQUE PER SOURCE ROW (the original orderkey folded in below the
-    * replica shift), so `(l_orderkey, l_linenumber)` stays distinct
-    * even after 60% of keys collapse onto the hot one — q67's
-    * hash(key, linenumber) salt then splits the head 8 near-uniform
-    * ways. The prior spelling kept only the 28 replica-shifted
-    * linenumbers on the hot key, so the salt had 28 lumpy inputs, not
-    * a per-row hash (ADVICE r12). The fold overflows Int only past
-    * orderkey ≈ 7.6e7 (~sf10); the fixture runs at ≤ sf0.1. Only the
-    * two joined tables are written: this dir serves SkewMatrix's join
-    * variants, nothing else.
-    */
-  def prepareHarsh(spark: SparkSession, sfDir: String): String = {
-    val out = s"${graft.Scratch.dir}/skewdata-harsh/${new java.io.File(sfDir).getName}"
-    new java.io.File(out).mkdirs()
-    java.nio.file.Files.copy(
-      java.nio.file.Path.of(s"$sfDir/orders.parquet"),
-      java.nio.file.Path.of(s"$out/orders.parquet"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-    val hotKey = li.agg(min("l_orderkey")).first().getAs[Number](0).longValue()
-    li
-      .withColumn("rep", explode(sequence(lit(0), lit(3))))
-      .withColumn("l_linenumber",
-        (col("l_orderkey") * lit(28) + col("l_linenumber") + col("rep") * lit(7))
-          .cast(li.schema("l_linenumber").dataType))
-      .drop("rep")
-      .withColumn("l_orderkey",
-        when(pmod(col("l_orderkey"), lit(5)) < 3, lit(hotKey))
-          .otherwise(col("l_orderkey")))
-      .repartition(8) // multi-file output = scan parallelism
-      .write.mode("overwrite").parquet(s"$out/lineitem.parquet")
     out
   }
 }

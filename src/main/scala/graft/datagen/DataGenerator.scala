@@ -90,11 +90,6 @@ object Case {
   /** The four benchmark cases (`src/data.rs:13-19`). */
   val all: Seq[Case] = Seq(Utf8Tuple, MixedTuple, DictionaryTuple, MixedDictionaryTuple)
 
-  /** Every defined source, incl. the single-column ones the reference
-    * never invokes (SURVEY §2 #11).
-    */
-  def allSources: Seq[Case] = all ++ Seq(Utf8Low, Utf8High, Dict)
-
   def byName(s: String): Case =
     all.find(_.name == s).getOrElse(
       throw new IllegalArgumentException(

@@ -2185,8 +2185,8 @@ object Advanced {
     //      replication is the documented COST of naive salting, not a
     //      production plan — q67b (hot-key-only census salt) is the
     //      production spelling. q67 keeps its full oracle contract under
-    //      Verify and its skew-regime cells (skew pass + SkewMatrix),
-    //      but is `benchHeadline = false`: the headline total must not
+    //      Verify and its skew-regime cell (the skew pass), but is
+    //      `benchHeadline = false`: the headline total must not
     //      pay the uniform ×S tax twice. ----
     Q(
       "q67_salted_join",
@@ -2647,13 +2647,9 @@ object Advanced {
 
   /** q67's whole-side salt, up to (not including) the final aggregate:
     * the fact side salts EVERY row by hash, the build side replicates
-    * ×S via a broadcast crossJoin. Exposed pre-agg so SkewMatrix can
-    * measure the join under BOTH downstream shapes (agg on a foreign
-    * column, where AQE's skew split competes, and agg on the JOIN KEY,
-    * where splitting would break the reusable partitioning and AQE
-    * declines — the regime the salt exists for).
+    * ×S via a broadcast crossJoin.
     */
-  private[graft] def fullSaltedJoined(
+  private def fullSaltedJoined(
       s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     val li = t(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))

@@ -7,9 +7,8 @@ import graft.sort.ColumnSort.PackedKeys.Last
   * dead code under `#![allow(dead_code)]`) scatter a SORTED batch into
   * N pseudo-random streams — the classic input state for comparing a
   * k-way merge of sorted runs against a full re-sort. [[scatter]] is
-  * the kernel-level twin of that setup (the distributed twin is
-  * [[graft.datagen.SplitBatch.splitBatch]]); [[mergeRuns]] is the merge
-  * itself: a loser-tree over the batch's packed keys.
+  * that setup; [[mergeRuns]] is the merge itself: a loser-tree over the
+  * batch's packed keys.
   *
   * Scale note: this IS the shape of Spark's own shuffle-merge /
   * spill-run combining (UnsafeSorterSpillMerger is a priority queue

@@ -73,16 +73,6 @@ object EventStream {
       .select(unix_micros(col("window.start")).as("hour_us"),
         col("segment"), col("n"), col("sum_value"))
 
-  /** Built-in session windows (30-min gap), the declarative path. */
-  def sessionAgg(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"),
-        graft.Agg.dsum(col("value")).as("session_value"))
-      .select(col("user_id"), col("session_window.start").as("session_start"),
-        col("n_events"), col("session_value"))
-
   final case class Ev(ts: java.sql.Timestamp, user_id: Long, value: Double)
   final case class SessionState(startUs: Long, lastUs: Long, n: Long, total: Double)
   final case class SessionOut(user_id: Long, start_us: Long, end_us: Long, n_events: Long, total_value: Double)

@@ -73,4 +73,34 @@ class ContractSpec extends AnyFunSuite {
       benched.exceptAll(run).count() == 0,
       "benchRun sketch must equal the oracle spelling's sketch columns")
   }
+
+  test("the mains in src/main/scala are exactly the listed entry points") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    // every entry point with the reason it stays; a new one-off probe
+    // main fails here until it is listed on purpose
+    val entryPoints = Map(
+      "Bench" -> "the driver contract's metrics line",
+      "Verify" -> "the driver contract's result dump for the oracle gate",
+      "bench.CardManifest" -> "writes results/cardinality_manifest.tsv, which Bench and perfbench check counts against",
+      "bench.Probe" -> "times or explains single bench cells (tools/bench_regress.py runs it)",
+      "bench.SortSweep" -> "the sort sweep and the reference's PNG charts (tools/runall.sh runs it)",
+      "bench.ScaleProbe" -> "its replica builder is kept for the planned scale pass",
+    )
+    val obj = """\bobject\s+(\w+)""".r
+    val main = """\bdef\s+main\(""".r
+    val found = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val pkg = root.relativize(p.getParent).toString.replace('/', '.')
+        val src = java.nio.file.Files.readString(p)
+        main.findAllMatchIn(src).map { m =>
+          val o = obj.findAllMatchIn(src.substring(0, m.start)).map(_.group(1)).toSeq.lastOption
+            .getOrElse(s"<no object in ${p.getFileName}>")
+          if (pkg.isEmpty) o else s"$pkg.$o"
+        }
+      }.toSet
+    assert(found == entryPoints.keySet,
+      s"unlisted mains: ${found -- entryPoints.keySet}; listed but gone: ${entryPoints.keySet -- found}")
+  }
 }

@@ -444,29 +444,6 @@ class PlanSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0, "entry must return rows at sf0.001")
   }
 
-  test("splitBatch scatters into n single-stream partitions") {
-    import graft.datagen.{Case, SplitBatch}
-    val df = Case.MixedTuple.df(spark, 1000)
-    val parts = SplitBatch.splitBatch(df, 4)
-    assert(parts.rdd.getNumPartitions == 4)
-    val total = parts.count()
-    assert(total == 1000)
-    // THE invariant: partition i holds exactly stream i (a merge
-    // consumer reads each partition as one pre-sorted stream)
-    val perPart = parts.rdd
-      .mapPartitionsWithIndex((pi, it) => it.map(r => (pi, r.getAs[Int]("stream"))))
-      .distinct().collect()
-    assert(perPart.forall { case (pi, s) => pi == s },
-      s"stream must equal its partition id: ${perPart.filterNot(p => p._1 == p._2).toSeq}")
-    // deterministic under the fixed seed
-    val a = SplitBatch.splitBatch(df, 4).groupBy("stream").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val b = SplitBatch.splitBatch(df, 4).groupBy("stream").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(a == b)
-    assert(a.keySet.subsetOf(Set(0, 1, 2, 3)))
-  }
-
   test("single-column sources: contracts hold") {
     import graft.datagen.Case
     for (c <- Seq(Case.Utf8Low, Case.Utf8High, Case.Dict)) {

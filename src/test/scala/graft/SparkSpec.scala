@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = Session.local(4, Map("spark.app.name" -> "graft-test"))
+    val s = Session.local(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

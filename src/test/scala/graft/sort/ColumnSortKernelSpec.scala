@@ -270,6 +270,14 @@ object ColumnSortKernelSpec {
       "b" -> longs(n)(rng.nextInt(1 << 20).toLong),
       "c" -> longs(n)(rng.nextInt(1 << 20).toLong),
       "d" -> longs(n)(rng.nextInt(3).toLong))),
+    // once "a" spans its 40 bits, "b" keeps at most 22 of its 34: the
+    // kept top bits repeat over random low 8 bits, so rows tie on the
+    // packed key while their "b" differs, and only a tie comparator
+    // that reads "b" orders them
+    Fixture("truncated i64 repeating its top bits", 1, "Truncated", (rng, n) => batch(
+      "a" -> longs(n)(pick(rng, IndexedSeq(0L, 1L << 39, (1L << 40) - 1))),
+      "b" -> longs(n)(rng.nextInt(4).toLong << 32 | rng.nextInt(256)),
+      "c" -> longs(n)(rng.nextInt(3).toLong))),
     Fixture("f64 NaN, signed zeros and infinities", 0, "Truncated", (rng, n) => batch(
       "a" -> Array.fill(n)(if (rng.nextBoolean()) pick(rng, specialDoubles) else rng.nextInt(20) - 10.0d),
       "b" -> longs(n)(rng.nextInt(3).toLong))),

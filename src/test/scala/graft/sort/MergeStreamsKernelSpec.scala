@@ -5,9 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Spark-free merge differential over the adversarial fixtures of
   * [[ColumnSortKernelSpec]] (nulls, NaN and signed zeros, NUL-byte and
-  * long strings, constant columns, i64 extremes): the k-way merge of a
-  * sorted batch's scattered runs must equal the stable sort of the
-  * scattered batch, index for index. The fixtures settle from none to
+  * long strings, constant columns, i64 extremes, a truncated column
+  * whose kept top bits repeat): the k-way merge of a sorted batch's
+  * scattered runs must equal the stable sort of the scattered batch,
+  * index for index. The fixtures settle from none to
   * all of their columns, so this pins the merge's rule for equal packed
   * keys under each: the run id for a complete key, otherwise the chain
   * over the columns the key did not settle.
