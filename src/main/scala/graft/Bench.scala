@@ -10,6 +10,32 @@ package graft
   * a different plan than the query declares.
   */
 object Bench {
+  /** Where the bench artifacts and the cardinality manifest live,
+    * anchored to the repo, not the process CWD: SPARK_GRAFT_RESULTS_DIR
+    * if set, else `results/` under the nearest directory above the CWD
+    * (or above the compiled classes, which live under the repo's
+    * target/) that holds build.sbt — so a main launched from a
+    * subdirectory still reads and writes the committed results/ tree
+    * (ADVICE r5). `CardManifest` writes the manifest here and the bench
+    * reads it from here.
+    */
+  def resultsDir(): java.nio.file.Path = {
+    import java.nio.file.{Files, Path, Paths}
+    def repoRootFrom(p: Path): Option[Path] =
+      Iterator.iterate(p.toAbsolutePath)(_.getParent)
+        .takeWhile(_ != null)
+        .find(d => Files.exists(d.resolve("build.sbt")))
+    def codeSourceDir: Option[Path] =
+      Option(Bench.getClass.getProtectionDomain.getCodeSource)
+        .map(cs => Paths.get(cs.getLocation.toURI))
+    sys.env.get("SPARK_GRAFT_RESULTS_DIR").map(Paths.get(_)).getOrElse {
+      repoRootFrom(Paths.get(""))
+        .orElse(codeSourceDir.flatMap(repoRootFrom))
+        .getOrElse(Paths.get("").toAbsolutePath)
+        .resolve("results")
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.local()
@@ -42,30 +68,7 @@ object Bench {
     // Noise calibration at each phase boundary (graft.bench.NoiseCal).
     val cal = scala.collection.mutable.LinkedHashMap.empty[String, Double]
 
-    // Anchor artifacts to the repo, not the process CWD: honor
-    // SPARK_GRAFT_RESULTS_DIR if set, else walk up from CWD to the
-    // nearest directory containing build.sbt (the repo root) so a
-    // bench launched from a subdirectory still lands artifacts in the
-    // committed results/ tree (ADVICE r5). Resolved up front because
-    // the cardinality manifest is READ from the same tree.
-    val resultsOut: java.nio.file.Path = {
-      import java.nio.file.{Files, Path, Paths}
-      def repoRootFrom(p: Path): Option[Path] =
-        Iterator.iterate(p.toAbsolutePath)(_.getParent)
-          .takeWhile(_ != null)
-          .find(d => Files.exists(d.resolve("build.sbt")))
-      // the compiled classes/jar live under the repo's target/, so the
-      // code-source location anchors the repo even when CWD is elsewhere
-      def codeSourceDir: Option[Path] =
-        Option(Bench.getClass.getProtectionDomain.getCodeSource)
-          .map(cs => Paths.get(cs.getLocation.toURI))
-      sys.env.get("SPARK_GRAFT_RESULTS_DIR").map(Paths.get(_)).getOrElse {
-        repoRootFrom(Paths.get(""))
-          .orElse(codeSourceDir.flatMap(repoRootFrom))
-          .getOrElse(Paths.get("").toAbsolutePath)
-          .resolve("results")
-      }
-    }
+    val resultsOut = resultsDir()
 
     val warmDir = "/root/testdata/sf0.001"
     // a cell that fails here is logged and counted (warmup_failed), not
@@ -95,14 +98,10 @@ object Bench {
     // dictionary cases when skipped; fresh-JVM-per-case sweeps match
     // the per-phase kernel times of `perfbench --trace 1`, sort.lexsort_us
     // / rowformat_us / take_us, only with this pass in place).
+    import graft.bench.SortSweep.cell
+    import graft.datagen.Case.byName
     val sweepCases = Seq("utf8-tuple", "mixed-tuple", "dictionary-tuple", "mixed-dictionary-tuple")
-    sweepCases.foreach { cn =>
-      val c = graft.datagen.Case.byName(cn)
-      val df = c.df(spark, 20000).persist()
-      df.count()
-      graft.bench.SortSweep.measureBoth(cn, df, 20000, 3)
-      df.unpersist(blocking = true)
-    }
+    sweepCases.foreach(cn => cell(spark, byName(cn), 20000, 3))
     // Parquet-dictionary variant (SURVEY §7.3): the two dictionary cases
     // additionally measured over a batch that round-tripped through
     // dictionary-ENCODED parquet — the storage-side twin of the
@@ -115,49 +114,17 @@ object Bench {
     val mergeSweepCases = Seq("mixed-tuple", "utf8-tuple")
     // value = (mean µs, min µs): the mean is the reference's published
     // statistic (BASELINE comparisons read it), the min is the
-    // noise-robust estimator bench_history min-merges across rounds
+    // noise-robust estimator bench_history min-merges across rounds.
+    // 31 iters per pass (~the reference's 50-iter protocol across the
+    // two passes): the gated statistic is the MEAN (min-of-means across
+    // the two windows), and 31 in-task iterations keep each window's
+    // mean estimate tight while the min column still sharpens with
+    // samples
     def sweepPass(): Seq[(String, (Double, Double))] =
-      (for {
-        caseName <- sweepCases
-        p <- {
-          System.gc() // earlier cases' garbage must not bill this one
-          val c = graft.datagen.Case.byName(caseName)
-          val df = c.df(spark, 100000).persist()
-          df.count()
-          // 31 iters per pass (~the reference's 50-iter protocol across
-          // the two passes): the gated statistic is now the MEAN
-          // (min-of-means across the two windows), and 31 in-task
-          // iterations keep each window's mean estimate tight while the
-          // min column still sharpens with samples
-          val pts = graft.bench.SortSweep.measureBoth(caseName, df, 100000, 31)
-          df.unpersist(blocking = true)
-          pts
-        }
-      } yield s"${p.caseName}|${p.strategy}|${p.batchSize}" -> ((p.avgUs, p.minUs))) ++
-      (for {
-        caseName <- pqSweepCases
-        p <- {
-          System.gc()
-          val c = graft.datagen.Case.byName(caseName)
-          val df = graft.bench.SortSweep.parquetInput(spark, c, 100000).persist()
-          df.count()
-          val pts = graft.bench.SortSweep.measureBoth(caseName, df, 100000, 31)
-          df.unpersist(blocking = true)
-          pts
-        }
-      } yield s"${p.caseName}-parquet|${p.strategy}|${p.batchSize}" -> ((p.avgUs, p.minUs))) ++
-      (for {
-        caseName <- mergeSweepCases
-        p <- {
-          System.gc()
-          val c = graft.datagen.Case.byName(caseName)
-          val df = c.df(spark, 100000).persist()
-          df.count()
-          val pts = graft.bench.SortSweep.measureMerge(caseName, df, 100000, 31)
-          df.unpersist(blocking = true)
-          pts
-        }
-      } yield s"${p.caseName}|${p.strategy}|${p.batchSize}" -> ((p.avgUs, p.minUs)))
+      (sweepCases.flatMap(cn => cell(spark, byName(cn), 100000, 31)) ++
+        pqSweepCases.flatMap(cn => cell(spark, byName(cn), 100000, 31, parquet = true)) ++
+        mergeSweepCases.flatMap(cn => cell(spark, byName(cn), 100000, 31, merge = true)))
+        .map(p => s"${p.caseName}|${p.strategy}|${p.batchSize}" -> ((p.avgUs, p.minUs)))
     cal("sweep1") = graft.bench.NoiseCal.ms()
     val sweepPass1 = sweepPass()
     mark("sweep pass 1")

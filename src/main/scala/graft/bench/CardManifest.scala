@@ -7,7 +7,9 @@ import org.apache.spark.sql.functions.{count, lit}
   * `name<TAB>count` line, tagged with the SF dir it was measured at.
   * `Bench` checks its observed counts against this file, so a query
   * whose result silently went empty (or exploded) fails the bench even
-  * when its wall-time stayed green. Regenerate (and commit) whenever a
+  * when its wall-time stayed green. The manifest is written into
+  * [[graft.Bench.resultsDir]], the tree the bench reads it from.
+  * Regenerate (and commit) whenever a
   * query is added or its semantics legitimately change:
   *
   *   `sbt "runMain graft.bench.CardManifest"`   (env: SPARK_GRAFT_SF_DIR)
@@ -37,8 +39,7 @@ object CardManifest {
         None
       }
     }
-    val out = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_RESULTS_DIR", "results"))
+    val out = graft.Bench.resultsDir()
     java.nio.file.Files.createDirectories(out)
     val body = (s"# sf=${new java.io.File(sfDir).getName}" +:
       counts.map { case (n, c) => s"$n\t$c" }).mkString("", "\n", "\n")

@@ -18,9 +18,9 @@ import org.apache.spark.sql.functions._
   * family-level measurements (the 10x scale probes, which build
   * multi-split inputs, showed the parallelism the bench could not).
   *
-  * WHAT: each table is rewritten ONCE per corpus dir (disk-memoized,
-  * same `Scratch.buildOnce` convention as the graft-lake and skew
-  * fixtures) into ceil(bytes / 256 KiB) files, capped at 32 — so the
+  * WHAT: each table is rewritten ONCE per corpus listing (a
+  * `Scratch.buildOnce` memo, like the graft-lake and ingest fixtures)
+  * into ceil(bytes / 256 KiB) files, capped at 32 — so the
   * big tables (lineitem, orders, events) scan as tens of tasks while
   * the dimensions stay single-file. Rows are hash-distributed on
   * `xxhash64` of the full row — DETERMINISTIC (guide §2.5: a retried
@@ -90,7 +90,7 @@ object RgFixture {
     spark.conf.set("spark.sql.files.maxPartitionBytes",
       sys.env.getOrElse("SPARK_GRAFT_MAX_SPLIT_BYTES", "4m"))
     val root = s"${graft.Scratch.dir}/rgfix/${graft.CorpusCache.fingerprint(spark, sfDir)}"
-    graft.Scratch.buildOnce(root) {
+    graft.Scratch.buildOnce(root) { stage =>
       graft.Tables.names.foreach { name =>
         val bytes = new java.io.File(s"$sfDir/$name.parquet").length()
         val k = math.min(MaxFiles.toLong,
@@ -100,9 +100,8 @@ object RgFixture {
         // files so the murmur3 bucketing stays even (guide §2.5)
         val spread = pmod(xxhash64(df.columns.map(col): _*), lit(k * 64L))
         df.repartition(k, spread)
-          .write.mode("overwrite").parquet(s"$root/$name.parquet")
+          .write.mode("overwrite").parquet(s"$stage/$name.parquet")
       }
     }
-    root
   }
 }

@@ -142,25 +142,36 @@ object SortSweep {
 
   def sweep(spark: SparkSession, opt: Opt): Seq[DataPoint] = {
     val c = Case.byName(opt.caseName)
-    val sizes = opt.begin to opt.end by opt.stepSize
-    sizes.flatMap { size =>
-      val input =
-        (if (opt.parquet) parquetInput(spark, c, size) else c.df(spark, size)).persist()
-      input.count() // materialize outside the timed region
-      val pts =
-        if (opt.merge) measureMerge(c.name, input, size, opt.iters)
-        else measureBoth(c.name, input, size, opt.iters)
-      input.unpersist(blocking = true)
-      // the parquet variant reports under its own cell family so the
-      // two input paths stay separately comparable against BASELINE.md
-      if (opt.parquet) pts.map(p => p.copy(caseName = s"${p.caseName}-parquet")) else pts
-    }
+    (opt.begin to opt.end by opt.stepSize).flatMap(size =>
+      cell(spark, c, size, opt.iters, parquet = opt.parquet, merge = opt.merge))
+  }
+
+  /** One sweep cell: a gc (earlier cells' garbage must not bill this
+    * one), then the case's `n`-row input — generated in memory, or
+    * round-tripped through dictionary parquet ([[parquetInput]]) —
+    * persisted and counted outside the timed region, measured by the
+    * two sort strategies ([[measureBoth]]) or the merge experiment
+    * ([[measureMerge]]) over `iters` iterations, and unpersisted.
+    */
+  def cell(
+      spark: SparkSession, c: Case, n: Int, iters: Int,
+      parquet: Boolean = false, merge: Boolean = false): Seq[DataPoint] = {
+    System.gc()
+    val input = (if (parquet) parquetInput(spark, c, n) else c.df(spark, n)).persist()
+    input.count()
+    val pts =
+      try if (merge) measureMerge(c.name, input, n, iters) else measureBoth(c.name, input, n, iters)
+      finally input.unpersist(blocking = true)
+    // the parquet variant reports under its own cell family so the
+    // two input paths stay separately comparable against BASELINE.md
+    if (parquet) pts.map(p => p.copy(caseName = s"${p.caseName}-parquet")) else pts
   }
 
   /** The case's batch round-tripped through DICTIONARY-ENCODED parquet
     * (SURVEY §7.3, deferred since round 1): writes the batch once per
-    * (JVM, case, n) to scratch with parquet dictionary encoding forced
-    * on, reads it back, and hands the sweep the same rows — one file,
+    * (case, n) to scratch with parquet dictionary encoding forced on (a
+    * [[graft.Scratch.buildOnce]] memo), reads it back, and hands the
+    * sweep the same rows — one file,
     * one row group, one split, so row order survives the round trip.
     *
     * HONEST SCOPE: because the sweep's seam is row-based,
@@ -179,16 +190,13 @@ object SortSweep {
     * is the dict-coded kernel layout itself, measured by both
     * families.
     */
-  def parquetInput(spark: SparkSession, c: Case, n: Int): DataFrame = {
-    val path = s"${graft.Scratch.dir}/graft-sweep-pq/${c.name}-$n"
-    this.synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").isFile)
+  def parquetInput(spark: SparkSession, c: Case, n: Int): DataFrame =
+    spark.read.parquet(
+      graft.Scratch.buildOnce(s"${graft.Scratch.dir}/graft-sweep-pq/${c.name}-$n") { path =>
         c.df(spark, n).coalesce(1).write
           .option("parquet.enable.dictionary", "true")
           .mode("overwrite").parquet(path)
-    }
-    spark.read.parquet(path)
-  }
+      })
 
   /** One Spark job; both kernels timed inside the task on the same
     * materialized array under the same JIT state. Strategies are

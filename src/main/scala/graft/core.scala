@@ -88,7 +88,7 @@ object Scratch {
   /** md5 hex of `key`: a collision-proof digest for naming persisted
     * artifacts. A String hashCode is 31 bits — two corpus dirs that
     * collide would silently serve each other's persisted layout (the
-    * `_SUCCESS` marker can't tell them apart). Disk memos name their
+    * done marker can't tell them apart). Disk memos name their
     * artifacts by [[CorpusCache.fingerprint]], which is this digest of
     * the corpus' file listing.
     */
@@ -96,25 +96,49 @@ object Scratch {
     java.security.MessageDigest.getInstance("MD5")
       .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
-  /** Build-once memo for MULTI-STEP fixture writes: runs `build` unless
-    * the path's own done marker exists, writing the marker LAST. The
-    * point is commit ordering — Spark's `_SUCCESS` lands after the
-    * FIRST write step, so a failure between steps would otherwise
-    * memoize a half-built fixture that silently passes every later
-    * check (single-step Spark writes can keep relying on `_SUCCESS`).
-    * Returns the path.
+  /** The one disk memo: every fixture, layout and index built once and
+    * served from `path` afterwards. Returns `path`, built unless it
+    * holds the done marker. The build writes into the staging dir it
+    * is given (`path.build`, wiped first); the memo then writes the
+    * marker into it and renames it to `path`. So `path` exists only
+    * complete, whatever the number of write steps (Spark's `_SUCCESS`
+    * lands after the first of them), a build that throws leaves no
+    * `path`, and a later call wipes its debris and builds again.
+    *
+    * Serialized on this object so concurrent callers never
+    * double-write. The lock is reentrant: a build may resolve another
+    * memo (q39's and s13's compactions read their source layouts).
     */
-  def buildOnce(path: String)(build: => Unit): String = {
-    val done = new java.io.File(path, "_GRAFT_READY")
-    this.synchronized {
-      if (!done.isFile) {
-        build
-        java.nio.file.Files.createDirectories(done.toPath.getParent)
-        java.nio.file.Files.writeString(done.toPath, "")
-      }
+  def buildOnce(path: String)(build: String => Unit): String = this.synchronized {
+    val dest = new java.io.File(path)
+    if (!new java.io.File(dest, Ready).isFile) {
+      val staging = new java.io.File(path + ".build").getAbsoluteFile
+      deleteTree(staging)
+      build(staging.getPath)
+      java.nio.file.Files.createDirectories(staging.toPath)
+      java.nio.file.Files.writeString(new java.io.File(staging, Ready).toPath, "")
+      deleteTree(dest) // a markerless dir: debris of an unstaged build
+      require(staging.renameTo(dest), s"failed to publish $staging to $path")
     }
     path
   }
+
+  private val Ready = "_GRAFT_READY"
+
+  /** Delete `f` and everything under it; a missing `f` is a no-op. */
+  private[graft] def deleteTree(f: java.io.File): Unit = {
+    if (f.isDirectory) f.listFiles().foreach(deleteTree)
+    f.delete()
+  }
+
+  /** This application's memo path for the artifact `name` derived from
+    * corpus `dir`: under the JVM's applicationId, so concurrent JVMs
+    * never clobber each other, and named by the corpus'
+    * [[CorpusCache.fingerprint]], so a corpus rewritten in place gets a
+    * fresh artifact.
+    */
+  def appPath(s: SparkSession, dir: String, name: String): String =
+    s"${this.dir}/app-${s.sparkContext.applicationId}/${name}_${CorpusCache.fingerprint(s, dir)}"
 
   def dir: String = {
     val shm = new java.io.File("/dev/shm")

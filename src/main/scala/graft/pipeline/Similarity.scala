@@ -1197,26 +1197,19 @@ object Similarity {
   }
 
   /** s8's on-disk serving index: `(vec_id, code)` parquet PARTITIONED BY
-    * cell id, written once per (JVM, corpus listing) on the scratch
-    * volume (Layout's memoization pattern) — the single-node twin of the
+    * cell id, a [[graft.Scratch.buildOnce]] memo at this JVM's
+    * [[graft.Scratch.appPath]] — the single-node twin of the
     * materialized billion-scale layout, 8 B/vector of code payload per
-    * cell directory. Named by the corpus' [[CorpusCache.fingerprint]],
-    * so a corpus rewritten in place gets a fresh index.
+    * cell directory. A corpus rewritten in place gets a fresh index.
     */
-  private def ivfPqLayoutPath(s: SparkSession, dir: String): String = {
-    val path = s"${graft.Scratch.dir}/graft-layout-${s.sparkContext.applicationId}/" +
-      s"ivfpq_${CorpusCache.fingerprint(s, dir)}"
-    this.synchronized {
-      if (!new java.io.File(path + "/_SUCCESS").isFile) {
-        val e = vecs(s, dir)
-        val k = numCentroids(corpusCount(s, dir))
-        ivfAssigned(s, dir, e, k).select(col("cid"), col("vec_id"))
-          .join(pqCodes(s, dir), "vec_id")
-          .write.partitionBy("cid").mode("overwrite").parquet(path)
-      }
+  private def ivfPqLayoutPath(s: SparkSession, dir: String): String =
+    graft.Scratch.buildOnce(graft.Scratch.appPath(s, dir, "ivfpq")) { path =>
+      val e = vecs(s, dir)
+      val k = numCentroids(corpusCount(s, dir))
+      ivfAssigned(s, dir, e, k).select(col("cid"), col("vec_id"))
+        .join(pqCodes(s, dir), "vec_id")
+        .write.partitionBy("cid").mode("overwrite").parquet(path)
     }
-    path
-  }
 
   /** s8 kernel: s7 probed through the PERSISTED layout — the probe cids
     * become a literal partition filter on the [[ivfPqLayoutPath]] read
@@ -1771,12 +1764,11 @@ object Similarity {
   /** s13's pre-compaction serving layout: the BASE corpus' `(vec_id,
     * code)` rows persisted PARTITIONED BY cell id — the physical index
     * files a lake serves before a delta folds in (s8's layout shape,
-    * built from the s10-frozen artifacts). Routed through
-    * [[graft.sources.Layout.memoLayout]]'s staged publish — one
-    * memoization convention for every on-disk layout twin.
+    * built from the s10-frozen artifacts), a [[graft.Scratch.buildOnce]]
+    * memo like every on-disk layout twin.
     */
   private[graft] def s13BaseLayoutPath(s: SparkSession, dir: String): String =
-    graft.sources.Layout.memoLayout(s, "graft_s13_base", dir) { path =>
+    graft.Scratch.buildOnce(graft.Scratch.appPath(s, dir, "graft_s13_base")) { path =>
       annAssignFrozen(s, dir, col("vec_id") < s10Boundary(s, dir))
         .repartition(col("cid"))
         .write.partitionBy("cid").parquet(path)
@@ -1804,16 +1796,16 @@ object Similarity {
     * job, cid-partitioned into an underscore staging dir Spark
     * listings ignore), then per touched cell move the new files in
     * BEFORE deleting the old (no interleaving leaves a cell empty);
-    * the whole tree publishes atomically via memoLayout's staging. At
-    * 100 TB the fold costs |delta| quantization (already paid by the
-    * append) + a rewrite of the touched cells — work proportional to
+    * the clone is buildOnce's staging dir, so the tree publishes only
+    * complete. At 100 TB the fold costs |delta| quantization (already
+    * paid by the append) + a rewrite of the touched cells — work proportional to
     * the day's arrivals, never the index; a full-index rewrite per
     * merge would be q39's full compaction applied daily to a
     * corpus-scale artifact.
     */
   private[graft] def s13CompactedPath(s: SparkSession, dir: String): String = {
     val src = s13BaseLayoutPath(s, dir)
-    graft.sources.Layout.memoLayout(s, "graft_s13_compact", dir) { path =>
+    graft.Scratch.buildOnce(graft.Scratch.appPath(s, dir, "graft_s13_compact")) { path =>
       val root = new java.io.File(path)
       graft.sources.Layout.copyTree(new java.io.File(src), root)
       val touched = s13TouchedCells(s, dir)
@@ -1832,9 +1824,7 @@ object Similarity {
           new java.io.File(root, s"cid=$cid"),
           new java.io.File(tmp, s"cid=$cid"), "s13")
       }
-      graft.sources.Layout.deleteTree(tmp)
-      require(new java.io.File(root, "_SUCCESS").createNewFile(),
-        s"s13: failed to mark $path complete")
+      graft.Scratch.deleteTree(tmp)
     }
   }
 

@@ -96,17 +96,20 @@ object Advanced {
                       ${graft.pipeline.Portable.md5LongSql("gram")} AS h
                FROM g)"""
 
-  /** Dir-scoped unique temp-view name: createOrReplaceTempView mutates
+  /** Dir suffix of a temp-view name: createOrReplaceTempView mutates
     * SESSION catalog state, and a generic name ("lineitem_v") could be
     * rebound by a concurrent query or another SF dir on the same
-    * session (ADVICE r8 / VERDICT r9). The md5 keeps it a legal
-    * identifier while staying deterministic per (table, dir).
+    * session (ADVICE r8 / VERDICT r9). The md5 prefix keeps it a legal
+    * identifier while staying deterministic per dir.
     */
+  private def viewTag(dir: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
+
+  /** `table` of `dir` as a dir-scoped temp view; returns its name. */
   private def scopedView(s: org.apache.spark.sql.SparkSession, dir: String,
       table: String, tag: String): String = {
-    val view = s"${table}_${tag}_" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
+    val view = s"${table}_${tag}_${viewTag(dir)}"
     t(s, dir, table).createOrReplaceTempView(view)
     view
   }
@@ -731,9 +734,7 @@ object Advanced {
           .groupBy(col("l_returnflag"), col("l_linestatus"))
           .agg(count(lit(1)).as("pn"),
             sum(col("l_quantity").cast(DecimalType(30, 2))).as("psum"))
-        val preV = s"q30_pre_" +
-          java.security.MessageDigest.getInstance("MD5")
-            .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
+        val preV = s"q30_pre_${viewTag(dir)}"
         pre.createOrReplaceTempView(preV)
         s.sql(s"""
           SELECT l_returnflag, l_linestatus,

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.{CorpusCache, Q, Scratch, Tables}
+import graft.{Q, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -54,28 +54,22 @@ object Ingest {
     StructField("n_chars", LongType),
     StructField("_corrupt_record", StringType)))
 
-  private def layoutRoot(s: SparkSession): String =
-    s"${Scratch.dir}/ingest-${s.sparkContext.applicationId}"
-
   /** JSONL twin of `documents` with [[CorruptLines]] appended as an
     * extra text file in the same directory (the vendor-shipped bad
-    * shard). Memoized per (application, corpus listing) like Layout's
-    * rewrites.
+    * shard). A [[Scratch.buildOnce]] memo like Layout's rewrites: it
+    * publishes only after the corrupt shard lands, so a failure
+    * between the two writes cannot memoize a fixture with an EMPTY
+    * quarantine — q40 would hash-match while silently no longer
+    * exercising the corruption path the operator exists to demonstrate
+    * (round-7 review).
     */
-  private[graft] def jsonlDocsPath(s: SparkSession, dir: String): String = {
-    val path = s"${layoutRoot(s)}/graft_jsonl_docs_${CorpusCache.fingerprint(s, dir)}"
-    // buildOnce, not _SUCCESS: the json writer commits _SUCCESS before
-    // the corrupt shard lands, and a failure between the two steps
-    // would memoize a fixture with an EMPTY quarantine — q40 would
-    // hash-match while silently no longer exercising the corruption
-    // path the operator exists to demonstrate (round-7 review).
-    Scratch.buildOnce(path) {
+  private[graft] def jsonlDocsPath(s: SparkSession, dir: String): String =
+    Scratch.buildOnce(Scratch.appPath(s, dir, "graft_jsonl_docs")) { path =>
       t(s, dir, "documents").write.mode("overwrite").json(path)
       java.nio.file.Files.writeString(
         new java.io.File(path, "part-corrupt.json").toPath,
         CorruptLines.mkString("", "\n", "\n"))
     }
-  }
 
   /** Schema-first PERMISSIVE JSONL read: good rows parse into columns,
     * corrupt lines land whole in `_corrupt_record` with every data
@@ -94,9 +88,8 @@ object Ingest {
     * current schema. The lake reality q42 exercises: shards written
     * across a schema change must stay readable as one table.
     */
-  private[graft] def evolvedDocsPath(s: SparkSession, dir: String): String = {
-    val path = s"${layoutRoot(s)}/graft_evolved_docs_${CorpusCache.fingerprint(s, dir)}"
-    Scratch.buildOnce(path) {
+  private[graft] def evolvedDocsPath(s: SparkSession, dir: String): String =
+    Scratch.buildOnce(Scratch.appPath(s, dir, "graft_evolved_docs")) { path =>
       val docs = t(s, dir, "documents")
       docs.filter(pmod(col("doc_id"), lit(2)) === 0)
         .drop("source") // the pre-evolution writer
@@ -104,7 +97,6 @@ object Ingest {
       docs.filter(pmod(col("doc_id"), lit(2)) === 1)
         .write.mode("overwrite").parquet(s"$path/shard=v2")
     }
-  }
 
   def all: Seq[Q] = Seq(
     // ---- q40: JSONL ingest — write→corrupt→read→quarantine, gated

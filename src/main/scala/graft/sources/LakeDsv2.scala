@@ -151,7 +151,9 @@ object LakeLayout {
     // layout-v2 path segment: the round-13 parquet layout must not be
     // served a round-12 CSV tree memoized under the old key
     val root = s"${graft.Scratch.dir}/graft-lake2/${graft.CorpusCache.fingerprint(s, dir)}"
-    graft.Scratch.buildOnce(root) {
+    // the build writes into buildOnce's staging dir; the manifests and
+    // stats hold paths relative to the root, so the rename keeps them
+    graft.Scratch.buildOnce(root) { stage =>
       val log = graft.queries.Advanced.cdcLogs(s, dir)
       for (b <- 0 to 2) {
         // CoW: batch b rewrites ONLY the files holding keys its log
@@ -175,7 +177,7 @@ object LakeLayout {
         part.repartition(col("fid")).sortWithinPartitions(col("fid"))
           .select(col("k"), col("o_orderstatus"), col("price"))
           .write.format("graft-lake")
-          .option("path", root).option("batch", b.toString)
+          .option("path", stage).option("batch", b.toString)
           .option("touchedFids", touched.mkString(","))
           .mode("append").save()
         // the change log itself, through the same provider (log view):
@@ -185,12 +187,12 @@ object LakeLayout {
             .select(col("b").cast("int").as("b"), col("k"),
               col("o_orderstatus"), col("price"), col("act"))
             .write.format("graft-lake")
-            .option("path", root).option("batch", b.toString)
+            .option("path", stage).option("batch", b.toString)
             .option("view", "log")
             .mode("append").save()
         }
       }
-      commitManifests(root, 2)
+      commitManifests(stage, 2)
     }
   }
 

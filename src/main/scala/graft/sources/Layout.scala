@@ -27,53 +27,15 @@ import org.apache.spark.sql.functions._
   * a corpus rewritten in place within one session gets a fresh layout,
   * and the planning metadata read from a layout (grid dims, per-file
   * blooms, probe keys) are [[graft.CorpusCache]] entries, valid exactly
-  * as long. The layout lives under the JVM's applicationId, so
-  * concurrent JVMs never clobber each other.
+  * as long. Each lives under the JVM's [[graft.Scratch.appPath]], so
+  * concurrent JVMs never clobber each other. Every path-based layout
+  * is a [[graft.Scratch.buildOnce]] memo; `bucketed` memoizes through
+  * the session catalog instead.
   */
 object Layout {
   import Tables.t
 
   private val BucketCount = 8
-
-  private def layoutRoot(s: SparkSession): String =
-    s"${Scratch.dir}/layout-${s.sparkContext.applicationId}"
-
-  /** Memoized parquet layout rewrite: build once per (applicationId,
-    * corpus listing) behind the `_SUCCESS` marker, serialized on this
-    * object so concurrent callers never double-write. Every path-based
-    * layout twin routes through HERE — the locking/marker convention
-    * has one home instead of a copy per layout (the copies were
-    * drifting; `bucketed` stays separate only because it memoizes via
-    * the session catalog, not a path probe). Reentrant: a build lambda
-    * may itself resolve another memoized layout (q39's compaction
-    * reads the fragmented twin).
-    *
-    * STAGED: the lambda writes into a `.build` staging dir that is
-    * renamed into place only when it finishes. This is what makes the
-    * marker check sound for MULTI-STEP builds — a two-write fixture
-    * (overwrite then append) carries `_SUCCESS` from its first write
-    * the whole time, so probing the build dir directly would accept a
-    * half-built layout after a mid-append crash; with staging, the
-    * final path exists only complete, and a crashed attempt's staging
-    * debris is wiped on the next call.
-    */
-  private[graft] def memoLayout(s: SparkSession, name: String, dir: String)(
-      write: String => Unit): String = {
-    val path = s"${layoutRoot(s)}/${name}_${CorpusCache.fingerprint(s, dir)}"
-    this.synchronized {
-      if (!new java.io.File(path, "_SUCCESS").isFile) {
-        val staging = new java.io.File(path + ".build")
-        if (staging.exists()) deleteTree(staging)
-        write(staging.getAbsolutePath)
-        require(new java.io.File(staging, "_SUCCESS").isFile,
-          s"layout build for $name finished without a completion marker")
-        val dest = new java.io.File(path)
-        if (dest.exists()) deleteTree(dest)
-        require(staging.renameTo(dest), s"failed to publish layout $name to $path")
-      }
-    }
-    path
-  }
 
   /** Memoized bucketed+sorted twin of a base table, registered in the
     * session catalog as an external parquet table. The pre-write
@@ -86,7 +48,8 @@ object Layout {
     */
   private def bucketed(
       s: SparkSession, dir: String, table: String, key: String): DataFrame = {
-    val name = s"graft_bkt_${table}_${CorpusCache.fingerprint(s, dir)}"
+    val path = Scratch.appPath(s, dir, s"graft_bkt_$table")
+    val name = new java.io.File(path).getName
     this.synchronized {
       if (!s.catalog.tableExists(name)) {
         t(s, dir, table)
@@ -94,7 +57,7 @@ object Layout {
           .write
           .bucketBy(BucketCount, key)
           .sortBy(key)
-          .option("path", s"${layoutRoot(s)}/$name")
+          .option("path", path)
           .mode("overwrite")
           .format("parquet")
           .saveAsTable(name)
@@ -107,7 +70,7 @@ object Layout {
     * to microseconds by the loader, so the copy round-trips exactly).
     */
   private def partitionedEvents(s: SparkSession, dir: String): DataFrame =
-    Tables.read(s, memoLayout(s, "graft_part_events", dir) { path =>
+    Tables.read(s, Scratch.buildOnce(Scratch.appPath(s, dir, "graft_part_events")) { path =>
       t(s, dir, "events").write
         .partitionBy("event_type")
         .mode("overwrite")
@@ -126,7 +89,7 @@ object Layout {
     * layout rewrites.
     */
   private[graft] def fragmentedEventsPath(s: SparkSession, dir: String): String =
-    memoLayout(s, "graft_frag_events", dir) { path =>
+    Scratch.buildOnce(Scratch.appPath(s, dir, "graft_frag_events")) { path =>
       t(s, dir, "events")
         .repartition(FragmentCount, pmod(col("event_id"), lit(FragmentCount)))
         .write.partitionBy("event_type").mode("overwrite").parquet(path)
@@ -156,7 +119,7 @@ object Layout {
     */
   private[graft] def compactedEvents(s: SparkSession, dir: String): DataFrame = {
     val src = fragmentedEventsPath(s, dir)
-    Tables.read(s, memoLayout(s, "graft_compact_events", dir) { path =>
+    Tables.read(s, Scratch.buildOnce(Scratch.appPath(s, dir, "graft_compact_events")) { path =>
       Tables.read(s, src)
         .repartition(col("event_type"))
         .write
@@ -207,7 +170,7 @@ object Layout {
     * so every SF produces both regimes.
     */
   private[graft] def mixedHealthEventsPath(s: SparkSession, dir: String): String =
-    memoLayout(s, "graft_mixedfrag_events", dir) { path =>
+    Scratch.buildOnce(Scratch.appPath(s, dir, "graft_mixedfrag_events")) { path =>
       val ev = t(s, dir, "events")
       val debris = length(col("event_type")) % 2 === 0
       ev.filter(debris)
@@ -231,13 +194,11 @@ object Layout {
     */
   private[graft] def selectivelyCompactedPath(s: SparkSession, dir: String): String = {
     val src = mixedHealthEventsPath(s, dir)
-    memoLayout(s, "graft_selcompact_events", dir) { path =>
-      // Build discipline on top of memoLayout's staging: copyTree
-      // skips the source's marker and the completion marker is created
-      // LAST, so the staged tree only publishes whole. Per-partition
-      // tmp dirs live inside the staging root under an underscore name
-      // (Spark listings ignore "_"-prefixed dirs, and a crashed
-      // attempt's debris dies with the staging wipe). Every
+    Scratch.buildOnce(Scratch.appPath(s, dir, "graft_selcompact_events")) { path =>
+      // The clone is buildOnce's staging dir, so it publishes only
+      // whole. Per-partition tmp dirs live inside it under an
+      // underscore name (Spark listings ignore "_"-prefixed dirs, and a
+      // crashed attempt's debris dies with the staging wipe). Every
       // rename/delete is checked — a silently failed swap would serve
       // a partition with lost rows — and new files move in BEFORE old
       // ones are deleted, so no interleaving leaves the partition
@@ -253,10 +214,8 @@ object Layout {
           .write.option("maxRecordsPerFile", TargetRowsPerFile)
           .mode("overwrite").parquet(tmp.getAbsolutePath)
         swapInFiles(pdir, tmp, "q46")
-        deleteTree(tmp)
+        Scratch.deleteTree(tmp)
       }
-      require(new java.io.File(root, "_SUCCESS").createNewFile(),
-        s"q46: failed to mark $path complete")
     }
   }
 
@@ -265,15 +224,9 @@ object Layout {
     src.listFiles().foreach { f =>
       val t = new java.io.File(dst, f.getName)
       if (f.isDirectory) copyTree(f, t)
-      else if (f.getName != "_SUCCESS") // the caller decides completion
-        java.nio.file.Files.copy(f.toPath, t.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      else java.nio.file.Files.copy(f.toPath, t.toPath,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
-  }
-
-  private[graft] def deleteTree(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteTree)
-    f.delete()
   }
 
   /** q39/q46's shared content-integrity gate: per partition, row
@@ -589,19 +542,17 @@ object Layout {
 
   /** The two-spec layout: `spec=v0/` holds the pre-evolution rows as
     * plain unpartitioned parquet; `spec=v1/` holds the rest under
-    * `pd=<date>` daily partitions. Memoized + staged like every layout
-    * twin; the root marker lands only after BOTH specs are complete.
+    * `pd=<date>` daily partitions. Memoized like every layout twin, so
+    * it publishes only after BOTH specs are complete.
     */
   private[graft] def specEvolvedEventsPath(s: SparkSession, dir: String): String =
-    memoLayout(s, "graft_specevo_events", dir) { path =>
+    Scratch.buildOnce(Scratch.appPath(s, dir, "graft_specevo_events")) { path =>
       val e = t(s, dir, "events")
       e.filter(to_date(col("ts")) <= lit(SpecBoundary))
         .write.mode("overwrite").parquet(s"$path/spec=v0")
       e.filter(to_date(col("ts")) > lit(SpecBoundary))
         .withColumn("pd", to_date(col("ts")))
         .write.partitionBy("pd").mode("overwrite").parquet(s"$path/spec=v1")
-      java.nio.file.Files.writeString(
-        new java.io.File(path, "_SUCCESS").toPath, "")
     }
 
   /** q49's bloom geometry: 64 Kbit (8 KB) per file at k = 4 hashes —
@@ -710,7 +661,7 @@ object Layout {
     * parquet pushdown. Exposed for ClusterSpec's on-disk contracts.
     */
   private[graft] def clusteredOrders(s: SparkSession, dir: String): DataFrame =
-    Tables.read(s, memoLayout(s, "graft_clust_orders", dir) { path =>
+    Tables.read(s, Scratch.buildOnce(Scratch.appPath(s, dir, "graft_clust_orders")) { path =>
       t(s, dir, "orders")
         .withColumn("o_date", to_date(col("o_orderdate")))
         .repartitionByRange(ClusterFileCount, col("o_date"))
@@ -791,7 +742,7 @@ object Layout {
   private def zorderedOrders(s: SparkSession, dir: String): ZLayout = {
     val withDay = ordersWithDay(s, dir)
     val (ckMin, ckSpan, dayMin, daySpan) = gridDims(s, dir)
-    val path = memoLayout(s, "graft_zorder_orders", dir) { p =>
+    val path = Scratch.buildOnce(Scratch.appPath(s, dir, "graft_zorder_orders")) { p =>
       withDay
         .withColumn("zbucket",
           zInterleaveCol(
@@ -906,7 +857,7 @@ object Layout {
   private def hilbertOrders(s: SparkSession, dir: String): ZLayout = {
     val withDay = ordersWithDay(s, dir)
     val (ckMin, ckSpan, dayMin, daySpan) = gridDims(s, dir)
-    val path = memoLayout(s, "graft_hilbert_orders", dir) { p =>
+    val path = Scratch.buildOnce(Scratch.appPath(s, dir, "graft_hilbert_orders")) { p =>
       withDay
         .withColumn("hd",
           hilbertCol(

@@ -1,0 +1,86 @@
+package graft
+
+import java.io.File
+import java.nio.file.{Files, Paths}
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
+
+/** Pins [[Scratch.buildOnce]]'s contract: a build publishes its path
+  * whole or not at all, runs once, may nest, replaces the debris of an
+  * earlier attempt — and no other done-marker protocol comes back
+  * beside it.
+  */
+class BuildOnceSpec extends AnyFunSuite {
+
+  private def tmp(): String = Files.createTempDirectory("graft-build-once").toString
+
+  private def write(dir: String, name: String, body: String = "x"): Unit = {
+    Files.createDirectories(Paths.get(dir))
+    Files.writeString(Paths.get(dir, name), body)
+  }
+
+  private def names(dir: String): Set[String] =
+    Option(new File(dir).list()).map(_.toSet).getOrElse(Set.empty)
+
+  test("a build that throws leaves no path, and the next call rebuilds and publishes") {
+    val path = s"${tmp()}/memo"
+    intercept[IllegalStateException] {
+      Scratch.buildOnce(path) { stage =>
+        write(stage, "part-0")
+        throw new IllegalStateException("build failed halfway")
+      }
+    }
+    assert(!new File(path).exists(), s"a failed build published ${names(path)}")
+    assert(Scratch.buildOnce(path)(write(_, "part-1")) == path)
+    assert(names(path) == Set("part-1", "_GRAFT_READY"))
+    assert(!new File(path + ".build").exists())
+  }
+
+  test("a second call does not run the build again") {
+    val path = s"${tmp()}/memo"
+    var builds = 0
+    def memo(): String = Scratch.buildOnce(path) { stage => builds += 1; write(stage, "part-0") }
+    assert(memo() == path)
+    assert(memo() == path)
+    assert(builds == 1)
+    assert(names(path) == Set("part-0", "_GRAFT_READY"))
+  }
+
+  test("a build may resolve another memo under the one lock") {
+    val root = tmp()
+    val inner = s"$root/inner"
+    val outer = Scratch.buildOnce(s"$root/outer") { stage =>
+      val src = Scratch.buildOnce(inner)(write(_, "part-0", "base"))
+      write(stage, "part-0", Files.readString(Paths.get(src, "part-0")) + "+delta")
+    }
+    assert(Files.readString(Paths.get(outer, "part-0")) == "base+delta")
+    assert(names(inner) == Set("part-0", "_GRAFT_READY"))
+  }
+
+  test("a leftover staging dir and a markerless dir at the path are replaced") {
+    val path = s"${tmp()}/memo"
+    write(path + ".build", "stale-staged")
+    write(path, "stale-in-place")
+    Scratch.buildOnce(path) { stage =>
+      assert(!new File(stage).exists(), "the staging dir must be wiped before the build")
+      write(stage, "part-0")
+    }
+    assert(names(path) == Set("part-0", "_GRAFT_READY"))
+    assert(!new File(path + ".build").exists())
+  }
+
+  test("no done-marker literal in src/main/scala outside core.scala") {
+    val root = Paths.get("src/main/scala/graft")
+    val marker = """"[^"\n]*\b_(?:SUCCESS|GRAFT_READY)\b[^"\n]*"""".r
+    val offenders = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.getFileName.toString == "core.scala")
+      .flatMap { p =>
+        marker.findAllIn(Files.readString(p)).map(site => s"${p.getFileName}: $site")
+      }.toList
+    assert(offenders.isEmpty,
+      s"hand-rolled done marker — memoize on disk with Scratch.buildOnce: $offenders")
+  }
+}
