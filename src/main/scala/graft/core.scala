@@ -37,18 +37,29 @@ final case class Q(
 object Agg {
   import org.apache.spark.sql.Column
   import org.apache.spark.sql.functions.sum
-  import org.apache.spark.sql.types.DecimalType
+
+  /** `CAST(c AS DECIMAL(30, scale))`, the one money-decimal spelling:
+    * Spark's own cast with a long-backed fast path for the doubles a
+    * money column holds ([[graft.functions.MoneyCast]]). Same value,
+    * nulls and ANSI errors as the cast; DuckDB's twin is the plain
+    * `CAST(x AS DECIMAL(30,s))`. `MoneyDecimalSpec` fails on any other
+    * `DecimalType(30` in `src/main/scala`.
+    */
+  def money(c: Column, scale: Int = 2): Column =
+    org.apache.spark.sql.GraftSql.column(
+      graft.functions.MoneyCast(org.apache.spark.sql.GraftSql.expression(c), scale))
 
   /** Exact sum of a fixed-decimal money column, returned as DOUBLE —
     * the one way a Spark sum hash-matches DuckDB's at any parallelism:
-    * per-row cast to DECIMAL(30, scale) makes the sum order-insensitive
-    * (double summation reorders under partial aggregation and drifts in
-    * the last ulp), and the final cast back to double renders
-    * identically in both engines. The oracle twin is
+    * the per-row [[money]] cast makes the sum order-insensitive (double
+    * summation reorders under partial aggregation and drifts in the last
+    * ulp), and the final cast back to double renders identically in both
+    * engines (Spark's `Decimal.toDouble` goes through the `BigDecimal`,
+    * however the decimal is stored). The oracle twin is
     * `CAST(sum(CAST(x AS DECIMAL(30,s))) AS DOUBLE)`.
     */
   def dsum(c: Column, scale: Int = 2): Column =
-    sum(c.cast(DecimalType(30, scale))).cast("double")
+    sum(money(c, scale)).cast("double")
 }
 
 /** The one sanctioned way for OPERATOR code to pull rows to the driver.
@@ -135,10 +146,24 @@ object Scratch {
     * corpus `dir`: under the JVM's applicationId, so concurrent JVMs
     * never clobber each other, and named by the corpus'
     * [[CorpusCache.fingerprint]], so a corpus rewritten in place gets a
-    * fresh artifact.
+    * fresh artifact. The application's dir is removed when its context
+    * stops; the memos shared across JVMs (`rgfix`, `graft-lake2`,
+    * `graft-sweep-pq`) live outside it and stay.
     */
   def appPath(s: SparkSession, dir: String, name: String): String =
-    s"${this.dir}/app-${s.sparkContext.applicationId}/${name}_${CorpusCache.fingerprint(s, dir)}"
+    s"${appDir(s.sparkContext)}/${name}_${CorpusCache.fingerprint(s, dir)}"
+
+  private val appsWatched = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  private def appDir(sc: org.apache.spark.SparkContext): String = {
+    val d = new java.io.File(s"${this.dir}/app-${sc.applicationId}")
+    if (appsWatched.add(sc.applicationId))
+      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+        override def onApplicationEnd(e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
+          Scratch.synchronized(deleteTree(d))
+      })
+    d.getPath
+  }
 
   def dir: String = {
     val shm = new java.io.File("/dev/shm")
@@ -152,9 +177,10 @@ object Scratch {
 
 /** The one per-corpus cache: every artifact an operator derives from a
   * corpus directory and reuses inside a session — persisted index
-  * tables, index-metadata scalars, inferred schemas — lives here. This
-  * is the in-session reuse of incremental top-k similarity search
-  * (EDBT 2020): build an index once, serve every later query from it.
+  * tables, index-metadata scalars, resolved table relations — lives
+  * here. This is the in-session reuse of incremental top-k similarity
+  * search (EDBT 2020): build an index once, serve every later query
+  * from it.
   * The contract:
   *
   *  - The key is (session, corpus dir, artifact name). A child session
@@ -280,16 +306,20 @@ object CorpusCache {
   * one parquet file per table under the scale-factor directory.
   *
   * Every plain single-path parquet read in operator code goes through
-  * [[read]], which infers a table's schema once per session. Spark's
+  * [[read]], which resolves a table once per session. Spark's
   * `read.parquet(path)` launches a footer-reading schema-inference job
   * on every call (74.5 ms min on `lineitem`, against 9.7 ms with the
-  * schema supplied), and it was the only construction job of 10 of the
-  * bench's 25 `olap_llm` cells. The schema is a [[CorpusCache]] entry
-  * of the table's own path, so a table rewritten in place is inferred
-  * again; the session's schema-affecting parquet confs join its
-  * fingerprint, so a flipped conf (or a child session's own) infers
-  * again too. The file listing of the read itself is still Spark's own,
-  * so the data read is always current.
+  * schema supplied), and even with the schema supplied each call
+  * resolves the data source and lists its files again (1.3–4.1 ms a
+  * read of the sf0.1 bench layout, against 0.2–0.9 ms for a Dataset
+  * over the kept relation). So the analyzed relation of
+  * `spark.read.schema(inferred).parquet(path)` is a [[CorpusCache]]
+  * entry of the table's own path: a table rewritten in place is
+  * resolved again, and the session's schema-affecting parquet confs
+  * join its fingerprint, so a flipped conf (or a child session's own)
+  * resolves again too. Each read is a Dataset over the relation's
+  * `newInstance()`, whose fresh attribute ids keep the two sides of a
+  * self-join distinct.
   *
   * Two reads keep Spark's inference on purpose: the `mergeSchema` read
   * of the schema-evolved fixture (`Ingest`) and the multi-path read of
@@ -310,13 +340,20 @@ object Tables {
     "spark.sql.parquet.mergeSchema",
     "spark.sql.parquet.respectSummaryFiles")
 
-  /** `spark.read.parquet(path)`, with the schema inferred once per
-    * (session, path) and fingerprint (see the object's scaladoc).
+  /** `spark.read.parquet(path)`, resolved once per (session, path) and
+    * fingerprint (see the object's scaladoc).
     */
   def read(spark: SparkSession, path: String): DataFrame = {
+    import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
     val confs = SchemaConfs.map(k => s"$k=${spark.conf.getOption(k)}").mkString("\n")
-    val schema = CorpusCache(spark, path, "schema", salt = confs)(spark.read.parquet(path).schema)
-    spark.read.schema(schema).parquet(path)
+    val relation = CorpusCache(spark, path, "relation", salt = confs) {
+      val schema = spark.read.parquet(path).schema
+      spark.read.schema(schema).parquet(path).queryExecution.analyzed match {
+        case r: MultiInstanceRelation => r
+        case p => throw new IllegalStateException(s"the read of $path is no relation: ${p.nodeName}")
+      }
+    }
+    org.apache.spark.sql.GraftSql.ofRows(spark, relation.newInstance())
   }
 
   /** NOTE on scan parallelism: a parquet ROW GROUP is the unit of scan

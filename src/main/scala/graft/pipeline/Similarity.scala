@@ -582,7 +582,7 @@ object Similarity {
     asg.select(col("cid"), posexplode(col("v")))
       .groupBy(col("cid"), col("pos"))
       .agg(round(
-        sum(round(col("col"), 6).cast(org.apache.spark.sql.types.DecimalType(30, 9))).cast("double")
+        graft.Agg.dsum(round(col("col"), 6), 9)
           / count(lit(1)), 6).as("m"))
       .groupBy(col("cid"))
       .agg(transform(
@@ -974,7 +974,7 @@ object Similarity {
       .select(col("sub"), col("cid"), posexplode(col("sv")))
       .groupBy(col("sub"), col("cid"), col("pos"))
       .agg(round(
-        sum(round(col("col"), 6).cast(org.apache.spark.sql.types.DecimalType(30, 9))).cast("double")
+        graft.Agg.dsum(round(col("col"), 6), 9)
           / count(lit(1)), 6).as("m"))
       .groupBy(col("sub"), col("cid"))
       .agg(transform(

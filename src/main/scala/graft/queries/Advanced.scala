@@ -3,7 +3,6 @@ package graft.queries
 import graft.{CorpusCache, Q, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Advanced relational operators: cube, percentiles, pivot, range join,
   * as-of join, sketches. The as-of join follows SURVEY §7.3's preference
@@ -125,7 +124,7 @@ object Advanced {
         val pre = t(s, dir, "lineitem")
           .groupBy(col("l_returnflag"), col("l_linestatus"))
           .agg(count(lit(1)).as("pn"),
-            sum(col("l_extendedprice").cast(DecimalType(30, 2))).as("psum"))
+            sum(graft.Agg.money(col("l_extendedprice"))).as("psum"))
         // Empty-input semantics, MEASURED (ADVICE r6 suggested a
         // coalesce here; its premise was wrong): Spark 4 cube/rollup
         // over an EMPTY input emits ZERO rows — including no
@@ -733,7 +732,7 @@ object Advanced {
         val pre = t(s, dir, "lineitem")
           .groupBy(col("l_returnflag"), col("l_linestatus"))
           .agg(count(lit(1)).as("pn"),
-            sum(col("l_quantity").cast(DecimalType(30, 2))).as("psum"))
+            sum(graft.Agg.money(col("l_quantity"))).as("psum"))
         val preV = s"q30_pre_${viewTag(dir)}"
         pre.createOrReplaceTempView(preV)
         s.sql(s"""
@@ -987,7 +986,7 @@ object Advanced {
         def partials(src: org.apache.spark.sql.DataFrame) =
           src.groupBy("o_custkey").agg(
             count(lit(1)).as("pn"),
-            sum(col("o_totalprice").cast(DecimalType(30, 2))).as("psum"))
+            sum(graft.Agg.money(col("o_totalprice"))).as("psum"))
         val lake = CorpusCache.table(s, dir, "q38.lake") {
           partials(t(s, dir, "orders").filter(col("o_orderdate") < cutoff))
         }
@@ -1034,7 +1033,7 @@ object Advanced {
           of.join(cf, col("o_custkey") === col("c_custkey"))
             .groupBy(col("c_mktsegment"), col("o_orderstatus"))
             .agg(count(lit(1)).as("pn"),
-              sum(col("o_totalprice").cast(DecimalType(30, 2))).as("psum"))
+              sum(graft.Agg.money(col("o_totalprice"))).as("psum"))
         val lake = CorpusCache.table(s, dir, "q59.lake") {
           partials(o0, c0)
         }
@@ -1832,186 +1831,121 @@ object Advanced {
     //      audited IN ORDER against the published-so-far state (batch
     //      B's uniqueness context includes batch A iff A published),
     //      and a batch lands iff its audit finds ZERO violating rows.
-    //      The decision is DATA-DEPENDENT — each audit verdict is a
-    //      1-row metadata pull (BoundedCollect, the cdcMerged max-key
-    //      convention) that gates the publish, and the oracle
-    //      recomputes the same decisions independently instead of
-    //      trusting hardcoded ones. Violations
-    //      here are row-scoped (a row is bad if it trips any check,
-    //      incl. key-clash against the published context and in-batch
-    //      duplication); q56 stays the per-check observability table,
-    //      q58 is the gate that acts on it. Output: one audit row per
-    //      batch (count + violating-key XOR) plus the post-publish
-    //      table census — a wrongly published/rejected batch splits
-    //      both. Scale shape: audits are batch-sized joins against
-    //      broadcast dimensions and a semi-join against the published
-    //      key set (at 100 TB: the key side of a bucketed layout or a
-    //      key bloom, q49's machinery); the published census is one
-    //      map-side-combined aggregate. A NULL o_orderstatus is not a
-    //      domain violation in either engine (three-valued `NOT IN`
-    //      yields NULL, which neither flags), so it publishes as its
-    //      own NULL census group, sorted first; making it a violation
-    //      would change the oracle too and is out of scope. ----
+    //      The decision is DATA-DEPENDENT and the oracle recomputes the
+    //      same decisions independently instead of trusting hardcoded
+    //      ones. Violations here are row-scoped (a row is bad if it
+    //      trips any check, incl. key-clash against the published
+    //      context and in-batch duplication); q56 stays the per-check
+    //      observability table, q58 is the gate that acts on it.
+    //      Output: one audit row per batch (count + violating-key XOR)
+    //      plus the post-publish table census — a wrongly
+    //      published/rejected batch splits both. A NULL o_orderstatus
+    //      is not a domain violation in either engine (three-valued
+    //      `NOT IN` yields NULL, which neither flags), so it publishes
+    //      as its own NULL census group, sorted first; making it a
+    //      violation would change the oracle too and is out of scope.
+    //
+    //      ONE corpus query. The batches are typed literal rows
+    //      (`BatchRow`, tens of rows), so they cost no Spark work. All
+    //      the audits need from the corpus is which of the ≤|batch|
+    //      incoming keys and custkeys already exist, and the census
+    //      over pub2 = pub0 ∪ gated batches decomposes exactly into
+    //      per-source censuses, because every aggregate is MERGEABLE
+    //      per status group — counts add, the DECIMAL(30,2) partial
+    //      sums add exactly (decimal addition is associative, so
+    //      merging partials then casting to double equals dsum over
+    //      the union bit-for-bit), XORs xor. So one query, collected
+    //      once (BoundedCollect: the status domain plus the batch
+    //      keys), is the union of two aggregates:
+    //        - the pub0 census grouped by (status, the key where it is
+    //          a batch key): the key probe rides the census' own scan
+    //          as an `In` test, so `orders` is read once;
+    //        - the `customer` custkeys among the batch custkeys, a
+    //          pushed-down `In` filter, so row-group stats can prune.
+    //      Each aggregate fuses with its scan; a union under one
+    //      aggregate would not (15-20 ms slower per sample on the
+    //      sf0.1 bench layout, 2 task threads).
+    //      The driver then derives the per-row flags (as the oracle's
+    //      SQL does: a NULL custkey is its own violation, never an FK
+    //      one), both verdicts, the batch censuses (the money cast is
+    //      `Agg.money`'s own expression; a key's XOR term is
+    //      Md5LongKernel's hash of `Long.toString`, which is
+    //      md5_long's over the string cast), and which of them merge.
+    //      The returned frame is a LOCAL relation — no corpus work
+    //      remains at caller-execution time. At 100 TB the census is
+    //      one map-side-combined aggregate and the custkey probe is the
+    //      key side of a bucketed layout or a key bloom (q49's
+    //      machinery). ----
     Q(
       "q58_wap",
       (s, dir) => {
         graft.functions.GraftFunctions.register(s)
         import graft.pipeline.Portable.md5Long
-        def batch(rows: String) = s.sql(s"""
-          SELECT CAST(k AS BIGINT) AS o_orderkey, CAST(ck AS BIGINT) AS o_custkey,
-                 st AS o_orderstatus, CAST(p AS DOUBLE) AS o_totalprice
-          FROM VALUES $rows AS v(k, ck, st, p, d, pr)""")
-        val keyX = md5Long(col("o_orderkey").cast("string"))
-        val pub0 = t(s, dir, "orders")
-          .select(col("o_orderkey"), col("o_custkey"),
-            col("o_orderstatus"), col("o_totalprice"))
-        val (ba, bb) = (batch(Q58CleanRows), batch(Q56BadRows))
-        // Probe the published context ONCE, batch-side broadcast
-        // (round 13): the previous spelling built
-        // `ctx.keys.distinct()` per audit — a corpus-wide distinct
-        // SHUFFLED and then BROADCAST for each of the two audits (and
-        // the fk check broadcast the whole customer dimension). At
-        // 100 TB broadcasting the table's key set is the wrong
-        // direction by definition; the audit only needs which of the
-        // ≤|batch| incoming keys already exist, so broadcast the TINY
-        // batch-key set and left-semi probe the corpus — the corpus
-        // side never shuffles, never broadcasts, and is scanned once
-        // per dimension instead of once per audit.
-        val probeK = ba.select(col("o_orderkey"))
-          .unionByName(bb.select(col("o_orderkey"))).distinct()
-        // (Probes stay lazy: a localCheckpoint of these ≤|batch|-row
-        // results was measured SLOWER — the extra eager job boundaries
-        // cost more than the one orders scan they deduplicate.)
-        val presentK = pub0.join(broadcast(probeK), Seq("o_orderkey"), "left_semi")
-          .select(col("o_orderkey")).distinct()
-        val probeC = ba.select(col("o_custkey"))
-          .unionByName(bb.select(col("o_custkey")))
-          .filter(col("o_custkey").isNotNull).distinct()
-        val presentC = t(s, dir, "customer").select(col("c_custkey"))
-          .join(broadcast(probeC), col("c_custkey") === col("o_custkey"), "left_semi")
-          .distinct()
-        // ONE audit job for BOTH batches (round 13, second pass): the
-        // verdicts are batch-row metadata, and every per-row violation
-        // flag is hypothesis-INDEPENDENT except batch B's clash with a
-        // published batch A — which joins two literal VALUES frames,
-        // no corpus. So one job computes per-row flags for both
-        // batches (the two probe semi-joins run as parallel stages of
-        // it), one BoundedCollect (bound: the batches are literal
-        // day-batch fixtures, tens of rows by construction) hands them
-        // to the driver, and BOTH verdicts derive there — publish
-        // gating constant-folds, the census below is the only other
-        // corpus pass. Previous spellings paid one corpus job per
-        // audit (serialized), or nested the audit subtree per
-        // reference (measured 2.1-4.5 s); this is 1.6 → ~1.1 s.
-        def withFlags(x: org.apache.spark.sql.DataFrame, tag: String,
-            clashABa: Boolean) = {
-          val dup = x.groupBy(col("o_orderkey")).agg(count(lit(1)).as("c"))
-            .filter(col("c") > 1).select(col("o_orderkey"), lit(1).as("dup"))
-          val base = x
-            .join(broadcast(dup), Seq("o_orderkey"), "left_outer")
-            .join(broadcast(presentK.select(col("o_orderkey"), lit(1).as("clash"))),
-              Seq("o_orderkey"), "left_outer")
-            .join(broadcast(presentC.withColumn("fk", lit(1))),
-              col("o_custkey") === col("c_custkey"), "left_outer")
-          val withBa =
-            if (clashABa) base.join(
-              broadcast(ba.select(col("o_orderkey"), lit(1).as("clash_a")).distinct()),
-              Seq("o_orderkey"), "left_outer")
-            else base.withColumn("clash_a", lit(null).cast("int"))
-          withBa.select(lit(tag).as("batch"), keyX.as("kx"),
-            coalesce(col("o_custkey").isNull || col("o_totalprice") <= 0.0 ||
-              !col("o_orderstatus").isin("O", "F", "P") ||
-              col("dup") === 1 || col("clash") === 1 ||
-              (col("o_custkey").isNotNull && col("fk").isNull), lit(false))
-              .as("base_viol"),
-            coalesce(col("clash_a") === 1, lit(false)).as("clash_ba"))
+        import org.apache.spark.sql.Row
+        val (ba, bb) = (Q58Clean, Q56Bad)
+        val keys = (ba ++ bb).map(_.k).distinct
+        val custs = (ba ++ bb).flatMap(_.ck).distinct
+        val census = t(s, dir, "orders")
+          .groupBy(col("o_orderstatus").as("st"),
+            when(col("o_orderkey").isin(keys: _*), col("o_orderkey")).as("k"))
+          .agg(count(lit(1)).as("n"), sum(graft.Agg.money(col("o_totalprice"))).as("sumd"),
+            bit_xor(md5Long(col("o_orderkey").cast("string"))).as("xr"))
+          .withColumn("src", lit("P"))
+        val probe = t(s, dir, "customer").filter(col("c_custkey").isin(custs: _*))
+          .groupBy(col("c_custkey").as("k")).agg(count(lit(1)).as("n"))
+          .withColumn("src", lit("C"))
+        val (pub, cust) = graft.BoundedCollect.rows(
+          census.unionByName(probe, allowMissingColumns = true)
+            .select(col("src"), col("st"), col("k"), col("n"), col("sumd"), col("xr")),
+          Q58StatusBound + keys.length + custs.length, "q58 census and probes")
+          .partition(_.getString(0) == "P")
+        val presentK = pub.filterNot(_.isNullAt(2)).map(_.getLong(2)).toSet
+        val presentC = cust.map(_.getLong(2)).toSet
+        // a census: status -> (rows, DECIMAL(30,2) sum, key XOR)
+        type Cell = (Long, Option[java.math.BigDecimal], Option[Long])
+        def both[T](u: Option[T], v: Option[T])(f: (T, T) => T) =
+          (for (p <- u; q <- v) yield f(p, q)).orElse(u).orElse(v)
+        def add(a: Cell, b: Cell): Cell = (a._1 + b._1, both(a._2, b._2)(_.add(_)), both(a._3, b._3)(_ ^ _))
+        def mergeC(a: Map[Option[String], Cell], b: Map[Option[String], Cell]) =
+          (a.keySet ++ b.keySet).map(k => k -> (a.get(k) ++ b.get(k)).reduce(add)).toMap
+        def kx(k: Long): Long = graft.functions.Md5LongKernel.hashBytes(k.toString.getBytes("UTF-8"))
+        val pubC = pub.groupMapReduce(r => Option(r.getString(1)))(r => (r.getLong(3),
+          Option(r.getDecimal(4)), Option.when(!r.isNullAt(5))(r.getLong(5))): Cell)(add)
+        def batchC(rows: Seq[BatchRow]) = rows.groupMapReduce(r => Option(r.st))(r =>
+          (1L, Some(graft.functions.MoneyCast(org.apache.spark.sql.catalyst.expressions.Literal(r.p), 2)
+            .eval().asInstanceOf[org.apache.spark.sql.types.Decimal].toJavaBigDecimal),
+            Some(kx(r.k))): Cell)(add)
+        // per-row flags; only the custkey can be NULL, and a NULL
+        // custkey is its own violation, never an FK one
+        def baseViol(rows: Seq[BatchRow]): BatchRow => Boolean = {
+          val dups = rows.groupBy(_.k).collect { case (k, v) if v.length > 1 => k }.toSet
+          r => r.ck.isEmpty || r.p <= 0.0 || !Set("O", "F", "P")(r.st) ||
+            dups(r.k) || presentK(r.k) || r.ck.exists(ck => !presentC(ck))
         }
-        // ---- Overlapped audit + census (round 14, §2.6 — VERDICT r13
-        // "Next round" item 6): the published census over pub2 =
-        // pub0 ∪ gated batches decomposes exactly into the pub0 census
-        // plus the (literal, tens-of-rows) batch censuses, because
-        // every aggregate here is MERGEABLE per status group — counts
-        // add, the DECIMAL(30,2) partial sums add exactly (decimal
-        // addition is associative, so merging partials then casting to
-        // double equals dsum over the union bit-for-bit), XORs xor.
-        // The corpus census term depends only on pub0, NOT on the
-        // verdicts — so the one audit job and the pub0 census job run
-        // CONCURRENTLY from two driver threads (guide §2.6: actions
-        // are only sequential because driver code calls them
-        // sequentially); the batch censuses are one more literal-frame
-        // job with no corpus input. The verdicts then gate which batch
-        // censuses merge, on the driver, and the returned frame is a
-        // LOCAL relation — no corpus work remains at caller-execution
-        // time. Every pull rides BoundedCollect: flags ≤ |batch rows|,
-        // censuses ≤ the status domain.
-        val censusOf = (df: org.apache.spark.sql.DataFrame, what: String) =>
-          graft.BoundedCollect.rows(
-            df.groupBy(col("o_orderstatus")).agg(
-              count(lit(1)).as("n"),
-              sum(col("o_totalprice")
-                .cast(org.apache.spark.sql.types.DecimalType(30, 2))).as("sumd"),
-              bit_xor(keyX).as("xr")),
-            64, what)
-        type CMap = Map[String, (Long, java.math.BigDecimal, Long)]
-        def toCMap(rows: Array[org.apache.spark.sql.Row]): CMap =
-          rows.map(r => r.getString(0) -> ((r.getLong(1), r.getDecimal(2), r.getLong(3)))).toMap
-        def mergeC(a: CMap, b: CMap): CMap =
-          (a.keySet ++ b.keySet).iterator.map { k =>
-            val (n1, s1, x1) = a.getOrElse(k, (0L, null: java.math.BigDecimal, 0L))
-            val (n2, s2, x2) = b.getOrElse(k, (0L, null: java.math.BigDecimal, 0L))
-            val sm = (Option(s1), Option(s2)) match {
-              case (Some(u), Some(v)) => u.add(v)
-              case (u, v) => u.orElse(v).orNull
-            }
-            k -> ((n1 + n2, sm, x1 ^ x2))
-          }.toMap
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        val (flags, pubC, baC, bbC) =
-          try {
-            val flagsF = scala.concurrent.Future(graft.BoundedCollect.rows(
-              withFlags(ba, "A", clashABa = false)
-                .unionByName(withFlags(bb, "B", clashABa = true)),
-              256, "q58 audit flags"))(ec)
-            val pubCensusF = scala.concurrent.Future(
-              toCMap(censusOf(pub0, "q58 published census")))(ec)
-            // literal frames, no corpus: runs as the pool frees up
-            val batchCensusF = scala.concurrent.Future(
-              (toCMap(censusOf(ba, "q58 batchA census")),
-                toCMap(censusOf(bb, "q58 batchB census"))))(ec)
-            import scala.concurrent.duration.Duration
-            (scala.concurrent.Await.result(flagsF, Duration.Inf),
-              scala.concurrent.Await.result(pubCensusF, Duration.Inf),
-              scala.concurrent.Await.result(batchCensusF, Duration.Inf)._1,
-              scala.concurrent.Await.result(batchCensusF, Duration.Inf)._2)
-          } finally { ec.shutdown() }
-        def verdict(rows: Seq[org.apache.spark.sql.Row],
-            viol: org.apache.spark.sql.Row => Boolean): (Long, Long) = {
+        def verdict(rows: Seq[BatchRow], viol: BatchRow => Boolean): (Long, Long) = {
           val bad = rows.filter(viol)
-          (bad.size.toLong, bad.map(_.getLong(1)).foldLeft(0L)(_ ^ _))
+          (bad.length.toLong, bad.map(r => kx(r.k)).foldLeft(0L)(_ ^ _))
         }
-        val (aRows, bRows) = flags.partition(_.getString(0) == "A")
-        val (vaN, vaX) = verdict(aRows, _.getBoolean(2))
+        val (vaN, vaX) = verdict(ba, baseViol(ba))
         val aPublished = vaN == 0L
         // batch B additionally clashes with batch A's keys iff A
         // published (a published A is disjoint from orders by its own
         // clash audit, so the flag composes by OR)
-        val (vbN, vbX) = verdict(bRows,
-          r => r.getBoolean(2) || (aPublished && r.getBoolean(3)))
-        val published = Seq(pubC) ++
-          (if (aPublished) Seq(baC) else Nil) ++
-          (if (vbN == 0L) Seq(bbC) else Nil)
-        val censusMerged = published.reduce(mergeC)
+        val aKeys = ba.map(_.k).toSet
+        val bViol = baseViol(bb)
+        val (vbN, vbX) = verdict(bb, r => bViol(r) || (aPublished && aKeys(r.k)))
+        val censusMerged = (Seq(pubC) ++
+          (if (aPublished) Seq(batchC(ba)) else Nil) ++
+          (if (vbN == 0L) Seq(batchC(bb)) else Nil)).reduce(mergeC)
         // double rendering: java BigDecimal.doubleValue IS Spark's
         // Cast(DecimalType -> Double) (Decimal.toDouble), so the merged
         // sum renders identically to dsum over the union
-        val out = new java.util.ArrayList[org.apache.spark.sql.Row]()
-        out.add(org.apache.spark.sql.Row("audit", "batchA", vaN, 0.0, vaX))
-        out.add(org.apache.spark.sql.Row("audit", "batchB", vbN, 0.0, vbX))
-        censusMerged.toSeq.sortBy(kv => Option(kv._1)).foreach { case (st, (n, sm, xr)) =>
-          val sumPrice: Any =
-            if (sm == null) null else java.lang.Double.valueOf(sm.doubleValue)
-          out.add(org.apache.spark.sql.Row("published", st, n, sumPrice, xr))
+        val out = new java.util.ArrayList[Row]()
+        out.add(Row("audit", "batchA", vaN, 0.0, vaX))
+        out.add(Row("audit", "batchB", vbN, 0.0, vbX))
+        censusMerged.toSeq.sortBy(_._1).foreach { case (st, (n, sm, xr)) =>
+          out.add(Row("published", st.orNull, n,
+            sm.map(v => java.lang.Double.valueOf(v.doubleValue)).orNull, xr.map(Long.box).orNull))
         }
         val schema = org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("part",
@@ -2323,23 +2257,43 @@ object Advanced {
     */
   private[graft] val HighValueCutoff = 450000.0
 
+  /** One row of a literal candidate batch (q56, q58): an `orders` row
+    * with its date and priority. `sql` is its `VALUES` tuple, which
+    * the Spark side of q56 and both oracles parse.
+    */
+  private[graft] final case class BatchRow(
+      k: Long, ck: Option[Long], st: String, p: Double, d: String, pr: String) {
+    def sql: String = s"($k, ${ck.getOrElse("NULL")}, '$st', $p, '$d', '$pr')"
+  }
+
+  private def valuesSql(rows: Seq[BatchRow]): String = rows.map(_.sql).mkString(",\n            ")
+
   /** q58's clean candidate batch: fresh keys past any corpus range,
     * existing custkeys, in-domain statuses, positive prices — passes
     * every expectation at every SF.
     */
-  private[graft] val Q58CleanRows: String = Seq(
-    "(910000001, 1, 'O', 10.0, '2024-02-02 00:00:00', '2-HIGH')",
-    "(910000002, 2, 'F', 20.0, '2024-02-02 00:00:00', '2-HIGH')",
-    "(910000003, 3, 'P', 30.0, '2024-02-02 00:00:00', '2-HIGH')",
-  ).mkString(",\n            ")
+  private[graft] val Q58Clean: Seq[BatchRow] = Seq(
+    BatchRow(910000001L, Some(1L), "O", 10.0, "2024-02-02 00:00:00", "2-HIGH"),
+    BatchRow(910000002L, Some(2L), "F", 20.0, "2024-02-02 00:00:00", "2-HIGH"),
+    BatchRow(910000003L, Some(3L), "P", 30.0, "2024-02-02 00:00:00", "2-HIGH"))
+  private[graft] val Q58CleanRows: String = valuesSql(Q58Clean)
 
-  private[graft] val Q56BadRows: String = Seq(
-    "(900000001, NULL, 'O', 100.0, '2024-02-01 00:00:00', '1-URGENT')",
-    "(900000002, 0, 'O', 50.0, '2024-02-01 00:00:00', '1-URGENT')",
-    "(900000002, 0, 'O', 60.0, '2024-02-01 00:00:00', '1-URGENT')",
-    "(900000003, 999999999, 'O', 70.0, '2024-02-01 00:00:00', '1-URGENT')",
-    "(900000004, 1, 'X', -5.0, '2024-02-01 00:00:00', '1-URGENT')",
-  ).mkString(",\n            ")
+  /** q56's poisoned batch, q58's second candidate: a NULL custkey, a
+    * duplicated key, an orphan custkey, an out-of-domain status and a
+    * negative price.
+    */
+  private[graft] val Q56Bad: Seq[BatchRow] = Seq(
+    BatchRow(900000001L, None, "O", 100.0, "2024-02-01 00:00:00", "1-URGENT"),
+    BatchRow(900000002L, Some(0L), "O", 50.0, "2024-02-01 00:00:00", "1-URGENT"),
+    BatchRow(900000002L, Some(0L), "O", 60.0, "2024-02-01 00:00:00", "1-URGENT"),
+    BatchRow(900000003L, Some(999999999L), "O", 70.0, "2024-02-01 00:00:00", "1-URGENT"),
+    BatchRow(900000004L, Some(1L), "X", -5.0, "2024-02-01 00:00:00", "1-URGENT"))
+  private[graft] val Q56BadRows: String = valuesSql(Q56Bad)
+
+  /** q58's bound on its driver-side census groups: the order-status
+    * domain.
+    */
+  private val Q58StatusBound = 64
 
   /** q38's lake/delta boundary: the last ~7 months of the orders range
     * are the "delta" at every testdata SF (dates span 1995..2001-08).

@@ -4,7 +4,6 @@ import graft.{Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Relational (TPC-H-flavored) query inventory over the driver testdata.
   *
@@ -236,7 +235,7 @@ object Relational {
         t(s, dir, "lineitem")
           .filter(col("l_suppkey") <= 5L)
           .withColumn("running_qty",
-            sum(col("l_quantity").cast(DecimalType(30, 2))).over(w).cast("double"))
+            sum(graft.Agg.money(col("l_quantity"))).over(w).cast("double"))
           .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"), col("running_qty"))
       },
       Some("""
@@ -409,7 +408,7 @@ object Relational {
         val pre = t(s, dir, "lineitem")
           .groupBy(col("l_returnflag"), col("l_linestatus"))
           .agg(count(lit(1)).as("pn"),
-            sum(col("l_quantity").cast(DecimalType(30, 2))).as("pqty"))
+            sum(graft.Agg.money(col("l_quantity"))).as("pqty"))
         // empty input emits ZERO rows in Spark (no grand-total row), so
         // two-phase == direct with no special-casing — see q21's
         // measured note on the ADVICE-r6 premise and the DuckDB

@@ -9,8 +9,8 @@ import scala.jdk.CollectionConverters._
 
 /** Pins [[Scratch.buildOnce]]'s contract: a build publishes its path
   * whole or not at all, runs once, may nest, replaces the debris of an
-  * earlier attempt — and no other done-marker protocol comes back
-  * beside it.
+  * earlier attempt, and an application's memos go when its context
+  * stops — and no other done-marker protocol comes back beside it.
   */
 class BuildOnceSpec extends AnyFunSuite {
 
@@ -71,6 +71,28 @@ class BuildOnceSpec extends AnyFunSuite {
     assert(!new File(path + ".build").exists())
   }
 
+  test("an application's scratch dir goes when its context stops; cross-JVM memos stay") {
+    // A JVM runs one SparkContext at a time and the suites share theirs,
+    // so the stop happens in a child JVM (ScratchAppSweep).
+    val corpus = tmp()
+    write(corpus, "t")
+    val shared = s"${Scratch.dir}/rgfix/scratch-app-sweep-${System.nanoTime}"
+    try {
+      val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+        .filter(a => a.startsWith("--add-opens") || a.startsWith("-D"))
+      val cmd = Seq(s"${System.getProperty("java.home")}/bin/java", "-Xmx1g") ++ jvm ++
+        Seq("-cp", System.getProperty("java.class.path"), "graft.ScratchAppSweep", corpus, shared)
+      val p = new ProcessBuilder(cmd.asJava).redirectErrorStream(true).start()
+      val out = scala.io.Source.fromInputStream(p.getInputStream).mkString
+      assert(p.waitFor() == 0, s"child JVM failed:\n${out.takeRight(4000)}")
+      val app = "(?m)^app=(.*)$".r.findFirstMatchIn(out).map(_.group(1))
+        .getOrElse(fail(s"no app dir reported:\n${out.takeRight(4000)}"))
+      assert(app.startsWith(s"${Scratch.dir}/app-"), app)
+      assert(!new File(app).exists(), s"$app outlived its context: ${names(app)}")
+      assert(names(shared).contains("_GRAFT_READY"), s"the cross-JVM memo $shared went too")
+    } finally Scratch.deleteTree(new File(shared))
+  }
+
   test("no done-marker literal in src/main/scala outside core.scala") {
     val root = Paths.get("src/main/scala/graft")
     val marker = """"[^"\n]*\b_(?:SUCCESS|GRAFT_READY)\b[^"\n]*"""".r
@@ -82,5 +104,22 @@ class BuildOnceSpec extends AnyFunSuite {
       }.toList
     assert(offenders.isEmpty,
       s"hand-rolled done marker — memoize on disk with Scratch.buildOnce: $offenders")
+  }
+}
+
+/** Child-JVM half of [[BuildOnceSpec]]'s scratch test: builds one memo
+  * under its application's dir and one cross-JVM memo at `args(1)`,
+  * stops its context, and prints the application's dir.
+  */
+object ScratchAppSweep {
+  def main(args: Array[String]): Unit = {
+    val s = Session.local(1)
+    val memo = Scratch.buildOnce(Scratch.appPath(s, args(0), "sweep"))(p =>
+      Files.createDirectories(Paths.get(p)))
+    Scratch.buildOnce(args(1))(p => Files.createDirectories(Paths.get(p)))
+    val app = new File(memo).getParent
+    require(new File(memo).isDirectory, s"$memo was not built")
+    s.stop()
+    println(s"app=$app")
   }
 }

@@ -39,9 +39,10 @@ class CorpusCacheSpec extends SparkSpec {
     Seq(a, b).foreach { d => writeIds(d, 5); built(d) }
     Tables.read(spark, s"$a/t.parquet")
     assert(CorpusCache.contains(spark, a, "n"))
+    assert(CorpusCache.contains(spark, s"$a/t.parquet", "relation"), "Tables.read's own entry")
     CorpusCache.release(a)
     assert(!CorpusCache.contains(spark, a, "n"))
-    assert(!CorpusCache.contains(spark, s"$a/t.parquet", "schema"),
+    assert(!CorpusCache.contains(spark, s"$a/t.parquet", "relation"),
       "entries of paths under the released dir go too")
     assert(CorpusCache.contains(spark, b, "n"), "another dir's entry must survive")
     assert(!built(b))

@@ -15,10 +15,11 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * the same epoch-microsecond values (the session tz is pinned UTC, so
   * every branch is a pure reinterpretation).
   *
-  * It also pins `Tables.read`'s schema cache: a warm read launches no
-  * inference job, a table rewritten in place or a child session with
-  * other parquet confs infers again, and no operator source reads
-  * parquet around the cache.
+  * It also pins `Tables.read`'s relation cache: a warm read launches no
+  * inference job and resolves no data source, two reads of one table
+  * self-join with distinct attributes, a table rewritten in place or a
+  * child session with other parquet confs infers again, and no operator
+  * source reads parquet around the cache.
   */
 class TablesSpec extends SparkSpec {
 
@@ -90,6 +91,35 @@ class TablesSpec extends SparkSpec {
     assert(second == 0, s"a warm read must reuse the inferred schema, launched $second jobs")
     assert(Tables.t(spark, dir, "orders").as[(Long, Long, String, Double)].collect()
       .toSeq == Seq((1L, 2L, "O", 10.0)))
+  }
+
+  /** The file relation under `df`'s plan: a fresh resolution of the
+    * data source makes a new one.
+    */
+  private def fileRelation(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+    }.getOrElse(fail(s"no file relation in ${df.queryExecution.analyzed}"))
+
+  test("a warm Tables.read resolves no data source") {
+    import spark.implicits._
+    val path = s"${tmp("graft-relation-cache")}/orders.parquet"
+    Seq((1L, "O"), (2L, "F")).toDF("o_orderkey", "o_orderstatus").write.parquet(path)
+    val first = fileRelation(Tables.read(spark, path))
+    val second = fileRelation(Tables.read(spark, path))
+    assert(first eq second, "a warm read must reuse the resolved relation and its file index")
+  }
+
+  test("a self-join over two Tables.read calls of one table keeps its sides distinct") {
+    import spark.implicits._
+    val path = s"${tmp("graft-self-join")}/orders.parquet"
+    Seq((1L, 10L), (2L, 1L), (3L, 2L), (4L, 2L)).toDF("id", "parent").write.parquet(path)
+    val (a, b) = (Tables.read(spark, path), Tables.read(spark, path))
+    val ids = Seq(a, b).map(_.queryExecution.analyzed.output.map(_.exprId).toSet)
+    assert((ids(0) & ids(1)).isEmpty, s"the two reads share attribute ids: $ids")
+    val pairs = a.join(b, a("parent") === b("id")).select(a("id"), b("id"))
+      .as[(Long, Long)].collect().toSeq.sorted
+    assert(pairs == Seq((2L, 1L), (3L, 2L), (4L, 2L)))
   }
 
   test("a table rewritten in place in the same session yields its new schema") {

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 /** q58 write-audit-publish: the decision semantics the oracle checks
   * by hash, pinned here as named assertions — the clean batch lands,
   * the poisoned batch is rejected with every row attributed, and the
-  * published census is exactly base ∪ accepted.
+  * published census is exactly base ∪ accepted — and the audit is one
+  * corpus query, not a job per check.
   */
 class WapSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
@@ -64,5 +65,25 @@ class WapSpec extends SparkSpec {
     assert(published.map(r => Option(r.getString(1)) -> r.getLong(2)).toMap ==
       Map(None -> 1L, Some("O") -> 2L, Some("F") -> 1L, Some("P") -> 1L),
       "the clean batch publishes beside the NULL group")
+  }
+
+  test("q58 builds its result with at most 3 Spark jobs") {
+    val sc = spark.sparkContext
+    graft.SparkEntry.queries("q58_wap")(spark, dir) // warm: the tables' schemas are inferred
+    val group = s"wap-spec-${System.nanoTime}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "q58 construction jobs")
+    try {
+      graft.SparkEntry.queries("q58_wap")(spark, dir)
+      org.apache.spark.TestListenerBus.drain(sc)
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
+    assert(jobs.get <= 3, s"q58 ran ${jobs.get} construction jobs")
   }
 }
