@@ -37,25 +37,25 @@ final case class Q(
 object Agg {
   import org.apache.spark.sql.Column
   import org.apache.spark.sql.functions.sum
+  import org.apache.spark.sql.types.DecimalType
 
-  /** `CAST(c AS DECIMAL(30, scale))`, the one money-decimal spelling:
-    * Spark's own cast with a long-backed fast path for the doubles a
-    * money column holds ([[graft.functions.MoneyCast]]). Same value,
-    * nulls and ANSI errors as the cast; DuckDB's twin is the plain
-    * `CAST(x AS DECIMAL(30,s))`. `MoneyDecimalSpec` fails on any other
+  /** DECIMAL(30, scale), the one money-decimal type: wide enough that
+    * no money sum overflows. `MoneyDecimalSpec` fails on any other
     * `DecimalType(30` in `src/main/scala`.
     */
-  def money(c: Column, scale: Int = 2): Column =
-    org.apache.spark.sql.GraftSql.column(
-      graft.functions.MoneyCast(org.apache.spark.sql.GraftSql.expression(c), scale))
+  def moneyType(scale: Int): DecimalType = DecimalType(30, scale)
+
+  /** `CAST(c AS DECIMAL(30, scale))`, the one money-decimal spelling;
+    * DuckDB's twin is the plain `CAST(x AS DECIMAL(30,s))`.
+    */
+  def money(c: Column, scale: Int = 2): Column = c.cast(moneyType(scale))
 
   /** Exact sum of a fixed-decimal money column, returned as DOUBLE —
     * the one way a Spark sum hash-matches DuckDB's at any parallelism:
     * the per-row [[money]] cast makes the sum order-insensitive (double
     * summation reorders under partial aggregation and drifts in the last
     * ulp), and the final cast back to double renders identically in both
-    * engines (Spark's `Decimal.toDouble` goes through the `BigDecimal`,
-    * however the decimal is stored). The oracle twin is
+    * engines. The oracle twin is
     * `CAST(sum(CAST(x AS DECIMAL(30,s))) AS DOUBLE)`.
     */
   def dsum(c: Column, scale: Int = 2): Column =

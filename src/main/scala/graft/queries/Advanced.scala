@@ -1868,7 +1868,7 @@ object Advanced {
     //      The driver then derives the per-row flags (as the oracle's
     //      SQL does: a NULL custkey is its own violation, never an FK
     //      one), both verdicts, the batch censuses (the money cast is
-    //      `Agg.money`'s own expression; a key's XOR term is
+    //      Spark's own Cast to `Agg.moneyType`; a key's XOR term is
     //      Md5LongKernel's hash of `Long.toString`, which is
     //      md5_long's over the string cast), and which of them merge.
     //      The returned frame is a LOCAL relation — no corpus work
@@ -1912,7 +1912,8 @@ object Advanced {
         val pubC = pub.groupMapReduce(r => Option(r.getString(1)))(r => (r.getLong(3),
           Option(r.getDecimal(4)), Option.when(!r.isNullAt(5))(r.getLong(5))): Cell)(add)
         def batchC(rows: Seq[BatchRow]) = rows.groupMapReduce(r => Option(r.st))(r =>
-          (1L, Some(graft.functions.MoneyCast(org.apache.spark.sql.catalyst.expressions.Literal(r.p), 2)
+          (1L, Some(org.apache.spark.sql.catalyst.expressions.Cast(
+            org.apache.spark.sql.catalyst.expressions.Literal(r.p), graft.Agg.moneyType(2))
             .eval().asInstanceOf[org.apache.spark.sql.types.Decimal].toJavaBigDecimal),
             Some(kx(r.k))): Cell)(add)
         // per-row flags; only the custkey can be NULL, and a NULL

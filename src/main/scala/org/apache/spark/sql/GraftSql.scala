@@ -1,18 +1,11 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** graft's one bridge to Spark's `private[sql]` factories: a Column over
-  * a Catalyst expression graft defines itself (and back), and a
-  * DataFrame over an already analyzed plan. Both are what Spark's own
-  * `functions` and `SparkSession.table` use.
+/** graft's one bridge to Spark's `private[sql]` factories: a DataFrame
+  * over an already analyzed plan, as `SparkSession.table` builds one.
   */
 object GraftSql {
-  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
-
-  def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
-
   def ofRows(s: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession], plan)
 }
