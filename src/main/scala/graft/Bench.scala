@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+
 /** Driver-contract benchmark main: times every inventory query at
   * `SPARK_GRAFT_SF_DIR` and the reference's sort sweep at two headline
   * sizes, printing ONE JSON line.
@@ -36,8 +39,79 @@ object Bench {
     }
   }
 
+  /** The bench corpus: SPARK_GRAFT_SF_DIR, default sf0.1. */
+  def sfDir(): String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** The smallest SF, which the warm pass runs. */
+  val WarmDir = "/root/testdata/sf0.001"
+
+  /** One forced run of cell `q` over `dir`: `gc`, then the timed build
+    * of `q.benched` and its noop action. Returns the seconds (-1, logged,
+    * when the cell throws) and, when `observe`, the result's row count
+    * from a CollectMetrics node at the root, computed by the same action.
+    */
+  def runCell(spark: SparkSession, q: Q, dir: String,
+      observe: Boolean = false): (Double, Option[Long]) = {
+    System.gc() // stabilize: don't bill query N for query N-1's garbage
+    forced(spark, q, dir, observe)
+  }
+
+  /** [[runCell]] without its `gc`, which the untimed warm pass skips. */
+  private def forced(spark: SparkSession, q: Q, dir: String,
+      observe: Boolean): (Double, Option[Long]) = {
+    val t0 = System.nanoTime()
+    try {
+      val df = q.benched(spark, dir)
+      val obs = Option.when(observe)(Observation())
+      obs.fold(df)(o => df.observe(o, count(lit(1)).as("n_rows")))
+        .write.format("noop").mode("overwrite").save()
+      val rows = obs.map(_.get("n_rows").asInstanceOf[Long])
+      ((System.nanoTime() - t0) / 1e9, rows)
+    } catch {
+      case e: Throwable =>
+        System.err.println(s"[bench] ${q.name} @ $dir failed: ${e.getMessage}")
+        (-1.0, None)
+    }
+  }
+
+  /** The untimed warm pass: each of `qs` run once at [[WarmDir]], which
+    * JIT-compiles its operators' generated code and loads the parquet
+    * footers, so a measured run reflects steady state (the reference's
+    * numbers are likewise warm means, BASELINE.md; the pass removes 3-6x
+    * cold-start skew on the heavy hash/explode pipelines). Returns the
+    * number that failed.
+    */
+  def warm(spark: SparkSession, qs: Seq[Q]): Int = {
+    val failed = qs.count(q => forced(spark, q, WarmDir, observe = false)._1 < 0)
+    CorpusCache.release(WarmDir)
+    failed
+  }
+
+  /** The out-of-cell index prewarm (see the call in [[main]]). */
+  def prewarm(spark: SparkSession, dir: String): Unit = {
+    graft.pipeline.Dedup.prewarmIndexes(spark, dir)
+    graft.pipeline.Similarity.prewarmIndexes(spark, dir)
+    graft.pipeline.Text.prewarmIndexes(spark, dir)
+    graft.multimodal.Multimodal.prewarmIndexes(spark, dir)
+  }
+
+  /** The skew list's subset of [[prewarm]]: it touches only d2/d4b
+    * (dedup) and s3/s4, so the full similarity prewarm would build
+    * s2/sq8/PQ/layout artifacts the skew and twin passes never query.
+    */
+  def prewarmLite(spark: SparkSession, dir: String): Unit = {
+    graft.pipeline.Dedup.prewarmIndexes(spark, dir)
+    graft.pipeline.Similarity.prewarmIndexesLite(spark, dir)
+  }
+
+  /** `v` to `digits` decimals for a JSON line, in Locale.ROOT: a
+    * comma-decimal default locale would emit invalid JSON.
+    */
+  def num(v: Double, digits: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = this.sfDir()
     val spark = Session.local()
 
     // Multi-split relayout of the bench corpus, with the split size it
@@ -45,12 +119,6 @@ object Bench {
     // Verify (the oracle path) never reads this fixture.
     val benchDir = graft.bench.RgFixture.benchDir(spark, sfDir)
 
-    // Warm-up: run the ENTIRE inventory once at the smallest SF. This
-    // JIT-compiles every operator's generated code and loads the parquet
-    // footers, so the measured pass reflects steady state — the
-    // reference's numbers are likewise warm means over 50 iterations
-    // (BASELINE.md protocol). Costs ~20s, removes 3-6x cold-start skew
-    // on the heavy hash/explode pipelines.
     val tStart = System.nanoTime()
     def mark(phase: String): Unit =
       System.err.println(f"[bench] $phase done at t=${(System.nanoTime() - tStart) / 1e9}%.0f s")
@@ -70,21 +138,11 @@ object Bench {
 
     val resultsOut = resultsDir()
 
-    val warmDir = "/root/testdata/sf0.001"
-    // a cell that fails here is logged and counted (warmup_failed), not
-    // swallowed: it usually fails the measured pass too
-    var warmupFailed = 0
-    SparkEntry.inventory.foreach { q =>
-      // warm the spelling the bench will time (benched); where a bench
-      // twin exists the oracle spelling shares its operators, so one
-      // warm pass per cell still heats everything the measured pass runs
-      try q.benched(spark, warmDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        warmupFailed += 1
-        System.err.println(s"[bench] warmup ${q.name} @ $warmDir failed: ${e.getMessage}")
-      }
-    }
-    CorpusCache.release(warmDir)
+    // the whole inventory; a failure is counted (warmup_failed): it
+    // usually fails the measured pass too. Where a bench twin exists the
+    // oracle spelling shares its operators, so warming the benched one
+    // heats everything timed below
+    val warmupFailed = warm(spark, SparkEntry.inventory)
     mark("warmup")
 
     // Reference-protocol sort sweep (µs per sorted batch, min of
@@ -142,32 +200,12 @@ object Bench {
     // to stderr, which the driver captures in the bench tail).
     //
     // recordCard: the main pass's FIRST sample of each cell also
-    // observes the result's row count (a CollectMetrics node at the
-    // root — computed during the same noop action, no extra pass) for
-    // the cardinality gate below: a silently emptier result must not
-    // hide behind a green wall-time (VERDICT r10 item 7).
+    // observes its row count, for the cardinality gate below.
     val cardCounts = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     def once(q: Q, dir: String, recordCard: Boolean = false): Double = {
-      System.gc() // stabilize: don't bill query N for query N-1's garbage
-      val t0 = System.nanoTime()
-      try {
-        val df = q.benched(spark, dir)
-        if (recordCard) {
-          val obs = org.apache.spark.sql.Observation()
-          df.observe(obs,
-              org.apache.spark.sql.functions.count(
-                org.apache.spark.sql.functions.lit(1)).as("n_rows"))
-            .write.format("noop").mode("overwrite").save()
-          cardCounts(q.name) = obs.get.apply("n_rows").asInstanceOf[Long]
-        } else {
-          df.write.format("noop").mode("overwrite").save()
-        }
-        (System.nanoTime() - t0) / 1e9
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] ${q.name} @ $dir failed: ${e.getMessage}")
-          -1.0
-      }
+      val (sec, rows) = runCell(spark, q, dir, observe = recordCard)
+      rows.foreach(cardCounts(q.name) = _)
+      sec
     }
 
     /** First runs for the whole list, THEN every cell re-run as a second
@@ -202,10 +240,7 @@ object Bench {
     // code (VERDICT r5 item 3). Building it here, outside any cell,
     // makes every dedup cell measure its own joins — the steady-state,
     // like-for-like number BASELINE.md's warm-mean protocol reports.
-    graft.pipeline.Dedup.prewarmIndexes(spark, benchDir)
-    graft.pipeline.Similarity.prewarmIndexes(spark, benchDir)
-    graft.pipeline.Text.prewarmIndexes(spark, benchDir)
-    graft.multimodal.Multimodal.prewarmIndexes(spark, benchDir)
+    prewarm(spark, benchDir)
     mark("index prewarm")
 
     // First-cell de-tax (VERDICT r7 item 6): the sf0.001 warmup above
@@ -260,12 +295,7 @@ object Bench {
     val skewResults =
       try {
         val skewDir = graft.bench.SkewBench.prepare(spark, sfDir)
-        // Lite prewarm: the skew list touches only d2/d4b (dedup) and
-        // s3/s4 — the full similarity prewarm would build s2/sq8/PQ/
-        // layout artifacts this pass never queries, extra corpus passes
-        // plus resident caches inside the window being measured
-        graft.pipeline.Dedup.prewarmIndexes(spark, skewDir)
-        graft.pipeline.Similarity.prewarmIndexesLite(spark, skewDir)
+        prewarmLite(spark, skewDir)
         mark("skew prep")
         try {
           timePass(skewQs, skewDir)
@@ -295,9 +325,8 @@ object Bench {
     val twinMins: Map[String, Double] =
       try {
         // same billing as the main pass: index build happens out-of-cell
-        // (lite: the twin list is the skew list — d2/d4b/s3/s4/q5 only)
-        graft.pipeline.Dedup.prewarmIndexes(spark, benchDir)
-        graft.pipeline.Similarity.prewarmIndexesLite(spark, benchDir)
+        // (lite: the twin list is the skew list)
+        prewarmLite(spark, benchDir)
         val ts = skewQs.map(q => q.name -> once(q, benchDir)).toMap
         CorpusCache.release(benchDir)
         ts
@@ -314,46 +343,10 @@ object Bench {
     }
     mark("twin re-sample")
 
-    // Cardinality gate (VERDICT r10 item 7): each cell's observed row
-    // count at the bench SF against the committed manifest
-    // (results/cardinality_manifest.tsv, written by
-    // graft.bench.CardManifest) — a query that silently went empty or
-    // exploded fails HERE even when its wall-time stayed green. Checked
-    // only when the manifest's sf tag matches this run's; cells absent
-    // from the manifest (new this round) are advisory on stderr, and
-    // regenerating the manifest is part of adding a query.
-    val cardFailed: Seq[String] = {
-      val mf = resultsOut.resolve("cardinality_manifest.tsv")
-      if (!java.nio.file.Files.exists(mf)) {
-        System.err.println(s"[bench] no cardinality manifest at $mf; counts unchecked")
-        Seq.empty
-      } else {
-        val lines = scala.jdk.CollectionConverters
-          .ListHasAsScala(java.nio.file.Files.readAllLines(mf)).asScala.toSeq
-        val sfTag = lines.collectFirst { case l if l.startsWith("# sf=") => l.drop(5) }
-        if (!sfTag.contains(new java.io.File(sfDir).getName)) {
-          System.err.println(
-            s"[bench] manifest sf ${sfTag.getOrElse("?")} != run sf; counts unchecked")
-          Seq.empty
-        } else {
-          val expected = lines.filterNot(_.startsWith("#")).flatMap { l =>
-            l.split('\t') match {
-              case Array(n, c) => Some(n -> c.toLong)
-              case _ => None
-            }
-          }.toMap
-          cardCounts.keys.filterNot(expected.contains).foreach(n =>
-            System.err.println(s"[bench] $n not in cardinality manifest (new cell?)"))
-          val bad = cardCounts.toSeq.collect {
-            case (n, got) if expected.get(n).exists(_ != got) =>
-              System.err.println(
-                s"[bench] CARDINALITY MISMATCH $n: got $got, manifest ${expected(n)}")
-              n
-          }
-          bad
-        }
-      }
-    }
+    // Cardinality gate: each cell's observed row count against the
+    // committed manifest; regenerating it is part of adding a query.
+    val cardFailed = graft.bench.CardManifest.failed(
+      resultsOut.resolve(graft.bench.CardManifest.FileName), sfDir, cardCounts.toSeq)
 
     // Second sweep pass AFTER the query pass (~minutes later), min-merged
     // per cell: this container's single-core throughput swings ~1.5x over
@@ -371,10 +364,6 @@ object Bench {
       .map { case (k, vs) => k -> ((vs.map(_._2._1).min, vs.map(_._2._2).min)) }
       .toSeq
 
-    // Locale.ROOT: the f"" interpolator uses the JVM default locale, and
-    // a comma-decimal locale would emit invalid JSON.
-    def num(v: Double, digits: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
     val qs = resultsMerged.map { case (k, v) => "\"" + k + "\":" + num(v, 4) }
       .mkString("{", ",", "}")
     val sk = skewResults.map { case (k, v) => "\"" + k + "\":" + num(v, 4) }

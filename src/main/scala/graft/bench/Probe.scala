@@ -2,16 +2,16 @@ package graft.bench
 
 import graft.{Q, SparkEntry}
 
-/** Dev-loop probe over exactly what `graft.Bench` times: the `benched`
-  * spelling of each cell, in the bench's session, over the bench's
-  * layout (`RgFixture.benchDir`, with its split size). A `skew_<q>` cell
-  * is `<q>` over `SkewBench.prepare(spark, sfDir)`, the directory the
-  * bench's skew pass times. Not part of the driver contract.
+/** Dev-loop probe over exactly what `graft.Bench` times: each cell run
+  * by [[graft.Bench.runCell]] in the bench's session, over the bench's
+  * layout (`RgFixture.benchDir`, with its split size) or, for a
+  * `skew_<q>` cell, `<q>` over `SkewBench.prepare(spark, sfDir)`; `sfDir`
+  * defaults to [[graft.Bench.sfDir]]. Not part of the driver contract.
   *
   * Usage: `runMain graft.bench.Probe <cell,...|--all> [sfDir] [--explain | --plans <outDir> <tag>]`
   *
-  *  - default: warms each cell once at sf0.001 (untimed), then prints
-  *    `<cell> iter i: x.xx s` for 3 noop-forced iterations (the lines
+  *  - default: [[graft.Bench.warm]] over the cells (untimed), then
+  *    `<cell> iter i: x.xx s` for 3 runs of each (the lines
   *    `tools/bench_regress.py probe` parses; iteration 1 still pays
   *    session-materialized index builds the bench bills to its prewarm);
   *  - `--explain`: prints each cell's formatted plan instead;
@@ -34,7 +34,7 @@ object Probe {
         "usage: Probe <cell,...|--all> [sfDir] [--explain | --plans <outDir> <tag>]")
       sys.exit(2)
     }
-    val sfDir = pos.lift(1).getOrElse("/root/testdata/sf0.1")
+    val sfDir = pos.lift(1).getOrElse(graft.Bench.sfDir())
     val cells =
       if (pos.head == "--all") SparkEntry.inventory.filter(_.benchHeadline).map(_.name)
       else pos.head.split(',').toSeq.filter(_.nonEmpty)
@@ -48,14 +48,15 @@ object Probe {
         .getOrElse(sys.error(s"unknown query $name"))
       (q, if (name == cell) benchDir else skewDir)
     }
+    if (plans.isEmpty && !explain)
+      graft.Bench.warm(spark,
+        SparkEntry.inventory.filter(q => cells.exists(_.stripPrefix("skew_") == q.name)))
 
     val failed = cells.filterNot { cell =>
       try {
         val (q, dir) = resolve(cell)
         def plan: String = q.benched(spark, dir).queryExecution
           .explainString(org.apache.spark.sql.execution.FormattedMode)
-        def force(d: String): Unit =
-          q.benched(spark, d).write.format("noop").mode("overwrite").save()
         plans match {
           case Some((outDir, tag)) =>
             val out = java.nio.file.Path.of(outDir, s"${cell}_$tag.txt")
@@ -64,11 +65,10 @@ object Probe {
             println(s"[probe] wrote $cell")
           case None if explain => println(plan)
           case None =>
-            force("/root/testdata/sf0.001")
             for (i <- 1 to 3) {
-              val t0 = System.nanoTime()
-              force(dir)
-              println(f"$cell iter $i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+              val sec = graft.Bench.runCell(spark, q, dir)._1
+              require(sec >= 0, "see the [bench] line above")
+              println(f"$cell iter $i: $sec%.2f s")
             }
         }
         true

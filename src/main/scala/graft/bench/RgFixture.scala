@@ -59,6 +59,9 @@ object RgFixture {
   /** Max files per table: the bench's own core ceiling. */
   val MaxFiles = 32
 
+  /** The split size the relayout is read with (see [[prepare]]). */
+  val SplitBytes = "4m"
+
   /** The directory the bench times: this relayout of `sfDir`, or
     * `sfDir` itself when `SPARK_GRAFT_RG_FIX=0` (like-for-like A/Bs
     * against the original layout, under the session's own split size)
@@ -81,14 +84,13 @@ object RgFixture {
     * it needs on `spark`: the fixture's per-table files are ~256 KiB,
     * and under the DEFAULT 128 MB maxPartitionBytes the open-cost
     * packer would glue ~30 of them back into one split, re-serializing
-    * the scans the fixture exists to parallelize. 4 MB (= the default
-    * openCostInBytes, so each file is its own split) is bench-fixture
-    * geometry; a production table's 128 MB-1 GB files want the default
-    * or LARGER (guide §6), which SPARK_GRAFT_MAX_SPLIT_BYTES restores.
+    * the scans the fixture exists to parallelize. [[SplitBytes]], 4 MB
+    * (= the default openCostInBytes, so each file is its own split), is
+    * bench-fixture geometry, frozen with the bench input; a production
+    * table's 128 MB-1 GB files want the default or LARGER (guide §6).
     */
   def prepare(spark: SparkSession, sfDir: String): String = {
-    spark.conf.set("spark.sql.files.maxPartitionBytes",
-      sys.env.getOrElse("SPARK_GRAFT_MAX_SPLIT_BYTES", "4m"))
+    spark.conf.set("spark.sql.files.maxPartitionBytes", SplitBytes)
     val root = s"${graft.Scratch.dir}/rgfix/${graft.CorpusCache.fingerprint(spark, sfDir)}"
     graft.Scratch.buildOnce(root) { stage =>
       graft.Tables.names.foreach { name =>

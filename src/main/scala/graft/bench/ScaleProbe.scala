@@ -1,6 +1,6 @@
 package graft.bench
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only scale probe (VERDICT r9 item 9): one measured datapoint
@@ -210,25 +210,18 @@ object ScaleProbe {
     def flag(name: String): Option[Seq[String]] =
       flags.find(_.startsWith(s"--$name=")).map(_.drop(name.length + 3).split(',').toSeq)
     val cells = flag("cells").getOrElse(Cells)
-    // benched spelling, like Bench: the probe measures the production
-    // path (q26's sketch, not its oracle-apparatus exact twin)
-    val cellRun: Map[String, (SparkSession, String) => DataFrame] =
-      graft.SparkEntry.inventory.map(q => q.name -> q.benched).toMap
-    cells.foreach(c => require(cellRun.contains(c), s"unknown cell $c"))
+    // run by Bench's own runCell: the probe measures the benched
+    // production path (q26's sketch, not its oracle-apparatus exact twin)
+    val cellQ: Map[String, graft.Q] = graft.SparkEntry.inventory.map(q => q.name -> q).toMap
+    cells.foreach(c => require(cellQ.contains(c), s"unknown cell $c"))
     val onlyTables = flag("tables")
     val factors = if (pos.nonEmpty) pos.map(_.toInt).toSeq else Seq(1, 10)
-    val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val baseDir = graft.Bench.sfDir()
     val outRoot = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
       new java.io.File("target/scaleprobe").getAbsolutePath)
     val spark = graft.Session.local()
 
-    // JIT warm pass at the smallest SF, exactly like Bench's warmup
-    val warmDir = "/root/testdata/sf0.001"
-    cells.foreach { n =>
-      try cellRun(n)(spark, warmDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[scale] warm $n: ${e.getMessage}") }
-    }
+    graft.Bench.warm(spark, cells.map(cellQ)) // Bench's own warm pass
 
     val results = scala.collection.mutable.LinkedHashMap
       .empty[(Int, String), Double]
@@ -252,25 +245,14 @@ object ScaleProbe {
       if (deps("sim") && hasEmb) graft.pipeline.Similarity.prewarmIndexes(spark, dir)
       results((r, "index_prewarm")) = (System.nanoTime() - t0) / 1e9
       cells.foreach { n =>
-        val q = cellRun(n)
-        def once(): Double = {
-          System.gc()
-          val t = System.nanoTime()
-          try {
-            q(spark, dir).write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t) / 1e9
-          } catch { case e: Throwable =>
-            System.err.println(s"[scale] $n x$r failed: ${e.getMessage}"); -1.0
-          }
-        }
+        def once(): Double = graft.Bench.runCell(spark, cellQ(n), dir)._1
         val samples = Seq(once(), once()).filter(_ >= 0)
         results((r, n)) = if (samples.isEmpty) -1.0 else samples.min
         System.err.println(f"[scale] x$r $n: ${results((r, n))}%.2f s")
       }
       graft.CorpusCache.release(dir)
     }
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
+    def num(v: Double): String = graft.Bench.num(v, 4)
     val rows = results.map { case ((r, n), v) => s"""{"factor":$r,"cell":"$n","sec":${num(v)}}""" }
     rows.foreach(println)
     val r0 = factors.min

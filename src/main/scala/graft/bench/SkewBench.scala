@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Skewed-data bench fixtures: deterministic zipf-head transforms of the
-  * uniform SF tables, written once per bench run on the RAM-backed
+  * uniform SF tables, written once per corpus listing on the RAM-backed
   * scratch volume ([[graft.Scratch]] — the container disk can degrade to
   * ~13 MB/s, at which point a fixture write bills minutes of storage
   * latency to a bench that exists to time operators; the uniform twins
@@ -39,16 +39,17 @@ object SkewBench {
   private val CopiedTables =
     Seq("region", "nation", "customer", "supplier", "part", "events")
 
-  /** Build (or rebuild) the skew fixture for `sfDir`; returns its path. */
-  def prepare(spark: SparkSession, sfDir: String): String = {
-    val out = s"${graft.Scratch.dir}/skewdata/${new java.io.File(sfDir).getName}"
-    new java.io.File(out).mkdirs()
-    for (tn <- CopiedTables)
-      java.nio.file.Files.copy(
-        java.nio.file.Path.of(s"$sfDir/$tn.parquet"),
-        java.nio.file.Path.of(s"$out/$tn.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  /** The skew fixture of `sfDir`: a [[graft.Scratch.buildOnce]] memo at
+    * `skewdata/<`[[graft.CorpusCache.fingerprint]]`>`, so each corpus
+    * listing has its own, and once built no later call, in this JVM or
+    * another, rewrites it. Returns its path.
+    */
+  def prepare(spark: SparkSession, sfDir: String): String =
+    graft.Scratch.buildOnce(
+      s"${graft.Scratch.dir}/skewdata/${graft.CorpusCache.fingerprint(spark, sfDir)}")(
+      build(spark, sfDir, _))
 
+  private def build(spark: SparkSession, sfDir: String, out: String): Unit = {
     spark.read.parquet(s"$sfDir/documents.parquet")
       .withColumn("text",
         when(pmod(col("doc_id"), lit(10)) < 3, concat(lit(Boilerplate), col("text")))
@@ -101,6 +102,9 @@ object SkewBench {
           .otherwise(col("o_totalprice")))
       .write.mode("overwrite").parquet(s"$out/orders.parquet")
 
-    out
+    for (tn <- CopiedTables) // the writes above made `out`
+      java.nio.file.Files.copy(
+        java.nio.file.Path.of(s"$sfDir/$tn.parquet"),
+        java.nio.file.Path.of(s"$out/$tn.parquet"))
   }
 }

@@ -370,28 +370,29 @@ object Tables {
     * (`graft.bench.RgFixture`), so its scans split like a real table's;
     * Verify/oracle runs still read the driver files directly.
     */
-  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    if (name == "events") {
-      // events.ts has shipped as parquet TIMESTAMP(NANOS) (which Spark 4
-      // rejects outright) and as TIMESTAMP(MICROS) with no timezone
-      // (which Spark reads as TIMESTAMP_NTZ, rejected by unix_micros and
-      // friends). Normalize both to the session-zoned TIMESTAMP type.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = read(spark, s"$dir/$name.parquet")
-      raw.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          // nanos-as-long: truncate to micros (what DuckDB's epoch_us does).
-          raw.withColumn("ts",
-            org.apache.spark.sql.functions.timestamp_micros(
-              org.apache.spark.sql.functions.expr("ts div 1000")))
-        case org.apache.spark.sql.types.TimestampNTZType =>
-          // The session timezone is pinned UTC by every main, so this cast
-          // is a pure reinterpretation of the same micros value and matches
-          // DuckDB's epoch_us on the identical parquet bytes.
-          raw.withColumn("ts",
-            org.apache.spark.sql.functions.col("ts").cast("timestamp"))
-        case _ => raw
-      }
-    } else read(spark, s"$dir/$name.parquet")
+  def t(spark: SparkSession, dir: String, name: String): DataFrame =
+    if (name == "events") events(spark)(read(spark, s"$dir/$name.parquet"))
+    else read(spark, s"$dir/$name.parquet")
+
+  /** The `events` table `load` reads, batch or stream, with `ts` as the
+    * session-zoned TIMESTAMP. `ts` has shipped as TIMESTAMP(NANOS), which
+    * Spark 4 reads only as a long under `nanosAsLong` (set here before
+    * `load`), and as TIMESTAMP(MICROS) without a timezone, which Spark
+    * reads as TIMESTAMP_NTZ (rejected by unix_micros and friends).
+    */
+  def events(spark: SparkSession)(load: => DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+    import org.apache.spark.sql.types.{LongType, TimestampNTZType}
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val raw = load
+    raw.schema("ts").dataType match {
+      // nanos-as-long: truncate to micros (what DuckDB's epoch_us does)
+      case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      // The session timezone is pinned UTC by every main, so this cast is
+      // a pure reinterpretation of the same micros value and matches
+      // DuckDB's epoch_us on the identical parquet bytes.
+      case TimestampNTZType => raw.withColumn("ts", col("ts").cast("timestamp"))
+      case _ => raw
+    }
   }
 }

@@ -967,11 +967,11 @@ object EventStream {
 
   /** File-source streaming reader with the events schema — at scale this
     * is the replay path over a parquet landing zone. The `ts` encoding
-    * is sniffed from a driver-side batch footer read and normalized with
-    * the SAME three branches as the batch loader (`Tables.t`): the
-    * driver has shipped the column as int64 nanos AND as micros-NTZ,
-    * and a reader pinned to one encoding crashes (or silently compresses
-    * every timestamp 1000×) when the landing zone flips — the round-4
+    * is sniffed from a driver-side batch footer read and normalized by
+    * the batch loader's own `Tables.events`: the driver has shipped
+    * the column as int64 nanos AND as micros-NTZ, and a reader pinned
+    * to one encoding crashes (or silently compresses every timestamp
+    * 1000×) when the landing zone flips — the round-4
     * regression class, streaming edition.
     *
     * CONTRACT: the sniff runs once, at stream DEFINITION time, so the
@@ -982,9 +982,7 @@ object EventStream {
     * currently ships (the pre-sniff fixed schema), so a stream can be
     * started before the first file arrives.
     */
-  def readEventStream(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def readEventStream(spark: SparkSession, dir: String): DataFrame = graft.Tables.events(spark) {
     val schema =
       try graft.Tables.read(spark, dir).schema // footer-only, driver-side
       catch {
@@ -1000,13 +998,6 @@ object EventStream {
           org.apache.spark.sql.types.StructType.fromDDL(
             "event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
       }
-    val st = spark.readStream.schema(schema).parquet(dir)
-    schema("ts").dataType match {
-      case LongType =>
-        st.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampNTZType =>
-        st.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => st
-    }
+    spark.readStream.schema(schema).parquet(dir)
   }
 }

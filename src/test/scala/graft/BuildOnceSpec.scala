@@ -94,14 +94,10 @@ class BuildOnceSpec extends AnyFunSuite {
   }
 
   test("no done-marker literal in src/main/scala outside core.scala") {
-    val root = Paths.get("src/main/scala/graft")
     val marker = """"[^"\n]*\b_(?:SUCCESS|GRAFT_READY)\b[^"\n]*"""".r
-    val offenders = Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .filterNot(_.getFileName.toString == "core.scala")
-      .flatMap { p =>
-        marker.findAllIn(Files.readString(p)).map(site => s"${p.getFileName}: $site")
-      }.toList
+    val offenders = SourceScan()
+      .filterNot(_._1.getFileName.toString == "core.scala")
+      .flatMap { case (p, src) => marker.findAllIn(src).map(site => s"${p.getFileName}: $site") }
     assert(offenders.isEmpty,
       s"hand-rolled done marker — memoize on disk with Scratch.buildOnce: $offenders")
   }

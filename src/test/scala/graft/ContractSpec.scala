@@ -75,7 +75,6 @@ class ContractSpec extends AnyFunSuite {
   }
 
   test("the mains in src/main/scala are exactly the listed entry points") {
-    import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala/graft")
     // every entry point with the reason it stays; a new one-off probe
     // main fails here until it is listed on purpose
@@ -89,11 +88,9 @@ class ContractSpec extends AnyFunSuite {
     )
     val obj = """\bobject\s+(\w+)""".r
     val main = """\bdef\s+main\(""".r
-    val found = java.nio.file.Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .flatMap { p =>
+    val found = SourceScan(root.toString)
+      .flatMap { case (p, src) =>
         val pkg = root.relativize(p.getParent).toString.replace('/', '.')
-        val src = java.nio.file.Files.readString(p)
         main.findAllMatchIn(src).map { m =>
           val o = obj.findAllMatchIn(src.substring(0, m.start)).map(_.group(1)).toSeq.lastOption
             .getOrElse(s"<no object in ${p.getFileName}>")

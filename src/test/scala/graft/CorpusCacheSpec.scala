@@ -90,20 +90,18 @@ class CorpusCacheSpec extends SparkSpec {
   }
 
   test("no per-corpus cache in src/main/scala outside CorpusCache") {
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
     // the one allowed map: q57/q60's child sessions, keyed by purpose, not corpus
     val allowed = Seq("privatevalchildSessionCache=scala.collection.concurrent.TrieMap")
     val cache = """concurrent\.TrieMap|ConcurrentHashMap|Scratch\.pathKey\(""".r
-    val offenders = Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .filterNot(_.getFileName.toString == "core.scala")
-      .flatMap { p =>
-        val src = Files.readString(p).replaceAll("\\s+", "")
+    val offenders = SourceScan()
+      .filterNot(_._1.getFileName.toString == "core.scala")
+      .flatMap { case (p, text) =>
+        val src = text.replaceAll("\\s+", "")
         cache.findAllMatchIn(src)
           .map(m => src.substring(math.max(0, m.start - 60), m.end))
           .filterNot(site => allowed.exists(site.endsWith))
           .map(site => s"${p.getFileName}: $site")
-      }.toList
+      }
     assert(offenders.isEmpty,
       s"hand-rolled per-corpus cache — use graft.CorpusCache: $offenders")
   }

@@ -35,8 +35,6 @@ class DriverScalarBoundSpec extends SparkSpec {
   }
 
   test("no raw driver pulls in operator sources outside BoundedCollect and the bench harness") {
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
     val allowed = Set(
       "core.scala",       // BoundedCollect itself
       "SortSweep.scala",  // bench harness collecting timing rows, not data
@@ -50,14 +48,9 @@ class DriverScalarBoundSpec extends SparkSpec {
     // documented here rather than papered over with false positives.
     val pulls = Seq(".collect()", ".collectAsList(", ".toLocalIterator",
       ".first()", ".head()")
-    val offenders = java.nio.file.Files.walk(root).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala"))
-      .filterNot(p => allowed.contains(p.getFileName.toString))
-      .filter { p =>
-        val src = java.nio.file.Files.readString(p)
-        pulls.exists(src.contains)
-      }
-      .map(_.toString).toList
+    val offenders = SourceScan()
+      .filterNot { case (p, _) => allowed.contains(p.getFileName.toString) }
+      .collect { case (p, src) if pulls.exists(src.contains) => p.toString }
     assert(offenders.isEmpty,
       s"raw driver pull in operator code — route through BoundedCollect with a named bound: $offenders")
   }

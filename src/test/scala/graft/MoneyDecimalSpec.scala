@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import scala.jdk.CollectionConverters._
-
 /** Pins [[Agg.money]] to Spark's own `CAST(c AS DECIMAL(30, s))`: the
   * same value on half units and large values, the same NULLs and the
   * same exception classes, with ANSI on and off, generated and
@@ -110,12 +108,10 @@ class MoneyDecimalSpec extends SparkSpec {
   }
 
   test("no money-decimal spelling in src/main/scala outside core.scala") {
-    val root = java.nio.file.Paths.get("src/main/scala")
-    val offenders = java.nio.file.Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .filterNot(_.getFileName.toString == "core.scala") // Agg.money itself
-      .filter(p => java.nio.file.Files.readString(p).replaceAll("\\s+", "").contains("DecimalType(30"))
-      .map(_.getFileName.toString).toList
+    val offenders = SourceScan("src/main/scala")
+      .filterNot(_._1.getFileName.toString == "core.scala") // Agg.money itself
+      .collect { case (p, src) if src.replaceAll("\\s+", "").contains("DecimalType(30") =>
+        p.getFileName.toString }
     assert(offenders.isEmpty,
       s"DecimalType(30 outside Agg.money — cast money through graft.Agg.money: $offenders")
   }

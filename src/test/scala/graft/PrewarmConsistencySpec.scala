@@ -38,10 +38,7 @@ class PrewarmConsistencySpec extends SparkSpec {
     release()
     val fresh = indexQueries.map(n => n -> rows(SparkEntry.queries(n)(spark, dir))).toMap
     release()
-    graft.pipeline.Dedup.prewarmIndexes(spark, dir)
-    graft.pipeline.Similarity.prewarmIndexes(spark, dir)
-    graft.pipeline.Text.prewarmIndexes(spark, dir)
-    graft.multimodal.Multimodal.prewarmIndexes(spark, dir)
+    Bench.prewarm(spark, dir)
     val warmed = indexQueries.map(n => n -> rows(SparkEntry.queries(n)(spark, dir))).toMap
     release()
     for (n <- indexQueries) {

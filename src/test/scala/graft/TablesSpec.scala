@@ -169,8 +169,6 @@ class TablesSpec extends SparkSpec {
   }
 
   test("no parquet read in src/main/scala bypasses Tables.read outside the allow-list") {
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
     // whitespace-free spellings that keep Spark's own inference, by file
     val allowed = Map(
       // the union schema of the schema-evolved fixture needs its footers merged
@@ -179,18 +177,17 @@ class TablesSpec extends SparkSpec {
       "Layout.scala" -> Seq(".read.parquet(sel:_*)"),
     )
     val read = """\.read(?:\.option\([^()]*\))*\.(?:parquet\(|format\("parquet"\))""".r
-    val offenders = java.nio.file.Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .filterNot(_.getFileName.toString == "core.scala") // Tables itself
-      .filterNot(_.getParent.getFileName.toString == "bench") // bench mains
-      .flatMap { p =>
+    val offenders = SourceScan()
+      .filterNot(_._1.getFileName.toString == "core.scala") // Tables itself
+      .filterNot(_._1.getParent.getFileName.toString == "bench") // bench mains
+      .flatMap { case (p, text) =>
         val name = p.getFileName.toString
-        val src = java.nio.file.Files.readString(p).replaceAll("\\s+", "")
+        val src = text.replaceAll("\\s+", "")
         read.findAllMatchIn(src)
           .map(m => src.substring(m.start, math.min(src.length, m.end + 40)))
           .filterNot(site => allowed.getOrElse(name, Nil).exists(site.startsWith))
           .map(site => s"$name: $site")
-      }.toList
+      }
     assert(offenders.isEmpty,
       s"parquet read outside Tables.read — route it through the schema cache: $offenders")
   }

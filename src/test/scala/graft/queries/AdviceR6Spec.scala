@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Scratch, SparkEntry, SparkSpec}
+import graft.{Scratch, SourceScan, SparkEntry, SparkSpec}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
@@ -23,12 +23,8 @@ class AdviceR6Spec extends SparkSpec {
   }
 
   test("no hashCode-keyed persistence anywhere in operator sources") {
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
-    val offenders = java.nio.file.Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .filter(p => java.nio.file.Files.readString(p).contains("dir.hashCode"))
-      .map(_.toString).toList
+    val offenders = SourceScan()
+      .collect { case (p, src) if src.contains("dir.hashCode") => p.toString }
     assert(offenders.isEmpty,
       s"persisted-layout keys must use Scratch.pathKey, not dir.hashCode: $offenders")
   }
