@@ -3,10 +3,14 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** User-facing facade: one call wires a session to a corpus directory —
-  * every driver table as a temp view plus the custom codegen'd
-  * expressions (`winnow_fp`, `md5_long`, `vec_dot`, `byte_hist`,
-  * `byte_simhash`) — after which plain `spark.sql` works over the full
-  * surface, and every inventory operator is runnable by name.
+  * every driver table as a temp view plus the 15 custom codegen'd
+  * functions by name (`winnow_fp`, `md5_long`, `kmv_kth`, `shingle_gen`,
+  * `span_gen`, `run_stats`, `vec_dot`, `byte_hist`, `raster_gen`,
+  * `resize_nn`, `bloom_contains`, `byte_simhash`, `pcm_gen`,
+  * `pcm_requant`, `audio_stats`) — after which plain `spark.sql` works
+  * over the full surface, and every inventory operator is runnable by
+  * name. DataFrame code calls the same functions through the typed
+  * builders of [[functions.GraftFunctions]], which need no registration.
   *
   * {{{
   * graft.Graft.register(spark, "/data/corpus")

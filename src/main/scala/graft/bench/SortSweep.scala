@@ -208,30 +208,10 @@ object SortSweep {
     * rare 10× outlier iterations that inflate a one-window mean).
     */
   def measureBoth(caseName: String, input: DataFrame, size: Int, iters: Int): Seq[DataPoint] = {
-    val schema = input.schema
-    val warm = math.max(3, iters / 5)
-    val enc = Encoders.tuple(Encoders.scalaDouble, Encoders.scalaDouble)
-    // byName THROWS on an unknown case — a silent no-dict fallback would
-    // time the wrong columnar layout without any error
-    val dictCols = Case.byName(caseName).dictCols
-    val perIter = input.mapPartitions { it =>
-      // materialize the columnar batch (the RecordBatch analog) OUTSIDE
-      // the timed region — the reference's input is a pre-built columnar
-      // (dictionary-encoded where the case says so) RecordBatch too
-      // (src/main.rs:42 sits outside the timed spans)
-      val batch = ColumnBatch.fromRows(it.toArray.toIndexedSeq, schema)
-        .dictEncoded(dictCols)
-      def once(run: () => Unit): Double = {
-        val t0 = System.nanoTime()
-        run()
-        (System.nanoTime() - t0) / 1e3
-      }
-      val sortA = () => { ColumnSort.sortBatch(batch, rowFormat = false); () }
-      val sortB = () => { ColumnSort.sortBatch(batch, rowFormat = true); () }
-      var i = 0
-      while (i < warm) { sortA(); sortB(); i += 1 }
-      Iterator.tabulate(iters)(_ => (once(sortA), once(sortB)))
-    }(enc).collect()
+    val perIter = timePair(caseName, input, iters) { batch =>
+      (() => { ColumnSort.sortBatch(batch, rowFormat = false); () },
+        () => { ColumnSort.sortBatch(batch, rowFormat = true); () })
+    }
     // Two statistics per cell: the MEAN (the reference's published
     // protocol — cross-engine comparisons read this one) and the MIN
     // (the noise-robust microbenchmark estimator: every iteration
@@ -242,6 +222,37 @@ object SortSweep {
       point(caseName, size, "dyn-comparator", iters, perIter.map(_._1)),
       point(caseName, size, "rows-format", iters, perIter.map(_._2)),
     )
+  }
+
+  /** The in-task loop both cell kinds time with, one Spark job: per
+    * partition, the columnar batch is materialized (the RecordBatch
+    * analog) OUTSIDE the timed region — the reference's input is a
+    * pre-built columnar (dictionary-encoded where the case says so)
+    * RecordBatch too (src/main.rs:42 sits outside the timed spans) —
+    * and `setup` turns it into the two timed thunks, untimed as well.
+    * Then `max(3, iters / 5)` interleaved warm-up rounds and `iters`
+    * interleaved `(a, b)` timings, in µs.
+    */
+  private def timePair(caseName: String, input: DataFrame, iters: Int)(
+      setup: ColumnBatch => (() => Unit, () => Unit)): Array[(Double, Double)] = {
+    val schema = input.schema
+    val warm = math.max(3, iters / 5)
+    // byName THROWS on an unknown case — a silent no-dict fallback would
+    // time the wrong columnar layout without any error
+    val dictCols = Case.byName(caseName).dictCols
+    input.mapPartitions { it =>
+      val batch = ColumnBatch.fromRows(it.toArray.toIndexedSeq, schema)
+        .dictEncoded(dictCols)
+      val (a, b) = setup(batch)
+      def once(run: () => Unit): Double = {
+        val t0 = System.nanoTime()
+        run()
+        (System.nanoTime() - t0) / 1e3
+      }
+      var i = 0
+      while (i < warm) { a(); b(); i += 1 }
+      Iterator.tabulate(iters)(_ => (once(a), once(b)))
+    }(Encoders.tuple(Encoders.scalaDouble, Encoders.scalaDouble)).collect()
   }
 
   private def point(
@@ -263,33 +274,19 @@ object SortSweep {
   def measureMerge(
       caseName: String, input: DataFrame, size: Int, iters: Int,
       streams: Int = MergeStreamCount): Seq[DataPoint] = {
-    val schema = input.schema
-    val warm = math.max(3, iters / 5)
-    val enc = Encoders.tuple(Encoders.scalaDouble, Encoders.scalaDouble)
-    val dictCols = Case.byName(caseName).dictCols
-    val perIter = input.mapPartitions { it =>
-      val batch = ColumnBatch.fromRows(it.toArray.toIndexedSeq, schema)
-        .dictEncoded(dictCols)
+    val perIter = timePair(caseName, input, iters) { batch =>
       // fixture build outside the timed region: sort, then scatter into
       // per-stream contiguous runs (the experiment's input state — N
       // sorted spill runs / stream buffers waiting to be combined)
       val sorted = ColumnSort.sortBatch(batch, rowFormat = false)
       val (scattered, offsets) =
         graft.sort.MergeStreams.scatter(sorted, streams, seed = 1337L)
-      def once(run: () => Unit): Double = {
-        val t0 = System.nanoTime()
-        run()
-        (System.nanoTime() - t0) / 1e3
-      }
-      val merge = () => {
+      (() => {
         ColumnSort.take(scattered,
           graft.sort.MergeStreams.mergeRuns(scattered, offsets)); ()
-      }
-      val resort = () => { ColumnSort.sortBatch(scattered, rowFormat = false); () }
-      var i = 0
-      while (i < warm) { merge(); resort(); i += 1 }
-      Iterator.tabulate(iters)(_ => (once(merge), once(resort)))
-    }(enc).collect()
+      },
+        () => { ColumnSort.sortBatch(scattered, rowFormat = false); () })
+    }
     Seq(
       point(s"$caseName-merge", size, "kway-merge", iters, perIter.map(_._1)),
       point(s"$caseName-merge", size, "full-resort", iters, perIter.map(_._2)),

@@ -22,6 +22,8 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType,
 case class PcmGen(left: Expression, right: Expression, frame: Int)
     extends BinaryExpression {
 
+  require(frame > 0, s"pcm_gen: frame must be positive, got $frame")
+
   override def dataType: DataType = BinaryType
   override def prettyName: String = "pcm_gen"
 
@@ -66,6 +68,8 @@ case class PcmGen(left: Expression, right: Expression, frame: Int)
   */
 case class AudioStats(child: Expression, frame: Int, silence: Long)
     extends UnaryExpression {
+
+  require(frame > 0, s"audio_stats: frame must be positive, got $frame")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "audio_stats"

@@ -11,8 +11,9 @@ import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
   * mod m for i < k, h1 = low 32 bits, h2 = bits 30.. forced odd — the
   * same positions the distributed build sets (Dedup.bloomOf).
   *
-  * The mask rides as a CONSTRUCTOR field, not a child expression: the
-  * registry builder swallows the array literal at analysis time, so
+  * The mask rides as a CONSTRUCTOR field, not a child expression (the
+  * typed builder takes the `long[]`; the SQL builder swallows the array
+  * literal at analysis time), so
   * plans print `bloom_contains(h)` instead of dumping 16 384 longs into
   * every plan string (the element_at spelling did — ~1 MB of plan text
   * per probe stage), and codegen references ONE shared array object via
@@ -21,6 +22,10 @@ import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
   */
 case class BloomContains(child: Expression, mask: Array[Long], k: Int, mBits: Int)
     extends UnaryExpression {
+
+  require(k > 0 && mBits >= 64 && (mBits & (mBits - 1)) == 0 && mask.length == mBits / 64,
+    s"bloom_contains: need power-of-two m >= 64 with mask.length == m/64, " +
+      s"got k=$k m=$mBits len=${mask.length}")
 
   override def dataType: DataType = BooleanType
   override def prettyName: String = "bloom_contains"

@@ -24,6 +24,8 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
   */
 case class ByteHist(child: Expression, dim: Int) extends UnaryExpression {
 
+  require(dim > 0, s"byte_hist: dim must be positive, got $dim")
+
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "byte_hist"
 
@@ -70,6 +72,9 @@ object ByteHistKernel {
   * payload byte (the m3 lesson).
   */
 case class ByteSimhash(child: Expression, nbits: Int) extends UnaryExpression {
+
+  require(nbits > 0 && nbits <= 60,
+    s"byte_simhash: nbits must be in (0, 60] (the portable-hash width), got $nbits")
 
   override def dataType: DataType = LongType
   override def prettyName: String = "byte_simhash"

@@ -61,6 +61,8 @@ case class RasterGen(first: Expression, second: Expression, third: Expression)
 case class ResizeNn(first: Expression, second: Expression, third: Expression,
     ow: Int, oh: Int) extends TernaryExpression {
 
+  require(ow > 0 && oh > 0, s"resize_nn: output dims must be positive, got ${ow}x$oh")
+
   override def dataType: DataType = BinaryType
   override def prettyName: String = "resize_nn"
 

@@ -40,7 +40,7 @@ import org.apache.spark.unsafe.types.UTF8String
 case class ShingleGenerator(child: Expression, n: Int, positional: Boolean = false)
     extends UnaryExpression with Generator {
 
-  require(n > 0, s"$prettyName: n must be positive, got $n")
+  require(n > 0, s"$prettyName: ${if (positional) "k" else "n"} must be positive, got $n")
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     child.dataType match {

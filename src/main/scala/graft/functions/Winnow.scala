@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -107,196 +105,4 @@ object WinnowKernel {
     val r = if (part >= Mod) part - Mod else part
     if (r >= Mod) r - Mod else r
   }
-}
-
-/** Session-level registration of the custom functions — the runtime twin
-  * of wiring them through `SparkSessionExtensions.injectFunction` (the
-  * driver owns the session here, so we register on first use). The
-  * (identifier, info, builder) triples are defined ONCE here and shared
-  * with [[GraftExtensions]] — two copies of a builder can silently
-  * diverge between the config-injected and runtime-registered paths.
-  */
-object GraftFunctions {
-
-  /** Evaluate a literal int argument with a contract-naming error when
-    * the caller passes a column or NULL (a bare eval() would throw an
-    * obscure UnresolvedException / NPE deep in analysis).
-    */
-  private def literalInt(e: Expression, fn: String, arg: String): Int = {
-    require(e.foldable, s"$fn: $arg must be a literal integer, got $e")
-    val v = e.eval()
-    require(v != null, s"$fn: $arg must not be NULL")
-    v.asInstanceOf[Number].intValue()
-  }
-
-  private[functions] val all: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (
-      FunctionIdentifier("winnow_fp"),
-      new ExpressionInfo(classOf[WinnowFingerprint].getName, "winnow_fp"),
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 3, "winnow_fp(text, k, w)")
-        WinnowFingerprint(exprs.head,
-          literalInt(exprs(1), "winnow_fp", "k"),
-          literalInt(exprs(2), "winnow_fp", "w"))
-      }),
-    (
-      FunctionIdentifier("md5_long"),
-      new ExpressionInfo(classOf[Md5Long].getName, "md5_long"),
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 1, "md5_long(s)")
-        Md5Long(exprs.head)
-      }),
-    (
-      FunctionIdentifier("kmv_kth"),
-      new ExpressionInfo(classOf[KmvSketchAgg].getName, "kmv_kth"),
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 2, "kmv_kth(h, k)")
-        val k = literalInt(exprs(1), "kmv_kth", "k")
-        require(k > 0, s"kmv_kth: k must be positive, got $k")
-        // raw AggregateFunction: the analyzer wraps it in an
-        // AggregateExpression exactly as for built-in aggregates
-        KmvSketchAgg(exprs.head, k)
-      }),
-    (
-      FunctionIdentifier("shingle_gen"),
-      new ExpressionInfo(classOf[ShingleGenerator].getName, "shingle_gen"),
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 2, "shingle_gen(text, n)")
-        val n = literalInt(exprs(1), "shingle_gen", "n")
-        require(n > 0, s"shingle_gen: n must be positive, got $n")
-        ShingleGenerator(exprs.head, n)
-      }),
-    (
-      FunctionIdentifier("span_gen"),
-      new ExpressionInfo(classOf[ShingleGenerator].getName, "span_gen"),
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 2, "span_gen(text, k)")
-        val k = literalInt(exprs(1), "span_gen", "k")
-        require(k > 0, s"span_gen: k must be positive, got $k")
-        ShingleGenerator(exprs.head, k, positional = true)
-      }),
-    (
-      FunctionIdentifier("run_stats"),
-      new ExpressionInfo(classOf[RunStats].getName, "run_stats"),
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 1, "run_stats(arr)")
-        RunStats(exprs.head)
-      }),
-    (
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 2, "vec_dot(a, b)")
-        VecDot(exprs.head, exprs(1))
-      }),
-    (
-      FunctionIdentifier("byte_hist"),
-      new ExpressionInfo(classOf[ByteHist].getName, "byte_hist"),
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 2, "byte_hist(payload, dim)")
-        val dim = literalInt(exprs(1), "byte_hist", "dim")
-        require(dim > 0, s"byte_hist: dim must be positive, got $dim")
-        ByteHist(exprs.head, dim)
-      }),
-    (
-      FunctionIdentifier("raster_gen"),
-      new ExpressionInfo(classOf[RasterGen].getName, "raster_gen"),
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 3, "raster_gen(id, w, h)")
-        RasterGen(exprs.head, exprs(1), exprs(2))
-      }),
-    (
-      FunctionIdentifier("resize_nn"),
-      new ExpressionInfo(classOf[ResizeNn].getName, "resize_nn"),
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 5, "resize_nn(payload, w, h, ow, oh)")
-        val ow = literalInt(exprs(3), "resize_nn", "ow")
-        val oh = literalInt(exprs(4), "resize_nn", "oh")
-        require(ow > 0 && oh > 0, s"resize_nn: output dims must be positive, got ${ow}x$oh")
-        ResizeNn(exprs.head, exprs(1), exprs(2), ow, oh)
-      }),
-    (
-      FunctionIdentifier("bloom_contains"),
-      new ExpressionInfo(classOf[BloomContains].getName, "bloom_contains"),
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 4, "bloom_contains(h, mask, k, m)")
-        // the mask literal is swallowed HERE, at analysis time: the
-        // built expression holds a plain long[] constructor field, so
-        // the 16k-entry array never appears as a plan-tree literal
-        // (which would print in full into every plan string)
-        require(exprs(1).foldable, s"bloom_contains: mask must be a literal array, got ${exprs(1)}")
-        // type-check BEFORE eval: a wrongly-typed array (array<int>)
-        // would otherwise die in toLongArray with a bare ClassCastException
-        require(exprs(1).dataType match {
-          case org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.LongType, _) => true
-          case _ => false
-        }, s"bloom_contains: mask must be array<bigint>, got ${exprs(1).dataType}")
-        val maskData = exprs(1).eval()
-        require(maskData != null, "bloom_contains: mask must not be NULL")
-        val arr = maskData.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-        // toLongArray on UnsafeArrayData copies raw bytes IGNORING the
-        // null bitmap — a null element would silently become a zeroed
-        // word and produce false negatives; reject it loudly instead
-        require((0 until arr.numElements()).forall(!arr.isNullAt(_)),
-          "bloom_contains: mask must not contain NULL elements")
-        val mask = arr.toLongArray()
-        val k = literalInt(exprs(2), "bloom_contains", "k")
-        val m = literalInt(exprs(3), "bloom_contains", "m")
-        require(k > 0 && m >= 64 && (m & (m - 1)) == 0 && mask.length == m / 64,
-          s"bloom_contains: need power-of-two m >= 64 with mask.length == m/64, got k=$k m=$m len=${mask.length}")
-        BloomContains(exprs.head, mask, k, m)
-      }),
-    (
-      FunctionIdentifier("byte_simhash"),
-      new ExpressionInfo(classOf[ByteSimhash].getName, "byte_simhash"),
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 2, "byte_simhash(payload, nbits)")
-        val nbits = literalInt(exprs(1), "byte_simhash", "nbits")
-        require(nbits > 0 && nbits <= 60,
-          s"byte_simhash: nbits must be in (0, 60] (the portable-hash width), got $nbits")
-        ByteSimhash(exprs.head, nbits)
-      }),
-    (
-      FunctionIdentifier("pcm_gen"),
-      new ExpressionInfo(classOf[PcmGen].getName, "pcm_gen"),
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 3, "pcm_gen(id, n_frames, frame)")
-        val frame = literalInt(exprs(2), "pcm_gen", "frame")
-        require(frame > 0, s"pcm_gen: frame must be positive, got $frame")
-        PcmGen(exprs.head, exprs(1), frame)
-      }),
-    (
-      FunctionIdentifier("pcm_requant"),
-      new ExpressionInfo(classOf[PcmRequant].getName, "pcm_requant"),
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 1, "pcm_requant(payload)")
-        PcmRequant(exprs.head)
-      }),
-    (
-      FunctionIdentifier("audio_stats"),
-      new ExpressionInfo(classOf[AudioStats].getName, "audio_stats"),
-      { exprs: Seq[Expression] =>
-        require(exprs.length == 3, "audio_stats(payload, frame, silence)")
-        val frame = literalInt(exprs(1), "audio_stats", "frame")
-        require(frame > 0, s"audio_stats: frame must be positive, got $frame")
-        val silence = exprs(2)
-        require(silence.foldable, s"audio_stats: silence must be a literal, got $silence")
-        val sv = silence.eval()
-        require(sv != null, "audio_stats: silence must not be NULL")
-        val svLong = sv match {
-          case n: Number => n.longValue()
-          case other => throw new IllegalArgumentException(
-            s"audio_stats: silence must be an integer literal, " +
-              s"got ${other.getClass.getSimpleName} ($other)")
-        }
-        AudioStats(exprs.head, frame, svLong)
-      }),
-  )
-
-  def register(spark: SparkSession): Unit =
-    all.foreach { case (ident, info, builder) =>
-      if (!spark.sessionState.functionRegistry.functionExists(ident))
-        spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
 }

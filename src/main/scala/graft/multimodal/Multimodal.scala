@@ -1,6 +1,8 @@
 package graft.multimodal
 
 import graft.{CorpusCache, Q, Tables}
+import graft.functions.GraftFunctions.{audioStats, byteHist, byteSimhash, pcmGen, pcmRequant,
+  rasterGen, resizeNn}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -51,7 +53,6 @@ object Multimodal {
     * [[blobs]] cannot provide.
     */
   def rasterBlobs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     t(s, dir, "documents").select(
       col("doc_id").as("id"),
       element_at(array(lit("image"), lit("audio"), lit("video")),
@@ -59,7 +60,7 @@ object Multimodal {
       (pmod(col("doc_id"), lit(25)) + 8).cast("int").as("w"),
       (pmod(col("doc_id") * 7, lit(25)) + 8).cast("int").as("h"))
       .withColumn("payload",
-        call_function("raster_gen", col("id"), col("w"), col("h")))
+        rasterGen(col("id"), col("w"), col("h")))
   }
 
   /** STUB decode: payload bytes → fixed-shape L1-normalized byte-class
@@ -171,15 +172,14 @@ object Multimodal {
     * FeatureDim longs whatever the payload size, which also retires the
     * array-explosion hazard the frame chunking bounded. The zero-fill
     * spine is free: the histogram array always carries all FeatureDim
-    * buckets. Requires `GraftFunctions.register` (or the
-    * GraftExtensions config) on the session.
+    * buckets.
     */
   def decodeFeaturesHist(blobs: DataFrame): DataFrame = {
     val keep = blobs.columns.filterNot(_ == "payload").map(col)
     blobs
       .withColumn("nb", octet_length(col("payload")))
       .select(keep :+ col("nb") :+
-        posexplode(call_function("byte_hist", col("payload"), lit(FeatureDim))): _*)
+        posexplode(byteHist(col("payload"), FeatureDim)): _*)
       .withColumn("feat", col("col") / greatest(col("nb"), lit(1)).cast("double"))
       .withColumnRenamed("pos", "dim")
       .drop("col", "nb")
@@ -212,9 +212,8 @@ object Multimodal {
     */
   private[graft] def sigIndex(s: SparkSession, dir: String): DataFrame =
     CorpusCache.table(s, dir, "m6.sig") {
-      graft.functions.GraftFunctions.register(s)
       blobs(s, dir).select(col("id"),
-        call_function("byte_simhash", col("payload"), lit(32)).as("phash"))
+        byteSimhash(col("payload"), 32).as("phash"))
     }
 
   /** m7's re-encoded variant rasters: every even-id raster re-emitted at
@@ -241,14 +240,12 @@ object Multimodal {
         t(s, dir, "documents").agg(max(col("doc_id"))), 1, "m7 max doc id")(0).getLong(0))
 
   private[graft] def rasterVariants(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val mx = maxDocId(s, dir)
     val even = rasterBlobs(s, dir).filter(pmod(col("id"), lit(2)) === 0)
     def reenc(src: DataFrame, g: Int): DataFrame = src.select(
       (col("id") + lit(mx + 1L)).as("vid"), col("id").as("src"),
       lit(g).as("w"), lit(g).as("h"),
-      call_function("resize_nn",
-        col("payload"), col("w"), col("h"), lit(g), lit(g)).as("payload"))
+      resizeNn(col("payload"), col("w"), col("h"), g, g).as("payload"))
     reenc(even.filter(pmod(col("id"), lit(4)) === 0), 24)
       .unionByName(reenc(even.filter(pmod(col("id"), lit(4)) =!= 0), 16))
   }
@@ -269,7 +266,6 @@ object Multimodal {
     */
   private[graft] def thumbIndex(s: SparkSession, dir: String): DataFrame =
     CorpusCache.table(s, dir, "m78.thumb") {
-      graft.functions.GraftFunctions.register(s)
       val orig = rasterBlobs(s, dir).select(
         col("id").as("mid"), col("id").as("src"), lit(0).as("kind"),
         col("w"), col("h"), col("payload"))
@@ -281,8 +277,7 @@ object Multimodal {
           col("wid").as("mid"), col("src"), lit(2).as("kind"),
           col("w"), col("h"), col("payload")))
       members.select(col("mid"), col("src"), col("kind"),
-        call_function("resize_nn",
-          col("payload"), col("w"), col("h"), lit(ThumbW), lit(ThumbH)).as("thumb"))
+        resizeNn(col("payload"), col("w"), col("h"), ThumbW, ThumbH).as("thumb"))
         .localCheckpoint()
     }
 
@@ -305,7 +300,6 @@ object Multimodal {
     * live past the resize-variant id range (`id + 2·(mx+1)`).
     */
   private[graft] def watermarkedRasters(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val mx = maxDocId(s, dir)
     rasterBlobs(s, dir).filter(pmod(col("id"), lit(5)) === 0).select(
       (col("id") + lit(2L * (mx + 1L))).as("wid"), col("id").as("src"),
@@ -320,9 +314,8 @@ object Multimodal {
     * exact-md5). Pure projection over the shared thumbnail table.
     */
   private[graft] def thumbSigIndex(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     thumbIndex(s, dir).select(col("mid"), col("src"), col("kind"),
-      call_function("byte_simhash", col("thumb"), lit(32)).as("phash"))
+      byteSimhash(col("thumb"), 32).as("phash"))
   }
 
   /** Pre-build m6's signature table and m7/m8's shared canonical-
@@ -543,8 +536,7 @@ object Multimodal {
         val rb = rasterBlobs(s, dir)
         rb.select(col("id"), col("modality"), col("w"), col("h"),
             octet_length(col("payload")).as("orig_bytes"),
-            lower(hex(call_function("resize_nn",
-              col("payload"), col("w"), col("h"), lit(ThumbW), lit(ThumbH)))).as("rhx"))
+            lower(hex(resizeNn(col("payload"), col("w"), col("h"), ThumbW, ThumbH))).as("rhx"))
           .select(col("id"), col("modality"), col("w"), col("h"), col("orig_bytes"),
             (length(col("rhx")).cast("int") / 2).cast("int").as("resized_bytes"),
             md5(col("rhx")).as("resized_md5"),
@@ -583,9 +575,8 @@ object Multimodal {
     Q(
       "m5_payload_phash",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         blobs(s, dir).select(col("id"), col("modality"),
-          call_function("byte_simhash", col("payload"), lit(32)).as("phash"))
+          byteSimhash(col("payload"), 32).as("phash"))
       },
       Some(s"""
         WITH $phashCtesSql
@@ -603,7 +594,6 @@ object Multimodal {
     Q(
       "m6_media_neardup",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         // shared materialized signature table, see sigIndex's doc
         pigeonholePairs(sigIndex(s, dir), "id")
       },
@@ -766,7 +756,6 @@ object Multimodal {
     Q(
       "m3_decode_features",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         decodeFeaturesHist(blobs(s, dir))
           .select(col("id"), col("modality"), col("dim"), col("feat"))
       },
@@ -888,14 +877,12 @@ object Multimodal {
     Q(
       "m11_audio_features",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         t(s, dir, "documents")
           .filter(pmod(col("doc_id"), lit(3)) === 1) // the audio slice
           .select(col("doc_id").as("id"),
             (pmod(col("doc_id"), lit(20)) + 4).cast("int").as("nf"))
-          .withColumn("st", call_function("audio_stats",
-            call_function("pcm_gen", col("id"), col("nf"), lit(FrameBytes)),
-            lit(FrameBytes), lit(SilenceEnergy)))
+          .withColumn("st", audioStats(
+            pcmGen(col("id"), col("nf"), FrameBytes), FrameBytes, SilenceEnergy))
           .select(col("id"),
             element_at(col("st"), 1).as("n_frames"),
             element_at(col("st"), 2).as("n_silent"),
@@ -967,20 +954,18 @@ object Multimodal {
     Q(
       "m12_audio_neardup",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val off = maxDocId(s, dir) + 1L
         val orig = t(s, dir, "documents")
           .filter(pmod(col("doc_id"), lit(3)) === 1)
           .select(col("doc_id").as("id"),
             (pmod(col("doc_id"), lit(20)) + 4).cast("int").as("nf"))
           .withColumn("pcm",
-            call_function("pcm_gen", col("id"), col("nf"), lit(FrameBytes)))
+            pcmGen(col("id"), col("nf"), FrameBytes))
         val vari = orig.filter(pmod(col("id"), lit(5)) === 1)
           .select((col("id") + off).as("id"), col("nf"),
-            call_function("pcm_requant", col("pcm")).as("pcm"))
+            pcmRequant(col("pcm")).as("pcm"))
         val feats = orig.select(col("id"), col("pcm")).unionByName(vari.select(col("id"), col("pcm")))
-          .withColumn("st", call_function("audio_stats",
-            col("pcm"), lit(FrameBytes), lit(SilenceEnergy)))
+          .withColumn("st", audioStats(col("pcm"), FrameBytes, SilenceEnergy))
           .select(col("id"),
             element_at(col("st"), 1).as("n_frames"),
             element_at(col("st"), 2).as("n_silent"),

@@ -287,7 +287,6 @@ object Curation {
     Q(
       "p4_split_assign",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s) // md5_long below
         val h = Portable.md5Long(concat_ws("|", lit("split-v1"), col("doc_id"))) % 1000
         t(s, dir, "documents")
           .select(col("doc_id"), col("source"),
@@ -321,7 +320,6 @@ object Curation {
     Q(
       "p5_domain_quota",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s) // md5_long below
         val win = org.apache.spark.sql.expressions.Window
           .partitionBy("source")
           .orderBy(col("h").asc, col("doc_id").asc)
@@ -358,7 +356,6 @@ object Curation {
     Q(
       "p6_leakage_split",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s) // md5_long below
         val h = Portable.md5Long(concat_ws("|", lit("split-v1"), col("root"))) % 1000
         Dedup.corpusRoots(s, dir)
           .select(col("doc_id"), col("root"),
@@ -603,7 +600,6 @@ object Curation {
     Q(
       "p11_data_card",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         import Portable.bpeTokens
         val docs = t(s, dir, "documents")
           .select(col("lang"), col("n_chars"), col("text"))
@@ -706,7 +702,6 @@ object Curation {
     * the Q comment in [[all]].
     */
   private[graft] def shardOrder(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    graft.functions.GraftFunctions.register(s)
     val h = Portable.md5Long(concat_ws("|", lit("shard-v1"),
       col("doc_id").cast("string")))
     val d = t(s, dir, "documents").select(col("doc_id"))
@@ -766,7 +761,6 @@ object Curation {
     */
   def epochPlan(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val quotas = temperatureAlloc(
       t(s, dir, "documents").groupBy(col("lang").as("source"))
         .agg(count(lit(1)).as("n_docs")))

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.{CorpusCache, Q, Tables}
+import graft.functions.GraftFunctions.{bloomContains, shingleGen, spanGen}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -92,10 +93,9 @@ object Dedup {
     * corpus pass.
     */
   private[pipeline] def spanIndex(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     CorpusCache.table(s, dir, "d8.pos")(
       docsSharded(s, dir)
-        .select(col("doc_id"), call_function("span_gen", col("text"), lit(SpanK))))
+        .select(col("doc_id"), spanGen(col("text"), SpanK)))
   }
 
   /** DuckDB twin of [[spanIndex]] (docs + pos CTE bodies). */
@@ -135,10 +135,9 @@ object Dedup {
     * dedup oracle is unchanged by construction.
     */
   private[graft] def rawShingles(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .select(col("doc_id"),
-        call_function("shingle_gen", col("text"), lit(3)).as("h"))
+        shingleGen(col("text"), 3).as("h"))
       .distinct()
   }
 
@@ -164,7 +163,6 @@ object Dedup {
     */
   private[graft] def shingleIndex(s: SparkSession, dir: String): DataFrame =
     CorpusCache.table(s, dir, "d2.shingles") {
-      graft.functions.GraftFunctions.register(s)
       rawShingles(docsSharded(s, dir))
     }
 
@@ -409,7 +407,6 @@ object Dedup {
     * corpus-derived adaptive width ([[d4bPieceBits]] × [[D4bPieces]]).
     */
   private def simhashN(s: SparkSession, dir: String, nbits: Int, out: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val tok = docsSharded(s, dir)
       .select(col("doc_id"), explode(words(col("text"))).as("tok"))
       .withColumn("h", md5Long(col("tok")))
@@ -1161,11 +1158,9 @@ object Dedup {
     * selectivity probes) against the same corpus.
     */
   private[pipeline] def bloomCandidates(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val bloom = CorpusCache(s, dir, "d11.bloom")(bloomOf(evalSpanSet(s, dir).select("h")))
     spanIndex(s, dir).filter(col("doc_id") % EvalModulus =!= 0)
-      .filter(call_function("bloom_contains", col("h"), typedLit(bloom),
-        lit(BloomK), lit(BloomBits)))
+      .filter(bloomContains(col("h"), bloom, BloomK, BloomBits))
       .select("doc_id", "i", "h")
   }
 

@@ -704,7 +704,6 @@ object Events {
     * timestamp the pipeline already records.
     */
   private[graft] def arrivalEvents(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s) // md5_long below
     // Materialized: e14/e15 each read this from two plan branches (the
     // batch-maxima groupBy and the probe side of the prefix join), and
     // branches sharing a subtree get no exchange reuse — without the

@@ -16,11 +16,10 @@ import org.apache.spark.sql.functions._
 object Portable {
 
   /** 60-bit deterministic hash of a string column (Spark side): the
-    * fused [[graft.functions.Md5Long]] expression (register the session
-    * via `graft.functions.GraftFunctions.register` before analysis).
+    * fused [[graft.functions.Md5Long]] expression, built by its typed
+    * builder, so it analyzes in any session.
     */
-  def md5Long(c: Column): Column =
-    call_function("md5_long", c)
+  def md5Long(c: Column): Column = graft.functions.GraftFunctions.md5Long(c)
 
   /** DuckDB twin of [[md5Long]] — `x` is a SQL expression string. */
   def md5LongSql(x: String): String =

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.{CorpusCache, Q, Tables}
+import graft.functions.GraftFunctions.vecDot
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -41,11 +42,12 @@ object Similarity {
     * as the `aggregate(zip_with(...))` spelling — bitwise-equal results,
     * one loop instead of two lambda chains + intermediate array).
     */
-  private def cosine(a: String, b: String): Column =
-    expr(s"vec_dot($a, $b) / (sqrt(vec_dot($a, $a)) * sqrt(vec_dot($b, $b)))")
+  private def cosine(a: String, b: String): Column = {
+    val (x, y) = (col(a), col(b))
+    vecDot(x, y) / (sqrt(vecDot(x, x)) * sqrt(vecDot(y, y)))
+  }
 
   private def vecs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     t(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding").cast("array<double>").as("v"))
   }
@@ -782,7 +784,7 @@ object Similarity {
     */
   private[graft] def sq8Corpus(s: SparkSession, dir: String): DataFrame = {
     val nv = vecs(s, dir).select(col("vec_id"),
-      expr("transform(v, x -> x / sqrt(vec_dot(v, v)))").as("nv"))
+      transform(col("v"), x => x / sqrt(vecDot(col("v"), col("v")))).as("nv"))
     val ma = nv.agg(
       max(expr("aggregate(nv, 0D, (a, x) -> greatest(a, abs(x)))")).as("maxabs"))
     CorpusCache.table(s, dir, "s5.qz")(
@@ -802,7 +804,7 @@ object Similarity {
     val aw = Window.partitionBy(col("qid")).orderBy(col("ascore").desc, col("vec_id").asc)
     val pool = qz.join(broadcast(qq), col("vec_id") =!= col("qid"))
       .withColumn("ascore",
-        expr("CAST(vec_dot(cast(qqv AS array<double>), cast(qv AS array<double>)) AS BIGINT)"))
+        vecDot(col("qqv").cast("array<double>"), col("qv").cast("array<double>")).cast("bigint"))
       .withColumn("arn", row_number().over(aw))
       .filter(col("arn") <= S5Pool)
       .select(col("qid"), col("vec_id"))
@@ -932,7 +934,7 @@ object Similarity {
     */
   private def sliceVecs(e: DataFrame): DataFrame = e
     .select(col("vec_id"),
-      expr("transform(v, x -> x / sqrt(vec_dot(v, v)))").as("nv"))
+      transform(col("v"), x => x / sqrt(vecDot(col("v"), col("v")))).as("nv"))
     .select(col("vec_id"), posexplode(expr(
       s"transform(sequence(0, ${PqSubs - 1}), j -> slice(nv, j * $PqDim + 1, $PqDim))")))
     .select(col("vec_id"), col("pos").as("sub"), col("col").as("sv"))
@@ -959,7 +961,8 @@ object Similarity {
     // the carried slice moves into the group key.
     slices.join(broadcast(cb), "sub")
       .withColumn("d", round(
-        expr("vec_dot(sv, sv) - 2 * vec_dot(sv, cv) + vec_dot(cv, cv)"), 6))
+        vecDot(col("sv"), col("sv")) - lit(2) * vecDot(col("sv"), col("cv")) +
+          vecDot(col("cv"), col("cv")), 6))
       .groupBy(col("vec_id"), col("sub"), col("sv"))
       .agg(min(round(col("d") * lit(1000000.0)).cast("long") * lit(4294967296L)
         + col("cid")).as("pk"))
@@ -1056,7 +1059,7 @@ object Similarity {
       .select(col("vec_id").as("qid"), col("sub"), col("sv"))
       .join(pqCodebook(s, dir), "sub")
       .select(col("qid"), col("sub"), col("cid"),
-        round(expr("vec_dot(sv, cv)"), 6)
+        round(vecDot(col("sv"), col("cv")), 6)
           .cast(org.apache.spark.sql.types.DecimalType(20, 6)).as("lutv"))
 
   /** ADC candidate pool: sum the per-subspace LUT entries per
@@ -2245,7 +2248,6 @@ object Similarity {
     Q(
       "s13_ann_compact",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val touched = s13TouchedCells(s, dir)
         Tables.read(s, s13CompactedPath(s, dir))
           .withColumn("cid", col("cid").cast("long"))

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.{CorpusCache, Q, Tables}
+import graft.functions.GraftFunctions.{runStats, winnowFp}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -129,7 +130,6 @@ object Text {
     Q(
       "t4_fingerprint",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         t(s, dir, "documents").select(
           col("doc_id"),
           normFingerprint(col("text")).as("fingerprint"),
@@ -151,9 +151,8 @@ object Text {
     Q(
       "t5_winnow",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         t(s, dir, "documents")
-          .select(col("doc_id"), expr("winnow_fp(text, 8, 5)").as("fps"))
+          .select(col("doc_id"), winnowFp(col("text"), 8, 5).as("fps"))
           .select(
             col("doc_id"),
             size(col("fps")).as("n_fp"),
@@ -180,7 +179,6 @@ object Text {
     Q(
       "t6_bigram_lm",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val b = bigramIndex(s, dir) // shared materialized table, see its doc
         val freq = b.groupBy("h").agg(count(lit(1)).as("c"))
         b.join(freq, "h")
@@ -243,8 +241,6 @@ object Text {
         // codegen'd `run_stats` kernel (functions/RunStats.scala) is
         // the same sort + fold fused into one static call with
         // bitwise-identical outputs.
-        graft.functions.GraftFunctions.register(s)
-        def runStats(arr: String) = s"run_stats($arr)"
         // (Round 13 A/B'd a docsSharded re-shard here after the kernel
         // swap: SLOWER — the fused run_stats left so little per-row
         // work that shuffling the document texts costs more than the
@@ -254,8 +250,8 @@ object Text {
           // grouped spelling either (unnest of NULL is empty)
           .select(col("doc_id"), words(col("text")).as("ws"))
           .withColumn("t3", shingles3(col("ws")))
-          .withColumn("wstat", expr(runStats("ws")))
-          .withColumn("tstat", expr(runStats("t3")))
+          .withColumn("wstat", runStats(col("ws")))
+          .withColumn("tstat", runStats(col("t3")))
           .select(
             col("doc_id"),
             size(col("ws")).cast("long").as("n_words_r"),
@@ -556,7 +552,6 @@ object Text {
     Q(
       "t13_ppl_bucket",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val b = bigramIndex(s, dir)
         val freq = b.groupBy("h").agg(count(lit(1)).as("c"))
         val scores = b.join(freq, "h")
@@ -626,9 +621,7 @@ object Text {
         // max adjacent-run length over the sorted word array = the top
         // word's occurrence count (t7's fused run_stats kernel, maxrun
         // field — round 13, same interpreted-lambda motivation as t7)
-        graft.functions.GraftFunctions.register(s)
-        val topC = expr(
-          """run_stats(split(lower(trim(text)), '\\s+')).maxrun""")
+        val topC = runStats(words(col("text"))).getField("maxrun")
         val nStop = regexp_count(lower(col("text")),
           lit("\\b(the|a|is|of|and|to|in)\\b")).cast("long")
         t(s, dir, "documents")
@@ -786,7 +779,6 @@ object Text {
     */
   private[graft] def bigramIndex(s: org.apache.spark.sql.SparkSession, dir: String) =
     CorpusCache.table(s, dir, "t6.bigrams") {
-      graft.functions.GraftFunctions.register(s)
       Dedup.docsSharded(s, dir)
         .select(col("doc_id"), explode(bigrams(words(col("text")))).as("bg"))
         .select(col("doc_id"), md5Long(col("bg")).as("h"))

@@ -473,7 +473,6 @@ object Advanced {
     Q(
       "q64_cms_topk",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         import graft.pipeline.Portable.{bigrams, md5Long, words}
         // Materialized: both the sketch grid (`cells`) and the exact
         // top-20 twin (`top`) consume this full-corpus words+bigrams
@@ -561,7 +560,6 @@ object Advanced {
     Q(
       "q65_kmv_ndv",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val hs = sourceHashes(s, dir)
         val sk = kmvSketch(s, dir)
         def estimate(kth: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -609,7 +607,6 @@ object Advanced {
       // result cardinality (one row per full-sketch source + ALL), so
       // the row-count gate still applies. Round 13.
       benchRun = Some { (s, dir) =>
-        graft.functions.GraftFunctions.register(s)
         val sk = kmvSketch(s, dir)
         val per = sk.filter(col("rk") === KmvK)
           .select(col("source"), col("h").as("kth_h"))
@@ -644,7 +641,6 @@ object Advanced {
     Q(
       "q66_kmv_setops",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         // the shared materialized bottom-k sketch, exactly q65's cut
         val skr = kmvSketch(s, dir)
         val sk = skr.select(col("source"), col("h"))
@@ -771,7 +767,6 @@ object Advanced {
     Q(
       "q31_sample",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         import graft.pipeline.Portable.md5Long
         val k = 100L
         val over = 8L
@@ -909,7 +904,6 @@ object Advanced {
     Q(
       "q35_weighted_sample",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         import graft.pipeline.Portable.md5Long
         val k = 600L // total sample budget, split across strata by mass
         val over = 8L
@@ -1085,7 +1079,6 @@ object Advanced {
     Q(
       "q43_time_travel",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val root = graft.sources.LakeLayout.ensure(s, dir)
         (0 to 2).map { v =>
           s.read.format("graft-lake")
@@ -1189,7 +1182,6 @@ object Advanced {
     Q(
       "q41_cdc_upsert",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         cdcMerged(s, dir).groupBy(col("o_orderstatus"))
           .agg(count(lit(1)).as("n"),
             graft.Agg.dsum(col("price")).as("sum_price"),
@@ -1242,7 +1234,6 @@ object Advanced {
     Q(
       "q47_log_checkpoint",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val pre = asOfState(s, dir, 2).drop("v").withColumn("path", lit("pre"))
         val post = asOfCheckpointed(s, dir, cp = 1, v = 2).withColumn("path", lit("post"))
         pre.unionByName(post)
@@ -1296,7 +1287,6 @@ object Advanced {
     Q(
       "q48_position_delete",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val withPos = lakeWithPositions(s, dir)
         withPos.join(broadcast(deletionVector(withPos)), Seq("fid", "pos"), "left_anti")
           .groupBy(col("o_orderstatus"))
@@ -1413,7 +1403,6 @@ object Advanced {
     Q(
       "q51_equality_delete",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         eqDeleteRead(s, dir).groupBy(col("seq"), col("o_orderstatus"))
           .agg(count(lit(1)).as("n"),
             graft.Agg.dsum(col("price")).as("sum_price"),
@@ -1472,7 +1461,6 @@ object Advanced {
     Q(
       "q52_snapshot_expiry",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         // METADATA-PLANE RESOLUTION ON THE DRIVER (round 13): the file
         // inventory is ≤ 3·SnapFidMod rows by construction — exactly
         // the file-count metadata a real table format resolves on the
@@ -1746,7 +1734,6 @@ object Advanced {
     Q(
       "q56_expectations",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         import graft.pipeline.Portable.md5Long
         val aug = t(s, dir, "orders").unionByName(s.sql(s"""
           SELECT CAST(k AS BIGINT) AS o_orderkey, CAST(ck AS BIGINT) AS o_custkey,
@@ -1879,7 +1866,6 @@ object Advanced {
     Q(
       "q58_wap",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         import graft.pipeline.Portable.md5Long
         import org.apache.spark.sql.Row
         val (ba, bb) = (Q58Clean, Q56Bad)
@@ -2180,11 +2166,10 @@ object Advanced {
     Q(
       "q68_kmv_agg",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val est = kmvEstRaw(col("kth_h"))
         sourceHashes(s, dir)
           .groupBy(col("source"))
-          .agg(call_function("kmv_kth", col("h"), lit(KmvK)).as("kth_h"))
+          .agg(graft.functions.GraftFunctions.kmvKth(col("h"), KmvK).as("kth_h"))
           .filter(col("kth_h").isNotNull) // thinner-than-k sources drop, q65's rule
           .select(col("source"), col("kth_h"), round(est, 6).as("est_ndv"))
       },
@@ -2918,7 +2903,6 @@ object Advanced {
   private[graft] def snapStates(
       s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
     CorpusCache.table(s, dir, "q52.states") {
-      graft.functions.GraftFunctions.register(s) // kx below uses md5_long
       (0 to 2).map { b =>
         asOfState(s, dir, b).drop("v")
           .withColumn("fid", pmod(col("k"), lit(SnapFidMod)))

@@ -56,7 +56,6 @@ object Canary {
       "qc1_hex_cast",
       (s, _) => {
         import s.implicits._
-        graft.functions.GraftFunctions.register(s)
         Seq("a", "b", "arr-v1|42", "quota-v1|doc-00000001")
           .toDF("probe")
           .select(col("probe"),

@@ -109,7 +109,6 @@ object Ingest {
     Q(
       "q40_jsonl_ingest",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         readJsonlDocs(s, dir)
           .filter(col("_corrupt_record").isNull)
           .groupBy(col("lang"))
@@ -142,7 +141,6 @@ object Ingest {
     Q(
       "q42_schema_evolution",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         // label by the SHARD (the partition column the fixture layout
         // carries), not by source-is-null: a genuinely NULL source on a
         // post-evolution row must stay a NULL group in BOTH engines,

@@ -305,7 +305,6 @@ object Layout {
     Q(
       "q39_compaction",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         eventsIntegrityAgg(compactedEvents(s, dir))
       },
       Some(eventsIntegritySql),
@@ -325,7 +324,6 @@ object Layout {
     Q(
       "q46_selective_compact",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         eventsIntegrityAgg(Tables.read(s, selectivelyCompactedPath(s, dir)))
       },
       Some(eventsIntegritySql),
@@ -579,7 +577,6 @@ object Layout {
     */
   private[graft] def fileBlooms(s: SparkSession, dir: String): Map[String, Array[Long]] =
     CorpusCache(s, dir, "q49.blooms") {
-      graft.functions.GraftFunctions.register(s)
       val nWords = Q49Bits / 64
       val words = clusteredOrders(s, dir)
         .select(input_file_name().as("fname"),
@@ -613,7 +610,6 @@ object Layout {
   // once per session.
   private[graft] def probeKeyHashes(s: SparkSession, dir: String): Seq[(Long, Long)] =
     CorpusCache(s, dir, "q49.probes") {
-      graft.functions.GraftFunctions.register(s)
       val orders = t(s, dir, "orders")
       val mid = graft.BoundedCollect.rows(
         orders.agg(expr("max(o_orderkey) div 2").as("mid")),

@@ -240,7 +240,6 @@ object StreamTwins {
       "q44_cdc_stream",
       (s, dir) => {
         import s.implicits._
-        graft.functions.GraftFunctions.register(s)
         val root = graft.sources.LakeLayout.ensure(s, dir)
         val resolved = LakeStream.cdcCompact(
           s.read.format("graft-lake").option("path", root)

@@ -119,7 +119,6 @@ class PlanSpec extends SparkSpec {
   test("d2: hot-shingle cap is a broadcast ANTI-join — big side never shuffles to filter") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // assert on the UNCACHED builder: in the inventory query the capped
     // index is materialized, so its plan hides inside an InMemoryRelation
     val docs = Seq((1L, "one two three four"), (2L, "two three four five"))

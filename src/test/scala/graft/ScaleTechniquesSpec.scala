@@ -44,7 +44,6 @@ class ScaleTechniquesSpec extends SparkSpec {
 
   test("d2 shingle df cap is ABSOLUTE: bucket size bounded regardless of corpus size") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // synthetic corpus where one boilerplate shingle spans every doc —
     // the hot-key shape that makes a corpus-RELATIVE cap (n/100)
     // quadratic at scale: here n=600 docs, so the boilerplate df (600)
@@ -150,7 +149,6 @@ class ScaleTechniquesSpec extends SparkSpec {
   test("s3 adaptive band width bounds compare buckets even on a skewed hot label") {
     import spark.implicits._
     import graft.pipeline.Similarity
-    graft.functions.GraftFunctions.register(spark)
     val rng = new scala.util.Random(11)
     // one label holds HALF the corpus — the hot-block shape a FIXED band
     // width cannot bound (bucket = block/2^4 grows with the block)
@@ -172,7 +170,6 @@ class ScaleTechniquesSpec extends SparkSpec {
   test("d4b adaptive piece width bounds random-collision buckets as the corpus grows") {
     import spark.implicits._
     import graft.pipeline.Dedup
-    graft.functions.GraftFunctions.register(spark)
     // the ladder's law: the smallest width with n <= target * 2^bits,
     // so the EXPECTED bucket n/2^bits never exceeds the absolute target
     // (until the signature-width ceiling)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
@@ -60,34 +59,14 @@ class TablesSpec extends SparkSpec {
   private def tmp(tag: String): String =
     java.nio.file.Files.createTempDirectory(tag).toString
 
-  /** Spark jobs `body` launches on `sess`'s context from this thread,
-    * counted by job group with the listener bus drained on both sides.
-    */
-  private def jobsLaunched(sess: org.apache.spark.sql.SparkSession)(body: => Unit): Int = {
-    val sc = sess.sparkContext
-    val group = s"tables-spec-${System.nanoTime}"
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    org.apache.spark.TestListenerBus.drain(sc)
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, "TablesSpec job count")
-    try { body; org.apache.spark.TestListenerBus.drain(sc) }
-    finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
-    n.get
-  }
-
   test("a second Tables.t on an unchanged table launches no Spark job") {
     import spark.implicits._
     val dir = tmp("graft-schema-cache")
     Seq((1L, 2L, "O", 10.0)).toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
       .write.parquet(s"$dir/orders.parquet")
-    val first = jobsLaunched(spark)(Tables.t(spark, dir, "orders").schema)
+    val first = JobCount(spark)(Tables.t(spark, dir, "orders").schema)
     assert(first >= 1, "the first read infers the schema with a Spark job")
-    val second = jobsLaunched(spark)(Tables.t(spark, dir, "orders").schema)
+    val second = JobCount(spark)(Tables.t(spark, dir, "orders").schema)
     assert(second == 0, s"a warm read must reuse the inferred schema, launched $second jobs")
     assert(Tables.t(spark, dir, "orders").as[(Long, Long, String, Double)].collect()
       .toSeq == Seq((1L, 2L, "O", 10.0)))
@@ -157,11 +136,11 @@ class TablesSpec extends SparkSpec {
 
     val child = spark.newSession()
     child.conf.set("spark.sql.parquet.mergeSchema", "true")
-    val childJobs = jobsLaunched(child) {
+    val childJobs = JobCount(child) {
       assert(Tables.read(child, path).columns.toSeq == Seq("id", "extra"))
     }
     assert(childJobs >= 1, "the child session must run its own inference")
-    val parentJobs = jobsLaunched(spark) {
+    val parentJobs = JobCount(spark) {
       assert(Tables.read(spark, path).columns.toSeq == Seq("id"),
         "the parent's entry is untouched by the child's")
     }

@@ -20,7 +20,6 @@ class ShingleGenSpec extends SparkSpec {
     * as the differential oracle.
     */
   private def legacy(df: org.apache.spark.sql.DataFrame, n: Int) = {
-    GraftFunctions.register(spark)
     df.select(col("doc_id"), explode(Portable.spansK(Portable.words(col("text")), n)).as("s"))
       .select(col("doc_id"), Portable.md5Long(col("s")).as("h"))
   }

@@ -90,7 +90,6 @@ class MultimodalSpec extends SparkSpec {
 
   test("decodeFeaturesHist: byte_hist kernel equals the explode-agg path, shuffle-free") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val b = Multimodal.blobs(spark, dir)
     def collectMap(df: org.apache.spark.sql.DataFrame) = df.collect().map { r =>
       (r.getLong(r.fieldIndex("id")), r.getInt(r.fieldIndex("dim"))) ->

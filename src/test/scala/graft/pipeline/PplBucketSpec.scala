@@ -14,7 +14,6 @@ class PplBucketSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   private def buckets = {
-    graft.functions.GraftFunctions.register(spark)
     val b = Text.bigramIndex(spark, dir)
     val freq = b.groupBy("h").agg(count(lit(1)).as("c"))
     val scores = b.join(freq, "h").groupBy("doc_id")

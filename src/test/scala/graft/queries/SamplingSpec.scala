@@ -20,7 +20,6 @@ class SamplingSpec extends SparkSpec {
   }
 
   test("q31: the sorted sliver is oversample-bounded, not the corpus") {
-    graft.functions.GraftFunctions.register(spark)
     import graft.pipeline.Portable.md5Long
     val li = Tables.t(spark, dir, "lineitem")
     val n = li.count()

@@ -19,7 +19,6 @@ class SketchFamilySpec extends SparkSpec {
     val rows = graft.SparkEntry.queries("q64_cms_topk")(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     assert(rows.length == 20)
-    graft.functions.GraftFunctions.register(spark)
     val n = graft.Tables.t(spark, dir, "documents")
       .select(explode(Portable.bigrams(Portable.words(col("text")))).as("t"))
       .count()
@@ -37,7 +36,6 @@ class SketchFamilySpec extends SparkSpec {
   }
 
   test("q64: the CMS grid merges by cell-wise sum (split corpus = whole corpus)") {
-    graft.functions.GraftFunctions.register(spark)
     def grid(where: org.apache.spark.sql.Column): Map[(Int, Long), Long] = {
       val bigr = graft.Tables.t(spark, dir, "documents").filter(where)
         .select(explode(Portable.bigrams(Portable.words(col("text")))).as("term"))
@@ -76,7 +74,6 @@ class SketchFamilySpec extends SparkSpec {
   }
 
   test("q65: the ALL row equals the from-scratch global bottom-k (merge is lossless)") {
-    graft.functions.GraftFunctions.register(spark)
     val hs = graft.Tables.t(spark, dir, "documents")
       .select(explode(Portable.spansK(Portable.words(col("text")), 3)).as("g"))
       .select(Portable.md5Long(col("g")).as("h")).distinct()

@@ -68,22 +68,8 @@ class WapSpec extends SparkSpec {
   }
 
   test("q58 builds its result with at most 3 Spark jobs") {
-    val sc = spark.sparkContext
     graft.SparkEntry.queries("q58_wap")(spark, dir) // warm: the tables' schemas are inferred
-    val group = s"wap-spec-${System.nanoTime}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    org.apache.spark.TestListenerBus.drain(sc)
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, "q58 construction jobs")
-    try {
-      graft.SparkEntry.queries("q58_wap")(spark, dir)
-      org.apache.spark.TestListenerBus.drain(sc)
-    } finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
-    assert(jobs.get <= 3, s"q58 ran ${jobs.get} construction jobs")
+    val jobs = graft.JobCount(spark)(graft.SparkEntry.queries("q58_wap")(spark, dir))
+    assert(jobs <= 3, s"q58 ran $jobs construction jobs")
   }
 }

@@ -31,7 +31,6 @@ class LakeDsv2Spec extends graft.SparkSpec {
       df.queryExecution.executedPlan.toString))
 
   test("provider rows equal asOfState for every version") {
-    graft.functions.GraftFunctions.register(spark)
     for (v <- 0 to 2) {
       val got = lakeRead(v).collect()
         .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
